@@ -19,36 +19,11 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.operators import similarity as sim
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators import text as tx
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans.helpers import sql_qsum
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans.registry import register
-from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table
-
-
-def _data_fingerprint_token(sf_dir: str, table: str) -> str:
-    """Warehouse-cache token that fingerprints a table's INPUT DATA
-    (parquet file count + total bytes + newest mtime), not just the
-    path: in-place testdata regeneration (invariant 5's drift scenario)
-    must invalidate any cached artifact derived from the table instead
-    of silently reusing it against a fresh oracle. Same-data concurrent
-    sessions still share a token, so every query that materializes
-    under one of these tokens stays on the SERIAL sweep list
-    (ARCHITECTURE.md, env-robustness matrix)."""
-    import hashlib
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        stats = [
-            os.stat(os.path.join(r, f))
-            for r, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-    else:
-        stats = [os.stat(path)]
-    fp = (
-        f"{sf_dir}|{table}|{len(stats)}|{sum(s.st_size for s in stats)}"
-        f"|{max((s.st_mtime_ns for s in stats), default=0)}"
-    )
-    return hashlib.md5(fp.encode()).hexdigest()[:8]
+from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
+    _data_fingerprint_token,
+    _memo_read,
+    read_table,
+)
 
 
 # Same-token ``.build-*`` dirs older than this are crashed-builder
@@ -289,25 +264,16 @@ def _largest_group(spark, sf_dir: str, table: str, df, col: str):
     return _LARGEST_GROUP_CACHE[key]
 
 
-# Published-cache DataFrame memo (r15, the q175/q189 bench-delta fix):
-# creating a path-based parquet DataFrame costs ~0.1 s of driver-side
-# file listing + schema/partition discovery PER READ (measured at
-# sf0.1; lesson 29 documents the partition-discovery half), paid on
-# every warm run even though the published directory is immutable.
-# Entries key on (applicationId, path, _SUCCESS mtime): the path embeds
-# the data-fingerprint token + logic salt, the appId drops entries from
-# dead sessions, and the _SUCCESS mtime invalidates the one remaining
-# hole — a same-token wipe + rebuild inside one session (new part-file
-# names would orphan a cached file index). Plain-dict setdefault
-# concurrency: worst case a duplicated listing, never a torn entry.
-_PARQUET_DF_CACHE: dict = {}
-
-
 def _read_published_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Memoized ``spark.read.parquet(path)`` for ATOMICALLY-PUBLISHED,
     immutable cache directories (``_publish_cache_build`` targets or
-    their subdirs). Not for mutable tables — the memo assumes the files
-    under ``path`` never change while its ``_SUCCESS`` stamp stands."""
+    their subdirs), through the ``sources.io`` read memo with the
+    ``_SUCCESS`` mtime as the validity token: the path already embeds
+    the data-fingerprint token + logic salt, and the stamp closes the
+    one remaining hole -- a same-token wipe + rebuild inside one session
+    (new part-file names would orphan a cached file index). An
+    unstamped (unpublished or racing) directory is read directly and
+    never memoized."""
     import os
 
     # The stamp lives at the path itself (q189's partials) or one level
@@ -321,24 +287,8 @@ def _read_published_parquet(spark: SparkSession, path: str) -> DataFrame:
     try:
         stamp = os.stat(os.path.join(success, "_SUCCESS")).st_mtime_ns
     except OSError:
-        # unpublished/racing target: no safe memo key, read directly
-        return spark.read.parquet(path)
-    key = (spark.sparkContext.applicationId, path, stamp)
-    if key not in _PARQUET_DF_CACHE:
-        # Evict superseded stamps for the same (session, path) AND
-        # every entry from a different applicationId (a stopped
-        # session's DataFrames can never be returned again — without
-        # this a long-lived multi-session process accumulates one dead
-        # plan per session per path, ADVICE r15): the catalog-axis
-        # growth concern of lesson 30, re-closed on the memo axis.
-        for old in [
-            k
-            for k in _PARQUET_DF_CACHE
-            if k[0] != key[0] or (k[:2] == key[:2] and k != key)
-        ]:
-            _PARQUET_DF_CACHE.pop(old, None)
-        _PARQUET_DF_CACHE.setdefault(key, spark.read.parquet(path))
-    return _PARQUET_DF_CACHE[key]
+        stamp = None
+    return _memo_read(spark, path, stamp, lambda: spark.read.parquet(path))
 
 
 # Shared MinHash near-dup build (r16, the r15 verdict's item #1): five
@@ -352,7 +302,7 @@ def _read_published_parquet(spark: SparkSession, path: str) -> DataFrame:
 # signature index already demonstrates; this memo is the in-session
 # equivalent for the batch family). Entries key on:
 #   - applicationId (dead-session DataFrames are evicted on insert,
-#     same discipline as _PARQUET_DF_CACHE),
+#     same discipline as the sources.io read memo),
 #   - the documents table's DATA fingerprint (in-place regeneration
 #     rebuilds — lesson 25; never path-keyed),
 #   - every recipe dial (threshold/hashes/bands/shingle/cap/gate), so
@@ -439,14 +389,23 @@ def shared_build_seconds(app_id: str) -> dict:
     }
 
 
-def _memo_fill(cache: dict, key: tuple, family: str, build) -> None:
-    """Shared miss path for every shared-build memo: evict stale keys,
-    run ``build()`` with exclusive wall-time accounting, publish via
-    setdefault (plain-dict concurrency: worst case a duplicated build,
-    never a torn entry — unchanged from the per-memo inline form)."""
+def _memo_fill(cache: dict, key: tuple, family: str, build):
+    """Shared get-or-build path for every shared-build memo: the entry
+    for ``key`` if there is one; otherwise evict stale keys, run
+    ``build()`` with exclusive wall-time accounting and publish via
+    setdefault. Returns the value it found or the one that won the
+    publish -- never a second ``cache[key]`` read, which a concurrent
+    ``_evict_stale`` could turn into a KeyError (ADVICE r17). Plain-dict
+    concurrency: worst case a duplicated build, never a torn entry."""
     import time as _time
 
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
     _evict_stale(cache, key)
+    # Stopped sessions' build seconds can never be reported again.
+    for k in [k for k in list(_SHARED_BUILD_SECONDS) if k[0] != key[0]]:
+        _SHARED_BUILD_SECONDS.pop(k, None)
     nested0 = _app_build_total(key[0])
     t0 = _time.perf_counter()
     val = build()
@@ -456,7 +415,7 @@ def _memo_fill(cache: dict, key: tuple, family: str, build) -> None:
     _SHARED_BUILD_SECONDS[k] = _SHARED_BUILD_SECONDS.get(k, 0.0) + max(
         0.0, elapsed - nested
     )
-    cache.setdefault(key, val)
+    return cache.setdefault(key, val)
 
 
 def _simhash_verified_pairs(
@@ -478,23 +437,20 @@ def _simhash_verified_pairs(
     key = _minhash_recipe_key(
         spark, sf_dir, ("simhash", n_bits, n_bands, max_hamming, max_bucket)
     )
-    if key not in _SIMHASH_PAIRS_CACHE:
+    def _build() -> DataFrame:
+        docs = read_table(spark, sf_dir, "documents")
+        fp = dd.simhash_fingerprints(
+            dd.tokenize_distinct(docs), n_bits=n_bits
+        ).localCheckpoint(eager=True)  # feeds bands + both verify sides
+        return dd.simhash_near_duplicates(
+            fp,
+            n_bits=n_bits,
+            n_bands=n_bands,
+            max_hamming=max_hamming,
+            max_bucket=max_bucket,
+        ).localCheckpoint(eager=True)
 
-        def _build() -> DataFrame:
-            docs = read_table(spark, sf_dir, "documents")
-            fp = dd.simhash_fingerprints(
-                dd.tokenize_distinct(docs), n_bits=n_bits
-            ).localCheckpoint(eager=True)  # feeds bands + both verify sides
-            return dd.simhash_near_duplicates(
-                fp,
-                n_bits=n_bits,
-                n_bands=n_bands,
-                max_hamming=max_hamming,
-                max_bucket=max_bucket,
-            ).localCheckpoint(eager=True)
-
-        _memo_fill(_SIMHASH_PAIRS_CACHE, key, "simhash_pairs", _build)
-    return _SIMHASH_PAIRS_CACHE[key]
+    return _memo_fill(_SIMHASH_PAIRS_CACHE, key, "simhash_pairs", _build)
 
 
 def _ann_rankings(spark: SparkSession, sf_dir: str) -> dict:
@@ -511,21 +467,18 @@ def _ann_rankings(spark: SparkSession, sf_dir: str) -> dict:
     key = _minhash_recipe_key(
         spark, sf_dir, ("ann_rankings",), table="embeddings"
     )
-    if key not in _ANN_RANKING_CACHE:
+    def _build() -> dict:
+        return {
+            "brute": q34_embedding_topk(spark, sf_dir).localCheckpoint(
+                eager=True
+            ),
+            "srp": q36_ann_srp_bucket(spark, sf_dir).localCheckpoint(
+                eager=True
+            ),
+            "ivf": q66_ivf_ann(spark, sf_dir).localCheckpoint(eager=True),
+        }
 
-        def _build() -> dict:
-            return {
-                "brute": q34_embedding_topk(spark, sf_dir).localCheckpoint(
-                    eager=True
-                ),
-                "srp": q36_ann_srp_bucket(spark, sf_dir).localCheckpoint(
-                    eager=True
-                ),
-                "ivf": q66_ivf_ann(spark, sf_dir).localCheckpoint(eager=True),
-            }
-
-        _memo_fill(_ANN_RANKING_CACHE, key, "ann_rankings", _build)
-    return _ANN_RANKING_CACHE[key]
+    return _memo_fill(_ANN_RANKING_CACHE, key, "ann_rankings", _build)
 
 
 def _minhash_shingles(
@@ -537,16 +490,13 @@ def _minhash_shingles(
     (q101), and the delta-vs-index pipeline (q94) all read ONE table.
     Same key discipline and eagerness as ``_minhash_verified_pairs``."""
     key = _minhash_recipe_key(spark, sf_dir, ("shingles", shingle_n))
-    if key not in _MINHASH_SH_CACHE:
+    def _build() -> DataFrame:
+        docs = read_table(spark, sf_dir, "documents")
+        return dd.shingle_distinct(docs, n=shingle_n).localCheckpoint(
+            eager=True
+        )
 
-        def _build() -> DataFrame:
-            docs = read_table(spark, sf_dir, "documents")
-            return dd.shingle_distinct(docs, n=shingle_n).localCheckpoint(
-                eager=True
-            )
-
-        _memo_fill(_MINHASH_SH_CACHE, key, "minhash_shingles", _build)
-    return _MINHASH_SH_CACHE[key]
+    return _memo_fill(_MINHASH_SH_CACHE, key, "minhash_shingles", _build)
 
 
 def _minhash_shingle_sigs(
@@ -565,17 +515,14 @@ def _minhash_shingle_sigs(
     key = _minhash_recipe_key(
         spark, sf_dir, ("shingle_sigs", shingle_n, n_hashes)
     )
-    if key not in _MINHASH_SIGS_CACHE:
+    def _build() -> tuple:
+        sh = _minhash_shingles(spark, sf_dir, shingle_n=shingle_n)
+        sigs = dd.minhash_signatures(
+            sh, n_hashes=n_hashes
+        ).localCheckpoint(eager=True)
+        return (sh, sigs)
 
-        def _build() -> tuple:
-            sh = _minhash_shingles(spark, sf_dir, shingle_n=shingle_n)
-            sigs = dd.minhash_signatures(
-                sh, n_hashes=n_hashes
-            ).localCheckpoint(eager=True)
-            return (sh, sigs)
-
-        _memo_fill(_MINHASH_SIGS_CACHE, key, "minhash_sigs", _build)
-    return _MINHASH_SIGS_CACHE[key]
+    return _memo_fill(_MINHASH_SIGS_CACHE, key, "minhash_sigs", _build)
 
 
 def _minhash_verified_pairs(
@@ -598,31 +545,28 @@ def _minhash_verified_pairs(
         sf_dir,
         (threshold, n_hashes, band_size, shingle_n, max_bucket, sig_agree_min),
     )
-    if key not in _MINHASH_PAIRS_CACHE:
-
-        def _build() -> DataFrame:
-            docs = read_table(spark, sf_dir, "documents")
-            sh, sigs = _minhash_shingle_sigs(
-                spark, sf_dir, shingle_n=shingle_n, n_hashes=n_hashes
+    def _build() -> DataFrame:
+        docs = read_table(spark, sf_dir, "documents")
+        sh, sigs = _minhash_shingle_sigs(
+            spark, sf_dir, shingle_n=shingle_n, n_hashes=n_hashes
+        )
+        return (
+            dd.minhash_near_duplicates(
+                docs,
+                threshold=threshold,
+                n_hashes=n_hashes,
+                band_size=band_size,
+                shingle_n=shingle_n,
+                max_bucket=max_bucket,
+                sig_agree_min=sig_agree_min,
+                sh=sh,
+                sigs=sigs,
             )
-            return (
-                dd.minhash_near_duplicates(
-                    docs,
-                    threshold=threshold,
-                    n_hashes=n_hashes,
-                    band_size=band_size,
-                    shingle_n=shingle_n,
-                    max_bucket=max_bucket,
-                    sig_agree_min=sig_agree_min,
-                    sh=sh,
-                    sigs=sigs,
-                )
-                .select("doc_a", "doc_b", "jaccard")
-                .localCheckpoint(eager=True)
-            )
+            .select("doc_a", "doc_b", "jaccard")
+            .localCheckpoint(eager=True)
+        )
 
-        _memo_fill(_MINHASH_PAIRS_CACHE, key, "minhash_pairs", _build)
-    return _MINHASH_PAIRS_CACHE[key]
+    return _memo_fill(_MINHASH_PAIRS_CACHE, key, "minhash_pairs", _build)
 
 
 def _minhash_cc_labels(
@@ -645,23 +589,20 @@ def _minhash_cc_labels(
         sf_dir,
         (threshold, n_hashes, band_size, shingle_n, max_bucket, sig_agree_min),
     )
-    if key not in _MINHASH_CC_CACHE:
+    def _build() -> DataFrame:
+        pairs = _minhash_verified_pairs(
+            spark,
+            sf_dir,
+            threshold=threshold,
+            n_hashes=n_hashes,
+            band_size=band_size,
+            shingle_n=shingle_n,
+            max_bucket=max_bucket,
+            sig_agree_min=sig_agree_min,
+        ).select("doc_a", "doc_b")
+        return dd.connected_components(pairs).localCheckpoint(eager=True)
 
-        def _build() -> DataFrame:
-            pairs = _minhash_verified_pairs(
-                spark,
-                sf_dir,
-                threshold=threshold,
-                n_hashes=n_hashes,
-                band_size=band_size,
-                shingle_n=shingle_n,
-                max_bucket=max_bucket,
-                sig_agree_min=sig_agree_min,
-            ).select("doc_a", "doc_b")
-            return dd.connected_components(pairs).localCheckpoint(eager=True)
-
-        _memo_fill(_MINHASH_CC_CACHE, key, "minhash_cc", _build)
-    return _MINHASH_CC_CACHE[key]
+    return _memo_fill(_MINHASH_CC_CACHE, key, "minhash_cc", _build)
 
 
 def _dsir_bucket_counts(
@@ -684,26 +625,23 @@ def _dsir_bucket_counts(
     discipline as every shared-build memo (lesson 35): applicationId +
     corpus fingerprint + shuffle layout + recipe."""
     key = _minhash_recipe_key(spark, sf_dir, ("dsir_buckets", n))
-    if key not in _DSIR_BUCKET_CACHE:
+    def _build() -> DataFrame:
+        docs = read_table(spark, sf_dir, "documents")
+        bg = dd.ngram_fingerprints(docs, n=n, extra_cols=())
+        bk = bg.select(
+            "doc_id",
+            F.expr(
+                "(instr('0123456789abcdef', substr(ng, 1, 1)) - 1) * 16"
+                " + (instr('0123456789abcdef', substr(ng, 2, 1)) - 1)"
+            ).alias("bucket"),
+        )
+        return (
+            bk.groupBy("doc_id", "bucket")
+            .agg(F.count("*").alias("n"))
+            .localCheckpoint(eager=True)
+        )
 
-        def _build() -> DataFrame:
-            docs = read_table(spark, sf_dir, "documents")
-            bg = dd.ngram_fingerprints(docs, n=n, extra_cols=())
-            bk = bg.select(
-                "doc_id",
-                F.expr(
-                    "(instr('0123456789abcdef', substr(ng, 1, 1)) - 1) * 16"
-                    " + (instr('0123456789abcdef', substr(ng, 2, 1)) - 1)"
-                ).alias("bucket"),
-            )
-            return (
-                bk.groupBy("doc_id", "bucket")
-                .agg(F.count("*").alias("n"))
-                .localCheckpoint(eager=True)
-            )
-
-        _memo_fill(_DSIR_BUCKET_CACHE, key, "dsir_buckets", _build)
-    return _DSIR_BUCKET_CACHE[key]
+    return _memo_fill(_DSIR_BUCKET_CACHE, key, "dsir_buckets", _build)
 
 
 # Bump when a recipe ingredient the token cannot see mechanically

@@ -1,17 +1,33 @@
 """Sources/sinks unit tests: CSV round trip, DDL generation, partitioned
-parquet layout, pandas interchange, dropna."""
+parquet layout, pandas interchange, dropna, the ``read_table`` memo."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nyc_yellow_taxi_trip_data_pipeline_spark.sources import io
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     read_csv,
+    read_table,
     schema_to_ddl,
     write_csv,
     write_parquet,
 )
+
+SF_DIR = "/root/testdata/sf0.001"
+
+
+def _copy_table(tmp_path, table: str) -> str:
+    """A private copy of one test table, so the memo entry is cold and the
+    file can be rewritten in place."""
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf, exist_ok=True)
+    shutil.copy(os.path.join(SF_DIR, f"{table}.parquet"), sf)
+    return sf
 
 
 def test_csv_round_trip(spark, tmp_path):
@@ -212,3 +228,121 @@ def test_python_datasource_stats_pruning_and_roundtrip(spark, tmp_path):
         assert got == {(4, 40)}
     finally:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+
+
+def test_read_table_repeat_launches_no_job(spark, tmp_path):
+    """A repeat read of an unchanged table is a memo hit: the same
+    DataFrame back, no file listing and no schema-inference job."""
+    sf = _copy_table(tmp_path, "orders")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "read-table-memo-probe"
+    sc.setJobGroup(group, "read_table memo probe")
+    try:
+        first = read_table(spark, sf, "orders")
+        cold_jobs = set(tracker.getJobIdsForGroup(group))
+        assert cold_jobs, "a cold read should run the schema job"
+        second = read_table(spark, sf, "orders")
+        assert set(tracker.getJobIdsForGroup(group)) == cold_jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert second is first
+
+
+def test_read_table_sees_in_place_rewrite(spark, tmp_path):
+    """Rewriting a table in place moves its data fingerprint, so the next
+    read lists the new file and returns the new rows."""
+    import pandas as pd
+
+    sf = _copy_table(tmp_path, "orders")
+    path = os.path.join(sf, "orders.parquet")
+    before = read_table(spark, sf, "orders")
+    n = before.count()
+    pdf = pd.read_parquet(path)
+    pdf.head(7).to_parquet(path, index=False)
+    after = read_table(spark, sf, "orders")
+    assert after is not before
+    assert n > 7 and after.count() == 7
+    assert read_table(spark, sf, "orders") is after
+
+
+def test_read_table_new_session_evicts_old_entries(spark, tmp_path):
+    """A DataFrame belongs to its session: a read under another session
+    builds its own entry and drops every entry of the session before."""
+    sf = _copy_table(tmp_path, "orders")
+    mine = read_table(spark, sf, "orders")
+    other = spark.newSession()
+    theirs = read_table(other, sf, "orders")
+    assert theirs is not mine and theirs.sparkSession is other
+    sessions = {k[0] for k in io._READ_MEMO}
+    assert sessions == {
+        (
+            other.sparkContext.applicationId,
+            other._jsparkSession.sessionUUID(),
+        )
+    }
+    assert read_table(spark, sf, "orders") is not mine
+
+
+def test_read_table_self_join_of_two_reads_matches_duckdb(spark):
+    """Two reads of one table are the same memoized DataFrame; a
+    self-join through ``.alias`` still resolves each side on its own."""
+    from tools.parity import duck_connection
+
+    a = read_table(spark, SF_DIR, "orders")
+    b = read_table(spark, SF_DIR, "orders")
+    assert a is b
+    got = (
+        a.alias("x")
+        .join(
+            b.alias("y"),
+            (F.col("x.o_custkey") == F.col("y.o_custkey"))
+            & (F.col("x.o_orderkey") < F.col("y.o_orderkey")),
+        )
+        .count()
+    )
+    con = duck_connection(SF_DIR)
+    want = con.execute(
+        "SELECT COUNT(*) FROM orders x JOIN orders y"
+        " ON x.o_custkey = y.o_custkey AND x.o_orderkey < y.o_orderkey"
+    ).fetchone()[0]
+    assert got == want and got > 0
+
+
+def test_memo_read_concurrent_fills_return_their_own_value(spark):
+    """Threads racing fills and evictions (two tokens per path) must each
+    get the value built for their own key -- never another key's value,
+    never a KeyError."""
+    import random
+    import sys
+    import threading
+
+    paths = [f"/memo-stress/{i}" for i in range(3)]
+    errors: list = []
+
+    def worker(seed: int) -> None:
+        rng = random.Random(seed)
+        try:
+            for _ in range(300):
+                want = (rng.choice(paths), rng.randint(0, 1))
+                got = io._memo_read(spark, *want, lambda: want)
+                if got != want:
+                    errors.append((want, got))
+        except Exception as exc:  # noqa: BLE001 -- surfaced via assert
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+        for k in [k for k in list(io._READ_MEMO) if k[1] in paths]:
+            io._READ_MEMO.pop(k, None)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]

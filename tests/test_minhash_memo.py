@@ -318,6 +318,27 @@ def test_shared_build_seconds_accounting(spark, tmp_path):
     )
 
 
+def test_memo_fill_returns_value_and_sweeps_dead_sessions(spark):
+    """``_memo_fill`` hands back the value it built or found (callers never
+    re-read the dict, so a concurrent eviction cannot raise KeyError),
+    and a fill drops the build seconds of every other applicationId."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
+
+    app = spark.sparkContext.applicationId
+    cache: dict = {}
+    key = (app, "sf", "tok", "4", ("memo-fill-probe",))
+    dead = ("app-of-a-stopped-session", "minhash_pairs")
+    dp._SHARED_BUILD_SECONDS[dead] = 1.0
+    try:
+        fill = dp._memo_fill
+        assert fill(cache, key, "memo_fill_probe", lambda: "built") == "built"
+        assert fill(cache, key, "memo_fill_probe", lambda: "again") == "built"
+        assert cache == {key: "built"}
+        assert {a for a, _ in dp._SHARED_BUILD_SECONDS} == {app}
+    finally:
+        dp._SHARED_BUILD_SECONDS.pop((app, "memo_fill_probe"), None)
+
+
 def test_memo_cross_corpus_interleaving(spark, tmp_path):
     """Two corpora interleaved in one session: A, B, then A again —
     each read must return its own corpus's pairs (path+fingerprint in
