@@ -2,9 +2,13 @@
 
 The reference serves ``POST /predict/`` from FastAPI: CSV upload ->
 preprocess -> PipelineModel.transform -> ``[{fare_amount, prediction},
-...]`` records. The engine capability is ``operators.serving`` — this
-module only adds the HTTP envelope, import-gated like MLflow so the
-package works in environments without fastapi installed.
+...]`` records. The engine capability is ``operators.serving``, which
+scores with the model's compiled form (``ml.compile``: the forest is
+broadcast once per session, not on every request as ``transform`` does)
+— this module only adds the HTTP envelope, import-gated like MLflow so
+the package works in environments without fastapi installed. The upload
+must carry the reference schema's pickup and dropoff timestamps; without
+them ``predict_csv`` raises ValueError naming the missing columns.
 
 Run: ``uvicorn`` on ``create_app(spark, model)``. The reference decodes
 the upload with pandas then ``createDataFrame`` (main.py:65-67); here the

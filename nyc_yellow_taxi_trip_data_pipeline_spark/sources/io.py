@@ -112,27 +112,31 @@ def _data_fingerprint_token(sf_dir: str, table: str) -> str:
     return hashlib.md5(fp.encode()).hexdigest()[:8]
 
 
-# Session memo of path-based parquet DataFrames. Creating one costs a
-# file listing plus a schema-inference job on the driver (~70 ms per
-# read at sf0.01 on a 4-vCPU host, ~0.1 s at sf0.1 -- lesson 32), paid
-# again on every call even when the files have not changed. Entries key on
-# ((applicationId, sessionUUID), path, token): ``token`` is the caller's
-# proof that the files under ``path`` are the ones the entry listed --
-# the data fingerprint for base tables (``read_table``), the _SUCCESS
-# stamp for published cache dirs (``plans.datapipe
-# ._read_published_parquet``). A caller with no token reads directly and
-# never memoizes. One insert evicts the entries of every other session
-# (a DataFrame is bound to its session; a stopped one's plans can never
-# be returned again) and the superseded-token entries of the same path,
-# so the memo holds at most one entry per live path. Plain-dict
+# Session memo of path-based parquet DataFrames, and of the other
+# session-bound values that are costly to build and never change under
+# their key. Creating a parquet DataFrame costs a file listing plus a
+# schema-inference job on the driver (~70 ms per read at sf0.01 on a
+# 4-vCPU host, ~0.1 s at sf0.1 -- lesson 32), paid again on every call
+# even when the files have not changed. Entries key on
+# ((applicationId, sessionUUID), name, token): ``token`` is the caller's
+# proof that the thing ``name`` names is the one the entry was built
+# from -- the data fingerprint for base tables (``read_table``), the
+# _SUCCESS stamp for published cache dirs (``plans.datapipe
+# ._read_published_parquet``), a constant for a compiled serving model
+# (``ml.compile.compile_pipeline``, named by the fitted model's uid,
+# which never changes). A caller with no token builds directly and never
+# memoizes. One insert evicts the entries of every other session (a
+# DataFrame or broadcast is bound to its session; a stopped one's can
+# never be returned again) and the superseded-token entries of the same
+# name, so the memo holds at most one entry per live name. Plain-dict
 # concurrency: ``setdefault`` returns whichever value won, so the worst
-# case of a race is a duplicated listing, never a torn entry or a
+# case of a race is a duplicated build, never a torn entry or a
 # KeyError.
 _READ_MEMO: dict = {}
 
 
-def _memo_read(spark: SparkSession, path: str, token, build):
-    """``build()``'s value, memoized under (session, ``path``, ``token``);
+def _memo_read(spark: SparkSession, name: str, token, build):
+    """``build()``'s value, memoized under (session, ``name``, ``token``);
     ``token=None`` means "no validity proof": build, do not memoize."""
     if token is None:
         return build()
@@ -140,12 +144,12 @@ def _memo_read(spark: SparkSession, path: str, token, build):
         spark.sparkContext.applicationId,
         spark._jsparkSession.sessionUUID(),
     )
-    key = (session, path, token)
+    key = (session, name, token)
     hit = _READ_MEMO.get(key)
     if hit is not None:
         return hit
     for old in [
-        k for k in list(_READ_MEMO) if k[0] != session or k[1] == path
+        k for k in list(_READ_MEMO) if k[0] != session or k[1] == name
     ]:
         _READ_MEMO.pop(old, None)
     return _READ_MEMO.setdefault(key, build())

@@ -3,7 +3,7 @@
 Usage: python tools/bench_ab.py OLD.json NEW.json [--all] [--band R]
 
 Judges two bench snapshots (bench.py output or BENCH_r{N}.json driver
-records — both shapes handled by tools/bench_compare.load) the way the
+records — both shapes handled by ``load``) the way the
 repo's lesson 31 prescribes:
 
 - the comparison set is restricted to BYTE-IDENTICAL queries — those
@@ -32,14 +32,32 @@ gate on it.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_compare import load  # noqa: E402
 from tools.verified_manifest import _load, query_hash  # noqa: E402
+
+
+def load(path: str) -> dict[str, float]:
+    """Per-query seconds of a bench.py output line or of a driver
+    record, which wraps the bench line under a truncated "tail"."""
+    with open(path) as f:
+        doc = json.load(f)
+    if "queries" in doc:
+        return doc["queries"]
+    if isinstance(doc.get("parsed"), dict):
+        return doc["parsed"]["queries"]
+    # driver record with truncated tail: regex out the per-query pairs
+    tail = doc.get("tail", "")
+    return {
+        k: float(v)
+        for k, v in re.findall(r'"(q\d+[a-z0-9_]*)":\s*([\d.]+)', tail)
+    }
 
 
 def main(argv: list[str]) -> int:
