@@ -11,6 +11,8 @@ the session so every entry point gets the same tuned configuration:
   machines (and comparable to UTC-naive engines like DuckDB).
 - Shuffle partitions sized to the local core count for tests; on a cluster
   AQE coalesces from a deliberately-high initial number instead.
+- Local-master sessions write streaming checkpoints through the
+  FileSystem checkpoint manager (see ``LOCAL_CHECKPOINT_FILE_MANAGER``).
 
 Two PROFILES own the knobs whose right value flips between a laptop-scale
 smoke corpus and a 1000-executor cluster (``SPARK_GRAFT_PROFILE`` env var,
@@ -51,6 +53,22 @@ PROFILES: dict[str, dict[str, str]] = {
     },
 }
 
+# Streaming checkpoint manager for local masters. Spark's default,
+# FileContextBasedCheckpointFileManager, renames through
+# AbstractFileSystem.rename; on the local file system without libhadoop
+# that stats the target via FileUtil.readLink, which forks `readlink`
+# twice per rename. Every offset-log, commit-log, state-delta and .crc
+# write pays it, the state store once per state partition. The
+# FileSystem manager renames through ChecksumFileSystem.rename, a single
+# rename(2) that also moves the .crc, so nothing atomic is lost on a
+# local disk. Other masters keep Spark's choice: HDFS gets an atomic
+# overwrite-rename only through FileContext. (Spark 4.1 keeps the class
+# in the checkpointing subpackage; 3.5 had it one package up.)
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(
     app_name: str = "nyc-yellow-taxi-pipeline-spark",
@@ -76,9 +94,10 @@ def get_spark(
         )
     prof = PROFILES[profile]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or prof["spark.sql.shuffle.partitions"]),
@@ -101,6 +120,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            LOCAL_CHECKPOINT_FILE_MANAGER,
+        )
     # Builder-time classpath additions (e.g. a JDBC driver jar for the
     # live-Postgres integration tests): comma-separated jar paths.
     # Builder-time because spark.jars cannot be set on a live session —

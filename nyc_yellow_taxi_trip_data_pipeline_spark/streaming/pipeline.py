@@ -147,6 +147,14 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
     (counts, quantized integer sums, per-key state), so scoping the count
     down is a pure cost knob. A real deployment sizes this to
     state-volume / executor-memory instead; see ARCHITECTURE.md.
+
+    Part of each state partition's cost is checkpoint-file I/O. Under
+    Spark's FileContext checkpoint manager on a machine without
+    libhadoop, Hadoop forks ``readlink`` twice per file rename and
+    ``chmod`` per file created. Local engine sessions use the FileSystem
+    manager (``session.LOCAL_CHECKPOINT_FILE_MANAGER``), which drops the
+    ``readlink`` forks; the ``chmod`` per file remains, and the partition
+    count still multiplies it.
     """
     key = "spark.sql.shuffle.partitions"
     try:

@@ -13,6 +13,11 @@ query mid-stream, restart it, and assert that
 File source + local checkpoint stand in for Kafka + DBFS/S3 exactly as in
 the rest of the suite — the recovery contract (offset log + commit log +
 state store under checkpointLocation) is source-agnostic.
+
+The battery runs under both checkpoint file managers: the FileSystem
+manager that local engine sessions use (session.py), and Spark's own
+FileContext default that bare sessions (``tools/parity.py --bare``) and
+non-local masters keep (the ``*_filecontext`` tests).
 """
 
 from __future__ import annotations
@@ -24,6 +29,9 @@ import time as _time
 import pytest
 from pyspark.sql import types as T
 
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import (
+    LOCAL_CHECKPOINT_FILE_MANAGER,
+)
 from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import (
     hourly_windowed_agg,
     read_stream,
@@ -39,6 +47,48 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("user_id", T.LongType()),
         T.StructField("value", T.DoubleType()),
     ]
+)
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FILECONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+@pytest.fixture
+def checkpoint_manager(request, spark, tmp_path):
+    """Scope the checkpoint file manager to one test and restore the
+    session's setting afterwards. The manager is the engine's FileSystem
+    one unless the test passes ``None`` indirectly, which unsets the key
+    and leaves Spark's own choice (FileContext). Asserts the manager a
+    streaming query would get really is the expected class."""
+    wanted = getattr(request, "param", LOCAL_CHECKPOINT_FILE_MANAGER)
+    prev = spark.conf.get(_MANAGER_KEY, None)
+    if wanted is None:
+        spark.conf.unset(_MANAGER_KEY)
+    else:
+        spark.conf.set(_MANAGER_KEY, wanted)
+    try:
+        jvm = spark._jvm
+        checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        manager = checkpointing.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path / "probe")),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        assert manager.getClass().getName() == (wanted or _FILECONTEXT_MANAGER)
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_MANAGER_KEY)
+        else:
+            spark.conf.set(_MANAGER_KEY, prev)
+
+
+# The battery's second arm: Spark's default checkpoint manager.
+_FILECONTEXT = pytest.mark.parametrize(
+    "checkpoint_manager", [None], ids=["filecontext"], indirect=True
 )
 
 
@@ -60,7 +110,9 @@ def _stream(spark, d):
     )
 
 
-def test_parquet_sink_exactly_once_across_restart(spark, tmp_path):
+def test_parquet_sink_exactly_once_across_restart(
+    spark, tmp_path, checkpoint_manager
+):
     d = tmp_path / "in"
     d.mkdir()
     out = str(tmp_path / "out")
@@ -112,7 +164,7 @@ _ROCKSDB_PROVIDER = (
 )
 
 
-@pytest.mark.parametrize(
+_PROVIDERS = pytest.mark.parametrize(
     ("provider", "changelog"),
     [
         (_HDFS_PROVIDER, None),
@@ -121,8 +173,11 @@ _ROCKSDB_PROVIDER = (
     ],
     ids=["hdfs", "rocksdb", "rocksdb-changelog"],
 )
+
+
+@_PROVIDERS
 def test_stateful_window_state_survives_restart(
-    spark, tmp_path, provider, changelog
+    spark, tmp_path, provider, changelog, checkpoint_manager
 ):
     """Run 1 accumulates two rows into the 10:00 window; its watermark
     tops out at 9:50 (10:20 - 30min), so nothing is ripe and nothing is
@@ -213,7 +268,7 @@ def test_stateful_window_state_survives_restart(
     assert emitted == [("2024-01-01T10:00:00", 2, 3.0)]
 
 
-def test_completed_batches_not_reprocessed(spark, tmp_path):
+def test_completed_batches_not_reprocessed(spark, tmp_path, checkpoint_manager):
     """foreachBatch + checkpoint: batch ids continue (not restart at 0)
     and no pre-stop row flows through the callback again."""
     d = tmp_path / "in"
@@ -259,3 +314,29 @@ def test_completed_batches_not_reprocessed(spark, tmp_path):
     # (empty batches are fine; re-delivered user 1/2 rows are not).
     assert [u for _, us in run2 for u in us] == [3]
     assert min(b for b, _ in run2) > max(b for b, _ in run1)
+
+
+@_FILECONTEXT
+def test_parquet_sink_exactly_once_across_restart_filecontext(
+    spark, tmp_path, checkpoint_manager
+):
+    test_parquet_sink_exactly_once_across_restart(
+        spark, tmp_path, checkpoint_manager
+    )
+
+
+@_FILECONTEXT
+@_PROVIDERS
+def test_stateful_window_state_survives_restart_filecontext(
+    spark, tmp_path, provider, changelog, checkpoint_manager
+):
+    test_stateful_window_state_survives_restart(
+        spark, tmp_path, provider, changelog, checkpoint_manager
+    )
+
+
+@_FILECONTEXT
+def test_completed_batches_not_reprocessed_filecontext(
+    spark, tmp_path, checkpoint_manager
+):
+    test_completed_batches_not_reprocessed(spark, tmp_path, checkpoint_manager)

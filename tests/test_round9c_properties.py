@@ -227,9 +227,11 @@ def test_timestamp_queries_survive_foreign_session_timezone():
     timestamp-heavy round-9 query against its DuckDB oracle."""
     import subprocess
     import sys
+    from pathlib import Path
 
+    root = Path(__file__).resolve().parents[1]
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {str(root)!r})\n"
         "import duckdb\n"
         "from pyspark.sql import SparkSession\n"
         "from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES\n"
@@ -255,7 +257,7 @@ def test_timestamp_queries_survive_foreign_session_timezone():
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=root,
     )
     assert "TZ_OK" in out.stdout, out.stderr[-2000:]
 

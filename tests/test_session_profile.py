@@ -8,10 +8,27 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
-from nyc_yellow_taxi_trip_data_pipeline_spark.session import PROFILES, get_spark
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import (
+    LOCAL_CHECKPOINT_FILE_MANAGER,
+    PROFILES,
+    get_spark,
+)
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def _run_clean(code: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=180,
+        cwd=ROOT,
+    )
 
 
 def test_profiles_cover_the_scale_sensitive_knobs():
@@ -46,11 +63,22 @@ def test_cluster_profile_actually_applies():
         "assert s.conf.get('spark.sql.shuffle.partitions') == '4096'\n"
         "print('PROFILE_OK')\n"
     )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=180,
-        cwd="/root/repo",
-    )
+    out = _run_clean(code)
     assert "PROFILE_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_local_session_checkpoints_through_filesystem_manager():
+    """A local-master session names the FileSystem checkpoint manager,
+    and the JVM can load that class. The class changed packages between
+    Spark 3.5 and 4.x; if it moves again this test fails, instead of
+    every streaming ``start()``."""
+    code = (
+        "from nyc_yellow_taxi_trip_data_pipeline_spark.session import get_spark\n"
+        "s = get_spark('ckpt-manager-test', master='local[2]')\n"
+        "name = s.conf.get('spark.sql.streaming.checkpointFileManagerClass')\n"
+        f"assert name == {LOCAL_CHECKPOINT_FILE_MANAGER!r}, name\n"
+        "s._jvm.java.lang.Class.forName(name)\n"
+        "print('MANAGER_OK')\n"
+    )
+    out = _run_clean(code)
+    assert "MANAGER_OK" in out.stdout, out.stderr[-2000:]
