@@ -5,14 +5,6 @@ Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    local[] parallelism + shuffle partitions (default 32)
   BENCH_QUERIES       comma-separated subset (default: all registered)
-  BENCH_ML=1          also run the reference-shaped ML benchmark
-                      (RF numTrees=100 maxDepth=10 on 300k rows x 17-dim
-                      vector - the reference's headline 115.2s/8.8s
-                      fit/eval workload, BASELINE.md). Off by default to
-                      keep the per-round bench query-focused; measured
-                      2026-08-14 on this machine: fit 23.7s, eval 2.7s
-                      (16-partition fit — see the repartition note below).
-  BENCH_SKIP_QUERIES=1  skip the query inventory (ML-only iteration).
 
 Each query is materialized through the `noop` sink — full execution of the
 physical plan (scan, shuffles, Python stages) without collect-to-driver or
@@ -99,10 +91,6 @@ def main() -> None:
     errors: dict[str, str] = {}
     passes_done = 0
     t_bench = time.perf_counter()
-    if os.environ.get("BENCH_SKIP_QUERIES") == "1":
-        # ML-only iteration mode: skip the (multi-minute) query inventory
-        # when re-measuring just the BENCH_ML numbers.
-        names = []
     for rep in range(reps):
         if rep > 1 and time.perf_counter() - t_bench > budget_s:
             break
@@ -135,74 +123,25 @@ def main() -> None:
         "agg": "min",
     }
     # Shared-build accounting (r17, VERDICT r16 item #1 — additions
-    # only): the session-memoized family builds (MinHash pairs/CC,
-    # SimHash pairs, ANN rankings, DSIR buckets) land on rep 1 of their
-    # first consumer and are excluded from every per-query MIN, so
-    # `value` alone understates a cold session by this one-time cost.
-    # The memo fills record their exclusive wall seconds per family
-    # (plans/datapipe.shared_build_seconds); report the sum + breakdown
-    # alongside the unchanged totals.
+    # only): every session-memoized value (base-table and published-dir
+    # reads, the MinHash/SimHash/ANN/DSIR family builds, largest-group
+    # probes) is built on rep 1 of its first consumer and excluded from
+    # every per-query MIN, so `value` alone understates a cold session
+    # by this one-time cost. The memo records exclusive build seconds
+    # per family; report their sum + breakdown alongside the unchanged
+    # totals, and the per-family hit/miss counts under `memo`.
+    from nyc_yellow_taxi_trip_data_pipeline_spark import memo  # noqa: E402
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import (  # noqa: E402
         datapipe as _datapipe,
     )
 
-    builds = _datapipe.shared_build_seconds(spark.sparkContext.applicationId)
+    app_id = spark.sparkContext.applicationId
+    builds = _datapipe.shared_build_seconds(app_id)
     result["shared_build_sec"] = round(sum(builds.values()), 3)
     result["shared_builds"] = builds
+    result["memo"] = memo.stats(app_id)
     if errors:
         result["errors"] = errors
-
-    if os.environ.get("BENCH_ML") == "1":
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from nyc_yellow_taxi_trip_data_pipeline_spark.ml import (  # noqa: PLC0415
-            FeatureSpec,
-            evaluate,
-            train,
-        )
-        from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (  # noqa: PLC0415
-            read_table,
-        )
-
-        li = read_table(spark, sf_dir, "lineitem")
-        df = li.limit(300000).select(
-            "l_quantity", "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-            (F.col("l_quantity") * F.col("l_extendedprice")).alias("f1"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("f2"),
-            (F.col("l_extendedprice") * (1 + F.col("l_tax"))).alias("f3"),
-            F.hour("l_shipdate").cast("double").alias("f4"),
-            F.dayofweek("l_shipdate").cast("double").alias("f5"),
-            F.month("l_shipdate").cast("double").alias("f6"),
-            (F.col("l_quantity") + F.col("l_tax")).alias("f7"),
-            (F.col("l_quantity") - F.col("l_discount")).alias("f8"),
-            (F.col("l_quantity") * 2).alias("f9"),
-            (F.col("l_discount") * 100).alias("f10"),
-        ).repartition(16).cache()
-        # limit() collapses to ONE partition — without the repartition the
-        # whole RandomForest fit (tree-statistics aggregation every level)
-        # ran single-threaded on a 32-core box (measured round 8: 101.5s
-        # at 1 partition, 23.4s at 16, 139.9s at 32 where per-level task
-        # overhead swamps the 300k-row compute). Determinism is safe:
-        # Dataset.randomSplit sorts within partitions before sampling.
-        df.count()
-        spec = FeatureSpec(
-            label="l_extendedprice",
-            numeric=(
-                "l_quantity", "l_discount", "l_tax", "f1", "f2", "f3", "f4",
-                "f5", "f6", "f7", "f8", "f9", "f10",
-            ),
-            categorical=("l_returnflag",),
-            num_trees=100,
-            max_depth=10,
-        )
-        t0 = time.perf_counter()
-        model, _, test_df = train(df, spec)
-        result["ml_fit_sec"] = round(time.perf_counter() - t0, 1)
-        t0 = time.perf_counter()
-        metrics = evaluate(model, test_df, "l_extendedprice")
-        result["ml_eval_sec"] = round(time.perf_counter() - t0, 1)
-        result["ml_r2"] = round(metrics["r2"], 4)
-        df.unpersist()
 
     # The driver captures stdout with a bounded tail, which clipped ~28
     # per-query numbers out of BENCH_r06. Persist the full JSON to a file

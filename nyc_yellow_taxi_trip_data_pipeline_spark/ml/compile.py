@@ -41,7 +41,7 @@ from pyspark.ml.regression import RandomForestRegressionModel
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import _memo_read
+from nyc_yellow_taxi_trip_data_pipeline_spark import memo
 
 
 class CompiledPipeline(NamedTuple):
@@ -235,6 +235,8 @@ def _compile(spark: SparkSession, model: PipelineModel) -> CompiledPipeline:
 
 def compile_pipeline(spark: SparkSession, model: PipelineModel) -> CompiledPipeline:
     """The compiled form of ``model``, built once per session and model
-    uid (a fitted model never changes) through the ``sources.io`` session
-    memo, which drops it with its session, broadcast included."""
-    return _memo_read(spark, f"model:{model.uid}", "compiled", lambda: _compile(spark, model))
+    uid (a fitted model never changes) through the session memo, which
+    drops it with its session, broadcast included."""
+    return memo.get_or_build(
+        spark, "model", f"model:{model.uid}", "compiled", lambda: _compile(spark, model)
+    )

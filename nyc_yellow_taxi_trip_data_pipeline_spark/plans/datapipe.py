@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_yellow_taxi_trip_data_pipeline_spark import memo
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators import dedup as dd
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators import multimodal as mm
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators import similarity as sim
@@ -21,7 +22,6 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.plans.helpers import sql_qsum
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans.registry import register
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     _data_fingerprint_token,
-    _memo_read,
     read_table,
 )
 
@@ -230,24 +230,16 @@ def _drop_stale_token_tables(spark: SparkSession, base: str) -> None:
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
-# Deterministic-per-corpus argmax pulls (the compaction planners' "row-
-# richest partition"), memoized on the data fingerprint so repeated runs
-# (bench reps, parity + driver in one session) don't re-scan the source
-# for a value that only changes when the data regenerates. Driver-side
-# dict; entries are (count, group) tuples, a few bytes per corpus.
-_LARGEST_GROUP_CACHE: dict = {}
-
-
 def _largest_group(spark, sf_dir: str, table: str, df, col: str):
     """(row_count, group_value) of the row-richest non-null ``col``
-    group in ``df``, ties to the LARGEST group value — memoized on
-    ``table``'s data fingerprint. Bounded pull: <= #groups rows, once
-    per corpus. Concurrency (ADVICE r14): same-session threads may race
-    the cold probe — compute-then-setdefault keeps the worst case at a
-    duplicated scan, never a torn entry; null groups are filtered so
-    the (n, group) tie-break max() can't hit a None/int comparison."""
-    key = (_data_fingerprint_token(sf_dir, table), col)
-    if key not in _LARGEST_GROUP_CACHE:
+    group in ``df``, ties to the LARGEST group value — session-memoized
+    on ``table``'s data fingerprint, so repeated runs (bench reps, parity
+    + driver in one session) don't re-scan the source for a value that
+    only changes when the data regenerates. Bounded pull: <= #groups
+    rows. Null groups are filtered so the (n, group) tie-break max()
+    can't hit a None/int comparison."""
+
+    def build():
         rows = (
             df.filter(F.col(col).isNotNull())
             .groupBy(col)
@@ -258,18 +250,23 @@ def _largest_group(spark, sf_dir: str, table: str, df, col: str):
             raise AssertionError(
                 f"_largest_group: no non-null {col!r} groups in {table}"
             )
-        _LARGEST_GROUP_CACHE.setdefault(
-            key, max((r["n"], r[col]) for r in rows)
-        )
-    return _LARGEST_GROUP_CACHE[key]
+        return max((r["n"], r[col]) for r in rows)
+
+    return memo.get_or_build(
+        spark,
+        "largest_group",
+        (sf_dir, table, col),
+        _data_fingerprint_token(sf_dir, table),
+        build,
+    )
 
 
 def _read_published_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Memoized ``spark.read.parquet(path)`` for ATOMICALLY-PUBLISHED,
     immutable cache directories (``_publish_cache_build`` targets or
-    their subdirs), through the ``sources.io`` read memo with the
-    ``_SUCCESS`` mtime as the validity token: the path already embeds
-    the data-fingerprint token + logic salt, and the stamp closes the
+    their subdirs), through the session memo with the ``_SUCCESS``
+    mtime as the validity token: the path already embeds the
+    data-fingerprint token + logic salt, and the stamp closes the
     one remaining hole -- a same-token wipe + rebuild inside one session
     (new part-file names would orphan a cached file index). An
     unstamped (unpublished or racing) directory is read directly and
@@ -288,7 +285,9 @@ def _read_published_parquet(spark: SparkSession, path: str) -> DataFrame:
         stamp = os.stat(os.path.join(success, "_SUCCESS")).st_mtime_ns
     except OSError:
         stamp = None
-    return _memo_read(spark, path, stamp, lambda: spark.read.parquet(path))
+    return memo.get_or_build(
+        spark, "published", path, stamp, lambda: spark.read.parquet(path)
+    )
 
 
 # Shared MinHash near-dup build (r16, the r15 verdict's item #1): five
@@ -300,122 +299,35 @@ def _read_published_parquet(spark: SparkSession, path: str) -> DataFrame:
 # times per corpus snapshot either — ARCHITECTURE.md's answer there is
 # ONE persisted signature/pair snapshot, which q98/q167's bucketed
 # signature index already demonstrates; this memo is the in-session
-# equivalent for the batch family). Entries key on:
-#   - applicationId (dead-session DataFrames are evicted on insert,
-#     same discipline as the sources.io read memo),
-#   - the documents table's DATA fingerprint (in-place regeneration
-#     rebuilds — lesson 25; never path-keyed),
-#   - every recipe dial (threshold/hashes/bands/shingle/cap/gate), so
-#     q101's sharpened dial can never collide with q32's default,
-#   - the session's CURRENT spark.sql.shuffle.partitions: the
-#     layout-flip determinism sweep (tools/rerun_determinism.py) runs
-#     both layouts in ONE session, and a layout-blind memo would hand
-#     the second layout the first layout's checkpointed build —
-#     turning that gate into a self-comparison for this family.
-# Values are eager-localCheckpointed (executor-local disk): the pair
-# set is consumed by up to four downstream plan shapes per bench pass,
-# and lineage past the checkpoint is already truncated inside
-# minhash_near_duplicates. Plain-dict compute-then-setdefault
-# concurrency: worst case a duplicated build, never a torn entry.
-_MINHASH_PAIRS_CACHE: dict = {}
-_MINHASH_CC_CACHE: dict = {}
-_MINHASH_SH_CACHE: dict = {}
-_MINHASH_SIGS_CACHE: dict = {}
-_SIMHASH_PAIRS_CACHE: dict = {}
-_ANN_RANKING_CACHE: dict = {}
-_DSIR_BUCKET_CACHE: dict = {}
+# equivalent for the batch family). Each family below is one
+# ``memo.get_or_build`` family; its values are eager-localCheckpointed
+# (executor-local disk): the pair set is consumed by up to four
+# downstream plan shapes per bench pass, and lineage past the
+# checkpoint is already truncated inside minhash_near_duplicates.
 
 
 def _minhash_recipe_key(
     spark: SparkSession, sf_dir: str, recipe: tuple, table: str = "documents"
-):
-    # sf_dir rides along EXPLICITLY (the fingerprint token hashes it in,
-    # so the token alone cannot tell "same corpus regenerated in place"
-    # from "a different corpus at another path") — stale-fingerprint
-    # eviction needs that distinction (ADVICE r16, _evict_stale).
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint_token(sf_dir, table),
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        recipe,
-    )
-
-
-def _evict_stale(cache: dict, key: tuple) -> None:
-    """Drop memo entries that can never be returned again: keys from
-    stopped sessions (ADVICE r15), and — ADVICE r16 — same-session keys
-    for the SAME (sf_dir, layout, recipe) whose data fingerprint
-    differs: after an in-place testdata regeneration the old-fingerprint
-    entry is unreachable forever, yet its eager-localCheckpoint blocks
-    would stay pinned for the session's lifetime. Different-corpus
-    (other sf_dir) and different-layout entries stay — cross-corpus
-    interleaving and the 32<->7 layout-flip sweep legitimately read
-    them again. Popping the dict reference IS the release mechanism:
-    localCheckpoint blocks are unpersisted by Spark's ContextCleaner
-    once the plan object becomes unreachable (there is no public eager
-    unpersist for a checkpointed DataFrame)."""
-    app = key[0]
-    for old in [
-        k
-        for k in cache
-        if k[0] != app
-        or (k[:2] == key[:2] and k[3:] == key[3:] and k != key)
-    ]:
-        cache.pop(old, None)
-
-
-# One-time shared-build wall seconds per (applicationId, family) —
-# bench.py reports their sum as ``shared_build_sec`` so that the cost
-# min-of-N per-query timings exclude by construction (the family build
-# lands on rep 1 of its first consumer and every min drops it) is
-# first-class in the committed numbers instead of invisible
-# (VERDICT r16 item #1). Driver-side floats, a few entries per session.
-_SHARED_BUILD_SECONDS: dict = {}
-
-
-def _app_build_total(app_id: str) -> float:
-    return sum(s for (a, _), s in _SHARED_BUILD_SECONDS.items() if a == app_id)
+) -> tuple:
+    """(name, token) of a shared build. The name carries every axis a
+    session legitimately reads again, so a new value there never evicts
+    the old one: sf_dir (cross-corpus interleaving), every recipe dial
+    (q101's sharpened dial can never collide with q32's default), and
+    the session's CURRENT spark.sql.shuffle.partitions (the layout-flip
+    determinism sweep, tools/rerun_determinism.py, runs both layouts in
+    ONE session, and a layout-blind memo would hand the second layout
+    the first layout's checkpointed build). The token is ``table``'s
+    DATA fingerprint: an in-place regeneration rebuilds and evicts the
+    superseded build (lesson 25; never path-keyed)."""
+    name = (sf_dir, spark.conf.get("spark.sql.shuffle.partitions"), recipe)
+    return name, _data_fingerprint_token(sf_dir, table)
 
 
 def shared_build_seconds(app_id: str) -> dict:
-    """Per-family EXCLUSIVE build seconds recorded for ``app_id`` (nested
-    fills — pairs -> sigs -> shingles — record under their own family,
-    so the values sum without double counting)."""
-    return {
-        fam: round(s, 3)
-        for (a, fam), s in sorted(_SHARED_BUILD_SECONDS.items())
-        if a == app_id
-    }
-
-
-def _memo_fill(cache: dict, key: tuple, family: str, build):
-    """Shared get-or-build path for every shared-build memo: the entry
-    for ``key`` if there is one; otherwise evict stale keys, run
-    ``build()`` with exclusive wall-time accounting and publish via
-    setdefault. Returns the value it found or the one that won the
-    publish -- never a second ``cache[key]`` read, which a concurrent
-    ``_evict_stale`` could turn into a KeyError (ADVICE r17). Plain-dict
-    concurrency: worst case a duplicated build, never a torn entry."""
-    import time as _time
-
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    _evict_stale(cache, key)
-    # Stopped sessions' build seconds can never be reported again.
-    for k in [k for k in list(_SHARED_BUILD_SECONDS) if k[0] != key[0]]:
-        _SHARED_BUILD_SECONDS.pop(k, None)
-    nested0 = _app_build_total(key[0])
-    t0 = _time.perf_counter()
-    val = build()
-    elapsed = _time.perf_counter() - t0
-    nested = _app_build_total(key[0]) - nested0
-    k = (key[0], family)
-    _SHARED_BUILD_SECONDS[k] = _SHARED_BUILD_SECONDS.get(k, 0.0) + max(
-        0.0, elapsed - nested
-    )
-    return cache.setdefault(key, val)
+    """Per-family EXCLUSIVE build seconds of ``app_id``'s session memo
+    (nested builds — pairs -> sigs -> shingles — record under their own
+    family, so the values sum without double counting)."""
+    return {fam: c["build_s"] for fam, c in memo.stats(app_id).items()}
 
 
 def _simhash_verified_pairs(
@@ -434,7 +346,7 @@ def _simhash_verified_pairs(
     (`_minhash_recipe_key` folds in the corpus fingerprint and the
     current shuffle layout). pHash consumers (q113/q150) fingerprint
     media payloads, not text, and stay un-memoized by design."""
-    key = _minhash_recipe_key(
+    name, token = _minhash_recipe_key(
         spark, sf_dir, ("simhash", n_bits, n_bands, max_hamming, max_bucket)
     )
     def _build() -> DataFrame:
@@ -450,7 +362,7 @@ def _simhash_verified_pairs(
             max_bucket=max_bucket,
         ).localCheckpoint(eager=True)
 
-    return _memo_fill(_SIMHASH_PAIRS_CACHE, key, "simhash_pairs", _build)
+    return memo.get_or_build(spark, "simhash_pairs", name, token, _build)
 
 
 def _ann_rankings(spark: SparkSession, sf_dir: str) -> dict:
@@ -464,7 +376,7 @@ def _ann_rankings(spark: SparkSession, sf_dir: str) -> dict:
     memos but on the EMBEDDINGS fingerprint (the only table all three
     read); results are tiny ranked lists, so the eager checkpoints pin
     kilobytes."""
-    key = _minhash_recipe_key(
+    name, token = _minhash_recipe_key(
         spark, sf_dir, ("ann_rankings",), table="embeddings"
     )
     def _build() -> dict:
@@ -478,7 +390,7 @@ def _ann_rankings(spark: SparkSession, sf_dir: str) -> dict:
             "ivf": q66_ivf_ann(spark, sf_dir).localCheckpoint(eager=True),
         }
 
-    return _memo_fill(_ANN_RANKING_CACHE, key, "ann_rankings", _build)
+    return memo.get_or_build(spark, "ann_rankings", name, token, _build)
 
 
 def _minhash_shingles(
@@ -489,14 +401,14 @@ def _minhash_shingles(
     ``shingle_n``, so the 12-hash default dial, the 24-hash sharp dial
     (q101), and the delta-vs-index pipeline (q94) all read ONE table.
     Same key discipline and eagerness as ``_minhash_verified_pairs``."""
-    key = _minhash_recipe_key(spark, sf_dir, ("shingles", shingle_n))
+    name, token = _minhash_recipe_key(spark, sf_dir, ("shingles", shingle_n))
     def _build() -> DataFrame:
         docs = read_table(spark, sf_dir, "documents")
         return dd.shingle_distinct(docs, n=shingle_n).localCheckpoint(
             eager=True
         )
 
-    return _memo_fill(_MINHASH_SH_CACHE, key, "minhash_shingles", _build)
+    return memo.get_or_build(spark, "minhash_shingles", name, token, _build)
 
 
 def _minhash_shingle_sigs(
@@ -512,7 +424,7 @@ def _minhash_shingle_sigs(
     the symmetric build, so it cannot reuse the pair memo) consumes it
     directly. At cluster scale the same role is played by per-snapshot
     shingle/signature parquet tables."""
-    key = _minhash_recipe_key(
+    name, token = _minhash_recipe_key(
         spark, sf_dir, ("shingle_sigs", shingle_n, n_hashes)
     )
     def _build() -> tuple:
@@ -522,7 +434,7 @@ def _minhash_shingle_sigs(
         ).localCheckpoint(eager=True)
         return (sh, sigs)
 
-    return _memo_fill(_MINHASH_SIGS_CACHE, key, "minhash_sigs", _build)
+    return memo.get_or_build(spark, "minhash_sigs", name, token, _build)
 
 
 def _minhash_verified_pairs(
@@ -540,7 +452,7 @@ def _minhash_verified_pairs(
     the one build q32/q68/q112/q144 (default dial) and q101 (sharp
     dial) all share. EAGER on a cold key: building runs Spark jobs
     (the full dedup pipeline + a localCheckpoint pin)."""
-    key = _minhash_recipe_key(
+    name, token = _minhash_recipe_key(
         spark,
         sf_dir,
         (threshold, n_hashes, band_size, shingle_n, max_bucket, sig_agree_min),
@@ -566,7 +478,7 @@ def _minhash_verified_pairs(
             .localCheckpoint(eager=True)
         )
 
-    return _memo_fill(_MINHASH_PAIRS_CACHE, key, "minhash_pairs", _build)
+    return memo.get_or_build(spark, "minhash_pairs", name, token, _build)
 
 
 def _minhash_cc_labels(
@@ -584,7 +496,7 @@ def _minhash_cc_labels(
     hash-min label-propagation fixpoint on the same pairs, so the
     converged labels are memoized one level above the pairs. Same key
     discipline and eagerness as ``_minhash_verified_pairs``."""
-    key = _minhash_recipe_key(
+    name, token = _minhash_recipe_key(
         spark,
         sf_dir,
         (threshold, n_hashes, band_size, shingle_n, max_bucket, sig_agree_min),
@@ -602,7 +514,7 @@ def _minhash_cc_labels(
         ).select("doc_a", "doc_b")
         return dd.connected_components(pairs).localCheckpoint(eager=True)
 
-    return _memo_fill(_MINHASH_CC_CACHE, key, "minhash_cc", _build)
+    return memo.get_or_build(spark, "minhash_cc", name, token, _build)
 
 
 def _dsir_bucket_counts(
@@ -622,9 +534,9 @@ def _dsir_bucket_counts(
     checkpoint holds bucket counts, never fingerprints. Bucket totals
     recovered as SUM(n) are exactly the former COUNT(*) over the
     exploded rows — integer equality, no float path. Same key
-    discipline as every shared-build memo (lesson 35): applicationId +
+    discipline as every shared-build memo (lesson 35): session +
     corpus fingerprint + shuffle layout + recipe."""
-    key = _minhash_recipe_key(spark, sf_dir, ("dsir_buckets", n))
+    name, token = _minhash_recipe_key(spark, sf_dir, ("dsir_buckets", n))
     def _build() -> DataFrame:
         docs = read_table(spark, sf_dir, "documents")
         bg = dd.ngram_fingerprints(docs, n=n, extra_cols=())
@@ -641,7 +553,7 @@ def _dsir_bucket_counts(
             .localCheckpoint(eager=True)
         )
 
-    return _memo_fill(_DSIR_BUCKET_CACHE, key, "dsir_buckets", _build)
+    return memo.get_or_build(spark, "dsir_buckets", name, token, _build)
 
 
 # Bump when a recipe ingredient the token cannot see mechanically

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nyc_yellow_taxi_trip_data_pipeline_spark import memo
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -87,7 +89,7 @@ def _data_fingerprint_token(sf_dir: str, table: str) -> str:
     """Token that fingerprints a table's INPUT DATA (parquet file count +
     total bytes + newest mtime), not just the path: in-place testdata
     regeneration (invariant 5's drift scenario) must invalidate anything
-    cached from the table -- the ``read_table`` memo below and every
+    cached from the table -- the ``read_table`` memo and every
     warehouse artifact derived from it -- instead of silently reusing it
     against a fresh oracle. Same-data concurrent sessions still share a
     token, so every query that materializes under one of these tokens
@@ -110,49 +112,6 @@ def _data_fingerprint_token(sf_dir: str, table: str) -> str:
         f"|{max((s.st_mtime_ns for s in stats), default=0)}"
     )
     return hashlib.md5(fp.encode()).hexdigest()[:8]
-
-
-# Session memo of path-based parquet DataFrames, and of the other
-# session-bound values that are costly to build and never change under
-# their key. Creating a parquet DataFrame costs a file listing plus a
-# schema-inference job on the driver (~70 ms per read at sf0.01 on a
-# 4-vCPU host, ~0.1 s at sf0.1 -- lesson 32), paid again on every call
-# even when the files have not changed. Entries key on
-# ((applicationId, sessionUUID), name, token): ``token`` is the caller's
-# proof that the thing ``name`` names is the one the entry was built
-# from -- the data fingerprint for base tables (``read_table``), the
-# _SUCCESS stamp for published cache dirs (``plans.datapipe
-# ._read_published_parquet``), a constant for a compiled serving model
-# (``ml.compile.compile_pipeline``, named by the fitted model's uid,
-# which never changes). A caller with no token builds directly and never
-# memoizes. One insert evicts the entries of every other session (a
-# DataFrame or broadcast is bound to its session; a stopped one's can
-# never be returned again) and the superseded-token entries of the same
-# name, so the memo holds at most one entry per live name. Plain-dict
-# concurrency: ``setdefault`` returns whichever value won, so the worst
-# case of a race is a duplicated build, never a torn entry or a
-# KeyError.
-_READ_MEMO: dict = {}
-
-
-def _memo_read(spark: SparkSession, name: str, token, build):
-    """``build()``'s value, memoized under (session, ``name``, ``token``);
-    ``token=None`` means "no validity proof": build, do not memoize."""
-    if token is None:
-        return build()
-    session = (
-        spark.sparkContext.applicationId,
-        spark._jsparkSession.sessionUUID(),
-    )
-    key = (session, name, token)
-    hit = _READ_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for old in [
-        k for k in list(_READ_MEMO) if k[0] != session or k[1] == name
-    ]:
-        _READ_MEMO.pop(old, None)
-    return _READ_MEMO.setdefault(key, build())
 
 
 def _table_read(spark: SparkSession, sf_dir: str, name: str):
@@ -179,7 +138,7 @@ def _table_read(spark: SparkSession, sf_dir: str, name: str):
         df = _nanos_ts_to_micros(raw) if name == "events" else raw
         return raw, _normalize_ntz(df)
 
-    return _memo_read(spark, path, token, build)
+    return memo.get_or_build(spark, "table", path, token, build)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

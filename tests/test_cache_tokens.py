@@ -445,6 +445,18 @@ def test_q175_sees_in_place_events_regeneration(spark, tmp_path):
     assert {r.day for r in second} == {r.day for r in first}
 
 
+def _largest_group_tokens(sf: str, table: str, col: str) -> list:
+    """Tokens of the session memo's ``_largest_group`` entries for one
+    (corpus, table, column)."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark import memo
+
+    return [
+        k[3]
+        for k in list(memo._ENTRIES)
+        if k[1:3] == ("largest_group", (sf, table, col))
+    ]
+
+
 def test_largest_group_memoizes_on_data_fingerprint(spark, tmp_path):
     """The compaction planners' row-richest-partition pull recomputes
     exactly when the data fingerprint moves: same corpus => cached (no
@@ -460,8 +472,9 @@ def test_largest_group_memoizes_on_data_fingerprint(spark, tmp_path):
         "event_id", F.to_date("ts").alias("day")
     )
     n1, g1 = dp._largest_group(spark, sf, "events", ev, "day")
-    key = (dp._data_fingerprint_token(sf, "events"), "day")
-    assert key in dp._LARGEST_GROUP_CACHE
+    assert _largest_group_tokens(sf, "events", "day") == [
+        dp._data_fingerprint_token(sf, "events")
+    ]
     # same corpus: the cached tuple is returned (no recompute) even for
     # a df that would give a different answer — proving the cache hit
     empty = ev.filter(F.lit(False))
@@ -479,6 +492,27 @@ def test_largest_group_memoizes_on_data_fingerprint(spark, tmp_path):
     )
     n2, g2 = dp._largest_group(spark, sf, "events", ev2, "day")
     assert g2 == keep_day and n2 == len(pdf2)
+
+
+def test_largest_group_evicts_superseded_fingerprint(spark, tmp_path):
+    """An in-place regeneration leaves ONE ``_largest_group`` entry per
+    (corpus, table, column): the superseded fingerprint's entry is
+    evicted when the new one is built, not leaked for the session."""
+    import pandas as pd
+
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "t.parquet")
+    tokens = []
+    for groups in ([1, 1, 2], [3, 3, 3, 4]):
+        pd.DataFrame({"g": groups}).to_parquet(path, index=False)
+        df = spark.read.parquet(path)
+        got = dp._largest_group(spark, sf, "t", df, "g")
+        assert got == (groups.count(groups[0]), groups[0])
+        tokens.append(dp._data_fingerprint_token(sf, "t"))
+    assert tokens[0] != tokens[1]
+    assert _largest_group_tokens(sf, "t", "g") == [tokens[1]]
 
 
 def test_q189_concurrent_same_token_runs(spark, tmp_path):

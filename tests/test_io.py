@@ -9,7 +9,7 @@ import shutil
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nyc_yellow_taxi_trip_data_pipeline_spark.sources import io
+from nyc_yellow_taxi_trip_data_pipeline_spark import memo
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     read_csv,
     read_table,
@@ -269,13 +269,14 @@ def test_read_table_sees_in_place_rewrite(spark, tmp_path):
 
 def test_read_table_new_session_evicts_old_entries(spark, tmp_path):
     """A DataFrame belongs to its session: a read under another session
-    builds its own entry and drops every entry of the session before."""
+    builds its own entry and drops every memo entry of the session
+    before, whatever its family."""
     sf = _copy_table(tmp_path, "orders")
     mine = read_table(spark, sf, "orders")
     other = spark.newSession()
     theirs = read_table(other, sf, "orders")
     assert theirs is not mine and theirs.sparkSession is other
-    sessions = {k[0] for k in io._READ_MEMO}
+    sessions = {k[0] for k in memo._ENTRIES}
     assert sessions == {
         (
             other.sparkContext.applicationId,
@@ -311,9 +312,9 @@ def test_read_table_self_join_of_two_reads_matches_duckdb(spark):
 
 
 def test_memo_read_concurrent_fills_return_their_own_value(spark):
-    """Threads racing fills and evictions (two tokens per path) must each
-    get the value built for their own key -- never another key's value,
-    never a KeyError."""
+    """Threads racing ``memo.get_or_build`` fills and evictions (two
+    tokens per name) must each get the value built for their own key --
+    never another key's value, never a KeyError."""
     import random
     import sys
     import threading
@@ -326,7 +327,7 @@ def test_memo_read_concurrent_fills_return_their_own_value(spark):
         try:
             for _ in range(300):
                 want = (rng.choice(paths), rng.randint(0, 1))
-                got = io._memo_read(spark, *want, lambda: want)
+                got = memo.get_or_build(spark, "stress", *want, lambda: want)
                 if got != want:
                     errors.append((want, got))
         except Exception as exc:  # noqa: BLE001 -- surfaced via assert
@@ -342,7 +343,7 @@ def test_memo_read_concurrent_fills_return_their_own_value(spark):
             t.join(timeout=120)
     finally:
         sys.setswitchinterval(old)
-        for k in [k for k in list(io._READ_MEMO) if k[1] in paths]:
-            io._READ_MEMO.pop(k, None)
+        for k in [k for k in list(memo._ENTRIES) if k[1] == "stress"]:
+            memo._ENTRIES.pop(k, None)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors[:3]

@@ -1,5 +1,6 @@
 """Memo-semantics tests for the r16 shared MinHash build
-(``plans/datapipe._minhash_verified_pairs`` / ``_minhash_cc_labels``).
+(``plans/datapipe._minhash_verified_pairs`` / ``_minhash_cc_labels``)
+and the other shared-build families of the session memo (``memo``).
 
 The sharing is a correctness RISK CLASS of its own: a wrong memo key
 serves one corpus's pair set to another corpus, one dial's pairs to
@@ -230,26 +231,37 @@ def test_ann_ranking_memo_hit_and_regeneration(spark, tmp_path):
     )
 
 
+def _pair_keys(sf: str | None = None) -> list:
+    """The session memo's verified-pair keys, (session, family, name,
+    token) with name = (sf_dir, shuffle partitions, recipe); only
+    ``sf``'s when given."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark import memo
+
+    return [
+        k
+        for k in list(memo._ENTRIES)
+        if k[1] == "minhash_pairs" and (sf is None or k[2][0] == sf)
+    ]
+
+
 def test_dead_session_entries_evicted_on_insert(spark, tmp_path):
     """ADVICE r15: memo entries from stopped sessions can never be
     returned (their DataFrames are dead) — inserting under a live
-    session must drop every foreign-applicationId key while keeping
-    the live session's own entries."""
+    session must drop every foreign-session key while keeping the live
+    session's own entries."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark import memo
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
 
     sf = _write_sf(tmp_path)
     live = dp._minhash_verified_pairs(spark, sf, **_RECIPE)
-    live_keys = [
-        k for k in dp._MINHASH_PAIRS_CACHE
-        if k[0] == spark.sparkContext.applicationId
-    ]
+    live_keys = _pair_keys(sf)
     assert live_keys, "the live session's build must be cached"
 
-    dead_key = ("app-dead-0001",) + live_keys[0][1:]
-    dp._MINHASH_PAIRS_CACHE[dead_key] = object()
+    dead_key = (("app-dead-0001", "session-dead"),) + live_keys[0][1:]
+    memo._ENTRIES[dead_key] = object()
     # Any cold build under the live session triggers eviction-on-insert.
     dp._minhash_verified_pairs(spark, sf, **{**_RECIPE, "threshold": 0.6})
-    assert dead_key not in dp._MINHASH_PAIRS_CACHE, (
+    assert dead_key not in memo._ENTRIES, (
         "foreign-session entry survived eviction-on-insert"
     )
     assert dp._minhash_verified_pairs(spark, sf, **_RECIPE) is live, (
@@ -274,19 +286,14 @@ def test_stale_fingerprint_entry_evicted_on_insert(spark, tmp_path):
     _write_docs(other, {k: v for k, v in _corpus().items() if k != 1})
     dp._minhash_verified_pairs(spark, sf, **_RECIPE)
     other_df = dp._minhash_verified_pairs(spark, other, **_RECIPE)
-    app = spark.sparkContext.applicationId
-    old_keys = [
-        k for k in dp._MINHASH_PAIRS_CACHE if k[0] == app and k[1] == sf
-    ]
+    old_keys = _pair_keys(sf)
     assert len(old_keys) == 1
 
     docs2 = dict(_corpus())
     docs2[2] = " ".join(f"s5z{i}" for i in range(1, 25))
     _write_docs(sf, docs2)
     dp._minhash_verified_pairs(spark, sf, **_RECIPE)
-    keys_now = [
-        k for k in dp._MINHASH_PAIRS_CACHE if k[0] == app and k[1] == sf
-    ]
+    keys_now = _pair_keys(sf)
     assert old_keys[0] not in keys_now, (
         "stale-fingerprint entry survived the refill (ADVICE r16 leak)"
     )
@@ -318,25 +325,31 @@ def test_shared_build_seconds_accounting(spark, tmp_path):
     )
 
 
-def test_memo_fill_returns_value_and_sweeps_dead_sessions(spark):
-    """``_memo_fill`` hands back the value it built or found (callers never
-    re-read the dict, so a concurrent eviction cannot raise KeyError),
-    and a fill drops the build seconds of every other applicationId."""
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
+def test_get_or_build_returns_value_and_sweeps_dead_sessions(spark):
+    """``memo.get_or_build`` hands back the value it built or found
+    (callers never re-read the dict, so a concurrent eviction cannot
+    raise KeyError), and a fill drops the counters (build seconds
+    included) of every other session."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark import memo
 
-    app = spark.sparkContext.applicationId
-    cache: dict = {}
-    key = (app, "sf", "tok", "4", ("memo-fill-probe",))
-    dead = ("app-of-a-stopped-session", "minhash_pairs")
-    dp._SHARED_BUILD_SECONDS[dead] = 1.0
+    session = (
+        spark.sparkContext.applicationId,
+        spark._jsparkSession.sessionUUID(),
+    )
+    dead = (("app-of-a-stopped-session", "session-dead"), "minhash_pairs")
+    memo._COUNTS[dead] = [0, 1, 1.0]
+    fam, name = "memo_fill_probe", ("memo-fill-probe", "sf")
+    key = (session, fam, name, "tok")
     try:
-        fill = dp._memo_fill
-        assert fill(cache, key, "memo_fill_probe", lambda: "built") == "built"
-        assert fill(cache, key, "memo_fill_probe", lambda: "again") == "built"
-        assert cache == {key: "built"}
-        assert {a for a, _ in dp._SHARED_BUILD_SECONDS} == {app}
+        assert memo.get_or_build(spark, fam, name, "tok", lambda: "built") == "built"
+        assert memo.get_or_build(spark, fam, name, "tok", lambda: "again") == "built"
+        assert {k: v for k, v in memo._ENTRIES.items() if k[1] == fam} == {
+            key: "built"
+        }
+        assert {s for s, _ in memo._COUNTS} == {session}
     finally:
-        dp._SHARED_BUILD_SECONDS.pop((app, "memo_fill_probe"), None)
+        memo._ENTRIES.pop(key, None)
+        memo._COUNTS.pop((session, fam), None)
 
 
 def test_memo_cross_corpus_interleaving(spark, tmp_path):

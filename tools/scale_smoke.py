@@ -192,45 +192,13 @@ def main() -> None:
 
     spark = get_spark("scale-smoke")
 
-    # The MinHash family shares one session-memoized verified-pair
-    # build (r16, plans/datapipe._minhash_verified_pairs): left warm,
-    # min-of-2 would time memo HITS and the table's pair-generation
-    # scale frontier — the property this tool exists to watch — would
-    # silently vanish. Clear the memo before every rep so each rep
-    # pays the full build (the pre-r16 measurement semantics);
-    # consumer-side memo economics are bench.py's story, not this
-    # tool's.
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import (
-        datapipe as _dp,
-    )
-
-    # EVERY consumer of a shared-build memo (lesson 35's clear-list
-    # trap, re-closed r17 after VERDICT r16 found q151 + the ANN family
-    # missing): a consumer absent from this set would time memo HITS in
-    # its 10x row and the scale frontier would silently vanish.
-    MINHASH_MEMO_QUERIES = {
-        # MinHash pair/CC ladder
-        "q32_minhash_lsh_neardup",
-        "q68_dedup_clusters",
-        "q82_triangle_count",
-        "q101_minhash_neardup_sharp",
-        "q112_dup_cluster_histogram",
-        "q144_keep_best_dedup",
-        "q151_split_leakage_audit",
-        # shingle/signature base tables (asymmetric delta-vs-index form)
-        "q94_incremental_dedup",
-        # SimHash pair ladder
-        "q92_simhash_neardup",
-        "q123_lsh_verify_editdist",
-        # ANN rankings (q34/q36/q66 results scored by the evals)
-        "q145_ann_recall_eval",
-        "q164_retrieval_rank_eval",
-        "q169_retrieval_ndcg",
-        # DSIR shared-build consumers (r16): clear the bucket-count memo
-        # so the 10x row times the real explode+md5 build, not a hit.
-        "q111_importance_weights",
-        "q114_curated_shard_build",
-    }
+    # Each rep starts from an empty session memo, so every row times
+    # the cold build (base-table reads, shared-build families, largest-
+    # group probes) -- the scale frontier this tool exists to watch.
+    # Consumer-side memo economics are bench.py's story. Warm state
+    # that lives outside the memo (q98/q167/q194's published warehouse
+    # dirs and catalog tables) still makes rep 2 warm.
+    from nyc_yellow_taxi_trip_data_pipeline_spark import memo
 
     print(f"{'query':32s} {'sf0.1':>8s} {'x' + str(factor):>8s} {'ratio':>7s}")
     for name in QUERIES_TO_RUN:
@@ -238,14 +206,7 @@ def main() -> None:
         for label, sf_dir in (("base", SRC), ("big", str(out))):
             best = None
             for _ in range(2):
-                if name in MINHASH_MEMO_QUERIES:
-                    _dp._MINHASH_PAIRS_CACHE.clear()
-                    _dp._MINHASH_CC_CACHE.clear()
-                    _dp._MINHASH_SH_CACHE.clear()
-                    _dp._MINHASH_SIGS_CACHE.clear()
-                    _dp._SIMHASH_PAIRS_CACHE.clear()
-                    _dp._ANN_RANKING_CACHE.clear()
-                    _dp._DSIR_BUCKET_CACHE.clear()
+                memo.clear()
                 t0 = time.perf_counter()
                 QUERIES[name].spark(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
