@@ -17,108 +17,103 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe  # noqa: E40
 
 # The external driver verifies the FIRST 50 registered queries against the
 # DuckDB oracle (CORRECTNESS_r{N}.json has a 50-row budget). Registration
-# order therefore decides which queries earn a hard external row. The r17
-# window is the planner's PURE mechanical rotation — r17 edited ZERO plan
-# bodies (the round's work was measurement integrity: bench shared-build
-# accounting, memo stale-entry eviction, scale/skew evidence — all in
-# helpers/tools/tests, hash-neutral by design, lesson 33), so the
-# mandatory tier is empty and all 50 slots go to the owed pool, oldest
-# driver row first: the eleven r12-vintage rows that sat out r16
-# (q65/q69/q70/q71/q72/q73/q74/q75/q79/q80/q84) and the oldest 39 of the
-# r13-vintage pool. The r16 window (18 edited + fills) is fully
-# r16-verified, so rotating it out costs nothing.
-# Slot math: 0 mandatory + 50 fill = 50.
-# Sit-outs (r13-vintage rows NOT fitting — lost the registration-order
-# tiebreak within their vintage; double-coverage rationales):
-# - q63_date_math: projection-only date arithmetic (datediff/date_add/
-#   last_day/date_trunc on orders) — double-covered by
-#   q44_streaming_hourly (IN this window, date_trunc bucketing on event
-#   time) and q147_cohort_retention (r16-green, month-offset cohort
-#   date arithmetic on the same orders table).
-# - q76_stream_stream_join: the stream-stream equi-join machinery is
-#   double-covered by q133_stream_outer_join (r15-green — the OUTER
-#   form strictly supersets the inner join's row handling plus the
-#   watermark-eviction path) and q80_stream_static_join (IN this
-#   window, the trigger/replay harness shared by the family).
-# - q86_trimmed_mean_udaf_bounded: the bounded Arrow-UDAF machinery is
-#   double-covered by q178_arrow_python_udf (IN this window, same
-#   Arrow-batched Python boundary) and the exact trimmed/fence
-#   arithmetic by q140_winsorized_mean (r15-green, same exact-fence
-#   trimming core) + q84_grouped_sketch_quantiles (IN this window).
-# - q98_incremental_dedup_indexed: the persisted fingerprint-keyed
-#   signature-index machinery is double-covered by q167_keep_best_indexed
-#   (IN this window — the SAME `_signature_index` build/read path,
-#   lesson 25) and the delta-vs-index asymmetric band join by
-#   q94_incremental_dedup (r16-green).
-# The next-owed rows after these four are all r14-vintage
-# (q100/q12/q131/q13/q14/q159/q15/q16/q170/q17/q18) — they sit out on
-# vintage order alone (normal rotation; first in line for r18).
+# order therefore decides which queries earn a hard external row. The r18
+# window starts from `python tools/window_planner.py`. r18 edited seven
+# plan bodies (q170/q175/q189/q190/q192/q193/q194 now publish through
+# `plans/cache.build_once`), so the ratchet makes them mandatory. q98
+# and q167 ride in by hand: the ratchet hashes bodies only, and their
+# `_signature_index` helper now builds through the same module (lesson
+# 33). The rest is the planner's fill, oldest driver row first: the
+# owed r13 sit-outs q63/q76/q86, then r14 vintage in name order.
+# Slot math: 7 mandatory + 2 manual + 41 fill = 50. The r17 window is
+# fully r17-verified, so rotating it out costs nothing.
+# Sit-outs (the last eight r14 rows in name order; q55 loses its slot
+# to q167), with double-coverage rationales:
+# - q55_constraint_audit: FK orphans by anti-join -> q54_semi_anti_join
+#   (IN this window, same left_anti machinery); null/range predicate
+#   counts -> q04_null_counts (r17-green).
+# - q62_fuzzy_editdistance: Levenshtein verify -> q182_editdist_neardup
+#   (r17-green, over a blocked candidate set); blocked self-join ->
+#   q35_embedding_neardup (IN this window).
+# - q77_trimmed_mean_udaf: the 10% trim -> q86_trimmed_mean_udaf_bounded
+#   (IN this window, same trim as a grouped-agg UDF) and
+#   q140_winsorized_mean (r15-green, same exact-fence trimming core).
+# - q81_streaming_dedup: dropDuplicatesWithinWatermark ->
+#   q135_streaming_dedup_within_watermark (r17-green, same operator);
+#   unioned-stream watermark -> q159_streaming_union_watermark_max (IN).
+# - q83_blocked_neardup_srp: the bounded-block form of q35 ->
+#   q35_embedding_neardup (IN, same per-block matmul) and
+#   q36_ann_srp_bucket (IN, same SRP bucket key).
+# - q85_multimodal_phash: the average-hash grid/threshold math ->
+#   q113_media_neardup_phash (r15-green) and q150_media_neardup_capped
+#   (r16-green), both over the same mapInPandas pHash stage.
+# - q87_sequence_packing: the Arrow-batched pandas boundary ->
+#   q28_pandas_udf_bucketing (IN); the per-doc token lengths it packs ->
+#   q107_length_bucket_padding (r15-green).
+# - q89_cross_source_contamination: train/benchmark overlap ->
+#   q105_ngram_decontamination (r15-green, md5 fingerprints shared
+#   across sources); exact normalized content -> q30_dedup_exact
+#   (r17-green).
 _PRIORITY = [
-    # planner fill, oldest driver row first (r12 vintage...)
-    "q65_frame_sample",
-    "q69_lookback_range_join",
-    "q70_stratified_sample",
-    "q71_token_counts",
-    "q72_incremental_rollup",
-    "q73_kmeans_step",
-    "q74_reservoir_topn",
-    "q75_embedding_quantize",
-    "q79_curation_funnel",
-    "q80_stream_static_join",
-    "q84_grouped_sketch_quantiles",
-    # (...then r13 vintage)
-    "q03_filter_group_count",
-    "q04_null_counts",
-    "q10_histogram",
-    "q130_streaming_late_drop",
-    "q135_streaming_dedup_within_watermark",
-    "q154_streaming_union_watermarks",
-    "q160_python_datasource_scan",
-    "q161_session_window_batch",
-    "q163_cuped_adjusted_ab",
+    # edited bodies (ratchet-mandatory)
+    "q170_bucketed_ctas_join",
+    "q175_dynamic_partition_pruning",
+    "q189_partial_agg_rollup",
+    "q190_processing_time_timer_eviction",
+    "q192_zonemap_layout_skipping",
+    "q193_event_time_timer_eviction",
+    "q194_zorder_multidim_skipping",
+    # deep-helper consumers of `_signature_index` (manual)
+    "q98_incremental_dedup_indexed",
     "q167_keep_best_indexed",
-    "q168_bpe_train_loop",
-    "q171_batch_ann_topk",
-    "q172_streaming_session_window",
-    "q173_chi2_independence",
-    "q174_temperature_mix",
-    "q176_hard_negative_mining",
-    "q177_shuffle_interleave_audit",
-    "q178_arrow_python_udf",
-    "q179_observed_metrics",
-    "q180_cohens_kappa",
-    "q181_ece_calibration",
-    "q182_editdist_neardup",
-    "q183_bm25_rational_rank",
-    "q184_markov_transitions",
-    "q185_pareto_frontier",
-    "q186_scd2_history",
-    "q187_runtime_bloom_join",
-    "q188_spearman_trend",
-    "q30_dedup_exact",
-    "q33_simhash",
-    "q38_lang_id",
-    "q39_fingerprint",
-    "q40_multimodal_meta",
-    "q41_multimodal_decode",
-    "q42_approx_sketches",
-    "q44_streaming_hourly",
-    "q56_regex_extract",
-    "q57_grouping_sets",
-    "q61_conditional_aggs",
+    # planner fill, oldest driver row first (r13 sit-outs...)
+    "q63_date_math",
+    "q76_stream_stream_join",
+    "q86_trimmed_mean_udaf_bounded",
+    # (...then r14 vintage)
+    "q100_summary_stats_sketch",
+    "q12_error_metrics",
+    "q131_cogroup_reconcile",
+    "q13_distinct_months",
+    "q14_ordered_limit",
+    "q159_streaming_union_watermark_max",
+    "q15_label_map",
+    "q16_top_customers",
+    "q17_priority_rollup",
+    "q18_topk_per_segment",
+    "q191_aqe_skew_join",
+    "q195_merge_rounds_materialized",
+    "q196_compact_optimize",
+    "q197_compact_bytes_optimize",
+    "q19_set_ops",
+    "q20_sessionization",
+    "q21_asof_join",
+    "q22_pivot_counts",
+    "q23_hourly_rollup",
+    "q24_revenue_by_nation",
+    "q25_salted_agg",
+    "q26_status_cube",
+    "q27_grouped_zscore",
+    "q28_pandas_udf_bucketing",
+    "q29_json_roundtrip",
+    "q31_dedup_keep_first",
+    "q35_embedding_neardup",
+    "q36_ann_srp_bucket",
+    "q43_sql_api",
+    "q46_tfidf_topterms",
+    "q47_moving_avg",
+    "q48_grouped_quantiles",
+    "q49_unpivot",
+    "q50_correlation",
+    "q51_upsert_merge",
+    "q52_char_ngram_langid",
+    "q53_winnowing",
+    "q54_semi_anti_join",
 ]
-# --- r18 preview (slot arithmetic for the next window rewrite, lesson
-# 19) --- owed rows after r17, oldest first: the four r13 sit-outs
-# above (q63/q76/q86/q98), then the r14-vintage pool (q100/q12/q131/
-# q13/q14/q159/q15/q16/q170/q17/q18/...). Any r17-edited or new query
-# is mandatory on top — r17 edited none, so the r18 mandatory tier
-# starts empty too. Budget new queries BEFORE writing them
-# (tests/test_round9_invariants.py staleness ratchet). The shared-build
-# consolidation remains COMPLETE (see the r16 note in git history);
-# r17 re-measured and REJECTED the two remaining candidates with
-# committed evidence (plans/r17/: q172 state partitions, q157 shared
-# scan), so no duplicate sub-pipeline builds remain anywhere in the
-# inventory.
+# --- next rewrite (lesson 19) --- a later r18 body edit is mandatory
+# and displaces fill from the END of the list (ROADMAP item 4's <=17
+# streaming bodies: 9 + 17 = 26 <= 50). Owed after this window: the
+# eight r14 sit-outs above, then r15 vintage (q102/q103/q104/...).
 QUERIES_ORDERED = {n: QUERIES[n] for n in _PRIORITY if n in QUERIES}
 QUERIES_ORDERED.update(QUERIES)
 QUERIES.clear()

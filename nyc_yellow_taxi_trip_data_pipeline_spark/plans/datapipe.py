@@ -18,216 +18,13 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.operators import dedup as dd
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators import multimodal as mm
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators import similarity as sim
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators import text as tx
+from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans.helpers import sql_qsum
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans.registry import register
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     _data_fingerprint_token,
     read_table,
 )
-
-
-# Same-token ``.build-*`` dirs older than this are crashed-builder
-# orphans (real builds finish in seconds); see _fingerprint_cache_path.
-_BUILD_SWEEP_S = 3600.0
-
-
-def _tree_mtime(path: str) -> float | None:
-    """Newest mtime across a directory TREE, not the top-level dir
-    alone: writing files into ``build/bands`` does not advance the
-    build root's st_mtime, so a top-level probe would judge a
-    long-running live build "stale" and let a concurrent session sweep
-    it mid-write (ADVICE r13 item 1). None = vanished mid-walk (a
-    publisher won the race; caller treats it as fresh)."""
-    import os
-
-    try:
-        newest = os.stat(path).st_mtime
-    except OSError:
-        return None
-    for r, _, fs in os.walk(path):
-        for f in fs:
-            try:
-                newest = max(newest, os.stat(os.path.join(r, f)).st_mtime)
-            except OSError:
-                continue
-    return newest
-
-
-def _fingerprint_cache_path(
-    spark: SparkSession, sf_dir: str, table: str, prefix: str, salt: str
-) -> str:
-    """Resolve (and garbage-collect around) a warehouse cache directory
-    keyed on BOTH axes that can invalidate a cached artifact:
-
-    - the input DATA (``_data_fingerprint_token``: file count + bytes +
-      newest mtime — in-place testdata regeneration changes the token);
-    - the producing LOGIC (``salt``: a version literal the call site
-      bumps whenever the staging/layout recipe changes — phase split
-      expression, selected columns, sort keys, block size). Without it,
-      editing the recipe would silently replay stale cached files
-      against the updated oracle — the exact stale-artifact failure the
-      data fingerprint was introduced to eliminate, back on the code
-      axis.
-
-    Sibling directories under the same ``prefix`` AND scale-factor slug
-    with a DIFFERENT token are pruned before returning: every
-    regeneration/salt bump would otherwise orphan the previous
-    directory and grow the warehouse without bound across rounds. The
-    slug scopes the prune to one sf_dir — tokens embed the sf_dir, so
-    without it every scale-factor switch (parity at sf0.01, bench at
-    sf0.1) would evict the OTHER factor's still-valid cache and force
-    a rebuild per switch. Pruning is safe because all callers are on
-    the SERIAL sweep list (same-data concurrent sessions share one
-    token, so a concurrent pruner could otherwise delete a directory
-    mid-read — documented in ARCHITECTURE.md's env-robustness
-    matrix).
-
-    Same-token in-flight build dirs (``{target}.build-*``, see
-    ``_publish_cache_build``) are exempt from the prune — a concurrent
-    same-data session must not delete a build about to be published —
-    UNLESS they are older than ``_BUILD_SWEEP_S`` (a crashed builder's
-    orphan: real builds here live for seconds, and each session uses a
-    fresh uuid suffix, so without an age sweep same-token orphans would
-    accumulate until the data fingerprint changes — ADVICE r12 item 3).
-    A pre-existing TARGET without ``_SUCCESS`` (a build that crashed
-    mid-write under the old in-place scheme) IS pruned, so the call
-    sites' existence check sees a cleanly absent directory instead of
-    re-reading a partial artifact forever."""
-    import hashlib
-    import os
-    import re
-    import shutil
-    import time
-
-    data_tok = _data_fingerprint_token(sf_dir, table)
-    tok = hashlib.md5(f"{data_tok}|{salt}".encode()).hexdigest()[:8]
-    slug = re.sub(
-        r"[^A-Za-z0-9.]", "-", os.path.basename(sf_dir.rstrip("/"))
-    )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    target = f"{prefix}_{slug}_{tok}"
-    if os.path.isdir(warehouse):
-        for d in os.listdir(warehouse):
-            if not d.startswith(f"{prefix}_{slug}_"):
-                continue
-            if d == target:
-                continue
-            full = os.path.join(warehouse, d)
-            if d.startswith(f"{target}.build-"):
-                newest = _tree_mtime(full)
-                # None = vanished mid-listing (a publisher won); tree
-                # mtime, not the root's — a live build writing into a
-                # subdir does not advance the root (ADVICE r13 item 1).
-                if newest is None or (
-                    time.time() - newest <= _BUILD_SWEEP_S
-                ):
-                    continue
-            shutil.rmtree(full, ignore_errors=True)
-        if os.path.isdir(
-            os.path.join(warehouse, target)
-        ) and not os.path.exists(os.path.join(warehouse, target, "_SUCCESS")):
-            shutil.rmtree(os.path.join(warehouse, target), ignore_errors=True)
-    return os.path.join(warehouse, target)
-
-
-def _publish_cache_build(tmp_dir: str, target: str) -> None:
-    """Atomically publish a finished cache build: rename the temp build
-    dir onto the fingerprint-keyed target. POSIX rename is atomic, so a
-    concurrent same-token reader sees either no target (and builds its
-    own) or a COMPLETE one — never the partial files an in-place
-    ``mode("overwrite")`` rebuild exposes (the FILE_NOT_EXIST mid-rebuild
-    race recorded in ARCHITECTURE.md's env-robustness notes). If a
-    concurrent builder already published (target carries ``_SUCCESS``),
-    the rename fails on the existing target and this build is discarded
-    — both builds are byte-equivalent by the token contract (same data
-    fingerprint, same logic salt).
-
-    Failure discipline (ADVICE r12): a failed rename is only swallowed
-    when a COMPLETE target exists. A rename blocked by a stale PARTIAL
-    target (no ``_SUCCESS`` — a crashed in-place build, or a pruner that
-    hasn't finished wiping it) is retried once after renaming the
-    partial ASIDE to a ``.stale-<uuid>`` sibling (never rmtree'd in
-    place — so even if the _SUCCESS re-probe loses a concurrent publish
-    race, the target path is never empty-but-expected and the complete
-    artifact survives the displacement; ADVICE r13 item 2); any other
-    failure (permissions, a stray regular file at the target path, a
-    cross-device temp dir) discards the temp build and RAISES, so the
-    caller fails at the publish site instead of with a confusing
-    FileNotFoundError far downstream."""
-    import os
-    import shutil
-
-    displaced: list[str] = []
-    for attempt in (0, 1):
-        try:
-            os.rename(tmp_dir, target)
-            # Clean any partial displaced aside AFTER the publish so
-            # the target path's empty window is one rename wide; a
-            # crash between the renames leaves a ``.stale-`` sibling
-            # the next resolve's prune sweeps.
-            for s in displaced:
-                shutil.rmtree(s, ignore_errors=True)
-            return
-        except OSError as exc:
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                # A concurrent same-token builder won the race; this
-                # build is byte-equivalent and safely discarded.
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-                return
-            if attempt == 0 and os.path.isdir(target):
-                # Stale partial target (no _SUCCESS): move it ASIDE and
-                # retry (ADVICE r12 item 2, tightened per ADVICE r13
-                # item 2). Re-probe _SUCCESS immediately before the
-                # move: a concurrent builder may have published BETWEEN
-                # the failed rename's probe above and here, and
-                # displacing its complete artifact would re-open the
-                # mid-read race. The displacement itself is a RENAME to
-                # a ``.stale-<uuid>`` sibling, not an rmtree: if the
-                # re-probe loses a publish race anyway, the complete
-                # artifact survives intact at the sibling path and the
-                # retry republishes a byte-equivalent build — the
-                # target path is never empty-but-expected. The sibling
-                # is wiped afterwards (and any leftover is also caught
-                # by the sibling prune in _fingerprint_cache_path: it
-                # shares the prefix and is not a fresh ``.build-``).
-                if os.path.exists(os.path.join(target, "_SUCCESS")):
-                    shutil.rmtree(tmp_dir, ignore_errors=True)
-                    return
-                stale = f"{target}.stale-{os.path.basename(tmp_dir)[-8:]}"
-                try:
-                    os.rename(target, stale)
-                    displaced.append(stale)
-                except OSError:
-                    # Target vanished (a pruner finished) or was
-                    # replaced; just retry the publish.
-                    pass
-                continue
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            raise OSError(
-                f"cache publish failed: cannot rename {tmp_dir!r} onto "
-                f"{target!r} and no complete target exists ({exc})"
-            ) from exc
-
-
-def _drop_stale_token_tables(spark: SparkSession, base: str) -> None:
-    """Drop catalog entries left by PREVIOUS tokens of the same
-    prefix+slug: token-embedded table names (q170's bucketed pair, the
-    q98/q167 signature index) re-register per token, and the directory
-    prune already removed the old LOCATIONs — without this sweep a
-    long-lived session accumulates dangling external tables pointing at
-    pruned dirs, one set per in-place regeneration (the unbounded-growth
-    concern the sibling prune closes on the directory axis, re-closed
-    here on the catalog axis). ``base`` is the sanitized
-    ``{prefix}_{slug}_{token}``; every table sharing ``{prefix}_{slug}_``
-    with a DIFFERENT token is dropped (external tables — dropping never
-    touches files). Same-token temp build tables (``{base}_b<uuid>_*``)
-    start with the full base and are kept."""
-    stale_prefix = base.rsplit("_", 1)[0] + "_"
-    for t in spark.catalog.listTables():
-        if t.name.startswith(stale_prefix) and not t.name.startswith(base):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
 def _largest_group(spark, sf_dir: str, table: str, df, col: str):
@@ -258,35 +55,6 @@ def _largest_group(spark, sf_dir: str, table: str, df, col: str):
         (sf_dir, table, col),
         _data_fingerprint_token(sf_dir, table),
         build,
-    )
-
-
-def _read_published_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(path)`` for ATOMICALLY-PUBLISHED,
-    immutable cache directories (``_publish_cache_build`` targets or
-    their subdirs), through the session memo with the ``_SUCCESS``
-    mtime as the validity token: the path already embeds the
-    data-fingerprint token + logic salt, and the stamp closes the
-    one remaining hole -- a same-token wipe + rebuild inside one session
-    (new part-file names would orphan a cached file index). An
-    unstamped (unpublished or racing) directory is read directly and
-    never memoized."""
-    import os
-
-    # The stamp lives at the path itself (q189's partials) or one level
-    # up (q175's fact/dim under a single publish root). The walk is
-    # BOUNDED to that one step — an unbounded ascent could latch onto
-    # some unrelated ancestor's _SUCCESS, whose mtime would never move
-    # on a republish of `path` (a silent-staleness hole).
-    success = path
-    if not os.path.exists(os.path.join(success, "_SUCCESS")):
-        success = os.path.dirname(path)
-    try:
-        stamp = os.stat(os.path.join(success, "_SUCCESS")).st_mtime_ns
-    except OSError:
-        stamp = None
-    return memo.get_or_build(
-        spark, "published", path, stamp, lambda: spark.read.parquet(path)
     )
 
 
@@ -556,43 +324,6 @@ def _dsir_bucket_counts(
     return memo.get_or_build(spark, "dsir_buckets", name, token, _build)
 
 
-# Bump when a recipe ingredient the token cannot see mechanically
-# changes (shingle n, selected columns). The MECHANICAL ingredients —
-# n_hashes, band_size, num_file_buckets, and each caller's ``recipe``
-# string — are folded into the salt automatically by
-# ``_signature_index_name``, so tuning those can never replay a stale
-# persistent index (the index outlives sessions; a missed bump would
-# stay red across restarts, unlike the old per-session scheme).
-_SIG_INDEX_SALT = "v2-fp"
-
-
-def _signature_index_name(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    n_hashes: int = 12,
-    band_size: int = 3,
-    num_file_buckets: int = 16,
-    recipe: str = "",
-) -> tuple[str, str]:
-    """(published directory, catalog-table base name) for the corpus
-    signature index — both keyed on the documents table's data
-    fingerprint + the full recipe salt (version literal + the
-    mechanical parameters + the caller's ``recipe`` string). Resolving
-    also runs the stale-sibling prune (``_fingerprint_cache_path``)."""
-    import os
-    import re
-
-    salt = (
-        f"{_SIG_INDEX_SALT}.h{n_hashes}.b{band_size}"
-        f".f{num_file_buckets}.{recipe}"
-    )
-    target = _fingerprint_cache_path(
-        spark, sf_dir, "documents", prefix, salt
-    )
-    return target, re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(target))
-
-
 def _signature_index(
     spark: SparkSession,
     sf_dir: str,
@@ -604,27 +335,16 @@ def _signature_index(
     recipe: str = "",
 ):
     """Resolve-or-build the materialized MinHash signature index for an
-    accepted corpus snapshot (q98/q167's per-batch ingest path), with
-    the q190–q195 cache discipline (r13, closing CLAUDE.md lesson 25's
-    signature-index exception):
+    accepted corpus snapshot (q98/q167's per-batch ingest path): a
+    ``cache.build_once`` artifact keyed on the documents table's DATA
+    FINGERPRINT plus ``cache.signature_index_salt`` (never the path
+    alone, so in-place regeneration can never replay a stale index),
+    written by ``dedup.write_signature_index`` (bucketBy needs
+    saveAsTable; the temp catalog entries are external, so dropping
+    them keeps the files) and registered by ``cache.register_bucketed``
+    with the SAME ``num_file_buckets`` that wrote it.
 
-    - the index is keyed on the documents table's DATA FINGERPRINT plus
-      a logic salt (``_fingerprint_cache_path``), never on the path
-      alone — in-place testdata regeneration changes the token, so a
-      long-lived session can never replay a stale index against fresh
-      data (the old md5(sf_dir) key could);
-    - the catalog-table NAME embeds the same token, so the
-      ``tableExists`` fast path is token-scoped too;
-    - the build is ATOMIC: both bucketed tables are written under a
-      ``.build-<uuid>`` temp sibling via ``dedup.write_signature_index``
-      (bucketBy needs saveAsTable; the temp catalog entries are dropped
-      after the write — external, so dropping keeps the files), a
-      top-level ``_SUCCESS`` is stamped, and the directory is renamed
-      onto the token path (``_publish_cache_build``). A concurrent
-      same-token session reads a complete index or builds its own; the
-      loser's build is discarded.
-
-    The token folds in the mechanical recipe parameters (n_hashes,
+    The salt folds in the mechanical recipe parameters (n_hashes,
     band_size, num_file_buckets) automatically; ``recipe`` is for the
     one ingredient the helper cannot see — the caller's ACCEPTED-SET
     predicate. A caller whose accepted set is anything but the plain
@@ -635,53 +355,32 @@ def _signature_index(
     Returns ``(sigs, bands)`` DataFrames reading the published index as
     BUCKETED catalog tables (doc_id / (band_id, band_key) clustering —
     the asymmetric per-batch joins scan the index pre-clustered, so only
-    delta rows shuffle). Registration is CREATE TABLE ... CLUSTERED BY
-    ... LOCATION over the published files, with the SAME
-    ``num_file_buckets`` that wrote them (one constant, both sites): a
-    fresh session whose in-memory catalog died re-registers without
-    rebuilding."""
-    import os
-    import uuid
+    delta rows shuffle)."""
 
-    target, tbl = _signature_index_name(
-        spark, sf_dir, prefix, n_hashes, band_size, num_file_buckets, recipe
+    def write(tmp_dir: str) -> None:
+        tmp_tbl = cache.table_name(tmp_dir)
+        dd.write_signature_index(
+            accepted,
+            tmp_tbl,
+            n_hashes=n_hashes,
+            band_size=band_size,
+            num_file_buckets=num_file_buckets,
+            path=tmp_dir,
+        )
+        for suffix in ("_sigs", "_bands"):
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}{suffix}")
+
+    salt = cache.signature_index_salt(
+        n_hashes, band_size, num_file_buckets, recipe
     )
-    if not spark.catalog.tableExists(f"{tbl}_bands"):
-        # Same catalog hygiene as q170: regeneration moved the token,
-        # so the previous token's index tables are dangling — drop them
-        # before registering the new pair.
-        _drop_stale_token_tables(spark, tbl)
-        if not os.path.exists(os.path.join(target, "_SUCCESS")):
-            bsuf = uuid.uuid4().hex[:8]
-            build = f"{target}.build-{bsuf}"
-            tmp_tbl = f"{tbl}_b{bsuf}"
-            dd.write_signature_index(
-                accepted,
-                tmp_tbl,
-                n_hashes=n_hashes,
-                band_size=band_size,
-                num_file_buckets=num_file_buckets,
-                path=build,
-            )
-            for suffix in ("_sigs", "_bands"):
-                spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}{suffix}")
-            open(os.path.join(build, "_SUCCESS"), "w").close()
-            _publish_cache_build(build, target)
-        for suffix, cluster_cols in (
-            ("sigs", "doc_id"),
-            ("bands", "band_id, band_key"),
-        ):
-            loc = os.path.join(target, suffix)
-            ddl_cols = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in spark.read.parquet(loc).schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {tbl}_{suffix} ({ddl_cols}) "
-                f"USING parquet CLUSTERED BY ({cluster_cols}) "
-                f"INTO {num_file_buckets} BUCKETS LOCATION '{loc}'"
-            )
-    return spark.table(f"{tbl}_sigs"), spark.table(f"{tbl}_bands")
+    target = cache.build_once(spark, sf_dir, "documents", prefix, salt, write)
+    sigs, bands = cache.register_bucketed(
+        spark,
+        target,
+        num_file_buckets,
+        (("sigs", "doc_id"), ("bands", "band_id, band_key")),
+    )
+    return spark.table(sigs), spark.table(bands)
 
 
 # ---------------------------------------------------------------------------
@@ -10886,71 +10585,52 @@ def q169_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q170_bucketed_ctas_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import re as _re
-    import uuid
 
     # Fingerprint-keyed bucketed pair (r14, retiring the md5(sf_dir)
     # session CTAS): the token fingerprints CUSTOMER's data and folds
     # ORDERS' fingerprint into the logic salt, so regenerating either
     # input in place invalidates the pair. Both bucketed tables are
-    # written under ONE .build-<uuid> sibling (bucketBy needs
-    # saveAsTable — written through token-scoped temp catalog names
-    # whose external files survive the DROP) and published by ONE
-    # atomic rename; reads re-register the published files with
-    # CREATE TABLE ... CLUSTERED BY (lesson 27: bucket file names
-    # carry the bucket id, so relocation preserves the clustering) —
-    # the catalog names embed the token, so the tableExists fast path
-    # is token-scoped too (the q98/q167 discipline).
+    # written into ONE build_once directory (bucketBy needs
+    # saveAsTable — written through temp catalog names whose external
+    # files survive the DROP) and registered over the published files
+    # as token-scoped bucketed tables (lesson 27: bucket file names
+    # carry the bucket id, so relocation preserves the clustering).
     n_buckets = 8
     salt = f"v2-fp.b{n_buckets}.{_data_fingerprint_token(sf_dir, 'orders')}"
-    target = _fingerprint_cache_path(
-        spark, sf_dir, "customer", "q170_pair", salt
+
+    def write(tmp_dir: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_mktsegment"
+        )
+        orders = read_table(spark, sf_dir, "orders").select(
+            "o_custkey", "o_totalprice"
+        )
+        for df, sub, key in (
+            (cust, "cust", "c_custkey"),
+            (orders, "ord", "o_custkey"),
+        ):
+            tmp_tbl = f"{cache.table_name(tmp_dir)}_{sub}"
+            (
+                df.write.format("parquet")
+                .bucketBy(n_buckets, key)
+                .sortBy(key)
+                .option("path", os.path.join(tmp_dir, sub))
+                .saveAsTable(tmp_tbl)
+            )
+            # External table: dropping the temp catalog entry keeps
+            # the files for the publish.
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
+
+    target = cache.build_once(
+        spark, sf_dir, "customer", "q170_pair", salt, write
     )
-    base = _re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(target))
-    tc, to = f"{base}_cust", f"{base}_ord"
-    if not (spark.catalog.tableExists(tc) and spark.catalog.tableExists(to)):
-        # In-place regeneration moved the token: drop the previous
-        # token's dangling catalog pair (its LOCATION is already
-        # pruned) before registering the new one.
-        _drop_stale_token_tables(spark, base)
-        if not os.path.exists(os.path.join(target, "_SUCCESS")):
-            bsuf = uuid.uuid4().hex[:8]
-            build = f"{target}.build-{bsuf}"
-            cust = read_table(spark, sf_dir, "customer").select(
-                "c_custkey", "c_mktsegment"
-            )
-            orders = read_table(spark, sf_dir, "orders").select(
-                "o_custkey", "o_totalprice"
-            )
-            for df, sub, key in (
-                (cust, "cust", "c_custkey"),
-                (orders, "ord", "o_custkey"),
-            ):
-                tmp_tbl = f"{base}_b{bsuf}_{sub}"
-                (
-                    df.write.format("parquet")
-                    .bucketBy(n_buckets, key)
-                    .sortBy(key)
-                    .option("path", os.path.join(build, sub))
-                    .saveAsTable(tmp_tbl)
-                )
-                # External table: dropping the temp catalog entry
-                # keeps the files for the publish below.
-                spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-            open(os.path.join(build, "_SUCCESS"), "w").close()
-            _publish_cache_build(build, target)
-        for tbl_name, sub, key in ((tc, "cust", "c_custkey"), (to, "ord", "o_custkey")):
-            loc = os.path.join(target, sub)
-            ddl_cols = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in spark.read.parquet(loc).schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {tbl_name} ({ddl_cols}) "
-                f"USING parquet CLUSTERED BY ({key}) "
-                f"SORTED BY ({key}) INTO {n_buckets} BUCKETS "
-                f"LOCATION '{loc}'"
-            )
+    tc, to = cache.register_bucketed(
+        spark,
+        target,
+        n_buckets,
+        (("cust", "c_custkey"), ("ord", "o_custkey")),
+        sorted_by=True,
+    )
 
     conf_key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(conf_key)
@@ -11538,23 +11218,18 @@ def q175_dynamic_partition_pruning(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import uuid
 
     # Fingerprint-keyed fact/dim pair (r14, retiring the md5(sf_dir)
     # session CTAS): both sides derive from events, so one events token
-    # keys both; the two directories are built under ONE .build-<uuid>
-    # sibling and published by ONE atomic rename — a concurrent
-    # same-token session can never see the fact without the dim (the
-    # q98/q167 index discipline; CLAUDE.md lesson 25). DPP fires on the
+    # keys both; the two directories are built into ONE build_once
+    # directory and published together — a concurrent same-token
+    # session can never see the fact without the dim (the q98/q167
+    # index discipline; lesson 25). DPP fires on the
     # path-based partition-discovered read exactly as on a catalog
     # table (dynamicpruningexpression lands in the file scan's
     # PartitionFilters), so no catalog registration is needed and a
     # fresh session self-heals from the published files alone.
-    target = _fingerprint_cache_path(
-        spark, sf_dir, "events", "q175_dpp", "v2-fp"
-    )
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        build = f"{target}.build-{uuid.uuid4().hex[:8]}"
+    def write(tmp_dir: str) -> None:
         ev = read_table(spark, sf_dir, "events").select(
             F.expr(
                 "CAST(unix_timestamp(ts) AS BIGINT) div 86400"
@@ -11563,24 +11238,25 @@ def q175_dynamic_partition_pruning(
             .cast("long")
             .alias("qv"),
         )
-        ev.write.partitionBy("day").parquet(os.path.join(build, "fact"))
+        ev.write.partitionBy("day").parquet(os.path.join(tmp_dir, "fact"))
         (
-            spark.read.parquet(os.path.join(build, "fact"))
+            spark.read.parquet(os.path.join(tmp_dir, "fact"))
             .select("day")
             .distinct()
             .withColumn("grp", F.pmod("day", F.lit(7)))
-            .write.parquet(os.path.join(build, "dim"))
+            .write.parquet(os.path.join(tmp_dir, "dim"))
         )
-        open(os.path.join(build, "_SUCCESS"), "w").close()
-        _publish_cache_build(build, target)
 
+    target = cache.build_once(
+        spark, sf_dir, "events", "q175_dpp", "v2-fp", write
+    )
     # Memoized published reads (r15): the fact read re-ran partition
     # discovery and the dim read re-listed per run (~0.1 s each,
     # lesson 29) — the published pair is immutable, so the DataFrames
     # are cached per (session, path, publish stamp).
-    fact = _read_published_parquet(spark, os.path.join(target, "fact"))
+    fact = cache.read_published(spark, os.path.join(target, "fact"))
     dim = (
-        _read_published_parquet(spark, os.path.join(target, "dim"))
+        cache.read_published(spark, os.path.join(target, "dim"))
         .filter(F.col("grp") == 3)
         .select("day")
     )
@@ -12929,20 +12605,13 @@ def q188_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "incremental", "warehouse", "etl"),
 )
 def q189_partial_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     # Fingerprint-keyed partials (r14, retiring the md5(sf_dir) session
     # CTAS): the daily partial table CARRIES CONTENT, so a stale replay
     # after in-place events regeneration would return wrong numbers —
     # exactly the hazard the data-fingerprint token (file count + bytes
-    # + newest mtime) plus atomic .build-<uuid>/rename publish
-    # eliminates (the q98/q167 discipline; CLAUDE.md lesson 25).
-    target = _fingerprint_cache_path(
-        spark, sf_dir, "events", "q189_daily", "v2-fp"
-    )
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        build = f"{target}.build-{uuid.uuid4().hex[:8]}"
+    # + newest mtime) plus build_once's atomic publish eliminates (the
+    # q98/q167 discipline; lesson 25).
+    def write(tmp_dir: str) -> None:
         events = read_table(spark, sf_dir, "events")
         (
             events.select(
@@ -12959,15 +12628,16 @@ def q189_partial_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").alias("n_events"),
                 F.sum("qv").cast("long").alias("value_cents"),
             )
-            .write.parquet(build)
+            .write.parquet(tmp_dir)
         )
-        # Spark's committer stamps build/_SUCCESS itself — the same
-        # marker _fingerprint_cache_path's partial-target wipe probes.
-        _publish_cache_build(build, target)
+
+    target = cache.build_once(
+        spark, sf_dir, "events", "q189_daily", "v2-fp", write
+    )
     # Memoized published read (r15): re-listing the immutable partials
     # directory cost ~0.08 s per warm run — cached per (session, path,
     # publish stamp).
-    partials = _read_published_parquet(spark, target)
+    partials = cache.read_published(spark, target)
     return (
         partials.groupBy(
             F.expr("day div 7").alias("week"), "event_type"
@@ -13045,13 +12715,26 @@ def q190_processing_time_timer_eviction(
     ev = read_table(spark, sf_dir, "events").select("event_id", "user_id")
     tok = uuid.uuid4().hex[:8]
     watch_dir = f"/tmp/q190_watch_{tok}"
+
     # Phase files are a pure function of the input table AND the staging
-    # recipe, so they are CACHED under the warehouse keyed on a data
+    # recipe, so they are a cache.build_once artifact keyed on a data
     # fingerprint + a staging-logic salt (bump the literal when the
-    # phase split / columns change); stale same-prefix siblings are
-    # pruned (see _fingerprint_cache_path). Warm runs skip the write.
-    stage_dir = _fingerprint_cache_path(
-        spark, sf_dir, "events", "q190_stage", "parity-pmod2-eid-uid-v1"
+    # phase split / columns change). Warm runs skip the write. Both
+    # phase files are written in ONE job (partitionBy over the parity,
+    # 2-way repartition => exactly one file per phase dir); phases then
+    # ARRIVE via stage_phase copies at the right moments.
+    def write(tmp_dir: str) -> None:
+        (
+            ev.withColumn("parity", F.pmod("event_id", F.lit(2)))
+            .repartition(2, "parity")
+            .write.partitionBy("parity")
+            .mode("overwrite")
+            .parquet(tmp_dir)
+        )
+
+    stage_dir = cache.build_once(
+        spark, sf_dir, "events", "q190_stage", "parity-pmod2-eid-uid-v1",
+        write,
     )
     os.makedirs(watch_dir)
 
@@ -13111,23 +12794,6 @@ def q190_processing_time_timer_eviction(
 
     sink = f"q190_out_{tok}"
     try:
-        # Both phase files written in ONE job (partitionBy over the
-        # parity, 2-way repartition => exactly one file per phase dir);
-        # phases then ARRIVE via stage_phase copies at the right
-        # moments. The write is skipped when the fingerprint-keyed
-        # cache already holds it.
-        if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
-            # Build to a temp sibling + atomic rename (never an in-place
-            # overwrite a concurrent same-token reader could half-see).
-            build = f"{stage_dir}.build-{tok}"
-            (
-                ev.withColumn("parity", F.pmod("event_id", F.lit(2)))
-                .repartition(2, "parity")
-                .write.partitionBy("parity")
-                .mode("overwrite")
-                .parquet(build)
-            )
-            _publish_cache_build(build, stage_dir)
         stage_phase(0)
         schema = "event_id long, user_id long"
         stream = spark.readStream.schema(schema).parquet(watch_dir)
@@ -13440,30 +13106,11 @@ def q191_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q192_zonemap_layout_skipping(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # The cache token fingerprints the INPUT DATA (testdata regenerated
-    # in place rebuilds the layouts) and the LAYOUT RECIPE (salt: sort
-    # keys + block size — bump on change); stale same-prefix siblings
-    # are pruned (see _fingerprint_cache_path).
-    paths = {
-        kind: _fingerprint_cache_path(
-            spark, sf_dir, "lineitem", f"q192_{kind}",
-            "rbr8-shipdate-blk64k-v1",
-        )
-        for kind in ("clustered", "scattered")
-    }
-
-    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-
-    def _built(p: str) -> bool:
-        loc = hadoop_path(f"{p}/_SUCCESS")
-        return loc.getFileSystem(hconf).exists(loc)
-
-    if not all(_built(p) for p in paths.values()):
-        import uuid as _uuid
-
-        bsuf = _uuid.uuid4().hex[:8]
-        base = read_table(spark, sf_dir, "lineitem").select(
+    # The build_once token fingerprints the INPUT DATA (testdata
+    # regenerated in place rebuilds the layouts) and the LAYOUT RECIPE
+    # (salt: sort keys + block size — bump on change).
+    def base() -> DataFrame:
+        return read_table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
             "l_linenumber",
             F.col("l_shipdate").cast("date").alias("ship_date"),
@@ -13471,28 +13118,28 @@ def q192_zonemap_layout_skipping(
             "l_extendedprice",
             "l_discount",
         )
+
+    def write_clustered(tmp_dir: str) -> None:
         # Pay-once clustered write: range partitions give file-level
         # date locality, the within-partition sort gives row-group-level
         # locality, and the small parquet block size manufactures many
         # row groups per file so intra-file skipping is observable even
         # at test scale (a real corpus gets this for free from volume).
-        # Each layout builds to a temp sibling and is renamed into place
-        # atomically (_publish_cache_build) — a concurrent same-token
-        # session reads complete artifacts or none.
         (
-            base.repartitionByRange(8, "ship_date", "l_orderkey")
+            base()
+            .repartitionByRange(8, "ship_date", "l_orderkey")
             .sortWithinPartitions("ship_date", "l_orderkey", "l_linenumber")
             .write.mode("overwrite")
             .option("parquet.block.size", 65536)
-            .parquet(f"{paths['clustered']}.build-{bsuf}")
+            .parquet(tmp_dir)
         )
-        _publish_cache_build(
-            f"{paths['clustered']}.build-{bsuf}", paths["clustered"]
-        )
+
+    def write_scattered(tmp_dir: str) -> None:
         # Scatter layout: md5 hash-partition + sort, deterministic file
         # bytes but every row group spans the whole date domain.
         (
-            base.withColumn(
+            base()
+            .withColumn(
                 "__scatter",
                 F.md5(F.concat_ws("|", "l_orderkey", "l_linenumber")),
             )
@@ -13501,11 +13148,19 @@ def q192_zonemap_layout_skipping(
             .drop("__scatter")
             .write.mode("overwrite")
             .option("parquet.block.size", 65536)
-            .parquet(f"{paths['scattered']}.build-{bsuf}")
+            .parquet(tmp_dir)
         )
-        _publish_cache_build(
-            f"{paths['scattered']}.build-{bsuf}", paths["scattered"]
+
+    paths = {
+        kind: cache.build_once(
+            spark, sf_dir, "lineitem", f"q192_{kind}",
+            "rbr8-shipdate-blk64k-v1", write,
         )
+        for kind, write in (
+            ("clustered", write_clustered),
+            ("scattered", write_scattered),
+        )
+    }
 
     lo = F.lit("1999-01-01").cast("date")
     hi = F.lit("1999-03-01").cast("date")
@@ -13519,7 +13174,7 @@ def q192_zonemap_layout_skipping(
             # atomically-published immutable artifacts, so each bench
             # rep otherwise pays ~0.1 s/dir of re-listing + discovery.
             probe = (
-                _read_published_parquet(spark, path)
+                cache.read_published(spark, path)
                 .filter((F.col("ship_date") >= lo) & (F.col("ship_date") < hi))
                 .groupBy("l_returnflag")
                 .agg(
@@ -13687,13 +13342,26 @@ def q193_event_time_timer_eviction(
     tok = uuid.uuid4().hex[:8]
     watch_dir = f"/tmp/q193_watch_{tok}"
     tmid = "2024-01-16 00:00:00"
+
     # Fingerprint-keyed cached staging, as q190: phase files are a pure
-    # function of the input table and the staging recipe, so the cache
-    # token carries a logic salt (phase-split timestamp + columns —
-    # bump on change) and stale siblings are pruned
-    # (_fingerprint_cache_path). Warm runs skip the write job.
-    stage_dir = _fingerprint_cache_path(
-        spark, sf_dir, "events", "q193_stage", f"phase-{tmid}-uid-ts-v1"
+    # function of the input table and the staging recipe, so the
+    # build_once token carries a logic salt (phase-split timestamp +
+    # columns — bump on change). Warm runs skip the write job.
+    def write(tmp_dir: str) -> None:
+        (
+            ev.withColumn(
+                "phase",
+                (F.col("ts") >= F.lit(tmid).cast("timestamp")).cast("int"),
+            )
+            .repartition(2, "phase")
+            .write.partitionBy("phase")
+            .mode("overwrite")
+            .parquet(tmp_dir)
+        )
+
+    stage_dir = cache.build_once(
+        spark, sf_dir, "events", "q193_stage", f"phase-{tmid}-uid-ts-v1",
+        write,
     )
     os.makedirs(watch_dir)
 
@@ -13786,22 +13454,6 @@ def q193_event_time_timer_eviction(
 
     sink = f"q193_out_{tok}"
     try:
-        if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
-            # Temp sibling + atomic rename, as q190.
-            build = f"{stage_dir}.build-{tok}"
-            (
-                ev.withColumn(
-                    "phase",
-                    (F.col("ts") >= F.lit(tmid).cast("timestamp")).cast(
-                        "int"
-                    ),
-                )
-                .repartition(2, "phase")
-                .write.partitionBy("phase")
-                .mode("overwrite")
-                .parquet(build)
-            )
-            _publish_cache_build(build, stage_dir)
         stage_phase(0)
         schema = "user_id long, ts timestamp"
         stream = (
@@ -13914,26 +13566,6 @@ def q193_event_time_timer_eviction(
 def q194_zorder_multidim_skipping(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # Data-fingerprinted cache token (q192's discipline): regeneration
-    # of the input invalidates the cached layouts; the salt versions
-    # the layout recipe (interleave order, 16-bit normalization, block
-    # size — bump on change) and stale siblings are pruned
-    # (_fingerprint_cache_path).
-    paths = {
-        kind: _fingerprint_cache_path(
-            spark, sf_dir, "lineitem", f"q194_{kind}",
-            "z16-supphigh-rbr8-blk64k-v1",
-        )
-        for kind in ("zorder", "linear")
-    }
-
-    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-
-    def _built(p: str) -> bool:
-        loc = hadoop_path(f"{p}/_SUCCESS")
-        return loc.getFileSystem(hconf).exists(loc)
-
     base = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
@@ -13957,7 +13589,11 @@ def q194_zorder_multidim_skipping(
     sspan = max(smax - smin, 1)
     dspan = max((dom["dmax"] - dom["dmin"]).days, 1)
 
-    if not all(_built(p) for p in paths.values()):
+    # Data-fingerprinted build_once token (q192's discipline):
+    # regeneration of the input invalidates the cached layouts; the
+    # salt versions the layout recipe (interleave order, 16-bit
+    # normalization, block size — bump on change).
+    def write_zorder(tmp_dir: str) -> None:
         # 16-bit min-max normalization of both keys, then bit
         # interleaving (suppkey takes the odd/high bit of each pair so
         # contiguous Z ranges bound the suppkey interval tightly).
@@ -13978,10 +13614,6 @@ def q194_zorder_multidim_skipping(
             )
             term = s_bit.bitwiseOR(d_bit)
             z = term if z is None else z.bitwiseOR(term)
-        # Temp-sibling builds + atomic rename, as q192.
-        import uuid as _uuid
-
-        bsuf = _uuid.uuid4().hex[:8]
         (
             base.withColumn("__z", z)
             .repartitionByRange(8, "__z", "l_orderkey")
@@ -13989,9 +13621,10 @@ def q194_zorder_multidim_skipping(
             .drop("__z")
             .write.mode("overwrite")
             .option("parquet.block.size", 65536)
-            .parquet(f"{paths['zorder']}.build-{bsuf}")
+            .parquet(tmp_dir)
         )
-        _publish_cache_build(f"{paths['zorder']}.build-{bsuf}", paths["zorder"])
+
+    def write_linear(tmp_dir: str) -> None:
         # Linear comparison layout: date-sorted (q192's clustered form)
         # — optimal for date probes, blind on the trailing suppkey.
         (
@@ -13999,9 +13632,19 @@ def q194_zorder_multidim_skipping(
             .sortWithinPartitions("ship_date", "l_orderkey", "l_linenumber")
             .write.mode("overwrite")
             .option("parquet.block.size", 65536)
-            .parquet(f"{paths['linear']}.build-{bsuf}")
+            .parquet(tmp_dir)
         )
-        _publish_cache_build(f"{paths['linear']}.build-{bsuf}", paths["linear"])
+
+    paths = {
+        kind: cache.build_once(
+            spark, sf_dir, "lineitem", f"q194_{kind}",
+            "z16-supphigh-rbr8-blk64k-v1", write,
+        )
+        for kind, write in (
+            ("zorder", write_zorder),
+            ("linear", write_linear),
+        )
+    }
 
     s_lo = smin + ((smax - smin) * 2) // 5
     s_hi = s_lo + max((smax - smin) // 16, 1)
@@ -14015,7 +13658,7 @@ def q194_zorder_multidim_skipping(
             # atomically-published immutable artifacts, so each bench
             # rep otherwise pays ~0.1 s/dir of re-listing + discovery.
             probe = (
-                _read_published_parquet(spark, path)
+                cache.read_published(spark, path)
                 .filter(
                     (F.col("l_suppkey") >= F.lit(s_lo))
                     & (F.col("l_suppkey") < F.lit(s_hi))

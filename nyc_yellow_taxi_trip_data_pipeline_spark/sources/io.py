@@ -234,15 +234,20 @@ def read_jdbc(
 
 
 def write_jdbc_append(
-    df: DataFrame, url: str, table: str, properties: dict[str, str] | None = None
+    df: DataFrame,
+    url: str,
+    table: str,
+    properties: dict[str, str] | None = None,
+    mode: str = "append",
 ) -> None:
-    """JDBC append sink (reference sparkConsumer.py:147-154)."""
+    """JDBC append sink (reference sparkConsumer.py:147-154); ``mode``
+    is Spark's save mode (the upsert sink's staging write overwrites)."""
     writer = (
         df.write.format("jdbc").option("url", url).option("dbtable", table)
     )
     for k, v in (properties or {}).items():
         writer = writer.option(k, v)
-    writer.mode("append").save()
+    writer.mode(mode).save()
 
 
 def to_kafka_json(df: DataFrame) -> DataFrame:

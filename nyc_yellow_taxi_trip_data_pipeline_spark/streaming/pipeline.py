@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamReader, StreamingQuery
 
-from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import schema_to_ddl
+from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
+    schema_to_ddl,
+    write_jdbc_append,
+)
 
 
 def read_stream(
@@ -251,18 +254,10 @@ def foreach_batch_jdbc_writer(
             # its own connection (dialects differ; the engine stays
             # driver-agnostic).
             ensure_table(schema_to_ddl(batch_df.schema, table))
-        writer = (
-            batch_df.write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .option("createTableOptions", "")
-        )
-        for k, v in (properties or {}).items():
-            writer = writer.option(k, v)
         # One execution: persist the batch, write it, count the cached data.
         batch_df.persist()
         try:
-            writer.mode("append").save()
+            write_jdbc_append(batch_df, url, table, properties)
             if on_batch is not None:
                 on_batch(batch_id, batch_df.count())
         finally:
@@ -428,21 +423,11 @@ def foreach_batch_jdbc_upsert(
             .drop("__rn")
         )
 
-        def jdbc_writer(df: DataFrame, target: str, mode: str):
-            writer = (
-                df.write.format("jdbc")
-                .option("url", url)
-                .option("dbtable", target)
-            )
-            for k, v in (properties or {}).items():
-                writer = writer.option(k, v)
-            writer.mode(mode).save()
-
         # Target bootstrap: an empty append creates the table when
         # missing (portable — Derby has no CREATE TABLE IF NOT EXISTS).
-        jdbc_writer(deduped.limit(0), table, "append")
+        write_jdbc_append(deduped.limit(0), url, table, properties)
         staging = f"{table}_STG_{batch_id}"
-        jdbc_writer(deduped, staging, "overwrite")
+        write_jdbc_append(deduped, url, staging, properties, mode="overwrite")
 
         spark = batch_df.sparkSession
         dm = spark._jvm.java.sql.DriverManager  # noqa: SLF001

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import os
 
-from nyc_yellow_taxi_trip_data_pipeline_spark.plans.datapipe import (
+from nyc_yellow_taxi_trip_data_pipeline_spark.plans.cache import (
     _fingerprint_cache_path,
 )
 
@@ -95,7 +95,7 @@ def test_inflight_builds_exempt_and_partial_targets_pruned(spark):
 
 
 def test_publish_cache_build_atomic_rename_and_loser_discard(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.datapipe import (
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.cache import (
         _publish_cache_build,
     )
 
@@ -122,7 +122,7 @@ def test_publish_cache_build_concurrent_builders(tmp_path):
     import threading
 
     tgt = tmp_path / "c"
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.datapipe import (
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.cache import (
         _publish_cache_build,
     )
 
@@ -157,7 +157,7 @@ def test_publish_cache_build_wipes_stale_partial_and_raises_legibly(
     publish site instead of silently discarding the finished build."""
     import pytest
 
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.datapipe import (
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.cache import (
         _publish_cache_build,
     )
 
@@ -191,19 +191,19 @@ def test_fingerprint_cache_path_sweeps_aged_orphan_builds(spark):
     import shutil
     import time
 
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
 
-    live = dp._fingerprint_cache_path(
+    live = cache._fingerprint_cache_path(
         spark, SF_DIR, "events", "tcache_d", "v1"
     )
     fresh = f"{live}.build-fresh001"
     aged = f"{live}.build-aged0001"
     os.makedirs(fresh, exist_ok=True)
     os.makedirs(aged, exist_ok=True)
-    old = time.time() - dp._BUILD_SWEEP_S - 60
+    old = time.time() - cache._BUILD_SWEEP_S - 60
     os.utime(aged, (old, old))
     try:
-        again = dp._fingerprint_cache_path(
+        again = cache._fingerprint_cache_path(
             spark, SF_DIR, "events", "tcache_d", "v1"
         )
         assert again == live
@@ -233,6 +233,7 @@ def test_signature_index_fingerprints_data_and_reregisters(spark, tmp_path):
     over the published files WITHOUT rebuilding."""
     import pyspark.sql.functions as F
 
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table
 
@@ -242,7 +243,7 @@ def test_signature_index_fingerprints_data_and_reregisters(spark, tmp_path):
     n_accepted = accepted.count()
 
     sigs, bands = dp._signature_index(spark, sf, "tsig", accepted, 12, 3)
-    target1, tbl1 = dp._signature_index_name(spark, sf, "tsig")
+    target1, tbl1 = cache._signature_index_name(spark, sf, "tsig")
     assert os.path.exists(os.path.join(target1, "_SUCCESS"))
     assert sigs.count() == n_accepted
     assert bands.select("band_id").distinct().count() == 4  # 12/3 bands
@@ -277,7 +278,7 @@ def test_signature_index_fingerprints_data_and_reregisters(spark, tmp_path):
 
     pdf = pd.read_parquet(os.path.join(sf, "documents.parquet"))
     pdf.to_parquet(os.path.join(sf, "documents.parquet"), index=False)
-    target2, tbl2 = dp._signature_index_name(spark, sf, "tsig")
+    target2, tbl2 = cache._signature_index_name(spark, sf, "tsig")
     assert tbl2 != tbl1
     assert not os.path.exists(target1), "stale index survived regeneration"
 
@@ -290,6 +291,7 @@ def test_signature_index_concurrent_builders_one_winner(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table
 
@@ -314,7 +316,7 @@ def test_signature_index_concurrent_builders_one_winner(spark, tmp_path):
         t.join()
     assert not errs, errs
     assert counts == [n_accepted, n_accepted]
-    target, _ = dp._signature_index_name(spark, sf, "tsigrace")
+    target, _ = cache._signature_index_name(spark, sf, "tsigrace")
     assert os.path.exists(os.path.join(target, "_SUCCESS"))
     # no loser build dirs left behind
     warehouse = os.path.dirname(target)
@@ -346,14 +348,14 @@ def test_q189_sees_in_place_events_regeneration(spark, tmp_path):
     import pandas as pd
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
 
     sf = _copy_tables(SF_DIR, tmp_path / "sf", ["events"])
     run = QUERIES["q189_partial_agg_rollup"].spark
 
     first = run(spark, sf).collect()
     assert any(r.value_cents != 0 for r in first)
-    target1 = dp._fingerprint_cache_path(
+    target1 = cache._fingerprint_cache_path(
         spark, sf, "events", "q189_daily", "v2-fp"
     )
     assert os.path.exists(os.path.join(target1, "_SUCCESS"))
@@ -604,12 +606,12 @@ def test_read_published_parquet_memoizes_and_invalidates_on_republish(
     direct read, so the memo can never orphan a file index."""
     import pyspark.sql.functions as F
 
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import datapipe as dp
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
 
     pub = tmp_path / "pub"
     spark.range(10).withColumn("v", F.col("id") * 2).write.parquet(str(pub))
-    df1 = dp._read_published_parquet(spark, str(pub))
-    df2 = dp._read_published_parquet(spark, str(pub))
+    df1 = cache.read_published(spark, str(pub))
+    df2 = cache.read_published(spark, str(pub))
     assert df1 is df2, "second call must hit the memo"
     assert df1.count() == 10
 
@@ -619,8 +621,8 @@ def test_read_published_parquet_memoizes_and_invalidates_on_republish(
     spark.range(5).write.parquet(str(root / "fact"))
     os.remove(str(root / "fact" / "_SUCCESS"))
     open(str(root / "_SUCCESS"), "w").close()
-    f1 = dp._read_published_parquet(spark, str(root / "fact"))
-    assert f1 is dp._read_published_parquet(spark, str(root / "fact"))
+    f1 = cache.read_published(spark, str(root / "fact"))
+    assert f1 is cache.read_published(spark, str(root / "fact"))
     assert f1.count() == 5
 
     # same-path republish: new files + new _SUCCESS mtime => new entry
@@ -629,7 +631,7 @@ def test_read_published_parquet_memoizes_and_invalidates_on_republish(
 
     shutil.rmtree(pub)
     spark.range(3).write.parquet(str(pub))
-    df3 = dp._read_published_parquet(spark, str(pub))
+    df3 = cache.read_published(spark, str(pub))
     assert df3 is not df1
     assert df3.count() == 3
 
@@ -638,7 +640,153 @@ def test_read_published_parquet_memoizes_and_invalidates_on_republish(
     raw = tmp_path / "raw"
     spark.range(7).write.parquet(str(raw))
     os.remove(str(raw / "_SUCCESS"))
-    r1 = dp._read_published_parquet(spark, str(raw))
-    r2 = dp._read_published_parquet(spark, str(raw))
+    r1 = cache.read_published(spark, str(raw))
+    r2 = cache.read_published(spark, str(raw))
     assert r1 is not r2
     assert r1.count() == 7
+
+
+def _siblings(target: str) -> list[str]:
+    """Every warehouse entry sharing ``target``'s prefix + slug."""
+    warehouse, name = os.path.split(target)
+    stem = name.rsplit("_", 1)[0] + "_"
+    return sorted(d for d in os.listdir(warehouse) if d.startswith(stem))
+
+
+def test_build_once_reuses_then_rebuilds_on_regeneration(spark, tmp_path):
+    """Unchanged data: the second call returns the same target and never
+    calls ``write``. In-place regeneration: ``write`` runs again under a
+    new token and the superseded target is pruned."""
+    import shutil
+
+    import pandas as pd
+
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
+
+    sf = _copy_tables(SF_DIR, tmp_path / "sf", ["events"])
+    calls: list[str] = []
+
+    def write(tmp_dir: str) -> None:
+        calls.append(tmp_dir)
+        spark.range(3).write.parquet(tmp_dir)
+
+    t1 = cache.build_once(spark, sf, "events", "tbo_reuse", "v1", write)
+    assert len(calls) == 1 and calls[0].startswith(f"{t1}.build-")
+    assert cache.build_once(spark, sf, "events", "tbo_reuse", "v1", write) == t1
+    assert len(calls) == 1, "unchanged data must not rebuild"
+    try:
+        ev_path = os.path.join(sf, "events.parquet")
+        pdf = pd.read_parquet(ev_path)
+        pdf["value"] = 0.0
+        pdf.to_parquet(ev_path, index=False)
+        t2 = cache.build_once(spark, sf, "events", "tbo_reuse", "v1", write)
+        assert t2 != t1 and len(calls) == 2
+        assert os.path.exists(os.path.join(t2, "_SUCCESS"))
+        assert not os.path.exists(t1), "superseded target survived"
+        assert _siblings(t2) == [os.path.basename(t2)]
+    finally:
+        for d in _siblings(t1):
+            shutil.rmtree(os.path.join(os.path.dirname(t1), d))
+
+
+def test_build_once_failed_write_publishes_nothing(spark, tmp_path):
+    """A raising ``write`` propagates, publishes no target and leaves no
+    ``.build-*`` sibling; the next call builds."""
+    import shutil
+
+    import pytest
+
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
+
+    sf = _copy_tables(SF_DIR, tmp_path / "sf", ["events"])
+
+    def broken(tmp_dir: str) -> None:
+        os.makedirs(tmp_dir)
+        open(os.path.join(tmp_dir, "part-0"), "w").close()
+        raise RuntimeError("write failed mid-build")
+
+    def good(tmp_dir: str) -> None:
+        spark.range(2).write.parquet(tmp_dir)
+
+    with pytest.raises(RuntimeError, match="write failed mid-build"):
+        cache.build_once(spark, sf, "events", "tbo_fail", "v1", broken)
+    target = cache._fingerprint_cache_path(
+        spark, sf, "events", "tbo_fail", "v1"
+    )
+    try:
+        assert not os.path.exists(target), "a failed build was published"
+        assert _siblings(target) == [], "a failed build left a temp dir"
+        assert cache.build_once(spark, sf, "events", "tbo_fail", "v1", good) == (
+            target
+        )
+        assert spark.read.parquet(target).count() == 2
+    finally:
+        shutil.rmtree(target, ignore_errors=True)
+
+
+def test_build_once_stamps_success_exactly_once(spark, tmp_path):
+    """A committer-stamped Spark write and a plain-file write both end
+    with exactly one ``_SUCCESS`` at the published target, and the
+    committer's own stamp is kept, not rewritten."""
+    import shutil
+
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
+
+    sf = _copy_tables(SF_DIR, tmp_path / "sf", ["events"])
+    stamped: list[int] = []
+
+    def spark_write(tmp_dir: str) -> None:
+        spark.range(4).write.parquet(tmp_dir)
+        stamped.append(os.stat(os.path.join(tmp_dir, "_SUCCESS")).st_mtime_ns)
+
+    def plain_write(tmp_dir: str) -> None:
+        os.makedirs(tmp_dir)
+        with open(os.path.join(tmp_dir, "rows.txt"), "w") as fh:
+            fh.write("a\nb\n")
+
+    targets = []
+    try:
+        for prefix, write in (
+            ("tbo_stamp_spark", spark_write),
+            ("tbo_stamp_plain", plain_write),
+        ):
+            target = cache.build_once(spark, sf, "events", prefix, "v1", write)
+            targets.append(target)
+            stamps = [
+                os.path.join(r, f)
+                for r, _, fs in os.walk(target)
+                for f in fs
+                if f == "_SUCCESS"
+            ]
+            assert stamps == [os.path.join(target, "_SUCCESS")], stamps
+        spark_target, plain_target = targets
+        assert stamped == [
+            os.stat(os.path.join(spark_target, "_SUCCESS")).st_mtime_ns
+        ]
+        assert spark.read.parquet(spark_target).count() == 4
+        with open(os.path.join(plain_target, "rows.txt")) as fh:
+            assert fh.read() == "a\nb\n"
+    finally:
+        for t in targets:
+            shutil.rmtree(t, ignore_errors=True)
+
+
+def test_only_cache_module_spells_the_publish_protocol():
+    """The build/stamp/publish protocol lives in ``plans/cache.py`` only:
+    the plan modules call ``build_once``/``read_published`` and never
+    spell the stamp, the temp-sibling suffix or the private helpers."""
+    import pathlib
+
+    plans = pathlib.Path(__file__).resolve().parent.parent / (
+        "nyc_yellow_taxi_trip_data_pipeline_spark/plans"
+    )
+    banned = (
+        "_SUCCESS",
+        ".build-",
+        "_publish_cache_build",
+        "_fingerprint_cache_path",
+    )
+    for module in ("datapipe.py", "analytics.py"):
+        src = (plans / module).read_text()
+        hits = [b for b in banned if b in src]
+        assert not hits, f"plans/{module} spells {hits}; use plans/cache.py"

@@ -298,7 +298,7 @@ def test_write_signature_index_and_q98_match_cold_path(spark):
     }
 
     # (a) every index doc has a fingerprint row in the materialized table
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.datapipe import (
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans.cache import (
         _signature_index_name,
     )
 

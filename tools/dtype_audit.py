@@ -21,13 +21,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES  # noqa: E402
 from nyc_yellow_taxi_trip_data_pipeline_spark.session import get_spark  # noqa: E402
-from tools.parity import duck_connection  # noqa: E402
-
-
-def kind(dtype) -> str:
-    k = dtype.kind  # i/u int, f float, b bool, O object, M datetime
-    return {"i": "int", "u": "int", "f": "float", "b": "bool",
-            "O": "object", "M": "datetime"}.get(k, k)
+from tools.parity import duck_connection, dtype_kind_split  # noqa: E402
 
 
 def main() -> int:
@@ -50,23 +44,10 @@ def main() -> int:
             if c not in d.columns:
                 flags.append(f"col {c!r} missing in oracle")
                 continue
-            ks, kd = kind(s[c].dtype), kind(d[c].dtype)
-            # Known-benign: Spark DATE surfaces as pandas object holding
-            # datetime.date while DuckDB DATE converts to datetime64 —
-            # q63/q86 carry driver-green rows with exactly this shape, so
-            # the driver's canonicalization provably handles it.
-            import datetime as _dt
-
-            if (
-                ks == "object"
-                and kd == "datetime"
-                and len(s)
-                and isinstance(s[c].iloc[0], _dt.date)
-            ):
-                continue
-            if ks != kd:
-                flags.append(f"col {c!r}: spark {ks}({s[c].dtype}) vs duck {kd}({d[c].dtype})")
-            elif kd == "object" and len(d) and not isinstance(d[c].iloc[0], (str, bytes, type(None))):
+            split = dtype_kind_split(s[c], d[c])
+            if split is not None:
+                flags.append(f"col {c!r}: spark {split[0]}({s[c].dtype}) vs duck {split[1]}({d[c].dtype})")
+            elif d[c].dtype.kind == "O" and len(d) and not isinstance(d[c].iloc[0], (str, bytes, type(None))):
                 flags.append(f"col {c!r}: duck object dtype holds {type(d[c].iloc[0]).__name__}")
         if flags:
             problems += 1

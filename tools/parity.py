@@ -57,9 +57,28 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
-def _dtype_kind(dtype) -> str:
-    return {"i": "int", "u": "int", "f": "float", "b": "bool",
-            "O": "object", "M": "datetime"}.get(dtype.kind, dtype.kind)
+def dtype_kind_split(spark_col: pd.Series, duck_col: pd.Series) -> tuple[str, str] | None:
+    """(spark kind, duck kind) when one column's dtype KINDs differ
+    between engines, else None. The numeric compare harmonizes
+    int-vs-float, but the driver hashes values through their dtype — an
+    uncast SUM(BIGINT) oracle column arriving HUGEINT→float64
+    hash-splits against Spark's int64 even though every value compares
+    equal (the round-6 q88/q90/q97 reds). Allowlisted: Spark DATE
+    (object of datetime.date) vs DuckDB datetime64 — driver-green rows
+    (q63/q86) prove that pairing benign."""
+    import datetime as _dt
+
+    kinds = {"i": "int", "u": "int", "f": "float", "b": "bool",
+             "O": "object", "M": "datetime"}
+    ks, kd = (kinds.get(c.dtype.kind, c.dtype.kind) for c in (spark_col, duck_col))
+    if ks == kd or (
+        ks == "object"
+        and kd == "datetime"
+        and len(spark_col)
+        and isinstance(spark_col.iloc[0], _dt.date)
+    ):
+        return None
+    return ks, kd
 
 
 def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
@@ -70,30 +89,14 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     if s_cols != d_cols:
         problems.append(f"columns spark={s_cols} duck={d_cols}")
         return problems
-    # Dtype-KIND check before value comparison: the numeric compare below
-    # deliberately harmonizes int-vs-float, but the driver hashes values
-    # through their dtype — an uncast SUM(BIGINT) oracle column arriving
-    # HUGEINT→float64 hash-splits against Spark's int64 even though every
-    # value compares equal (the round-6 q88/q90/q97 reds). Catch it here.
-    # Allowlisted: Spark DATE (object of datetime.date) vs DuckDB
-    # datetime64 — driver-green rows (q63/q86) prove that pairing benign.
-    import datetime as _dt
-
+    # Dtype-KIND check before value comparison (registry rule 3).
     for c in s_cols:
-        ks = _dtype_kind(spark_pdf[c].dtype)
-        kd = _dtype_kind(duck_pdf[c].dtype)
-        if ks == kd:
-            continue
-        if (
-            ks == "object"
-            and kd == "datetime"
-            and len(spark_pdf)
-            and isinstance(spark_pdf[c].iloc[0], _dt.date)
-        ):
+        split = dtype_kind_split(spark_pdf[c], duck_pdf[c])
+        if split is None:
             continue
         problems.append(
-            f"dtype-kind col {c!r}: spark {ks}({spark_pdf[c].dtype}) vs "
-            f"duck {kd}({duck_pdf[c].dtype}) — values may still match but "
+            f"dtype-kind col {c!r}: spark {split[0]}({spark_pdf[c].dtype}) vs "
+            f"duck {split[1]}({duck_pdf[c].dtype}) — values may still match but "
             "the driver's value-hash will split (registry rule 3)"
         )
     if problems:
