@@ -6,6 +6,10 @@ Env:
   SPARK_GRAFT_CPUS    local[] parallelism + shuffle partitions (default 32)
   BENCH_QUERIES       comma-separated subset (default: all registered)
 
+The full JSON (also written to BENCH_FULL_PATH, default BENCH_FULL.json)
+carries a `provenance` block: commit, source digest, cpu count, Spark
+version, sf, start time and load average.
+
 Each query is materialized through the `noop` sink — full execution of the
 physical plan (scan, shuffles, Python stages) without collect-to-driver or
 disk-write noise.
@@ -13,6 +17,7 @@ disk-write noise.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import sys
@@ -20,14 +25,19 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+# perfbench/run.py's provenance helpers (it imports its siblings by name).
+sys.path.append(str(Path(__file__).resolve().parent / "perfbench"))
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES  # noqa: E402
 from nyc_yellow_taxi_trip_data_pipeline_spark.session import get_spark  # noqa: E402
+from run import git_commit, source_digest  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    started_at = datetime.datetime.now(datetime.timezone.utc).isoformat()
+    loadavg_before = os.getloadavg()
     spark = get_spark("bench")
 
     names = (
@@ -142,6 +152,21 @@ def main() -> None:
     result["memo"] = memo.stats(app_id)
     if errors:
         result["errors"] = errors
+    # Provenance: which code ran, on how many cores, under what load —
+    # so a snapshot explains itself without git archaeology. The same
+    # keys as perfbench's result records.
+    result["provenance"] = {
+        "git_commit": git_commit(),
+        "source_sha256": source_digest(),
+        "nproc": os.cpu_count(),
+        "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+        "master": spark.sparkContext.master,
+        "spark": spark.version,
+        "sf": result["sf"],
+        "started_at": started_at,
+        "loadavg_before": loadavg_before,
+        "loadavg_after": os.getloadavg(),
+    }
 
     # The driver captures stdout with a bounded tail, which clipped ~28
     # per-query numbers out of BENCH_r06. Persist the full JSON to a file

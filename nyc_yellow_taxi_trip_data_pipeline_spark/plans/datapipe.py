@@ -982,13 +982,8 @@ def q41_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "agg"),
 )
 def q44_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     stream = read_table_stream(spark, sf_dir, "events")
     agg = (
@@ -1005,20 +1000,7 @@ def q44_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "n_events", "sum_value"
         )
     )
-    sink = f"q44_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1797,34 +1779,21 @@ def q66_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "sessionize", "pandas-udf"),
 )
 def q67_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
+        drain_to_memory,
         sessionize_stateful,
-        unload_state_stores,
     )
 
     stream = read_table_stream(spark, sf_dir, "events")
     sessions = sessionize_stateful(stream, gap_seconds=1800)
-    sink = f"q67_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
     # Cumulative emission: the final value per key is the max across
     # batches (single-batch replays emit exactly one row per key).
+    # 8 state partitions: one pandas state call per user runs as
+    # parallel tasks (1 partition measured 1.6x slower at sf0.1,
+    # plans/r18/probe_replay_partitions.txt).
     return (
-        spark.table(sink)
+        drain_to_memory(sessions, "update", state_partitions=8)
         .groupBy("key")
         .agg(
             F.max("n_sessions").alias("n_sessions"),
@@ -2320,13 +2289,8 @@ def q75_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "interval"),
 )
 def q76_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     stream = read_table_stream(spark, sf_dir, "events")
     errors = (
@@ -2355,21 +2319,8 @@ def q76_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     ).select("event_id", "user_id", "view_id")
-    sink = f"q76_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
     return (
-        spark.table(sink)
+        drain_to_memory(joined, "append")
         .groupBy("event_id", "user_id")
         .agg(F.count("view_id").alias("n_preceding_views"))
     )
@@ -2701,13 +2652,8 @@ def q79_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "broadcast"),
 )
 def q80_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     stream = read_table_stream(spark, sf_dir, "events").select("user_id", "value")
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -2722,20 +2668,7 @@ def q80_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 100.0
         ).alias("sum_value"),
     )
-    sink = f"q80_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -2761,13 +2694,8 @@ def q80_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "stateful"),
 )
 def q81_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     once = read_table_stream(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
@@ -2780,21 +2708,11 @@ def q81_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = twice.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink = f"q81_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
+    # 8 state partitions: dedup state holds every event id, so its
+    # commits run as parallel tasks (1 partition measured 1.3x slower
+    # at sf0.1, plans/r18/probe_replay_partitions.txt).
     return (
-        spark.table(sink)
+        drain_to_memory(deduped, "append", state_partitions=8)
         .groupBy("event_type")
         .agg(F.count("*").alias("n_events"))
     )
@@ -3769,15 +3687,10 @@ def q94_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "join"),
 )
 def q95_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
         read_table_stream,
     )
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     delta = (
         read_table_stream(spark, sf_dir, "documents")
@@ -3792,20 +3705,7 @@ def q95_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     )
     accepted = delta.join(F.broadcast(index), "fp", "left_anti")
     agg = accepted.groupBy("source").agg(F.count("*").alias("n_accepted"))
-    sink = f"q95_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -4837,13 +4737,8 @@ def q109_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "agg", "sliding"),
 )
 def q110_streaming_sliding_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     stream = read_table_stream(spark, sf_dir, "events")
     # (exact COUNT(DISTINCT) is unsupported in streaming aggregations —
@@ -4865,20 +4760,7 @@ def q110_streaming_sliding_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"q110_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return drain_to_memory(agg, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -5361,8 +5243,7 @@ def q115_streaming_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
         foreach_batch_jdbc_upsert,
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_query,
     )
 
     url = f"jdbc:derby:memory:q115_{uuid.uuid4().hex[:8]};create=true"
@@ -5376,21 +5257,13 @@ def q115_streaming_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 100.0
         ).alias("sum_value"),
     )
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(
-                foreach_batch_jdbc_upsert(
-                    url, table, key_cols=["user_id"], properties=props
-                )
-            )
-            .start()
+    writer = agg.writeStream.outputMode("update").foreachBatch(
+        foreach_batch_jdbc_upsert(
+            url, table, key_cols=["user_id"], properties=props
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
+    )
+    with replay_query(spark, writer) as q:
+        q.processAllAvailable()
     return read_jdbc(spark, url, table, props).select(
         "user_id", "n_events", "sum_value"
     )
@@ -6455,11 +6328,10 @@ def q129_chunk_dup_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     APPEND output iff window_end <= W_last (the final no-data batch
 #     flushes evicted windows; boundary strictness is measure-zero —
 #     event times are microsecond-grained, window ends hour-aligned).
-# Replay determinism: each arrival batch is written as one parquet file,
-# renamed to 00..03 so byte order and mtime order agree, and
-# maxFilesPerTrigger=1 makes file = micro-batch. Production replaces the
-# file replay with Kafka arrival order; the watermark algebra is the
-# part that carries.
+# Replay determinism: `streaming.pipeline.replay_files` stages each
+# arrival batch as one parquet file, in batch order, and streams one file
+# per micro-batch. Production replaces the file replay with Kafka arrival
+# order; the watermark algebra is the part that carries.
 # ---------------------------------------------------------------------------
 _Q130_DELAY_MS = 90 * 60 * 1000
 _Q130_BATCHES = 4
@@ -6501,52 +6373,17 @@ _Q130_BATCHES = 4
     tags=("streaming", "watermark", "late-data", "window"),
 )
 def q130_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        drain_to_memory,
+        replay_files,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    replay_dir = f"/tmp/q130_replay_{uuid.uuid4().hex[:8]}"
-    # The memory sink holds the rows; the replay files are dead weight
-    # (repeated bench passes would otherwise accumulate them in /tmp) —
-    # try/finally so a failed write/stream can't strand the dir either.
-    import shutil
-
-    try:
-        # Deterministic arrival order: one file per batch, renamed so path
-        # order and mtime order agree (each write is a separate job, so
-        # mtimes are strictly increasing).
-        written: set[str] = set()
-        for i in range(_Q130_BATCHES):
-            ev.filter(
-                F.pmod("event_id", F.lit(_Q130_BATCHES)) == i
-            ).coalesce(1).write.mode(
-                "append" if i else "overwrite"
-            ).parquet(replay_dir)
-            new = [
-                f
-                for f in os.listdir(replay_dir)
-                if f.endswith(".parquet")
-                and not f.startswith("_")
-                and f not in written
-            ]
-            assert len(new) == 1, new
-            os.rename(
-                os.path.join(replay_dir, new[0]),
-                os.path.join(replay_dir, f"{i:02d}.parquet"),
-            )
-            written.add(f"{i:02d}.parquet")
-
-        schema = spark.read.parquet(replay_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(replay_dir)
-        )
+    batches = [
+        ev.filter(F.pmod("event_id", F.lit(_Q130_BATCHES)) == i)
+        for i in range(_Q130_BATCHES)
+    ]
+    with replay_files(spark, batches) as stream:
         agg = (
             stream.withWatermark("ts", "90 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -6565,22 +6402,7 @@ def q130_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        sink = f"q130_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
+        return drain_to_memory(agg, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -6849,13 +6671,8 @@ def q132_vocab_oov_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "watermark", "outer-join"),
 )
 def q133_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     stream = read_table_stream(spark, sf_dir, "events")
     errors = (
@@ -6885,21 +6702,8 @@ def q133_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     ).select("event_id", "user_id", "view_id")
-    sink = f"q133_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
     return (
-        spark.table(sink)
+        drain_to_memory(joined, "append")
         .groupBy("event_id", "user_id")
         .agg(F.count("view_id").cast("long").alias("n_preceding_views"))
     )
@@ -6957,13 +6761,8 @@ def q133_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "window", "watermark", "multi-stateful"),
 )
 def q134_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table_stream
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import drain_to_memory
 
     stream = read_table_stream(spark, sf_dir, "events")
     errors = (
@@ -6999,20 +6798,7 @@ def q134_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pairs",
         )
     )
-    sink = f"q134_out_{uuid.uuid4().hex[:8]}"
-    with scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            unload_state_stores(spark)
-    return spark.table(sink)
+    return drain_to_memory(agg, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -7118,82 +6904,36 @@ def _q135_oracle() -> str:
 def q135_streaming_dedup_within_watermark(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        drain_to_memory,
+        replay_files,
     )
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    replay_dir = f"/tmp/q135_replay_{uuid.uuid4().hex[:8]}"
-    # try/finally: a failed replay-write or stream must not strand the
-    # /tmp dir (same class as the r8 ADVICE finding on q154/q159).
-    import shutil
-
-    try:
-        written: set[str] = set()
-        for i in range(4):
-            # Each batch file is SORTED by (ts, event_id): the dedup
-            # operator sees a key's rows in event-time order (single map
-            # task per file, order preserved per reducer), so the state
-            # seed is the MIN event time BY CONSTRUCTION — not scan-order
-            # luck. Without the sort, Spark seeds from whichever duplicate
-            # happens first in file order and the oracle would be
-            # row-order-dependent (min-vs-max seeding measurably diverges
-            # at sf0.1).
-            ev.filter(F.pmod("event_id", F.lit(4)) == i).orderBy(
-                "ts", "event_id"
-            ).coalesce(1).write.mode(
-                "append" if i else "overwrite"
-            ).parquet(replay_dir)
-            new = [
-                f
-                for f in os.listdir(replay_dir)
-                if f.endswith(".parquet")
-                and not f.startswith("_")
-                and f not in written
-            ]
-            assert len(new) == 1, new
-            os.rename(
-                os.path.join(replay_dir, new[0]),
-                os.path.join(replay_dir, f"{i:02d}.parquet"),
-            )
-            written.add(f"{i:02d}.parquet")
-
-        schema = spark.read.parquet(replay_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(replay_dir)
-            .withWatermark("ts", "90 minutes")
+    # Each batch file is SORTED by (ts, event_id): the dedup operator
+    # sees a key's rows in event-time order (single map task per file,
+    # order preserved per reducer), so the state seed is the MIN event
+    # time BY CONSTRUCTION — not scan-order luck. Without the sort, Spark
+    # seeds from whichever duplicate happens first in file order and the
+    # oracle would be row-order-dependent (min-vs-max seeding measurably
+    # diverges at sf0.1).
+    batches = [
+        ev.filter(F.pmod("event_id", F.lit(4)) == i).orderBy("ts", "event_id")
+        for i in range(4)
+    ]
+    with replay_files(spark, batches) as stream:
+        dedup = (
+            stream.withWatermark("ts", "90 minutes")
+            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+            .select("user_id", "event_type")
         )
-        dedup = stream.dropDuplicatesWithinWatermark(
-            ["user_id", "event_type"]
-        ).select("user_id", "event_type")
-        sink = f"q135_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                dedup.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
-    per_key = (
-        spark.table(sink)
-        .groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("n_emissions"))
-    )
+        per_key = (
+            drain_to_memory(dedup, "append")
+            .groupBy("user_id", "event_type")
+            .agg(F.count("*").alias("n_emissions"))
+        )
     return per_key.groupBy("event_type").agg(
         F.count("*").alias("n_keys"),
         F.sum("n_emissions").cast("long").alias("n_emissions"),
@@ -8727,47 +8467,14 @@ _Q154_SLOW_MS = 120 * 60 * 1000
 def q154_streaming_union_watermarks(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        drain_to_memory,
+        replay_files,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "ts")
-    replay_dir = f"/tmp/q154_replay_{uuid.uuid4().hex[:8]}"
-    # try/finally: a failed replay-write or stream must not strand the
-    # /tmp dir (ADVICE r8 — cleanup only ran on the success path).
-    try:
-        written: set[str] = set()
-        for i in range(4):
-            ev.filter(
-                F.pmod("event_id", F.lit(4)) == i
-            ).coalesce(1).write.mode(
-                "append" if i else "overwrite"
-            ).parquet(replay_dir)
-            new = [
-                f
-                for f in os.listdir(replay_dir)
-                if f.endswith(".parquet")
-                and not f.startswith("_")
-                and f not in written
-            ]
-            assert len(new) == 1, new
-            os.rename(
-                os.path.join(replay_dir, new[0]),
-                os.path.join(replay_dir, f"{i:02d}.parquet"),
-            )
-            written.add(f"{i:02d}.parquet")
-
-        schema = spark.read.parquet(replay_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(replay_dir)
-        )
+    batches = [ev.filter(F.pmod("event_id", F.lit(4)) == i) for i in range(4)]
+    with replay_files(spark, batches) as stream:
         branch = F.pmod(F.expr("event_id div 4"), F.lit(2))
         fast = (
             stream.filter(branch == 0)
@@ -8789,22 +8496,7 @@ def q154_streaming_union_watermarks(
                 "n_events",
             )
         )
-        sink = f"q154_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
+        return drain_to_memory(agg, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -9215,47 +8907,14 @@ def q158_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q159_streaming_union_watermark_max(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        drain_to_memory,
+        replay_files,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "ts")
-    replay_dir = f"/tmp/q159_replay_{uuid.uuid4().hex[:8]}"
-    # try/finally: a failed replay-write or stream must not strand the
-    # /tmp dir (ADVICE r8 — cleanup only ran on the success path).
-    try:
-        written: set[str] = set()
-        for i in range(4):
-            ev.filter(
-                F.pmod("event_id", F.lit(4)) == i
-            ).coalesce(1).write.mode(
-                "append" if i else "overwrite"
-            ).parquet(replay_dir)
-            new = [
-                f
-                for f in os.listdir(replay_dir)
-                if f.endswith(".parquet")
-                and not f.startswith("_")
-                and f not in written
-            ]
-            assert len(new) == 1, new
-            os.rename(
-                os.path.join(replay_dir, new[0]),
-                os.path.join(replay_dir, f"{i:02d}.parquet"),
-            )
-            written.add(f"{i:02d}.parquet")
-
-        schema = spark.read.parquet(replay_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(replay_dir)
-        )
+    batches = [ev.filter(F.pmod("event_id", F.lit(4)) == i) for i in range(4)]
+    with replay_files(spark, batches) as stream:
         branch = F.pmod(F.expr("event_id div 4"), F.lit(2))
         fast = stream.filter(branch == 0).withWatermark("ts", "30 minutes")
         slow = stream.filter(branch == 1).withWatermark("ts", "120 minutes")
@@ -9268,28 +8927,13 @@ def q159_streaming_union_watermark_max(
                 "n_events",
             )
         )
-        sink = f"q159_out_{uuid.uuid4().hex[:8]}"
         policy_key = "spark.sql.streaming.multipleWatermarkPolicy"
         prev = spark.conf.get(policy_key, "min")
         spark.conf.set(policy_key, "max")
         try:
-            with scoped_shuffle_partitions(spark, 8):
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(sink)
-                    .outputMode("append")
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-                    unload_state_stores(spark)
+            return drain_to_memory(agg, "append")
         finally:
             spark.conf.set(policy_key, prev)
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
 
 
 # ---------------------------------------------------------------------------
@@ -10903,47 +10547,16 @@ def _q172_sql() -> str:
 def q172_streaming_session_window(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import uuid
-
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        drain_to_memory,
+        replay_files,
     )
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts"
     )
-    replay_dir = f"/tmp/q172_replay_{uuid.uuid4().hex[:8]}"
-    try:
-        written: set[str] = set()
-        for i in range(4):
-            ev.filter(
-                F.pmod("event_id", F.lit(4)) == i
-            ).coalesce(1).write.mode(
-                "append" if i else "overwrite"
-            ).parquet(replay_dir)
-            new = [
-                f
-                for f in os.listdir(replay_dir)
-                if f.endswith(".parquet")
-                and not f.startswith("_")
-                and f not in written
-            ]
-            assert len(new) == 1, new
-            os.rename(
-                os.path.join(replay_dir, new[0]),
-                os.path.join(replay_dir, f"{i:02d}.parquet"),
-            )
-            written.add(f"{i:02d}.parquet")
-
-        schema = spark.read.parquet(replay_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(replay_dir)
-        )
+    batches = [ev.filter(F.pmod("event_id", F.lit(4)) == i) for i in range(4)]
+    with replay_files(spark, batches) as stream:
         agg = (
             stream.withWatermark("ts", "90 minutes")
             .groupBy(
@@ -10957,22 +10570,7 @@ def q172_streaming_session_window(
                 "n_events",
             )
         )
-        sink = f"q172_out_{uuid.uuid4().hex[:8]}"
-        with scoped_shuffle_partitions(spark, 8):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
-    return spark.table(sink)
+        return drain_to_memory(agg, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -12702,19 +12300,17 @@ def q190_processing_time_timer_eviction(
 ) -> DataFrame:
     import os
     import shutil
+    import tempfile
     import time
     import uuid
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_query,
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "user_id")
-    tok = uuid.uuid4().hex[:8]
-    watch_dir = f"/tmp/q190_watch_{tok}"
 
     # Phase files are a pure function of the input table AND the staging
     # recipe, so they are a cache.build_once artifact keyed on a data
@@ -12736,7 +12332,7 @@ def q190_processing_time_timer_eviction(
         spark, sf_dir, "events", "q190_stage", "parity-pmod2-eid-uid-v1",
         write,
     )
-    os.makedirs(watch_dir)
+    watch_dir = tempfile.mkdtemp(prefix="q190_watch_")
 
     def stage_phase(parity: int) -> None:
         """Copy one pre-written phase file into the watched dir, made
@@ -12792,7 +12388,7 @@ def q190_processing_time_timer_eviction(
             )
             state.setTimeoutDuration(1)
 
-    sink = f"q190_out_{tok}"
+    sink = f"q190_out_{uuid.uuid4().hex[:8]}"
     try:
         stage_phase(0)
         schema = "event_id long, user_id long"
@@ -12810,70 +12406,65 @@ def q190_processing_time_timer_eviction(
                 GroupStateTimeout.ProcessingTimeTimeout,
             )
         )
-        # ONE state partition: with 16 bucket groups the replay is
-        # bound by per-batch fixed cost (state-store commit + python
-        # runner handshake per task), not by data — more partitions
-        # multiply that floor (measured 8 parts ~6.5 s vs 1 part
-        # ~4.3 s warm; 64->16 buckets shaved ~0.2 s/batch of per-group
-        # state protocol). Production sizes this by key count, not
-        # cores.
-        with scoped_shuffle_partitions(spark, 1):
-            q = (
-                evictions.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                # Drain detection via progress metrics only (py4j-cheap;
-                # a spark.table(sink).count() poll would serialize a
-                # full job against every micro-batch): a phase is
-                # drained once some batch carried input rows AND the
-                # newest batch reports zero live state rows — i.e.
-                # every key the phase touched has been timer-evicted.
-                input_rows_by_batch: dict = {}
+        # replay_query runs ONE state partition: with 16 bucket groups
+        # the replay is bound by per-batch fixed cost (state-store
+        # commit + python runner handshake per task), not by data —
+        # more partitions multiply that floor (measured 8 parts ~6.5 s
+        # vs 1 part ~4.3 s warm; 64->16 buckets shaved ~0.2 s/batch of
+        # per-group state protocol). Production sizes this by key
+        # count, not cores.
+        writer = (
+            evictions.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("update")
+        )
+        with replay_query(spark, writer) as q:
+            # Drain detection via progress metrics only (py4j-cheap;
+            # a spark.table(sink).count() poll would serialize a
+            # full job against every micro-batch): a phase is
+            # drained once some batch carried input rows AND the
+            # newest batch reports zero live state rows — i.e.
+            # every key the phase touched has been timer-evicted.
+            input_rows_by_batch: dict = {}
 
-                def wait_drained(min_input_batches: int, label: str):
-                    deadline = time.time() + 120
-                    while time.time() < deadline:
-                        for p in q.recentProgress:
-                            if p is None:
-                                continue
-                            bid = p["batchId"]
-                            input_rows_by_batch[bid] = p["numInputRows"]
-                        p = q.lastProgress
-                        fed = sum(
-                            1 for v in input_rows_by_batch.values() if v
-                        )
-                        if (
-                            p is not None
-                            and fed >= min_input_batches
-                            and p.get("stateOperators")
-                            and p["stateOperators"][0]["numRowsTotal"] == 0
-                        ):
-                            return
-                        # 10 ms: the next (empty) micro-batch starts
-                        # back-to-back after the drain batch commits, so
-                        # a coarse poll usually loses the race and pays
-                        # one extra ~0.7 s empty batch before phase B's
-                        # file is discovered; a tight poll sometimes
-                        # wins it (py4j-cheap either way).
-                        time.sleep(0.01)
-                    raise AssertionError(
-                        f"q190 {label}: state never drained — "
-                        "processing-time timers did not fire"
+            def wait_drained(min_input_batches: int, label: str):
+                deadline = time.time() + 120
+                while time.time() < deadline:
+                    for p in q.recentProgress:
+                        if p is None:
+                            continue
+                        bid = p["batchId"]
+                        input_rows_by_batch[bid] = p["numInputRows"]
+                    p = q.lastProgress
+                    fed = sum(
+                        1 for v in input_rows_by_batch.values() if v
                     )
+                    if (
+                        p is not None
+                        and fed >= min_input_batches
+                        and p.get("stateOperators")
+                        and p["stateOperators"][0]["numRowsTotal"] == 0
+                    ):
+                        return
+                    # 10 ms: the next (empty) micro-batch starts
+                    # back-to-back after the drain batch commits, so
+                    # a coarse poll usually loses the race and pays
+                    # one extra ~0.7 s empty batch before phase B's
+                    # file is discovered; a tight poll sometimes
+                    # wins it (py4j-cheap either way).
+                    time.sleep(0.01)
+                raise AssertionError(
+                    f"q190 {label}: state never drained — "
+                    "processing-time timers did not fire"
+                )
 
-                # Phase A must FULLY drain (every key evicted by an
-                # empty-trigger timer fire) before phase B arrives —
-                # that gap is what makes the per-phase eviction count
-                # deterministic instead of racing the batch clock.
-                wait_drained(1, "phase A")
-                stage_phase(1)
-                wait_drained(2, "phase B")
-            finally:
-                q.stop()
-                unload_state_stores(spark)
+            # Phase A must FULLY drain (every key evicted by an
+            # empty-trigger timer fire) before phase B arrives —
+            # that gap is what makes the per-phase eviction count
+            # deterministic instead of racing the batch clock.
+            wait_drained(1, "phase A")
+            stage_phase(1)
+            wait_drained(2, "phase B")
         return (
             spark.table(sink)
             .groupBy("user_id")
@@ -13329,18 +12920,16 @@ def q193_event_time_timer_eviction(
 ) -> DataFrame:
     import os
     import shutil
+    import tempfile
     import uuid
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-        unload_state_stores,
+        replay_query,
     )
 
     ev = read_table(spark, sf_dir, "events").select("user_id", "ts")
-    tok = uuid.uuid4().hex[:8]
-    watch_dir = f"/tmp/q193_watch_{tok}"
     tmid = "2024-01-16 00:00:00"
 
     # Fingerprint-keyed cached staging, as q190: phase files are a pure
@@ -13363,7 +12952,7 @@ def q193_event_time_timer_eviction(
         spark, sf_dir, "events", "q193_stage", f"phase-{tmid}-uid-ts-v1",
         write,
     )
-    os.makedirs(watch_dir)
+    watch_dir = tempfile.mkdtemp(prefix="q193_watch_")
 
     def stage_phase(phase: int) -> None:
         out = os.path.join(stage_dir, f"phase={phase}")
@@ -13452,7 +13041,7 @@ def q193_event_time_timer_eviction(
                 max(min(d for _, (_, d) in items), wm + 1)
             )
 
-    sink = f"q193_out_{tok}"
+    sink = f"q193_out_{uuid.uuid4().hex[:8]}"
     try:
         stage_phase(0)
         schema = "user_id long, ts timestamp"
@@ -13475,24 +13064,20 @@ def q193_event_time_timer_eviction(
                 GroupStateTimeout.EventTimeTimeout,
             )
         )
-        # ONE state partition — same fixed-cost floor argument as q190.
-        with scoped_shuffle_partitions(spark, 1):
-            q = (
-                evictions.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                # Watermark-gated batching: each call drains the staged
-                # phase's data batch plus the one empty eviction batch
-                # the advanced watermark schedules, then returns.
-                q.processAllAvailable()
-                stage_phase(1)
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                unload_state_stores(spark)
+        # replay_query runs ONE state partition — same fixed-cost floor
+        # argument as q190.
+        writer = (
+            evictions.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("update")
+        )
+        with replay_query(spark, writer) as q:
+            # Watermark-gated batching: each call drains the staged
+            # phase's data batch plus the one empty eviction batch
+            # the advanced watermark schedules, then returns.
+            q.processAllAvailable()
+            stage_phase(1)
+            q.processAllAvailable()
         return (
             spark.table(sink)
             .groupBy("user_id")

@@ -14,18 +14,29 @@ stateless; this layer keeps its exact pipeline shape but:
   batch, sparkConsumer.py:144-147 — two jobs per micro-batch) by counting
   the written rows driver-side from the same materialized batch;
 - adds the watermark + event-time window upgrade path (absent in the
-  reference, required for any stateful aggregate at scale).
+  reference, required for any stateful aggregate at scale);
+- runs every bounded replay of the query inventory through one harness
+  (``replay_query``, ``drain_to_memory``, ``replay_files``), so starting,
+  draining, stopping and staging live in one place.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamReader, StreamingQuery
+from pyspark.sql.streaming import (
+    DataStreamReader,
+    DataStreamWriter,
+    StreamingQuery,
+)
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     schema_to_ddl,
@@ -195,16 +206,81 @@ def unload_state_stores(spark: SparkSession) -> None:
         pass
 
 
-def start_memory_sink(
-    df: DataFrame, name: str, output_mode: str = "append"
-) -> StreamingQuery:
-    """Memory sink for tests/smoke: drive with processAllAvailable()."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
+@contextmanager
+def replay_query(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int = 1
+) -> Iterator[StreamingQuery]:
+    """Run one bounded replay: start ``writer`` under ``state_partitions``
+    state partitions and yield the running query; on exit, failures
+    included, stop it, unload the state stores and restore
+    ``spark.sql.shuffle.partitions``.
+
+    One partition by default: a bounded replay is usually bound by
+    per-batch fixed cost (state-store commit and checkpoint files per
+    partition), not by data, and results do not depend on the count
+    (CLAUDE.md lessons 23 and 38). A replay whose state work is heavy
+    enough to want parallel tasks passes more; the probe that decides
+    each replay's count is ``plans/r18/probe_replay_partitions.txt``."""
+    with scoped_shuffle_partitions(spark, state_partitions):
+        query = writer.start()
+        try:
+            yield query
+        finally:
+            query.stop()
+            unload_state_stores(spark)
+
+
+def drain_to_memory(
+    df: DataFrame, output_mode: str, state_partitions: int = 1
+) -> DataFrame:
+    """Replay the bounded stream ``df`` to completion into a memory sink
+    (``replay_query`` + ``processAllAvailable``) and return the sink's
+    table, which holds every emitted row."""
+    spark = df.sparkSession
+    sink = f"replay_{uuid.uuid4().hex[:12]}"
+    writer = (
+        df.writeStream.format("memory").queryName(sink).outputMode(output_mode)
     )
+    with replay_query(spark, writer, state_partitions) as query:
+        query.processAllAvailable()
+    return spark.table(sink)
+
+
+@contextmanager
+def replay_files(
+    spark: SparkSession, batches: Iterable[DataFrame]
+) -> Iterator[DataFrame]:
+    """Stage ``batches`` as a file replay and yield the stream over it.
+
+    Each batch becomes one parquet file, renamed ``00.parquet``,
+    ``01.parquet``, ... in batch order, so name order and mtime order
+    agree (every write is its own job). The stream reads one file per
+    trigger, so batch i is micro-batch i; row order within a file is the
+    batch's own. The files live in a fresh ``tempfile.mkdtemp``
+    directory (``TMPDIR`` decides where), removed on exit, failures
+    included, so drain the stream inside the block."""
+    replay_dir = tempfile.mkdtemp(prefix="replay_")
+    try:
+        for i, batch in enumerate(batches):
+            before = set(os.listdir(replay_dir))
+            batch.coalesce(1).write.mode("append").parquet(replay_dir)
+            (new,) = [
+                f
+                for f in os.listdir(replay_dir)
+                if f.endswith(".parquet") and f not in before
+            ]
+            os.rename(
+                os.path.join(replay_dir, new),
+                os.path.join(replay_dir, f"{i:02d}.parquet"),
+            )
+        schema = spark.read.parquet(replay_dir).schema
+        yield (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(replay_dir)
+        )
+    finally:
+        shutil.rmtree(replay_dir, ignore_errors=True)
 
 
 def start_parquet_sink(

@@ -243,31 +243,41 @@ def test_q131_cogroup_covers_all_orderkeys(spark):
     assert sum(r.n_lines for r in rows) == n_lines_expected
 
 
-def test_q135_replay_batches_are_time_sorted(spark, tmp_path):
+def test_q135_replay_batches_are_time_sorted(spark, monkeypatch, tmp_path):
     """q135's oracle seeds dedup state from the MIN within-batch event
     time; Spark seeds from the FIRST row the operator sees. The replay
-    therefore writes each batch file sorted by (ts, event_id) — assert
-    the written files really are sorted, since an unsorted batch makes
-    the oracle row-order-dependent (min-vs-max seeding measurably
-    diverges at sf0.1)."""
+    therefore stages each batch file sorted by (ts, event_id). Run q135
+    itself with a spy on ``replay_files`` and assert every file it
+    staged really is sorted, since an unsorted batch makes the oracle
+    row-order-dependent (min-vs-max seeding measurably diverges at
+    sf0.1)."""
+    import contextlib
+    import glob
     import os
-    import uuid
+    import tempfile
 
-    from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table
-
-    ev = read_table(spark, SF_DIR, "events").select(
-        "event_id", "user_id", "event_type", "ts"
-    )
-    d = str(tmp_path / f"replay_{uuid.uuid4().hex[:6]}")
-    ev.filter(F.pmod("event_id", F.lit(4)) == 0).orderBy(
-        "ts", "event_id"
-    ).coalesce(1).write.parquet(d)
     import pandas as pd
 
-    f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-    pdf = pd.read_parquet(os.path.join(d, f))
-    keys = list(zip(pdf["ts"], pdf["event_id"]))
-    assert keys == sorted(keys)
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import pipeline
+
+    real = pipeline.replay_files
+    staged: dict[str, list] = {}
+
+    @contextlib.contextmanager
+    def spy(spark_, batches):
+        with real(spark_, batches) as stream:
+            (replay_dir,) = glob.glob(str(tmp_path / "replay_*"))
+            for f in sorted(glob.glob(os.path.join(replay_dir, "*.parquet"))):
+                pdf = pd.read_parquet(f)
+                staged[os.path.basename(f)] = list(zip(pdf["ts"], pdf["event_id"]))
+            yield stream
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(pipeline, "replay_files", spy)
+    QUERIES["q135_streaming_dedup_within_watermark"].spark(spark, SF_DIR).collect()
+    assert list(staged) == [f"{i:02d}.parquet" for i in range(4)]
+    for name, keys in staged.items():
+        assert keys and keys == sorted(keys), name
 
 
 def test_q146_negative_slope_quantization_cross_engine(spark):

@@ -17,8 +17,10 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import (
     hourly_windowed_agg,
     parse_json_envelope,
     read_stream,
+    drain_to_memory,
+    replay_files,
+    replay_query,
     session_windowed_agg,
-    start_memory_sink,
 )
 
 TRIP_SCHEMA = T.StructType(
@@ -60,15 +62,12 @@ def test_file_stream_applies_batch_transforms(spark, trip_json_dir):
     stream = read_stream(spark, "json", schema=TRIP_SCHEMA, path=trip_json_dir)
     assert stream.isStreaming
     cleaned = add_trip_features(parse_timestamps(stream))
-    q = start_memory_sink(cleaned, "cleaned_stream")
-    try:
-        q.processAllAvailable()
-        out = spark.sql(
-            "SELECT trip_duration, pickup_timeofday, fare_per_mile "
-            "FROM cleaned_stream ORDER BY trip_duration"
-        ).collect()
-    finally:
-        q.stop()
+    out = (
+        drain_to_memory(cleaned, "append")
+        .select("trip_duration", "pickup_timeofday", "fare_per_mile")
+        .orderBy("trip_duration")
+        .collect()
+    )
     assert [r.trip_duration for r in out] == [30.0, 30.0]
     assert {r.pickup_timeofday for r in out} == {"morning"}
     assert sorted(r.fare_per_mile for r in out) == [5.0, 5.0]
@@ -91,12 +90,7 @@ def test_json_envelope_parse_matches_kafka_shape(spark, tmp_path):
     parsed = parse_json_envelope(
         stream.select(F.col("value").cast("binary").alias("value")), TRIP_SCHEMA
     )
-    q = start_memory_sink(parsed, "envelope_out")
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM envelope_out").collect()
-    finally:
-        q.stop()
+    rows = drain_to_memory(parsed, "append").collect()
     assert len(rows) == 1
     assert rows[0]["fare_amount"] == 5.0
     assert set(parsed.columns) == {f.name for f in TRIP_SCHEMA.fields}
@@ -120,15 +114,10 @@ def test_windowed_agg_with_watermark(spark, tmp_path):
     (d / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
     stream = read_stream(spark, "json", schema=events_schema, path=str(d))
     agg = hourly_windowed_agg(stream)
-    q = start_memory_sink(agg, "hourly_out", output_mode="complete")
-    try:
-        q.processAllAvailable()
-        out = {
-            r.window_start.isoformat(): (r.n_events, r.sum_value)
-            for r in spark.sql("SELECT * FROM hourly_out").collect()
-        }
-    finally:
-        q.stop()
+    out = {
+        r.window_start.isoformat(): (r.n_events, r.sum_value)
+        for r in drain_to_memory(agg, "complete").collect()
+    }
     assert out["2024-01-01T10:00:00"] == (2, 3.0)
     assert out["2024-01-01T11:00:00"] == (1, 4.0)
 
@@ -150,14 +139,12 @@ def test_session_window_gap(spark, tmp_path):
     (d / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
     stream = read_stream(spark, "json", schema=events_schema, path=str(d))
     agg = session_windowed_agg(stream)
-    q = start_memory_sink(agg, "sessions_out", output_mode="complete")
-    try:
-        q.processAllAvailable()
-        rows_out = spark.sql(
-            "SELECT n_events FROM sessions_out ORDER BY session_start"
-        ).collect()
-    finally:
-        q.stop()
+    rows_out = (
+        drain_to_memory(agg, "complete")
+        .orderBy("session_start")
+        .select("n_events")
+        .collect()
+    )
     assert [r.n_events for r in rows_out] == [2, 1]
 
 
@@ -374,15 +361,10 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
         options={"maxFilesPerTrigger": "1", "latestFirst": "false"},
     )
     agg = hourly_windowed_agg(stream, watermark="30 minutes")
-    q = start_memory_sink(agg, "late_out", output_mode="append")
-    try:
-        q.processAllAvailable()
-        rows = {
-            r.window_start.isoformat(): (r.n_events, r.sum_value)
-            for r in spark.sql("SELECT * FROM late_out").collect()
-        }
-    finally:
-        q.stop()
+    rows = {
+        r.window_start.isoformat(): (r.n_events, r.sum_value)
+        for r in drain_to_memory(agg, "append").collect()
+    }
     # Only the 10:00 window is finalized; the late 10:40/99.0 row is NOT
     # in it. The 12:00 window stays open (watermark 12:00 < its end).
     assert rows == {"2024-01-01T10:00:00": (2, 3.0)}
@@ -398,8 +380,8 @@ def test_rate_source_produces_rows(spark):
         spark, "rate", options={"rowsPerSecond": "50"}
     )
     assert dict(stream.dtypes) == {"timestamp": "timestamp", "value": "bigint"}
-    q = start_memory_sink(stream, "rate_out")
-    try:
+    writer = stream.writeStream.format("memory").queryName("rate_out")
+    with replay_query(spark, writer) as q:
         deadline = time.time() + 15
         n = 0
         while time.time() < deadline:
@@ -408,8 +390,7 @@ def test_rate_source_produces_rows(spark):
             if n > 0:
                 break
             time.sleep(0.5)
-    finally:
-        q.stop()
+    assert not q.isActive
     assert n > 0, "rate source produced no rows within 15s"
 
 
@@ -769,3 +750,131 @@ def test_transform_with_state_timer_eviction(spark):
             spark.conf.unset(key)
         shutil.rmtree(watch, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# The bounded-replay harness (streaming.pipeline): replay_query,
+# drain_to_memory and replay_files are the only code that starts, drains,
+# stops and stages a replay.
+# ---------------------------------------------------------------------------
+
+
+def test_replay_query_failing_query_still_stops_unloads_and_restores(
+    spark, trip_json_dir, monkeypatch
+):
+    """A micro-batch that raises propagates out of the block, and the
+    query is still stopped, the state stores unloaded and
+    ``spark.sql.shuffle.partitions`` restored; inside the block the
+    query ran under one state partition."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import pipeline
+
+    unloads: list[int] = []
+    monkeypatch.setattr(
+        pipeline, "unload_state_stores", lambda s: unloads.append(1)
+    )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    started = []
+
+    def fail(batch_df, batch_id):
+        raise ValueError("batch failed")
+
+    stream = read_stream(spark, "json", schema=TRIP_SCHEMA, path=trip_json_dir)
+    try:
+        with pytest.raises(Exception, match="batch failed"):
+            with replay_query(spark, stream.writeStream.foreachBatch(fail)) as q:
+                started.append(q)
+                assert spark.conf.get(key) == "1"
+                q.processAllAvailable()
+        assert len(started) == 1 and not started[0].isActive
+        assert unloads == [1]
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)
+
+
+def _replay_dirs(root) -> list[str]:
+    import glob
+
+    return glob.glob(str(root / "replay_*"))
+
+
+def test_replay_files_failing_batch_write_leaves_no_staging_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A batch whose write fails, and a failure inside the block, both
+    remove the staging directory."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    good = spark.range(3)
+    bad = spark.range(3).withColumn(
+        "id",
+        F.when(F.col("id") == 2, F.raise_error(F.lit("bad batch"))).otherwise(
+            F.col("id")
+        ),
+    )
+    with pytest.raises(Exception, match="bad batch"):
+        with replay_files(spark, [good, bad]):
+            pass
+    assert _replay_dirs(tmp_path) == []
+
+    with pytest.raises(RuntimeError, match="drain failed"):
+        with replay_files(spark, [good]):
+            assert len(_replay_dirs(tmp_path)) == 1
+            raise RuntimeError("drain failed")
+    assert _replay_dirs(tmp_path) == []
+
+
+def test_replay_files_one_micro_batch_per_file_in_batch_order(
+    spark, tmp_path, monkeypatch
+):
+    """Each staged batch is one file, named in batch order, and one
+    micro-batch: micro-batch i carries exactly batch i's rows."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sizes = [2, 5, 1, 3]
+    batches = [
+        spark.range(n).select(F.lit(i).alias("b"), F.col("id"))
+        for i, n in enumerate(sizes)
+    ]
+    seen: list[tuple[int, list[int], int]] = []
+
+    def collect(batch_df, batch_id):
+        rows = batch_df.collect()
+        seen.append((batch_id, sorted({r.b for r in rows}), len(rows)))
+
+    with replay_files(spark, batches) as stream:
+        (replay_dir,) = _replay_dirs(tmp_path)
+        staged = sorted(
+            f for f in os.listdir(replay_dir) if f.endswith(".parquet")
+        )
+        assert staged == ["00.parquet", "01.parquet", "02.parquet", "03.parquet"]
+        with replay_query(spark, stream.writeStream.foreachBatch(collect)) as q:
+            q.processAllAvailable()
+    assert seen == [(i, [i], n) for i, n in enumerate(sizes)]
+    assert _replay_dirs(tmp_path) == []
+
+
+def test_only_pipeline_module_spells_the_replay_protocol():
+    """Starting, stopping and staging a bounded replay lives in
+    ``streaming/pipeline.py`` only: the plan modules call
+    ``drain_to_memory``/``replay_query``/``replay_files`` and never
+    start a query, unload state stores or set a file-stream trigger
+    size themselves."""
+    import pathlib
+
+    plans = pathlib.Path(__file__).resolve().parent.parent / (
+        "nyc_yellow_taxi_trip_data_pipeline_spark/plans"
+    )
+    banned = (".start()", "unload_state_stores", "maxFilesPerTrigger")
+    for module in ("datapipe.py", "analytics.py"):
+        src = (plans / module).read_text()
+        hits = [b for b in banned if b in src]
+        assert not hits, (
+            f"plans/{module} spells {hits}; use streaming.pipeline's "
+            "replay_query / drain_to_memory / replay_files"
+        )

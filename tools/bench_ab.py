@@ -25,6 +25,8 @@ repo's lesson 31 prescribes:
   three adjacent sub-1.4 s queries flagged at ~1.35x re-ran SLOWER in
   isolation, i.e. pure environment variance). Isolated flags with no
   qualifying tag cluster read as noise.
+- a warning line when both files carry bench.py's provenance block and
+  their cpu counts differ (lesson 31's ratios assume one host size).
 
 Exit code 1 iff a cluster is found, so the closing-commit ritual can
 gate on it.
@@ -60,6 +62,14 @@ def load(path: str) -> dict[str, float]:
     }
 
 
+def cpu_count(path: str) -> int | None:
+    """The cpu count a bench.py output file records in its provenance
+    block (None for files written before bench.py recorded one)."""
+    with open(path) as f:
+        doc = json.load(f)
+    return (doc.get("provenance") or {}).get("nproc")
+
+
 def main(argv: list[str]) -> int:
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
 
@@ -70,6 +80,12 @@ def main(argv: list[str]) -> int:
         band = float(argv[argv.index("--band") + 1])
         args = [a for a in args if a != str(band)]
     old, new = load(args[0]), load(args[1])
+    cpus = cpu_count(args[0]), cpu_count(args[1])
+    if None not in cpus and cpus[0] != cpus[1]:
+        print(
+            f"warning: cpu counts differ ({cpus[0]} vs {cpus[1]}); the ratios"
+            " mix host sizes, not only code"
+        )
 
     manifest = _load()
     identical = {
