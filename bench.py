@@ -8,7 +8,8 @@ Env:
 
 The full JSON (also written to BENCH_FULL_PATH, default BENCH_FULL.json)
 carries a `provenance` block: commit, source digest, cpu count, Spark
-version, sf, start time and load average.
+version, sf, start time, load average and the share of the host's CPU
+time stolen by its hypervisor over the run.
 
 Each query is materialized through the `noop` sink — full execution of the
 physical plan (scan, shuffles, Python stages) without collect-to-driver or
@@ -30,7 +31,7 @@ sys.path.append(str(Path(__file__).resolve().parent / "perfbench"))
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES  # noqa: E402
 from nyc_yellow_taxi_trip_data_pipeline_spark.session import get_spark  # noqa: E402
-from run import git_commit, source_digest  # noqa: E402
+from run import git_commit, source_digest, stamp  # noqa: E402
 
 
 def main() -> None:
@@ -38,6 +39,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     started_at = datetime.datetime.now(datetime.timezone.utc).isoformat()
     loadavg_before = os.getloadavg()
+    t_run = stamp()
     spark = get_spark("bench")
 
     names = (
@@ -154,7 +156,11 @@ def main() -> None:
         result["errors"] = errors
     # Provenance: which code ran, on how many cores, under what load —
     # so a snapshot explains itself without git archaeology. The same
-    # keys as perfbench's result records.
+    # keys as perfbench's result records. steal_share is the stolen part
+    # of the host's CPU time over the run, stolen / (busy + stolen): the
+    # timings are raw wall clock, so a run with a busy neighbour on a
+    # shared host reads slower for no code reason.
+    _, busy, stolen = (a - b for a, b in zip(stamp(), t_run))
     result["provenance"] = {
         "git_commit": git_commit(),
         "source_sha256": source_digest(),
@@ -166,6 +172,9 @@ def main() -> None:
         "started_at": started_at,
         "loadavg_before": loadavg_before,
         "loadavg_after": os.getloadavg(),
+        "steal_share": round(stolen / (busy + stolen), 4)
+        if busy + stolen > 0
+        else None,
     }
 
     # The driver captures stdout with a bounded tail, which clipped ~28

@@ -22,12 +22,12 @@ from __future__ import annotations
 import hashlib
 import math
 import warnings
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.functions.vector import dot_product, l2_norm
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 
 
 def as_double(col: str = "embedding") -> Column:
@@ -420,7 +420,6 @@ def write_ann_index(
     writer.saveAsTable(table)
 
 
-@contextmanager
 def bucket_pruned_scan(spark):
     """Scope ``autoBucketedScan=false`` around building AND executing a
     filter-only read of a bucketed table.
@@ -434,13 +433,9 @@ def bucket_pruned_scan(spark):
     explicit and restores the caller's value afterwards instead of
     mutating the shared session permanently.
     """
-    conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(conf_key, prior)
+    return scoped_conf(
+        spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    )
 
 
 def ann_query_bucketed(

@@ -21,6 +21,7 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.operators import text as tx
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans import cache
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans.helpers import sql_qsum
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans.registry import register
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     _data_fingerprint_token,
     read_table,
@@ -8927,13 +8928,9 @@ def q159_streaming_union_watermark_max(
                 "n_events",
             )
         )
-        policy_key = "spark.sql.streaming.multipleWatermarkPolicy"
-        prev = spark.conf.get(policy_key, "min")
-        spark.conf.set(policy_key, "max")
-        try:
+        policy = {"spark.sql.streaming.multipleWatermarkPolicy": "max"}
+        with scoped_conf(spark, policy):
             return drain_to_memory(agg, "append")
-        finally:
-            spark.conf.set(policy_key, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -8974,10 +8971,8 @@ def q160_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_datasource,
     )
 
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    prev = spark.conf.get(conf_key, "false")
-    spark.conf.set(conf_key, "true")
-    try:
+    pushdown = {"spark.sql.python.filterPushdown.enabled": "true"}
+    with scoped_conf(spark, pushdown):
         spark.dataSource.register(manifest_datasource())
         df = (
             spark.read.format("doc_manifest")
@@ -8991,16 +8986,12 @@ def q160_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("doc_id").cast("long").alias("doc_id_checksum"),
             )
         )
-        # Materialize under the pushdown conf, then restore it: the conf
-        # is read at scan planning time, and the parity/driver harness
-        # collects AFTER this function returns — so force the read into a
-        # local result and hand back a tiny createDataFrame instead of a
-        # lazy plan that would observe a restored conf. try/finally so a
-        # failing register/plan/collect can't leak the conf into the
-        # shared session (lesson 15 discipline; r8 verdict finding #1).
+        # Materialize under the pushdown conf: the conf is read at scan
+        # planning time, and the parity/driver harness collects AFTER
+        # this function returns — so force the read into a local result
+        # and hand back a tiny createDataFrame instead of a lazy plan
+        # that would observe the restored conf (lesson 15).
         rows = df.collect()
-    finally:
-        spark.conf.set(conf_key, prev)
     return spark.createDataFrame(
         rows, "source string, n_docs bigint, sum_chars bigint,"
         " doc_id_checksum bigint"
@@ -10276,10 +10267,7 @@ def q170_bucketed_ctas_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         sorted_by=True,
     )
 
-    conf_key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = (
             spark.table(to)
             .join(
@@ -10305,8 +10293,6 @@ def q170_bucketed_ctas_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + plan
             )
         rows = joined.collect()  # materialize under the scoped conf
-    finally:
-        spark.conf.set(conf_key, prev)
     return spark.createDataFrame(
         rows, "c_mktsegment string, n_orders bigint, revenue_cents bigint"
     )
@@ -11942,7 +11928,7 @@ def q186_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # where the dim side is 100 GB: no broadcast, but a 1 MB bloom travels
 # fine). Conf-scoped per lesson 15 (broadcast disabled so the shuffle
 # join actually plans, application-side threshold zeroed so local-mode
-# sizes qualify; collect() under the confs, try/finally restore,
+# sizes qualify; collect() under scoped_conf, restore on exit,
 # tiny createDataFrame back). The plan is asserted to carry
 # might_contain — losing the runtime filter is a silent 10x scan
 # regression at scale. Result is the exact quantized join rollup.
@@ -11979,10 +11965,7 @@ def q187_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         f = orders.where(F.col("o_orderpriority") == "1-URGENT").select(
             "o_orderkey"
         )
@@ -12013,12 +11996,6 @@ def q187_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "lineitem scan lost its runtime bloom filter:\n" + plan
             )
         rows = joined.collect()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         rows,
         "l_returnflag string, n_items bigint, qty_cents bigint,"
@@ -12567,14 +12544,7 @@ def q191_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    prev: dict = {}
-    for k, v in confs.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         base = read_table(spark, sf_dir, "events").select(
             F.expr(
                 "CASE WHEN user_id % 10 < 9 THEN CAST(0 AS BIGINT)"
@@ -12629,12 +12599,6 @@ def q191_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 "join lost its AQE skew-split conversion:\n" + plan
             )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     rows = [
         (g, int(got[f"c{g}"]), int(got[f"s{g}"]))
         for g in range(7)
@@ -12643,6 +12607,62 @@ def q191_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "grp long, n_rows long, value_cents long"
     )
+
+
+def _layout_probe(
+    spark: SparkSession, paths: dict[str, str], col: str, lo, hi
+) -> tuple[dict[str, list], dict[str, int]]:
+    """Run q192/q194's range probe ``lo <= col < hi`` against each
+    published layout in ``paths`` (kind -> dir): the per-returnflag
+    quantized revenue rollup, collected with AQE off so the executed
+    plan is the one whose scan metrics we read (lesson 15). Asserts both
+    range bounds reached the scan's PushedFilters, matched per bound
+    (lesson 26). Returns ``(results, scan_rows)``: per kind, the sorted
+    rows and the leaf scan's ``numOutputRows``."""
+    results: dict[str, list] = {}
+    scan_rows: dict[str, int] = {}
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        for kind, path in paths.items():
+            # Memoized published read (lesson 32): the layout dirs are
+            # atomically-published immutable artifacts, so each bench
+            # rep otherwise pays ~0.1 s/dir of re-listing + discovery.
+            probe = (
+                cache.read_published(spark, path)
+                .filter((F.col(col) >= lo) & (F.col(col) < hi))
+                .groupBy("l_returnflag")
+                .agg(
+                    F.count("*").alias("n_rows"),
+                    F.sum(
+                        F.floor(
+                            F.col("l_extendedprice")
+                            * (F.lit(1.0) - F.col("l_discount"))
+                            * F.lit(100.0)
+                            + F.lit(0.5)
+                        ).cast("long")
+                    )
+                    .cast("long")
+                    .alias("rev_cents"),
+                )
+            )
+            results[kind] = sorted(map(tuple, probe.collect()))
+            plan = probe._jdf.queryExecution().executedPlan()  # noqa: SLF001
+            plan_str = plan.toString()
+            if not (
+                f"GreaterThanOrEqual({col}" in plan_str
+                and f"LessThan({col}" in plan_str
+            ):
+                raise AssertionError(
+                    f"{kind} scan lost range-predicate pushdown:\n"
+                    + plan_str
+                )
+            leaves = plan.collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                if "Scan" in leaf.nodeName():
+                    scan_rows[kind] = int(
+                        leaf.metrics().apply("numOutputRows").value()
+                    )
+    return results, scan_rows
 
 
 # ---------------------------------------------------------------------------
@@ -12753,62 +12773,13 @@ def q192_zonemap_layout_skipping(
         )
     }
 
-    lo = F.lit("1999-01-01").cast("date")
-    hi = F.lit("1999-03-01").cast("date")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        results: dict[str, list] = {}
-        scan_rows: dict[str, int] = {}
-        for kind, path in paths.items():
-            # Memoized published read (lesson 32): the layout dirs are
-            # atomically-published immutable artifacts, so each bench
-            # rep otherwise pays ~0.1 s/dir of re-listing + discovery.
-            probe = (
-                cache.read_published(spark, path)
-                .filter((F.col("ship_date") >= lo) & (F.col("ship_date") < hi))
-                .groupBy("l_returnflag")
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.sum(
-                        F.floor(
-                            F.col("l_extendedprice")
-                            * (F.lit(1.0) - F.col("l_discount"))
-                            * F.lit(100.0)
-                            + F.lit(0.5)
-                        ).cast("long")
-                    )
-                    .cast("long")
-                    .alias("rev_cents"),
-                )
-            )
-            results[kind] = sorted(map(tuple, probe.collect()))
-            qe = probe._jdf.queryExecution()  # noqa: SLF001
-            plan = qe.executedPlan()
-            # Match each range filter individually rather than one
-            # order-sensitive "PushedFilters: [...]" prefix — filter
-            # ordering and plan rendering vary across Spark versions /
-            # DSv1-vs-DSv2, while the property under test is only that
-            # BOTH bounds reached the scan.
-            plan_str = plan.toString()
-            if not (
-                "GreaterThanOrEqual(ship_date" in plan_str
-                and "LessThan(ship_date" in plan_str
-            ):
-                raise AssertionError(
-                    f"{kind} scan lost range-predicate pushdown:\n"
-                    + plan_str
-                )
-            leaves = plan.collectLeaves()
-            for i in range(leaves.size()):
-                leaf = leaves.apply(i)
-                if "Scan" in leaf.nodeName():
-                    scan_rows[kind] = int(
-                        leaf.metrics().apply("numOutputRows").value()
-                    )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
+    results, scan_rows = _layout_probe(
+        spark,
+        paths,
+        "ship_date",
+        F.lit("1999-01-01").cast("date"),
+        F.lit("1999-03-01").cast("date"),
+    )
     if results["clustered"] != results["scattered"]:
         raise AssertionError(
             "layout changed query VALUES — clustered "
@@ -13233,60 +13204,9 @@ def q194_zorder_multidim_skipping(
 
     s_lo = smin + ((smax - smin) * 2) // 5
     s_hi = s_lo + max((smax - smin) // 16, 1)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        results: dict[str, list] = {}
-        scan_rows: dict[str, int] = {}
-        for kind, path in paths.items():
-            # Memoized published read (lesson 32): the layout dirs are
-            # atomically-published immutable artifacts, so each bench
-            # rep otherwise pays ~0.1 s/dir of re-listing + discovery.
-            probe = (
-                cache.read_published(spark, path)
-                .filter(
-                    (F.col("l_suppkey") >= F.lit(s_lo))
-                    & (F.col("l_suppkey") < F.lit(s_hi))
-                )
-                .groupBy("l_returnflag")
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.sum(
-                        F.floor(
-                            F.col("l_extendedprice")
-                            * (F.lit(1.0) - F.col("l_discount"))
-                            * F.lit(100.0)
-                            + F.lit(0.5)
-                        ).cast("long")
-                    )
-                    .cast("long")
-                    .alias("rev_cents"),
-                )
-            )
-            results[kind] = sorted(map(tuple, probe.collect()))
-            qe = probe._jdf.queryExecution()  # noqa: SLF001
-            plan = qe.executedPlan()
-            plan_str = plan.toString()
-            # Per-bound matching (order-insensitive across Spark
-            # versions / DSv1-vs-DSv2 renderings, the q192 r11 fix).
-            if not (
-                "GreaterThanOrEqual(l_suppkey" in plan_str
-                and "LessThan(l_suppkey" in plan_str
-            ):
-                raise AssertionError(
-                    f"{kind} scan lost range-predicate pushdown:\n"
-                    + plan_str
-                )
-            leaves = plan.collectLeaves()
-            for i in range(leaves.size()):
-                leaf = leaves.apply(i)
-                if "Scan" in leaf.nodeName():
-                    scan_rows[kind] = int(
-                        leaf.metrics().apply("numOutputRows").value()
-                    )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
+    results, scan_rows = _layout_probe(
+        spark, paths, "l_suppkey", F.lit(s_lo), F.lit(s_hi)
+    )
     # The VALUE cross-check is unconditional: layout must never change
     # results, only I/O.
     if results["zorder"] != results["linear"]:
@@ -13420,9 +13340,6 @@ def q195_merge_rounds_materialized(
         partition_snapshot,
         rewritten_partitions,
     )
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        scoped_shuffle_partitions,
-    )
 
     n_buckets = 8
     tbl = f"/tmp/q195_target_{uuid.uuid4().hex[:8]}"
@@ -13510,7 +13427,9 @@ def q195_merge_rounds_materialized(
         # All work below materializes inside the scope (writes,
         # collects, eager checkpoints — lesson 15), so the restore
         # can't re-plan anything.
-        with scoped_shuffle_partitions(spark, n_buckets):
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": str(n_buckets)}
+        ):
             (
                 read_table(spark, sf_dir, "customer")
                 .filter(F.pmod("c_custkey", F.lit(2)) == 0)

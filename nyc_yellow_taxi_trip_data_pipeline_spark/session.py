@@ -14,6 +14,11 @@ the session so every entry point gets the same tuned configuration:
 - Local-master sessions write streaming checkpoints through the
   FileSystem checkpoint manager (see ``LOCAL_CHECKPOINT_FILE_MANAGER``).
 
+A query that needs a different value for a while (a watermark policy, a
+disabled broadcast, AQE off for a scan probe) does not touch the session
+conf itself: it runs inside ``scoped_conf``, which restores the exact
+prior state on exit.
+
 Two PROFILES own the knobs whose right value flips between a laptop-scale
 smoke corpus and a 1000-executor cluster (``SPARK_GRAFT_PROFILE`` env var,
 or the ``profile=`` argument):
@@ -35,6 +40,8 @@ or the ``profile=`` argument):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -139,3 +146,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _put(spark: SparkSession, key: str, value: str | None) -> None:
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, confs: Mapping[str, str | None]
+) -> Iterator[None]:
+    """Run the block with ``confs`` set on the session (a ``None`` value
+    unsets the key), then put every key back as it was.
+
+    The prior state is each key's EXPLICIT setting, read with
+    ``get(k, None)``: a key that was unset before is unset again
+    afterwards, not pinned to the default ``get(k)`` would report. On
+    exit, failures included, the keys set so far are restored in reverse
+    order, so a static conf that refuses ``set`` partway leaves nothing
+    behind. Spark reads most of these confs when it plans or runs a
+    query, so anything that must see them materializes inside the block
+    (collect, write, eager checkpoint); a lazy DataFrame returned out of
+    it would re-plan under the restored values (lesson 15)."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    applied: list[str] = []
+    try:
+        for k, v in confs.items():
+            _put(spark, k, v)
+            applied.append(k)
+        yield
+    finally:
+        for k in reversed(applied):
+            _put(spark, k, prior[k])

@@ -38,6 +38,7 @@ from pyspark.sql.streaming import (
     StreamingQuery,
 )
 
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     schema_to_ddl,
     write_jdbc_append,
@@ -146,45 +147,6 @@ def session_windowed_agg(
     )
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily set ``spark.sql.shuffle.partitions`` around a bounded
-    streaming replay, restoring the caller's value on exit.
-
-    A streaming query locks its state-partition count to the shuffle
-    partition number in effect at ``start()`` and keeps one state-store
-    provider (plus snapshot/maintenance work) per partition for its whole
-    life. For the bounded few-MB replays in the judged inventory, the
-    session default (200, or the cluster's tuned value) means 200 state
-    stores per stateful operator — pure per-partition overhead that
-    dominates the wall clock. Results are partition-count-independent
-    (counts, quantized integer sums, per-key state), so scoping the count
-    down is a pure cost knob. A real deployment sizes this to
-    state-volume / executor-memory instead; see ARCHITECTURE.md.
-
-    Part of each state partition's cost is checkpoint-file I/O. Under
-    Spark's FileContext checkpoint manager on a machine without
-    libhadoop, Hadoop forks ``readlink`` twice per file rename and
-    ``chmod`` per file created. Local engine sessions use the FileSystem
-    manager (``session.LOCAL_CHECKPOINT_FILE_MANAGER``), which drops the
-    ``readlink`` forks; the ``chmod`` per file remains, and the partition
-    count still multiplies it.
-    """
-    key = "spark.sql.shuffle.partitions"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def unload_state_stores(spark: SparkSession) -> None:
     """Unload all loaded state-store providers and stop the maintenance
     thread after a bounded stateful replay finishes.
@@ -213,15 +175,30 @@ def replay_query(
     """Run one bounded replay: start ``writer`` under ``state_partitions``
     state partitions and yield the running query; on exit, failures
     included, stop it, unload the state stores and restore
-    ``spark.sql.shuffle.partitions``.
+    ``spark.sql.shuffle.partitions`` (``session.scoped_conf``).
+
+    A streaming query locks its state-partition count to the shuffle
+    partition number in effect at ``start()`` and keeps one state-store
+    provider (plus snapshot/maintenance work) per partition for its
+    whole life, so the session default (200, or the cluster's tuned
+    value) would mean that many state stores per stateful operator:
+    pure per-partition overhead on a bounded few-MB replay. Part of each
+    partition's cost is checkpoint-file I/O: local engine sessions use
+    the FileSystem checkpoint manager
+    (``session.LOCAL_CHECKPOINT_FILE_MANAGER``), which drops Hadoop's
+    ``readlink`` forks, but the ``chmod`` per file created remains and
+    the partition count multiplies it. A real deployment sizes the count
+    to state volume / executor memory instead; see ARCHITECTURE.md.
 
     One partition by default: a bounded replay is usually bound by
     per-batch fixed cost (state-store commit and checkpoint files per
     partition), not by data, and results do not depend on the count
-    (CLAUDE.md lessons 23 and 38). A replay whose state work is heavy
-    enough to want parallel tasks passes more; the probe that decides
-    each replay's count is ``plans/r18/probe_replay_partitions.txt``."""
-    with scoped_shuffle_partitions(spark, state_partitions):
+    (counts, quantized integer sums, per-key state; lessons 23 and 38).
+    A replay whose state work is heavy enough to want parallel tasks
+    passes more; the probe that decides each replay's count is
+    ``plans/r18/probe_replay_partitions.txt``."""
+    shuffle = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    with scoped_conf(spark, shuffle):
         query = writer.start()
         try:
             yield query

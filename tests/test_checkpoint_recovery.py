@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.session import (
     LOCAL_CHECKPOINT_FILE_MANAGER,
+    scoped_conf,
 )
 from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import (
     hourly_windowed_agg,
@@ -65,12 +66,7 @@ def checkpoint_manager(request, spark, tmp_path):
     and leaves Spark's own choice (FileContext). Asserts the manager a
     streaming query would get really is the expected class."""
     wanted = getattr(request, "param", LOCAL_CHECKPOINT_FILE_MANAGER)
-    prev = spark.conf.get(_MANAGER_KEY, None)
-    if wanted is None:
-        spark.conf.unset(_MANAGER_KEY)
-    else:
-        spark.conf.set(_MANAGER_KEY, wanted)
-    try:
+    with scoped_conf(spark, {_MANAGER_KEY: wanted}):
         jvm = spark._jvm
         checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
         manager = checkpointing.CheckpointFileManager.create(
@@ -79,11 +75,6 @@ def checkpoint_manager(request, spark, tmp_path):
         )
         assert manager.getClass().getName() == (wanted or _FILECONTEXT_MANAGER)
         yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_MANAGER_KEY)
-        else:
-            spark.conf.set(_MANAGER_KEY, prev)
 
 
 # The battery's second arm: Spark's default checkpoint manager.
@@ -239,31 +230,22 @@ def test_stateful_window_state_survives_restart(
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled"
     )
-    prev = spark.conf.get(conf_key, None)
-    prev_chlog = spark.conf.get(chlog_key, None)
-    spark.conf.set(conf_key, provider)
+    confs = {conf_key: provider}
     if changelog is not None:
-        spark.conf.set(chlog_key, changelog)
+        confs[chlog_key] = changelog
     try:
-        run_once()
-        assert emitted == []  # watermark 9:50; nothing ripe yet
+        with scoped_conf(spark, confs):
+            run_once()
+            assert emitted == []  # watermark 9:50; nothing ripe yet
 
-        _write_batch(
-            d,
-            "b.json",
-            [{"ts": "2024-01-01T12:00:00", "user_id": 2, "value": 7.0}],
-            2000,
-        )
-        run_once()
+            _write_batch(
+                d,
+                "b.json",
+                [{"ts": "2024-01-01T12:00:00", "user_id": 2, "value": 7.0}],
+                2000,
+            )
+            run_once()
     finally:
-        if prev:
-            spark.conf.set(conf_key, prev)
-        else:
-            spark.conf.unset(conf_key)
-        if prev_chlog:
-            spark.conf.set(chlog_key, prev_chlog)
-        else:
-            spark.conf.unset(chlog_key)
         unload_state_stores(spark)
     assert emitted == [("2024-01-01T10:00:00", 2, 3.0)]
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nyc_yellow_taxi_trip_data_pipeline_spark import memo
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     read_csv,
     read_table,
@@ -217,8 +218,8 @@ def test_python_datasource_stats_pruning_and_roundtrip(spark, tmp_path):
     pruned = reader.partitions()
     assert len(pruned) == 1 and pruned[0].path.endswith("p0.parquet")
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
+    pushdown = {"spark.sql.python.filterPushdown.enabled": "true"}
+    with scoped_conf(spark, pushdown):
         spark.dataSource.register(cls)
         df = (spark.read.format("doc_manifest")
               .option("path", str(d)).load())
@@ -226,8 +227,6 @@ def test_python_datasource_stats_pruning_and_roundtrip(spark, tmp_path):
         got = {(r.doc_id, r.n_chars)
                for r in df.filter(df.source == "zzy").collect()}
         assert got == {(4, 40)}
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
 
 
 def test_read_table_repeat_launches_no_job(spark, tmp_path):

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 
 
 CASES = [
@@ -103,9 +104,11 @@ def test_q185_dominance_tie_semantics(spark, tmp_path, points, frontier):
 def test_q187_confs_restored_on_failure(spark, tmp_path):
     """q187 flips four session confs (bloom runtime filter thresholds +
     broadcast disable) around its scoped collect; a query that explodes
-    mid-try (here: an orders fixture missing o_orderpriority, which
-    fails analysis inside the try block) must restore every one of them
-    (lesson 15 / r8 verdict finding #1 applied to the new query)."""
+    inside the scope (here: an orders fixture missing o_orderpriority,
+    which fails analysis) must restore every one of them (lesson 15 /
+    r8 verdict finding #1 applied to the new query). The comparison is
+    on the EXPLICIT settings, ``get(k, None)``, and the prior state
+    holds both kinds: two keys unset, two set to a value."""
     keys = [
         "spark.sql.optimizer.runtime.bloomFilter.enabled",
         "spark.sql.optimizer.runtime.bloomFilter."
@@ -113,16 +116,19 @@ def test_q187_confs_restored_on_failure(spark, tmp_path):
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
     ]
-    before = {k: spark.conf.get(k, None) for k in keys}
     spark.createDataFrame([(1,)], "l_orderkey bigint").write.mode(
         "overwrite"
     ).parquet(str(tmp_path / "lineitem.parquet"))
     spark.createDataFrame([(1,)], "o_orderkey bigint").write.mode(
         "overwrite"
     ).parquet(str(tmp_path / "orders.parquet"))
-    with pytest.raises(Exception):
-        QUERIES["q187_runtime_bloom_join"].spark(spark, str(tmp_path))
-    assert {k: spark.conf.get(k, None) for k in keys} == before
+    prior = dict(zip(keys, (None, None, "1048576", "2097152")))
+    with scoped_conf(spark, prior):
+        before = {k: spark.conf.get(k, None) for k in keys}
+        assert before == prior
+        with pytest.raises(Exception):
+            QUERIES["q187_runtime_bloom_join"].spark(spark, str(tmp_path))
+        assert {k: spark.conf.get(k, None) for k in keys} == before
 
 
 def test_epoch_day_bucketing_at_fractional_day_boundary(spark, tmp_path):

@@ -10,36 +10,36 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.ml.pipeline import try_log_mlflow
 from nyc_yellow_taxi_trip_data_pipeline_spark.operators.skew import (
     salted_quantized_agg,
 )
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     """bucketBy on the join key co-locates both sides: the join plan must
     contain no Exchange — the technique that makes repeated fact-fact
     joins affordable at 100 TB."""
-    spark.conf.set(
-        "spark.sql.sources.default", "parquet"
-    )
     warehouse_a = "bucketed_facts_a"
     warehouse_b = "bucketed_facts_b"
     left = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
     right = spark.range(0, 10000).withColumn("w", F.col("id") * 3)
-    left.write.bucketBy(8, "id").sortBy("id").mode("overwrite").saveAsTable(warehouse_a)
-    right.write.bucketBy(8, "id").sortBy("id").mode("overwrite").saveAsTable(warehouse_b)
-    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # Disable auto-broadcast: at real fact-fact scale neither side
+    # broadcasts; that's exactly when bucketing pays off.
+    confs = {
+        "spark.sql.sources.default": "parquet",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
     try:
-        # Disable auto-broadcast: at real fact-fact scale neither side
-        # broadcasts; that's exactly when bucketing pays off.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table(warehouse_a)
-        b = spark.table(warehouse_b)
-        joined = a.join(b, "id")
-        assert joined.count() == 10000
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan
+        with scoped_conf(spark, confs):
+            left.write.bucketBy(8, "id").sortBy("id").mode("overwrite").saveAsTable(warehouse_a)
+            right.write.bucketBy(8, "id").sortBy("id").mode("overwrite").saveAsTable(warehouse_b)
+            a = spark.table(warehouse_a)
+            b = spark.table(warehouse_b)
+            joined = a.join(b, "id")
+            assert joined.count() == 10000
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+            assert "SortMergeJoin" in plan
+            assert "Bucketed: true" in plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)
         spark.sql(f"DROP TABLE IF EXISTS {warehouse_a}")
         spark.sql(f"DROP TABLE IF EXISTS {warehouse_b}")
 

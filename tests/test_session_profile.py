@@ -1,4 +1,6 @@
-"""The SPARK_GRAFT_PROFILE knob: local vs cluster scale defaults.
+"""The SPARK_GRAFT_PROFILE knob: local vs cluster scale defaults, and
+``scoped_conf``, the one way engine code overrides a session conf for a
+while.
 
 getOrCreate() reuses any live session, so the applied-config assertion
 runs in a clean subprocess; the cheap invariants run inline.
@@ -9,6 +11,7 @@ from __future__ import annotations
 import subprocess
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -16,6 +19,7 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.session import (
     LOCAL_CHECKPOINT_FILE_MANAGER,
     PROFILES,
     get_spark,
+    scoped_conf,
 )
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -82,3 +86,119 @@ def test_local_session_checkpoints_through_filesystem_manager():
     )
     out = _run_clean(code)
     assert "MANAGER_OK" in out.stdout, out.stderr[-2000:]
+
+
+# A conf the test session leaves unset (it has a default, 5.0) and one
+# get_spark sets explicitly (64 MB).
+_UNSET_KEY = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
+_SET_KEY = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def test_scoped_conf_unset_key_is_unset_afterwards(spark):
+    """A key with no explicit setting comes back unset, not pinned to
+    the default ``get(k)`` reports."""
+    assert spark.conf.get(_UNSET_KEY, None) is None
+    with scoped_conf(spark, {_UNSET_KEY: "3.0"}):
+        assert spark.conf.get(_UNSET_KEY, None) == "3.0"
+    assert spark.conf.get(_UNSET_KEY, None) is None
+
+
+def test_scoped_conf_restores_explicit_prior_value(spark):
+    before = spark.conf.get(_SET_KEY, None)
+    assert before is not None
+    with scoped_conf(spark, {_SET_KEY: "-1", _UNSET_KEY: None}):
+        assert spark.conf.get(_SET_KEY, None) == "-1"
+    assert spark.conf.get(_SET_KEY, None) == before
+    assert spark.conf.get(_UNSET_KEY, None) is None
+
+
+def test_scoped_conf_restores_when_block_raises(spark):
+    before = spark.conf.get(_SET_KEY, None)
+    with pytest.raises(RuntimeError, match="boom"):
+        with scoped_conf(spark, {_SET_KEY: "-1", _UNSET_KEY: "3.0"}):
+            raise RuntimeError("boom")
+    assert spark.conf.get(_SET_KEY, None) == before
+    assert spark.conf.get(_UNSET_KEY, None) is None
+
+
+def test_scoped_conf_nested_scopes_unwind(spark):
+    with scoped_conf(spark, {_UNSET_KEY: "3.0"}):
+        with scoped_conf(spark, {_UNSET_KEY: "4.0"}):
+            assert spark.conf.get(_UNSET_KEY, None) == "4.0"
+        assert spark.conf.get(_UNSET_KEY, None) == "3.0"
+    assert spark.conf.get(_UNSET_KEY, None) is None
+
+
+def test_scoped_conf_static_conf_failure_restores_keys_set_before_it(spark):
+    """A static conf refuses ``set`` on a live session; the keys set
+    before it are restored and the ones after it never set."""
+    before = spark.conf.get(_SET_KEY, None)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions", None)
+    confs = {
+        _UNSET_KEY: "3.0",
+        _SET_KEY: "-1",
+        "spark.sql.warehouse.dir": "/nonexistent-warehouse",
+        "spark.sql.shuffle.partitions": "3",
+    }
+    with pytest.raises(Exception, match="warehouse"):
+        with scoped_conf(spark, confs):
+            pytest.fail("the block ran although a conf failed to set")
+    assert spark.conf.get(_UNSET_KEY, None) is None
+    assert spark.conf.get(_SET_KEY, None) == before
+    assert spark.conf.get("spark.sql.shuffle.partitions", None) == partitions
+
+
+class _RecordingConf:
+    """A session conf that logs every write."""
+
+    def __init__(self, store: dict[str, str]):
+        self.store = dict(store)
+        self.log: list[tuple] = []
+
+    def get(self, key, default):
+        return self.store.get(key, default)
+
+    def set(self, key, value):
+        self.log.append(("set", key, value))
+        self.store[key] = value
+
+    def unset(self, key):
+        self.log.append(("unset", key))
+        self.store.pop(key, None)
+
+
+def test_scoped_conf_unwinds_in_reverse_order():
+    """The restore mirrors the set sequence: last key set, first put
+    back."""
+    fake = SimpleNamespace(conf=_RecordingConf({"b": "1"}))
+    with scoped_conf(fake, {"a": "x", "b": "y", "c": "z"}):
+        assert fake.conf.log == [
+            ("set", "a", "x"),
+            ("set", "b", "y"),
+            ("set", "c", "z"),
+        ]
+        fake.conf.log.clear()
+    assert fake.conf.log == [("unset", "c"), ("set", "b", "1"), ("unset", "a")]
+    assert fake.conf.store == {"b": "1"}
+
+
+def test_only_session_module_sets_confs():
+    """Plan, operator and streaming code never writes the session conf
+    directly: a temporary override goes through ``session.scoped_conf``.
+    (``sources.io._table_read``'s pins are permanent, not scoped, and
+    live outside these modules.)"""
+    pkg = ROOT / "nyc_yellow_taxi_trip_data_pipeline_spark"
+    modules = [
+        pkg / "plans" / "datapipe.py",
+        pkg / "plans" / "analytics.py",
+        *sorted((pkg / "operators").glob("*.py")),
+        *sorted((pkg / "streaming").glob("*.py")),
+    ]
+    assert len(modules) > 4
+    for module in modules:
+        src = module.read_text()
+        hits = [b for b in ("conf.set(", "conf.unset(") if b in src]
+        assert not hits, (
+            f"{module.relative_to(ROOT)} spells {hits}; wrap the override "
+            "in session.scoped_conf"
+        )

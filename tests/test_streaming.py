@@ -22,6 +22,14 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import (
     replay_query,
     session_windowed_agg,
 )
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
+
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
+}
 
 TRIP_SCHEMA = T.StructType(
     [
@@ -437,28 +445,16 @@ def test_rocksdb_state_store_provider_same_results(spark):
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
 
     sf_dir = "/root/testdata/sf0.001"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    default = spark.conf.get(key, None)
     baseline = sorted(
         map(tuple, QUERIES["q44_streaming_hourly"].spark(spark, sf_dir).collect())
     )
-    try:
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+    with scoped_conf(spark, _ROCKSDB):
         rocks = sorted(
             map(
                 tuple,
                 QUERIES["q44_streaming_hourly"].spark(spark, sf_dir).collect(),
             )
         )
-    finally:
-        if default:
-            spark.conf.set(key, default)
-        else:
-            spark.conf.unset(key)
     assert rocks == baseline
 
 
@@ -537,14 +533,7 @@ def test_transform_with_state_in_pandas_totals(spark):
             StructField("sum_value", DoubleType()),
         ]
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    default = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, _ROCKSDB):
         stream = read_table_stream(spark, sf, "events").select(
             "user_id", "value"
         )
@@ -569,11 +558,6 @@ def test_transform_with_state_in_pandas_totals(spark):
             (r.user_id, r.n_events, round(r.sum_value, 2))
             for r in spark.table(sink).collect()
         )
-    finally:
-        if default:
-            spark.conf.set(key, default)
-        else:
-            spark.conf.unset(key)
     exp = sorted(
         (r.user_id, r.n, round(r.s, 2))
         for r in read_table(spark, sf, "events")
@@ -651,103 +635,93 @@ def test_transform_with_state_timer_eviction(spark):
     out_schema = StructType(
         [StructField("user_id", LongType()), StructField("n", LongType())]
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    default = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     sink = f"tws_timer_{tok}"
     try:
-        (
-            ev.withColumn("parity", F.pmod("event_id", F.lit(2)))
-            .repartition(2, "parity")
-            .write.partitionBy("parity")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-
-        def stage_phase(parity):
-            out = os.path.join(stage, f"parity={parity}")
-            src = [
-                f
-                for f in os.listdir(out)
-                if f.endswith(".parquet") and not f.startswith("_")
-            ]
-            assert len(src) == 1, src
-            os.rename(
-                os.path.join(out, src[0]),
-                os.path.join(watch, f"{parity:02d}.parquet"),
+        with scoped_conf(spark, _ROCKSDB):
+            (
+                ev.withColumn("parity", F.pmod("event_id", F.lit(2)))
+                .repartition(2, "parity")
+                .write.partitionBy("parity")
+                .mode("overwrite")
+                .parquet(stage)
             )
 
-        stage_phase(0)
-        stream = (
-            spark.readStream.schema("event_id long, user_id long")
-            .parquet(watch)
-        )
-        out = stream.groupBy("user_id").transformWithStateInPandas(
-            Evictor(), out_schema, "Update", "ProcessingTime"
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            seen: dict = {}
+            def stage_phase(parity):
+                out = os.path.join(stage, f"parity={parity}")
+                src = [
+                    f
+                    for f in os.listdir(out)
+                    if f.endswith(".parquet") and not f.startswith("_")
+                ]
+                assert len(src) == 1, src
+                os.rename(
+                    os.path.join(out, src[0]),
+                    os.path.join(watch, f"{parity:02d}.parquet"),
+                )
 
-            def wait_drained(min_batches):
-                deadline = time.time() + 120
-                while time.time() < deadline:
-                    for p in q.recentProgress:
-                        if p:
-                            seen[p["batchId"]] = p["numInputRows"]
-                    p = q.lastProgress
-                    fed = sum(1 for v in seen.values() if v)
-                    if (
-                        p is not None
-                        and fed >= min_batches
-                        and p.get("stateOperators")
-                        and p["stateOperators"][0]["numRowsTotal"] == 0
-                    ):
-                        return
-                    time.sleep(0.05)
-                raise AssertionError("timers never drained the state")
+            stage_phase(0)
+            stream = (
+                spark.readStream.schema("event_id long, user_id long")
+                .parquet(watch)
+            )
+            out = stream.groupBy("user_id").transformWithStateInPandas(
+                Evictor(), out_schema, "Update", "ProcessingTime"
+            )
+            q = (
+                out.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("update")
+                .start()
+            )
+            try:
+                seen: dict = {}
 
-            wait_drained(1)
-            stage_phase(1)
-            wait_drained(2)
-        finally:
-            q.stop()
-        got = sorted(
-            (r.user_id, r.n_evict, r.n_events)
-            for r in spark.table(sink)
-            .groupBy("user_id")
-            .agg(
-                F.count("*").cast("long").alias("n_evict"),
-                F.sum("n").cast("long").alias("n_events"),
+                def wait_drained(min_batches):
+                    deadline = time.time() + 120
+                    while time.time() < deadline:
+                        for p in q.recentProgress:
+                            if p:
+                                seen[p["batchId"]] = p["numInputRows"]
+                        p = q.lastProgress
+                        fed = sum(1 for v in seen.values() if v)
+                        if (
+                            p is not None
+                            and fed >= min_batches
+                            and p.get("stateOperators")
+                            and p["stateOperators"][0]["numRowsTotal"] == 0
+                        ):
+                            return
+                        time.sleep(0.05)
+                    raise AssertionError("timers never drained the state")
+
+                wait_drained(1)
+                stage_phase(1)
+                wait_drained(2)
+            finally:
+                q.stop()
+            got = sorted(
+                (r.user_id, r.n_evict, r.n_events)
+                for r in spark.table(sink)
+                .groupBy("user_id")
+                .agg(
+                    F.count("*").cast("long").alias("n_evict"),
+                    F.sum("n").cast("long").alias("n_events"),
+                )
+                .collect()
             )
-            .collect()
-        )
-        exp = sorted(
-            (r.user_id, r.n_evict, r.n_events)
-            for r in ev.groupBy("user_id")
-            .agg(
-                F.countDistinct(
-                    F.pmod("event_id", F.lit(2))
-                ).cast("long").alias("n_evict"),
-                F.count("*").alias("n_events"),
+            exp = sorted(
+                (r.user_id, r.n_evict, r.n_events)
+                for r in ev.groupBy("user_id")
+                .agg(
+                    F.countDistinct(
+                        F.pmod("event_id", F.lit(2))
+                    ).cast("long").alias("n_evict"),
+                    F.count("*").alias("n_events"),
+                )
+                .collect()
             )
-            .collect()
-        )
-        assert got == exp
+            assert got == exp
     finally:
-        if default:
-            spark.conf.set(key, default)
-        else:
-            spark.conf.unset(key)
         shutil.rmtree(watch, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -773,15 +747,13 @@ def test_replay_query_failing_query_still_stops_unloads_and_restores(
         pipeline, "unload_state_stores", lambda s: unloads.append(1)
     )
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "7")
     started = []
 
     def fail(batch_df, batch_id):
         raise ValueError("batch failed")
 
     stream = read_stream(spark, "json", schema=TRIP_SCHEMA, path=trip_json_dir)
-    try:
+    with scoped_conf(spark, {key: "7"}):
         with pytest.raises(Exception, match="batch failed"):
             with replay_query(spark, stream.writeStream.foreachBatch(fail)) as q:
                 started.append(q)
@@ -790,8 +762,6 @@ def test_replay_query_failing_query_still_stops_unloads_and_restores(
         assert len(started) == 1 and not started[0].isActive
         assert unloads == [1]
         assert spark.conf.get(key) == "7"
-    finally:
-        spark.conf.set(key, before)
 
 
 def _replay_dirs(root) -> list[str]:

@@ -2,6 +2,8 @@
 
 Usage: python tools/bench_ab.py OLD.json NEW.json [--all] [--band R]
 
+Options may come anywhere; ``--band`` takes the next argument as R.
+
 Judges two bench snapshots (bench.py output or BENCH_r{N}.json driver
 records — both shapes handled by ``load``) the way the
 repo's lesson 31 prescribes:
@@ -25,8 +27,9 @@ repo's lesson 31 prescribes:
   three adjacent sub-1.4 s queries flagged at ~1.35x re-ran SLOWER in
   isolation, i.e. pure environment variance). Isolated flags with no
   qualifying tag cluster read as noise.
-- a warning line when both files carry bench.py's provenance block and
-  their cpu counts differ (lesson 31's ratios assume one host size).
+- a provenance line with both files' cpu counts and host steal shares
+  (bench.py's provenance block), and a warning when the cpu counts
+  differ (lesson 31's ratios assume one host size).
 
 Exit code 1 iff a cluster is found, so the closing-commit ritual can
 gate on it.
@@ -62,25 +65,38 @@ def load(path: str) -> dict[str, float]:
     }
 
 
-def cpu_count(path: str) -> int | None:
-    """The cpu count a bench.py output file records in its provenance
-    block (None for files written before bench.py recorded one)."""
+def provenance(path: str) -> dict:
+    """The provenance block of a bench.py output file (empty for files
+    written before bench.py recorded one)."""
     with open(path) as f:
         doc = json.load(f)
-    return (doc.get("provenance") or {}).get("nproc")
+    return doc.get("provenance") or {}
+
+
+def _share(value: float | None) -> str:
+    return "-" if value is None else f"{value:.1%}"
 
 
 def main(argv: list[str]) -> int:
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
 
-    args = [a for a in argv if not a.startswith("--")]
-    use_all = "--all" in argv
+    argv = list(argv)
     band = 1.25
     if "--band" in argv:
-        band = float(argv[argv.index("--band") + 1])
-        args = [a for a in args if a != str(band)]
+        i = argv.index("--band")
+        band = float(argv[i + 1])
+        del argv[i : i + 2]
+    use_all = "--all" in argv
+    args = [a for a in argv if not a.startswith("--")]
     old, new = load(args[0]), load(args[1])
-    cpus = cpu_count(args[0]), cpu_count(args[1])
+    prov = provenance(args[0]), provenance(args[1])
+    cpus = prov[0].get("nproc"), prov[1].get("nproc")
+    if any(prov):
+        print(
+            f"cpus {cpus[0] or '-'} vs {cpus[1] or '-'}; host steal share"
+            f" {_share(prov[0].get('steal_share'))}"
+            f" vs {_share(prov[1].get('steal_share'))}"
+        )
     if None not in cpus and cpus[0] != cpus[1]:
         print(
             f"warning: cpu counts differ ({cpus[0]} vs {cpus[1]}); the ratios"
@@ -96,13 +112,18 @@ def main(argv: list[str]) -> int:
     common = sorted(set(old) & set(new) & set(QUERIES))
     compared = common if use_all else [q for q in common if q in identical]
     edited = [q for q in common if q not in identical]
-    print(
-        f"{len(compared)} byte-identical queries compared"
-        f" ({len(edited)} edited-since-verification excluded:"
-        f" {', '.join(edited) if edited else '-'})"
-    )
+    listed = ", ".join(edited) if edited else "-"
     if use_all:
-        print("(--all: edited queries INCLUDED in the distribution)")
+        print(
+            f"{len(compared)} queries compared (--all):"
+            f" {len(compared) - len(edited)} byte-identical +"
+            f" {len(edited)} edited-since-verification INCLUDED: {listed}"
+        )
+    else:
+        print(
+            f"{len(compared)} byte-identical queries compared"
+            f" ({len(edited)} edited-since-verification excluded: {listed})"
+        )
 
     ratios = {q: new[q] / old[q] for q in compared if old[q]}
     ordered = sorted(ratios.values())

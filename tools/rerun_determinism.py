@@ -22,7 +22,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES  # noqa: E402
-from nyc_yellow_taxi_trip_data_pipeline_spark.session import get_spark  # noqa: E402
+from nyc_yellow_taxi_trip_data_pipeline_spark.session import (  # noqa: E402
+    get_spark,
+    scoped_conf,
+)
 
 LAYOUTS = ("32", "7")
 
@@ -40,27 +43,22 @@ def main() -> int:
         sf_dir = args.pop(0)
     names = args or list(QUERIES)
     spark = get_spark("rerun-determinism")
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
     failures = 0
-    try:
-        for name in names:
-            spec = QUERIES[name]
-            runs = []
-            for parts in LAYOUTS:
-                spark.conf.set(key, parts)
+    for name in names:
+        spec = QUERIES[name]
+        runs = []
+        for parts in LAYOUTS:
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
                 runs.append(canonical(spec.spark(spark, sf_dir)))
-            if runs[0] == runs[1]:
-                print(f"[ ok ] {name}: {len(runs[0])} rows stable")
-            else:
-                failures += 1
-                a, b = set(runs[0]), set(runs[1])
-                print(
-                    f"[FAIL] {name}: {len(runs[0])} vs {len(runs[1])} rows;"
-                    f" only@32={list(a - b)[:2]} only@7={list(b - a)[:2]}"
-                )
-    finally:
-        spark.conf.set(key, prev)
+        if runs[0] == runs[1]:
+            print(f"[ ok ] {name}: {len(runs[0])} rows stable")
+        else:
+            failures += 1
+            a, b = set(runs[0]), set(runs[1])
+            print(
+                f"[FAIL] {name}: {len(runs[0])} vs {len(runs[1])} rows;"
+                f" only@32={list(a - b)[:2]} only@7={list(b - a)[:2]}"
+            )
     print(
         f"\n{len(names) - failures}/{len(names)} queries layout-stable"
         f" at {sf_dir}"
