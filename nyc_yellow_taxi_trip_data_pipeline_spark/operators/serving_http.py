@@ -13,7 +13,13 @@ them ``predict_csv`` raises ValueError naming the missing columns.
 Run: ``uvicorn`` on ``create_app(spark, model)``. The reference decodes
 the upload with pandas then ``createDataFrame`` (main.py:65-67); here the
 upload is spooled to a temp file and read by Spark's CSV reader directly —
-same rows, no pandas parse/convert hop. Note the handler still buffers
+same rows, no pandas parse/convert hop. ``predict_csv`` reads the file's
+header line on the driver and types each column from the declared upload
+contract (``serving.UPLOAD_CONTRACT``; an unknown column is a string),
+so a request runs one Spark job, the collect, instead of two more for
+schema inference. The read is ``mode=FAILFAST``: a value that does not
+parse as its declared type (a non-numeric fare, a malformed timestamp)
+fails the request instead of being scored as null. Note the handler still buffers
 the full upload bytes (``await file.read()``) and collect()s all
 prediction rows for the JSON response, so request/response size bounds
 the endpoint — for bulk scoring use ``operators.serving.predict_csv``

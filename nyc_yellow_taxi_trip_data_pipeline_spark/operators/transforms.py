@@ -12,11 +12,20 @@ This is the engine's version of the reference's streaming ETL stage
    streaming DataFrames, so ``streaming/`` applies them verbatim.
 3. **Documented-quirk preservation.** Weekend flag and bucket boundaries
    follow SURVEY.md §2.12 (both variants available, faithful one default).
+
+Each per-column transform is split in two: a ``*_columns`` builder that
+returns its ``{name: Column}`` dict, and the DataFrame function, one
+``withColumns`` of that dict. A caller that applies the same transform
+to many small DataFrames (``operators.serving``, one per request) builds
+the Columns once and reuses them; every Column costs py4j round trips
+(CLAUDE.md lesson 44).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.functions.scalar import (
@@ -59,14 +68,45 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.lower() for c in df.columns])
 
 
+def parse_timestamps_columns(
+    present: Iterable[str],
+    columns: tuple[str, ...] = ("tpep_pickup_datetime", "tpep_dropoff_datetime"),
+    fmt: str = ISO_TS_FORMAT,
+) -> dict[str, Column]:
+    """``parse_timestamps``'s Columns for the ``columns`` in ``present``."""
+    return {c: F.to_timestamp(F.col(c), fmt) for c in columns if c in present}
+
+
 def parse_timestamps(
     df: DataFrame,
     columns: tuple[str, ...] = ("tpep_pickup_datetime", "tpep_dropoff_datetime"),
     fmt: str = ISO_TS_FORMAT,
 ) -> DataFrame:
     """ISO-8601 string -> timestamp (reference sparkConsumer.py:85-86)."""
-    exprs = {c: F.to_timestamp(F.col(c), fmt) for c in columns if c in df.columns}
-    return df.withColumns(exprs)
+    return df.withColumns(parse_timestamps_columns(df.columns, columns, fmt))
+
+
+def add_trip_features_columns(
+    pickup_col: str = "tpep_pickup_datetime",
+    dropoff_col: str = "tpep_dropoff_datetime",
+) -> dict[str, Column]:
+    """``add_trip_features``'s 9 feature Columns."""
+    pickup, dropoff = F.col(pickup_col), F.col(dropoff_col)
+    pickup_hour = F.hour(pickup)
+    dropoff_hour = F.hour(dropoff)
+    pickup_day = F.dayofweek(pickup)
+    return {
+        "trip_duration": duration_minutes(pickup, dropoff),
+        "pickup_hour": pickup_hour,
+        "dropoff_hour": dropoff_hour,
+        "pickup_day": pickup_day,
+        "dropoff_day": F.dayofweek(dropoff),
+        "pickup_timeofday": time_of_day_etl(pickup_hour),
+        "dropoff_timeofday": time_of_day_etl(dropoff_hour),
+        # faithful reference semantics = Fri+Sat (SURVEY.md §2.12.1)
+        "pickup_is_weekend": is_weekend_friday_saturday(pickup_day),
+        "fare_per_mile": guarded_div(F.col("fare_amount"), F.col("trip_distance")),
+    }
 
 
 def add_trip_features(
@@ -79,24 +119,7 @@ def add_trip_features(
 
     Single ``withColumns`` call => single Project node => one codegen stage.
     """
-    pickup, dropoff = F.col(pickup_col), F.col(dropoff_col)
-    pickup_hour = F.hour(pickup)
-    dropoff_hour = F.hour(dropoff)
-    pickup_day = F.dayofweek(pickup)
-    return df.withColumns(
-        {
-            "trip_duration": duration_minutes(pickup, dropoff),
-            "pickup_hour": pickup_hour,
-            "dropoff_hour": dropoff_hour,
-            "pickup_day": pickup_day,
-            "dropoff_day": F.dayofweek(dropoff),
-            "pickup_timeofday": time_of_day_etl(pickup_hour),
-            "dropoff_timeofday": time_of_day_etl(dropoff_hour),
-            # faithful reference semantics = Fri+Sat (SURVEY.md §2.12.1)
-            "pickup_is_weekend": is_weekend_friday_saturday(pickup_day),
-            "fare_per_mile": guarded_div(F.col("fare_amount"), F.col("trip_distance")),
-        }
-    )
+    return df.withColumns(add_trip_features_columns(pickup_col, dropoff_col))
 
 
 def filter_valid_passengers(df: DataFrame) -> DataFrame:
@@ -119,17 +142,23 @@ def clean_trips(df: DataFrame) -> DataFrame:
     return filter_valid_passengers(out)
 
 
+def impute_numeric_nulls_columns(
+    present: Iterable[str], columns: list[str]
+) -> dict[str, Column]:
+    """``impute_numeric_nulls``'s Columns for the ``columns`` in ``present``."""
+    return {
+        c: F.coalesce(F.col(c).cast("double"), F.lit(0.0))
+        for c in columns
+        if c in present
+    }
+
+
 def impute_numeric_nulls(df: DataFrame, columns: list[str]) -> DataFrame:
     """when(isNull, 0).otherwise(cast(double)) per column — the pre-ML
     imputation (reference sparkML.py:63-64, deployment/main.py:39-41).
     NOTE: runs *after* storage in the reference (SURVEY.md §2.12.4); the
     cleaned table keeps its nulls."""
-    exprs = {
-        c: F.coalesce(F.col(c).cast("double"), F.lit(0.0))
-        for c in columns
-        if c in df.columns
-    }
-    return df.withColumns(exprs)
+    return df.withColumns(impute_numeric_nulls_columns(df.columns, columns))
 
 
 def iqr_fences(df: DataFrame, column: str, k: float = 1.5):

@@ -77,6 +77,19 @@ LOCAL_CHECKPOINT_FILE_MANAGER = (
 )
 
 
+def driver_memory(physical_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+    16g capped at half the host's physical memory (``physical_bytes``,
+    read with ``os.sysconf`` by default). A local master is one JVM per
+    session, so a fixed 16g heap on a 15 GB host let a few sessions side
+    by side (a test suite next to a parity run) exhaust the machine."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, physical_bytes // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "nyc-yellow-taxi-pipeline-spark",
     master: str | None = None,
@@ -125,7 +138,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     if master.startswith("local"):
         builder = builder.config(

@@ -1,6 +1,6 @@
-"""The SPARK_GRAFT_PROFILE knob: local vs cluster scale defaults, and
-``scoped_conf``, the one way engine code overrides a session conf for a
-while.
+"""The SPARK_GRAFT_PROFILE knob: local vs cluster scale defaults, the
+driver-heap default, and ``scoped_conf``, the one way engine code
+overrides a session conf for a while.
 
 getOrCreate() reuses any live session, so the applied-config assertion
 runs in a clean subprocess; the cheap invariants run inline.
@@ -18,6 +18,7 @@ import pytest
 from nyc_yellow_taxi_trip_data_pipeline_spark.session import (
     LOCAL_CHECKPOINT_FILE_MANAGER,
     PROFILES,
+    driver_memory,
     get_spark,
     scoped_conf,
 )
@@ -92,6 +93,22 @@ def test_local_session_checkpoints_through_filesystem_manager():
 # get_spark sets explicitly (64 MB).
 _UNSET_KEY = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
 _SET_KEY = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def test_driver_heap_default_is_at_most_half_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    gib = 2**30
+    assert driver_memory(15 * gib) == "7680m"
+    assert driver_memory(32 * gib) == "16384m"
+    assert driver_memory(256 * gib) == "16384m"
+    assert driver_memory(3 * gib + 1) == "1536m"
+    assert int(driver_memory()[:-1]) <= 16 * 1024
+
+
+def test_driver_heap_env_var_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert driver_memory() == "2g"
+    assert driver_memory(15 * 2**30) == "2g"
 
 
 def test_scoped_conf_unset_key_is_unset_afterwards(spark):
