@@ -140,18 +140,13 @@ def main() -> None:
     # probes) is built on rep 1 of its first consumer and excluded from
     # every per-query MIN, so `value` alone understates a cold session
     # by this one-time cost. The memo records exclusive build seconds
-    # per family; report their sum + breakdown alongside the unchanged
-    # totals, and the per-family hit/miss counts under `memo`.
+    # per family; report their sum alongside the unchanged totals, and
+    # the per-family hits, misses and build seconds under `memo`.
     from nyc_yellow_taxi_trip_data_pipeline_spark import memo  # noqa: E402
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import (  # noqa: E402
-        datapipe as _datapipe,
-    )
 
-    app_id = spark.sparkContext.applicationId
-    builds = _datapipe.shared_build_seconds(app_id)
-    result["shared_build_sec"] = round(sum(builds.values()), 3)
-    result["shared_builds"] = builds
-    result["memo"] = memo.stats(app_id)
+    stats = memo.stats(spark.sparkContext.applicationId)
+    result["shared_build_sec"] = round(sum(c["build_s"] for c in stats.values()), 3)
+    result["memo"] = stats
     if errors:
         result["errors"] = errors
     # Provenance: which code ran, on how many cores, under what load —

@@ -19,13 +19,11 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.functions.scalar import (
     time_of_day_etl,
 )
 from nyc_yellow_taxi_trip_data_pipeline_spark.functions.vector import (
-    cosine_similarity,
     dot_product,
     l2_norm,
 )
 
 __all__ = [
-    "cosine_similarity",
     "day_name",
     "dot_product",
     "duration_minutes",

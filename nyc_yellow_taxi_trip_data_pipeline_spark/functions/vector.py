@@ -25,10 +25,3 @@ def l2_norm(a: Column) -> Column:
         )
     )
 
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL-safe on zero-norm vectors (returns NULL)."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom == 0, F.lit(None).cast("double")).otherwise(
-        dot_product(a, b) / denom
-    )

@@ -12275,15 +12275,13 @@ def q189_partial_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q190_processing_time_timer_eviction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
     import time
     import uuid
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
+        replay_phases,
         replay_query,
     )
 
@@ -12295,7 +12293,7 @@ def q190_processing_time_timer_eviction(
     # phase split / columns change). Warm runs skip the write. Both
     # phase files are written in ONE job (partitionBy over the parity,
     # 2-way repartition => exactly one file per phase dir); phases then
-    # ARRIVE via stage_phase copies at the right moments.
+    # ARRIVE via replay_phases' stage copies at the right moments.
     def write(tmp_dir: str) -> None:
         (
             ev.withColumn("parity", F.pmod("event_id", F.lit(2)))
@@ -12309,23 +12307,6 @@ def q190_processing_time_timer_eviction(
         spark, sf_dir, "events", "q190_stage", "parity-pmod2-eid-uid-v1",
         write,
     )
-    watch_dir = tempfile.mkdtemp(prefix="q190_watch_")
-
-    def stage_phase(parity: int) -> None:
-        """Copy one pre-written phase file into the watched dir, made
-        visible atomically (temp-name + rename within the watch dir —
-        the source never sees a partial file; the cached stage file
-        stays in place for the next run)."""
-        out = os.path.join(stage_dir, f"parity={parity}")
-        src = [
-            f
-            for f in os.listdir(out)
-            if f.endswith(".parquet") and not f.startswith("_")
-        ]
-        assert len(src) == 1, src
-        tmp = os.path.join(watch_dir, f".{parity:02d}.tmp")
-        shutil.copyfile(os.path.join(out, src[0]), tmp)
-        os.rename(tmp, os.path.join(watch_dir, f"{parity:02d}.parquet"))
 
     def evict_counter(key, pdfs, state):
         # Self-contained closure (executor workers can't import the repo).
@@ -12366,10 +12347,9 @@ def q190_processing_time_timer_eviction(
             state.setTimeoutDuration(1)
 
     sink = f"q190_out_{uuid.uuid4().hex[:8]}"
-    try:
-        stage_phase(0)
-        schema = "event_id long, user_id long"
-        stream = spark.readStream.schema(schema).parquet(watch_dir)
+    schema = "event_id long, user_id long"
+    with replay_phases(spark, stage_dir, schema) as (stream, stage):
+        stage("parity=0")
         evictions = (
             stream.withColumn(
                 "bucket", F.pmod("user_id", F.lit(16))
@@ -12440,19 +12420,16 @@ def q190_processing_time_timer_eviction(
             # that gap is what makes the per-phase eviction count
             # deterministic instead of racing the batch clock.
             wait_drained(1, "phase A")
-            stage_phase(1)
+            stage("parity=1")
             wait_drained(2, "phase B")
-        return (
-            spark.table(sink)
-            .groupBy("user_id")
-            .agg(
-                F.count("*").cast("long").alias("n_evict"),
-                F.sum("n").cast("long").alias("n_events"),
-            )
+    return (
+        spark.table(sink)
+        .groupBy("user_id")
+        .agg(
+            F.count("*").cast("long").alias("n_evict"),
+            F.sum("n").cast("long").alias("n_events"),
         )
-    finally:
-        # stage_dir is a fingerprint-keyed cache — deliberately kept.
-        shutil.rmtree(watch_dir, ignore_errors=True)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -12889,14 +12866,12 @@ def q192_zonemap_layout_skipping(
 def q193_event_time_timer_eviction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
     import uuid
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
+        replay_phases,
         replay_query,
     )
 
@@ -12923,19 +12898,6 @@ def q193_event_time_timer_eviction(
         spark, sf_dir, "events", "q193_stage", f"phase-{tmid}-uid-ts-v1",
         write,
     )
-    watch_dir = tempfile.mkdtemp(prefix="q193_watch_")
-
-    def stage_phase(phase: int) -> None:
-        out = os.path.join(stage_dir, f"phase={phase}")
-        src = [
-            f
-            for f in os.listdir(out)
-            if f.endswith(".parquet") and not f.startswith("_")
-        ]
-        assert len(src) == 1, src
-        tmp = os.path.join(watch_dir, f".{phase:02d}.tmp")
-        shutil.copyfile(os.path.join(out, src[0]), tmp)
-        os.rename(tmp, os.path.join(watch_dir, f"{phase:02d}.parquet"))
 
     def evict_counter(key, pdfs, state):
         # Self-contained closure (executor workers can't import the repo).
@@ -13013,16 +12975,12 @@ def q193_event_time_timer_eviction(
             )
 
     sink = f"q193_out_{uuid.uuid4().hex[:8]}"
-    try:
-        stage_phase(0)
-        schema = "user_id long, ts timestamp"
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(watch_dir)
-            .withWatermark("ts", "1 hour")
-        )
+    schema = "user_id long, ts timestamp"
+    with replay_phases(spark, stage_dir, schema) as (stream, stage):
+        stage("phase=0")
         evictions = (
-            stream.withColumn(
+            stream.withWatermark("ts", "1 hour")
+            .withColumn(
                 "bucket", F.pmod("user_id", F.lit(16))
             )
             .groupBy("bucket")
@@ -13047,19 +13005,16 @@ def q193_event_time_timer_eviction(
             # phase's data batch plus the one empty eviction batch
             # the advanced watermark schedules, then returns.
             q.processAllAvailable()
-            stage_phase(1)
+            stage("phase=1")
             q.processAllAvailable()
-        return (
-            spark.table(sink)
-            .groupBy("user_id")
-            .agg(
-                F.count("*").cast("long").alias("n_evict"),
-                F.sum("n").cast("long").alias("n_emitted"),
-            )
+    return (
+        spark.table(sink)
+        .groupBy("user_id")
+        .agg(
+            F.count("*").cast("long").alias("n_evict"),
+            F.sum("n").cast("long").alias("n_emitted"),
         )
-    finally:
-        # stage_dir is a fingerprint-keyed cache — deliberately kept.
-        shutil.rmtree(watch_dir, ignore_errors=True)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -13285,7 +13240,7 @@ def q194_zorder_multidim_skipping(
 # rewrite (the three rounds here rewrite 8+8+1 partition dirs).
 # Driver pulls are bounded: the touched-bucket list (<= 8 rows/round)
 # and the fix key (1 row). Final state re-read is localCheckpoint-
-# pinned so the /tmp target can be removed before returning.
+# pinned so the scratch target can be removed before returning.
 # ---------------------------------------------------------------------------
 @register(
     "q195_merge_rounds_materialized",
@@ -13331,8 +13286,8 @@ def q194_zorder_multidim_skipping(
 def q195_merge_rounds_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import uuid
+    import os
+    import tempfile
 
     from pyspark.sql import Window
 
@@ -13342,7 +13297,6 @@ def q195_merge_rounds_materialized(
     )
 
     n_buckets = 8
-    tbl = f"/tmp/q195_target_{uuid.uuid4().hex[:8]}"
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -13420,7 +13374,10 @@ def q195_merge_rounds_materialized(
                 "(COW contract: only partitions holding source keys)"
             )
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="q195_", ignore_cleanup_errors=True
+    ) as scratch:
+        tbl = os.path.join(scratch, "table")
         # Every stage here is tiny-per-partition (the target is a dim
         # table, the update sets are latest-per-key slices); 32 default
         # shuffle partitions would pay ~4x task overhead for nothing.
@@ -13487,10 +13444,8 @@ def q195_merge_rounds_materialized(
             return (
                 spark.read.parquet(tbl)
                 .select("key", "acct_value", "n_merges", "was_inserted")
-                .localCheckpoint(eager=True)  # survives the rmtree below
+                .localCheckpoint(eager=True)  # survives the scratch cleanup
             )
-    finally:
-        shutil.rmtree(tbl, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -13561,9 +13516,9 @@ def q195_merge_rounds_materialized(
 )
 def q196_compact_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
+    import os
     import re as _re
-    import shutil
-    import uuid
+    import tempfile
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans.helpers import qsum
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans.layout import (
@@ -13575,7 +13530,6 @@ def q196_compact_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_frag = 12  # fragmentation width of the simulated streaming sink
     target_files = 3  # bin-pack target per partition (rows-as-bytes proxy)
-    tbl = f"/tmp/q196_table_{uuid.uuid4().hex[:8]}"
     ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -13583,7 +13537,10 @@ def q196_compact_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
     )
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="q196_", ignore_cleanup_errors=True
+    ) as scratch:
+        tbl = os.path.join(scratch, "table")
         # Deterministic fragmentation in ONE write job: even days arrive
         # hash-scattered across up to 12 routes (the streaming-sink
         # shape), odd days ride a single route and land pre-compacted —
@@ -13696,10 +13653,8 @@ def q196_compact_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("user_id").alias("n_users"),
                 qsum(F.col("value")).alias("sum_value"),
             )
-            .localCheckpoint(eager=True)  # survives the rmtree below
+            .localCheckpoint(eager=True)  # survives the scratch cleanup
         )
-    finally:
-        shutil.rmtree(tbl, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -13754,9 +13709,9 @@ def q196_compact_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q197_compact_bytes_optimize(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    import os
     import re as _re
-    import shutil
-    import uuid
+    import tempfile
 
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans.helpers import qsum
     from nyc_yellow_taxi_trip_data_pipeline_spark.plans.layout import (
@@ -13768,7 +13723,6 @@ def q197_compact_bytes_optimize(
 
     n_frag = 12  # fragmentation width of the simulated append pattern
     target_files = 3  # bin-pack target per partition, in FILES-of-bytes
-    tbl = f"/tmp/q197_table_{uuid.uuid4().hex[:8]}"
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_suppkey",
@@ -13776,7 +13730,10 @@ def q197_compact_bytes_optimize(
         F.year("l_shipdate").cast("int").alias("ship_year"),
     )
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="q197_", ignore_cleanup_errors=True
+    ) as scratch:
+        tbl = os.path.join(scratch, "table")
         # Deterministic fragmentation (q196's shape + data guarantee):
         # even years and the row-richest year arrive 12-way scattered,
         # other years pre-compacted. Memoized per corpus
@@ -13883,7 +13840,5 @@ def q197_compact_bytes_optimize(
                 F.countDistinct("l_suppkey").alias("n_supps"),
                 qsum(F.col("l_extendedprice")).alias("sum_price"),
             )
-            .localCheckpoint(eager=True)  # survives the rmtree below
+            .localCheckpoint(eager=True)  # survives the scratch cleanup
         )
-    finally:
-        shutil.rmtree(tbl, ignore_errors=True)

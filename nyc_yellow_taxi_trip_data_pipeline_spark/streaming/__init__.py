@@ -7,6 +7,7 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
     parse_json_envelope,
     read_stream,
     replay_files,
+    replay_phases,
     replay_query,
     session_windowed_agg,
     start_parquet_sink,
@@ -19,6 +20,7 @@ __all__ = [
     "parse_json_envelope",
     "read_stream",
     "replay_files",
+    "replay_phases",
     "replay_query",
     "session_windowed_agg",
     "start_parquet_sink",

@@ -16,8 +16,9 @@ stateless; this layer keeps its exact pipeline shape but:
 - adds the watermark + event-time window upgrade path (absent in the
   reference, required for any stateful aggregate at scale);
 - runs every bounded replay of the query inventory through one harness
-  (``replay_query``, ``drain_to_memory``, ``replay_files``), so starting,
-  draining, stopping and staging live in one place.
+  (``replay_query``, ``drain_to_memory``, ``replay_files``,
+  ``replay_phases``), so starting, draining, stopping, staging and the
+  scratch directories' lifetime live in one place.
 """
 
 from __future__ import annotations
@@ -233,11 +234,12 @@ def replay_files(
     ``01.parquet``, ... in batch order, so name order and mtime order
     agree (every write is its own job). The stream reads one file per
     trigger, so batch i is micro-batch i; row order within a file is the
-    batch's own. The files live in a fresh ``tempfile.mkdtemp``
-    directory (``TMPDIR`` decides where), removed on exit, failures
-    included, so drain the stream inside the block."""
-    replay_dir = tempfile.mkdtemp(prefix="replay_")
-    try:
+    batch's own. The files live in a fresh ``tempfile`` directory
+    (``TMPDIR`` decides where), removed on exit, failures included, so
+    drain the stream inside the block."""
+    with tempfile.TemporaryDirectory(
+        prefix="replay_", ignore_cleanup_errors=True
+    ) as replay_dir:
         for i, batch in enumerate(batches):
             before = set(os.listdir(replay_dir))
             batch.coalesce(1).write.mode("append").parquet(replay_dir)
@@ -256,8 +258,44 @@ def replay_files(
             .option("maxFilesPerTrigger", "1")
             .parquet(replay_dir)
         )
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
+
+
+@contextmanager
+def replay_phases(
+    spark: SparkSession, stage_dir: str, schema: str | T.StructType
+) -> Iterator[tuple[DataFrame, Callable[[str], None]]]:
+    """Yield ``(stream, stage)`` for a replay whose input ARRIVES in
+    phases the caller times (drain phase N, then stage phase N+1).
+
+    ``stream`` reads ``schema`` parquet from a fresh ``tempfile``
+    directory (``TMPDIR`` decides where), removed on exit, failures
+    included, so drain the stream inside the block. ``stage(part)``
+    copies the single data file of ``stage_dir/part`` (one pre-written
+    partition, e.g. ``"phase=0"``) into it as ``00.parquet``,
+    ``01.parquet``, ... in call order, made visible atomically (temp
+    name + rename, so the source never sees a partial file).
+    ``stage_dir`` is only read: a cached ``plans/cache.build_once``
+    artifact stays in place for the next run."""
+    with tempfile.TemporaryDirectory(
+        prefix="replay_", ignore_cleanup_errors=True
+    ) as watch_dir:
+        staged = 0
+
+        def stage(part: str) -> None:
+            nonlocal staged
+            out = os.path.join(stage_dir, part)
+            src = [
+                f
+                for f in os.listdir(out)
+                if f.endswith(".parquet") and not f.startswith("_")
+            ]
+            assert len(src) == 1, src
+            tmp = os.path.join(watch_dir, f".{staged:02d}.tmp")
+            shutil.copyfile(os.path.join(out, src[0]), tmp)
+            os.rename(tmp, os.path.join(watch_dir, f"{staged:02d}.parquet"))
+            staged += 1
+
+        yield spark.readStream.schema(schema).parquet(watch_dir), stage
 
 
 def start_parquet_sink(

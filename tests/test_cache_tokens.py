@@ -1,7 +1,9 @@
 """Round-12 invariants for the warehouse cache-path helper: the token
 must move on BOTH invalidation axes (input data, producing logic) and
 stale same-prefix siblings must be garbage-collected, without touching
-other prefixes (ADVICE r11 items 1 and 4)."""
+other prefixes (ADVICE r11 items 1 and 4). Transient tables, unlike
+published artifacts, live in a ``tempfile`` directory that is removed
+when the body returns."""
 
 from __future__ import annotations
 
@@ -790,3 +792,30 @@ def test_only_cache_module_spells_the_publish_protocol():
         src = (plans / module).read_text()
         hits = [b for b in banned if b in src]
         assert not hits, f"plans/{module} spells {hits}; use plans/cache.py"
+
+
+def test_q196_scratch_table_lives_under_tempdir(spark, tmp_path, monkeypatch):
+    """q196's scratch table lives in a ``tempfile`` directory (so
+    ``TMPDIR`` decides where), never under a literal ``/tmp``, and is
+    gone once the query returns."""
+    import glob
+    import tempfile
+
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES, layout
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    tables: list[str] = []
+    snapshot = layout.partition_snapshot
+
+    def recording_snapshot(tbl, prefix):
+        tables.append(tbl)
+        return snapshot(tbl, prefix)
+
+    monkeypatch.setattr(layout, "partition_snapshot", recording_snapshot)
+    in_tmp = set(glob.glob("/tmp/q196_*"))
+    QUERIES["q196_compact_optimize"].spark(spark, SF_DIR).collect()
+    assert tables and all(
+        t.startswith(str(tmp_path / "q196_")) for t in tables
+    ), tables
+    assert glob.glob(str(tmp_path / "q196_*")) == []
+    assert set(glob.glob("/tmp/q196_*")) == in_tmp

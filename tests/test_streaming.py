@@ -19,6 +19,7 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.streaming import (
     read_stream,
     drain_to_memory,
     replay_files,
+    replay_phases,
     replay_query,
     session_windowed_agg,
 )
@@ -829,22 +830,76 @@ def test_replay_files_one_micro_batch_per_file_in_batch_order(
     assert _replay_dirs(tmp_path) == []
 
 
+def test_replay_phases_stages_in_call_order_and_removes_the_watch_dir(
+    spark, tmp_path, monkeypatch
+):
+    """The watched directory is created under ``tempfile``'s directory;
+    ``stage`` lands ``00.parquet`` then ``01.parquet`` in call order with
+    no temp file left behind and the stage file still in place; the
+    directory is removed on a normal exit and after a failure inside the
+    block."""
+    import os
+    import tempfile
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    stage_dir = tmp_path / "stage"
+    (
+        spark.range(6)
+        .withColumn("phase", (F.col("id") % 2).cast("int"))
+        .coalesce(1)
+        .write.partitionBy("phase")
+        .parquet(str(stage_dir))
+    )
+    staged_files = sorted(os.listdir(stage_dir / "phase=1"))
+
+    with replay_phases(spark, str(stage_dir), "id long") as (stream, stage):
+        (watch_dir,) = _replay_dirs(scratch)
+        stage("phase=1")
+        stage("phase=0")
+        assert sorted(os.listdir(watch_dir)) == ["00.parquet", "01.parquet"]
+        first = spark.read.parquet(os.path.join(watch_dir, "00.parquet"))
+        assert sorted(r.id for r in first.collect()) == [1, 3, 5]
+        rows = drain_to_memory(stream, "append").collect()
+        assert sorted(r.id for r in rows) == list(range(6))
+    assert sorted(os.listdir(stage_dir / "phase=1")) == staged_files
+    assert _replay_dirs(scratch) == []
+
+    with pytest.raises(RuntimeError, match="drain failed"):
+        with replay_phases(spark, str(stage_dir), "id long") as (_, stage):
+            stage("phase=0")
+            raise RuntimeError("drain failed")
+    assert _replay_dirs(scratch) == []
+
+
 def test_only_pipeline_module_spells_the_replay_protocol():
     """Starting, stopping and staging a bounded replay lives in
     ``streaming/pipeline.py`` only: the plan modules call
-    ``drain_to_memory``/``replay_query``/``replay_files`` and never
-    start a query, unload state stores or set a file-stream trigger
-    size themselves."""
+    ``drain_to_memory``/``replay_query``/``replay_files``/``replay_phases``
+    and never start a query, unload state stores or set a file-stream
+    trigger size themselves. Their transient directories come from
+    ``tempfile`` context managers, never ``mkdtemp`` + ``rmtree`` or a
+    literal ``/tmp`` path (which ignores ``TMPDIR``)."""
     import pathlib
 
     plans = pathlib.Path(__file__).resolve().parent.parent / (
         "nyc_yellow_taxi_trip_data_pipeline_spark/plans"
     )
-    banned = (".start()", "unload_state_stores", "maxFilesPerTrigger")
+    banned = (
+        ".start()",
+        "unload_state_stores",
+        "maxFilesPerTrigger",
+        "mkdtemp",
+        "rmtree(",
+        '"/tmp/',
+    )
     for module in ("datapipe.py", "analytics.py"):
         src = (plans / module).read_text()
         hits = [b for b in banned if b in src]
         assert not hits, (
             f"plans/{module} spells {hits}; use streaming.pipeline's "
-            "replay_query / drain_to_memory / replay_files"
+            "replay_query / drain_to_memory / replay_files / replay_phases "
+            "and tempfile.TemporaryDirectory"
         )
+

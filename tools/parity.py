@@ -1,7 +1,10 @@
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
 Runs every registered query in Spark and its oracle SQL in DuckDB on the
-same parquet tables, then compares: row count, column names, and an
+same parquet tables, then compares: row count, column names, dtype
+(a value hash sees the dtype: a column whose pandas dtype KIND differs
+between engines, or a DuckDB object column holding Decimals or lists,
+is a problem even when every value matches), and an
 order-insensitive exact value comparison (columns sorted by name, rows
 sorted by all columns, floats compared bit-for-bit — stricter than any
 tolerance-based hash the driver might use).
@@ -29,13 +32,14 @@ proves the inventory timezone-immune instead of assuming it.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
 import duckdb
 import pandas as pd
 
-from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
+from nyc_yellow_taxi_trip_data_pipeline_spark.plans import _PRIORITY, QUERIES
 from nyc_yellow_taxi_trip_data_pipeline_spark.session import get_spark
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import TESTDATA_TABLES
 
@@ -93,6 +97,18 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     for c in s_cols:
         split = dtype_kind_split(spark_pdf[c], duck_pdf[c])
         if split is None:
+            # Same kind on both sides, but an object column holding
+            # Decimals or lists hashes as those objects, not as the
+            # numbers the value compare below sees.
+            first = duck_pdf[c].iloc[0] if len(duck_pdf) else None
+            if duck_pdf[c].dtype.kind == "O" and not isinstance(
+                first, (str, bytes, type(None))
+            ):
+                problems.append(
+                    f"exotic-dtype col {c!r}: duck object dtype holds "
+                    f"{type(first).__name__} — cast the oracle column to a "
+                    "plain SQL type (registry rule 3)"
+                )
             continue
         problems.append(
             f"dtype-kind col {c!r}: spark {split[0]}({spark_pdf[c].dtype}) vs "
@@ -118,70 +134,68 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
-def main() -> int:
-    args = sys.argv[1:]
+def _conf_pair(text: str) -> tuple[str, str]:
+    k, sep, v = text.partition("=")
+    if not sep:
+        raise argparse.ArgumentTypeError(f"requires a k=v operand, got {text!r}")
+    return k, v
+
+
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    """Flags anywhere on the line; the first operand is ``sf_dir`` when it
+    is a directory or contains ``/``, the rest are query names. A
+    malformed flag exits 2."""
+    parser = argparse.ArgumentParser(
+        prog="python -m tools.parity",
+        description="DuckDB-oracle parity sweep; the first operand is the "
+        "sf_dir when it is a directory or contains '/'.",
+    )
     # --bare: run under a driver-faithful BARE SparkSession (no repo
     # configs — no AQE tuning, no pinned timezone, default shuffle
     # partitions). The external driver builds its own session exactly like
     # this; any query that only passes under get_spark()'s configs is a
     # latent driver red (the round-5 NTZ regression was this class).
-    bare = "--bare" in args
-    if bare:
-        args.remove("--bare")
-    window = "--window" in args
-    if window:
-        args.remove("--window")
-    tz = None
-    if "--tz" in args:
-        i = args.index("--tz")
-        args.pop(i)
-        tz = args.pop(i)
+    parser.add_argument("--bare", action="store_true")
+    parser.add_argument("--window", action="store_true")
+    parser.add_argument("--tz", metavar="ZONE")
+    # Repeatable --conf k=v: runtime confs applied to the session before
+    # any query runs — e.g. sweep every streaming replay under the
+    # RocksDB state-store provider instead of only the q44 unit test.
+    parser.add_argument(
+        "--conf", action="append", default=[], type=_conf_pair, metavar="k=v"
+    )
     # Repeatable --static-conf k=v: BUILDER-time confs (core Spark confs
     # like spark.python.worker.reuse are not runtime-settable — conf.set
     # on a live session raises). Implies --bare: get_spark()'s session is
     # process-cached, so only a fresh bare builder can honor these.
-    static_confs: list[tuple[str, str]] = []
-    while "--static-conf" in args:
-        i = args.index("--static-conf")
-        if i + 1 >= len(args) or "=" not in args[i + 1]:
-            print("error: --static-conf requires a k=v operand")
-            return 2
-        k, _, v = args[i + 1].partition("=")
-        del args[i : i + 2]
-        static_confs.append((k, v))
-    if static_confs:
-        bare = True
-    # Repeatable --conf k=v: runtime confs applied to the session before
-    # any query runs — e.g. sweep every streaming replay under the
-    # RocksDB state-store provider instead of only the q44 unit test.
-    confs: list[tuple[str, str]] = []
-    while "--conf" in args:
-        i = args.index("--conf")
-        if i + 1 >= len(args) or "=" not in args[i + 1]:
-            print("error: --conf requires a k=v operand")
-            return 2
-        args.pop(i)
-        k, _, v = args.pop(i).partition("=")
-        confs.append((k, v))
+    parser.add_argument(
+        "--static-conf",
+        action="append",
+        default=[],
+        type=_conf_pair,
+        metavar="k=v",
+    )
+    parser.add_argument("queries", nargs="*", metavar="sf_dir|query")
+    args = parser.parse_intermixed_args(argv)
+    args.bare = args.bare or bool(args.static_conf)
     sf_dir = "/root/testdata/sf0.01"
-    if args and (os.path.isdir(args[0]) or "/" in args[0]):
-        sf_dir = args.pop(0)
+    ops = args.queries
+    if ops and (os.path.isdir(ops[0]) or "/" in ops[0]):
+        sf_dir = ops.pop(0)
         if not os.path.isdir(sf_dir):
-            print(f"error: sf_dir {sf_dir!r} is not a directory")
-            return 2
-    if window:
-        from nyc_yellow_taxi_trip_data_pipeline_spark.plans import (  # noqa: PLC0415
-            _PRIORITY,
-        )
+            parser.error(f"sf_dir {sf_dir!r} is not a directory")
+    args.sf_dir = sf_dir
+    return args
 
-        names = args or list(_PRIORITY)
-    else:
-        names = args or list(QUERIES)
+
+def main() -> int:
+    args = parse_args(sys.argv[1:])
+    names = args.queries or list(_PRIORITY if args.window else QUERIES)
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         print(f"error: unknown queries {unknown}; known: {sorted(QUERIES)}")
         return 2
-    if bare:
+    if args.bare:
         from pyspark.sql import SparkSession  # noqa: PLC0415
 
         # SPARK_GRAFT_CPUS is the driver's own core dial (bench.py reads
@@ -196,14 +210,14 @@ def main() -> int:
             .appName("parity-bare")
             .config("spark.ui.enabled", "false")
         )
-        for k, v in static_confs:
+        for k, v in args.static_conf:
             builder = builder.config(k, v)
             print(f"[static-conf {k}={v}]")
         spark = builder.getOrCreate()
-        if static_confs:
+        if args.static_conf:
             # getOrCreate() silently reuses a pre-existing session, which
             # would ignore every builder conf — verify each one landed.
-            for k, v in static_confs:
+            for k, v in args.static_conf:
                 got = spark.sparkContext.getConf().get(k, None)
                 if got != v:
                     print(
@@ -215,10 +229,10 @@ def main() -> int:
         print(f"[bare session — driver-faithful, no repo configs, local[{cpus}]]")
     else:
         spark = get_spark("parity-check")
-    if tz:
-        spark.conf.set("spark.sql.session.timeZone", tz)
-        print(f"[session timezone shifted to {tz}]")
-    for k, v in confs:
+    if args.tz:
+        spark.conf.set("spark.sql.session.timeZone", args.tz)
+        print(f"[session timezone shifted to {args.tz}]")
+    for k, v in args.conf:
         # Static/non-runtime confs (or a typo'd key) raise from
         # conf.set after session creation — fail legibly instead of
         # aborting the sweep with a stack trace (ADVICE r9).
@@ -232,17 +246,17 @@ def main() -> int:
             )
             return 2
         print(f"[conf {k}={v}]")
-    con = duck_connection(sf_dir)
+    con = duck_connection(args.sf_dir)
     failures = 0
     for name in names:
         spec = QUERIES[name]
         if spec.oracle is None:
-            df = spec.spark(spark, sf_dir)
+            df = spec.spark(spark, args.sf_dir)
             n = df.count()
             print(f"[rows-only] {name}: {n} rows")
             continue
         try:
-            spark_pdf = spec.spark(spark, sf_dir).toPandas()
+            spark_pdf = spec.spark(spark, args.sf_dir).toPandas()
             duck_pdf = con.execute(spec.oracle).df()
             problems = compare(name, spark_pdf, duck_pdf)
         except Exception as exc:  # noqa: BLE001
@@ -254,7 +268,7 @@ def main() -> int:
                 print(f"       {p}")
         else:
             print(f"[ ok ] {name}: {len(spark_pdf)} rows match")
-    print(f"\n{len(names) - failures}/{len(names)} queries match at {sf_dir}")
+    print(f"\n{len(names) - failures}/{len(names)} queries match at {args.sf_dir}")
     return 1 if failures else 0
 
 
