@@ -488,121 +488,15 @@ def connected_components(
         # any component wider than 2*max_iters hops (e.g. a long chain of
         # borderline matches). Wrong cluster assignments poison downstream
         # dedup decisions invisibly; fail loudly and let the caller raise
-        # max_iters (or switch to star-contraction for pathological
-        # diameters) instead.
+        # max_iters instead.
         raise RuntimeError(
             f"connected_components did not converge within {max_iters} "
             f"iterations ({2 * max_iters} edge-hops): {changed} labels "
             "still changing — component diameter exceeds the hop budget; "
-            "raise max_iters or use star-contraction for chain-shaped graphs"
+            "raise max_iters"
         )
     return labels.select(
         F.col("u").alias("node"), F.col("lbl").alias("cluster")
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the high-diameter complement to
-    :func:`connected_components`.
-
-    Plain min-propagation needs rounds ~ component DIAMETER (fine for
-    near-clique dup groups, fatal for chain-shaped graphs: a path of
-    borderline matches k hops long needs k/2 rounds). Star contraction
-    converges in O(log^2 n) rounds regardless of diameter: large-star
-    hangs every node's larger neighbors off the minimum of its
-    neighborhood, small-star re-points smaller neighbors at it, and the
-    alternation contracts chains geometrically. Same per-round plan
-    shape as min-propagation (one shuffle groupBy + a join), same
-    localCheckpoint lineage discipline; the constant factor is ~2x per
-    round, which is why the diameter-bounded LSH pair graphs keep
-    min-propagation as the default and this is the explicit opt-in for
-    pathological shapes (the RuntimeError in connected_components names
-    it as the escape hatch).
-
-    Returns (node, cluster) with cluster = min node id in the component
-    — identical contract to :func:`connected_components`.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Every node that appears anywhere keeps a row in the final labels
-    # even if contraction turns it into a bare root.
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        # Both directions; for each u, m = min(N(u) ∪ {u}); emit
-        # (v, m) for every STRICTLY LARGER neighbor v.
-        nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = nbrs.groupBy("u").agg(
-            F.least(F.col("u"), F.min("v")).alias("m")
-        )
-        return (
-            nbrs.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # Direct every edge large->small; for each u, m = min of its
-        # smaller neighborhood ∪ {u}; re-point that neighborhood (and u
-        # itself) at m.
-        d = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = d.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
-        joined = d.join(m, "u")
-        out = joined.select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        ).union(
-            joined.select(F.col("u").alias("u"), F.col("m").alias("v"))
-        )
-        return out.filter(F.col("u") != F.col("v")).distinct()
-
-    converged = False
-    for _ in range(max_iters):
-        new_edges = small_star(large_star(edges)).localCheckpoint(eager=True)
-        changed = (
-            new_edges.join(edges, ["u", "v"], "left_anti").count()
-            + edges.join(new_edges, ["u", "v"], "left_anti").count()
-        )
-        edges = new_edges
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_iters} rounds — O(log^2 n) bound exceeded, which "
-            "signals a bug or adversarial input, not a diameter problem"
-        )
-    # At the fixpoint the edge set is a star forest child->root; roots
-    # appear only on the v side and label themselves.
-    labels = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("cluster")
-    )
-    return (
-        nodes.join(labels, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("cluster"), F.col("node")).alias("cluster"),
-        )
     )
 
 
@@ -802,11 +696,12 @@ def write_signature_index(
     shingle_n: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    path: str | None = None,
+    *,
+    path: str,
 ) -> None:
-    """Materialize the accepted-corpus dedup index (the ``write_ann_index``
-    twin for MinHash): built ONCE per corpus snapshot so each ingest batch
-    pays O(|delta|), never an O(corpus) signature recompute. Two tables:
+    """Materialize the accepted-corpus MinHash dedup index: built ONCE per
+    corpus snapshot so each ingest batch pays O(|delta|), never an
+    O(corpus) signature recompute. Two tables:
 
     - ``{table}_sigs``: (id, fp=md5(lower(text)), mh0..mhN-1), bucketed by
       ``id_col`` — the exact-dup fingerprint set and the index side of the
@@ -819,23 +714,9 @@ def write_signature_index(
       shuffles only the delta's band rows; the index band table is read
       pre-clustered.
 
-    ``bucketBy`` requires a catalog table (``saveAsTable``); pass ``path``
-    to make it external. Overwrites any prior snapshot of the same name —
-    including a STALE WAREHOUSE LOCATION left by a previous session: with
-    the default in-memory catalog the table metadata dies with the
-    session but its files persist, and ``saveAsTable`` then fails with
-    LOCATION_ALREADY_EXISTS; the leftover directory is deleted first.
+    ``bucketBy`` requires a catalog table (``saveAsTable``); both tables
+    are external, written under ``path/sigs`` and ``path/bands``.
     """
-    spark = docs.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    for suffix in ("_sigs", "_bands"):
-        spark.sql(f"DROP TABLE IF EXISTS {table}{suffix}")
-        loc = hadoop_path(f"{warehouse}/{table}{suffix}")
-        fs = loc.getFileSystem(hconf)
-        if fs.exists(loc):
-            fs.delete(loc, True)
     # Fingerprints are the base (LEFT join): a doc too short to shingle
     # still has an exact-dup fingerprint; its mh columns stay null, and a
     # null band_key (concat of nulls) can never equi-join — so it is
@@ -852,14 +733,13 @@ def write_signature_index(
         id_col,
         "left",
     )
-    sw = (
+    (
         sigs.write.mode("overwrite")
         .format("parquet")
         .bucketBy(num_file_buckets, id_col)
+        .option("path", f"{path}/sigs")
+        .saveAsTable(f"{table}_sigs")
     )
-    if path is not None:
-        sw = sw.option("path", f"{path}/sigs")
-    sw.saveAsTable(f"{table}_sigs")
 
     # Re-read the materialized signatures so band derivation scans the
     # 12-hash-column parquet, not the raw corpus text a second time.
@@ -869,14 +749,13 @@ def write_signature_index(
         band_size=band_size,
         id_col=id_col,
     )
-    bw = (
+    (
         bands.write.mode("overwrite")
         .format("parquet")
         .bucketBy(num_file_buckets, "band_id", "band_key")
+        .option("path", f"{path}/bands")
+        .saveAsTable(f"{table}_bands")
     )
-    if path is not None:
-        bw = bw.option("path", f"{path}/bands")
-    bw.saveAsTable(f"{table}_bands")
 
 
 def ngram_fingerprints(

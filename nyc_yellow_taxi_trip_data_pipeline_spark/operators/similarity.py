@@ -27,7 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.functions.vector import dot_product, l2_norm
-from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 
 
 def as_double(col: str = "embedding") -> Column:
@@ -361,134 +360,13 @@ def ivf_topk(
     )
 
 
-def srp_bucket_of(vec, n_planes: int = 8, scale: int = 1000000) -> int:
-    """Driver-side SRP bucket of one vector — the pure-Python twin of
-    ``srp_buckets``'s Spark expression (same md5-seeded ±1 planes, same
-    floor(v*scale+0.5) quantization, same integer accumulation), so a
-    query vector's bucket can be computed without a Spark job and used as
-    a literal pushdown filter against the bucketed index table."""
-    signs = _plane_signs(n_planes, len(vec))
-    import math
-
-    vq = [math.floor(float(v) * scale + 0.5) for v in vec]
-    bucket = 0
-    for p in range(n_planes):
-        acc = sum(v * s for v, s in zip(vq, signs[p]))
-        if acc >= 0:
-            bucket |= 1 << p
-    return bucket
-
-
-def write_ann_index(
-    emb: DataFrame,
-    table: str,
-    n_planes: int = 8,
-    num_file_buckets: int = 16,
-    id_col: str = "vec_id",
-    path: str | None = None,
-) -> None:
-    """Materialize the SRP-bucketed ANN index: vectors + bucket column,
-    written ``bucketBy(num_file_buckets, "bucket")`` so an equality filter
-    on ``bucket`` scans only the matching file bucket (Spark bucket
-    pruning — `SelectedBucketsCount: 1 out of N` in the plan) instead of
-    the full corpus. This is the scale path ``ann_candidates`` narrates:
-    build once per corpus snapshot, then every query reads ~1/2^n_planes
-    of the data with no shuffle and no full scan.
-
-    ``bucketBy`` requires a catalog table (``saveAsTable``); pass ``path``
-    to make it external. A stale warehouse location from a dead session
-    (in-memory catalog: metadata dies, files persist) is deleted first so
-    ``saveAsTable`` cannot fail with LOCATION_ALREADY_EXISTS."""
-    spark = emb.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = spark._jvm.org.apache.hadoop.fs.Path(  # noqa: SLF001
-        f"{spark.conf.get('spark.sql.warehouse.dir')}/{table}"
-    )
-    fs = loc.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    if fs.exists(loc):
-        fs.delete(loc, True)
-    buckets = srp_buckets(emb, n_planes=n_planes, id_col=id_col)
-    with_bucket = emb.join(buckets, id_col)
-    writer = (
-        with_bucket.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_file_buckets, "bucket")
-        .sortBy("bucket")
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def bucket_pruned_scan(spark):
-    """Scope ``autoBucketedScan=false`` around building AND executing a
-    filter-only read of a bucketed table.
-
-    Without a join/agg over the bucket key, Spark's planner deems the
-    bucketed scan unnecessary ("Bucketed: false (disabled by query
-    planner)") and drops bucket-file pruning with it — verified on this
-    Spark even when the query carries a literal bucket filter. The conf is
-    consumed at PHYSICAL planning (execution) time, so it must still be
-    off when the action runs; this context manager makes that scoping
-    explicit and restores the caller's value afterwards instead of
-    mutating the shared session permanently.
-    """
-    return scoped_conf(
-        spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
-    )
-
-
-def ann_query_bucketed(
-    spark,
-    table: str,
-    query_vec,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ANN top-k against a ``write_ann_index`` table. The query's bucket is
-    computed driver-side (``srp_bucket_of`` — no Spark job), so the scan
-    carries a literal ``bucket = b`` filter that bucket-prunes to one file
-    bucket (``SelectedBucketsCount: 1 out of N``); exact cosine then
-    scores only that bucket's vectors.
-
-    IMPORTANT: execute the returned DataFrame inside
-    ``with bucket_pruned_scan(spark):`` — Spark's planner otherwise
-    disables the bucketed scan for filter-only reads and the literal
-    filter degrades to a rowgroup-stat pushdown (correct results, full
-    file listing). Results are identical either way; only the scan
-    pruning differs."""
-    qb = srp_bucket_of(query_vec, n_planes=n_planes)
-    qv = F.array(*[F.lit(float(v)) for v in query_vec])
-    qn = sum(float(v) * float(v) for v in query_vec) ** 0.5
-    return (
-        spark.table(table)
-        .filter(F.col("bucket") == qb)
-        .select(
-            id_col,
-            "label",
-            "bucket",
-            F.round(
-                _cosine_from_norms(
-                    dot_product(as_double(), qv),
-                    l2_norm(as_double()),
-                    F.lit(qn),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def ann_candidates(
     emb: DataFrame, query_vec_id: int = 0, n_planes: int = 8, id_col: str = "vec_id"
 ) -> DataFrame:
-    """ANN search: restrict exact cosine scoring to the query's SRP bucket,
-    computing buckets inline (for a stored corpus, ``write_ann_index`` +
-    ``ann_query_bucketed`` is the scale path — the bucket filter then
-    prunes at the file level instead of post-scan)."""
+    """ANN search: restrict exact cosine scoring to the query's SRP bucket.
+    Buckets come from ``srp_buckets`` over the whole input; the query
+    row's bucket and vector join back as a broadcast, so only vectors
+    sharing the query's bucket are scored."""
     buckets = srp_buckets(emb, n_planes=n_planes, id_col=id_col)
     with_bucket = emb.join(buckets, id_col)
     qb = with_bucket.filter(F.col(id_col) == query_vec_id).select(

@@ -3,7 +3,6 @@
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
     read_csv,
     read_jdbc,
-    read_parquet,
     read_table,
     schema_to_ddl,
     write_jdbc_append,
@@ -13,7 +12,6 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
 __all__ = [
     "read_csv",
     "read_jdbc",
-    "read_parquet",
     "read_table",
     "schema_to_ddl",
     "write_jdbc_append",

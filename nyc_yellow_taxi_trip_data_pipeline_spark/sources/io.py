@@ -2,7 +2,8 @@
 
 Covers the reference's I/O surface (SURVEY.md §2.1) re-expressed natively:
 
-- S1  Parquet scan        -> spark.read.parquet (vectorized reader, pushdown)
+- S1  Parquet scan        -> read_table (session-memoized spark.read.parquet;
+                             vectorized reader, pushdown)
 - S3  JDBC scan           -> spark.read.format("jdbc") with *partitioned*
                              reads (the reference reads single-partition,
                              sparkML.py:40-46 — a scan bottleneck at scale)
@@ -41,11 +42,6 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan; Catalyst pushes filters/pruning into the reader."""
-    return spark.read.parquet(path)
 
 
 def _nanos_ts_to_micros(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -287,55 +283,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """CSV sink with header (reference featureEngineering.ipynb cell 5
     writes sampled test rows via pandas to_csv)."""
     df.write.mode(mode).option("header", "true").csv(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Table-maintenance compaction: rewrite a parquet directory into
-    ``target_files`` files (coalesce — no shuffle), optionally sorting
-    within partitions so rowgroup min/max stats enable data skipping on
-    the sort keys. Streaming sinks and parallel writers produce small
-    files; periodic compaction keeps scan task counts sane at 100 TB.
-
-    Returns the row count written. Writes to a sibling temp dir then
-    swaps via Hadoop FileSystem renames, so it runs on any
-    HDFS-compatible store (local, HDFS; on S3A "rename" is a copy, so
-    prefer a table format there) and a failed compaction never corrupts
-    the table. Concurrent readers must tolerate the brief swap window in
-    which the live path is the freshly-renamed new table (directory
-    renames are atomic on HDFS/local, but a reader that listed files
-    before the swap can still see deleted-file errors) — compaction of a
-    live table without any swap window requires a snapshot table format
-    (Delta/Iceberg), out of scope here.
-    """
-    import uuid
-
-    df = spark.read.parquet(path)
-    n = df.count()
-    out = df.coalesce(target_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{path.rstrip('/')}__compact_{token}"
-    out.write.mode("overwrite").parquet(tmp)
-    # Swap via rename-old-aside -> move-new-in -> delete-old: the live
-    # path is never absent-with-no-backup, so a crash mid-swap leaves
-    # either the old or the new table recoverable on disk.
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path
-    fs = jpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    old = f"{path.rstrip('/')}__old_{token}"
-    if not fs.rename(jpath(path), jpath(old)):
-        raise IOError(f"compaction swap: rename {path} -> {old} failed")
-    if not fs.rename(jpath(tmp), jpath(path)):
-        fs.rename(jpath(old), jpath(path))  # restore the original table
-        raise IOError(f"compaction swap: rename {tmp} -> {path} failed")
-    fs.delete(jpath(old), True)
-    return n
 
 
 def write_parquet(

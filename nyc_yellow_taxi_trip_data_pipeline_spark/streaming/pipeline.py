@@ -18,7 +18,7 @@ stateless; this layer keeps its exact pipeline shape but:
 - runs every bounded replay of the query inventory through one harness
   (``replay_query``, ``drain_to_memory``, ``replay_files``,
   ``replay_phases``), so starting, draining, stopping, staging and the
-  scratch directories' lifetime live in one place.
+  lifetime of the scratch and checkpoint directories live in one place.
 """
 
 from __future__ import annotations
@@ -175,8 +175,16 @@ def replay_query(
 ) -> Iterator[StreamingQuery]:
     """Run one bounded replay: start ``writer`` under ``state_partitions``
     state partitions and yield the running query; on exit, failures
-    included, stop it, unload the state stores and restore
-    ``spark.sql.shuffle.partitions`` (``session.scoped_conf``).
+    included, stop it, unload the state stores, restore
+    ``spark.sql.shuffle.partitions`` (``session.scoped_conf``) and remove
+    its checkpoint.
+
+    The checkpoint lives in a fresh ``tempfile`` directory (``TMPDIR``
+    decides where), the outermost scope, so it is removed after the
+    query stops and its state stores unload. Without an explicit
+    ``checkpointLocation`` Spark would create one under
+    ``java.io.tmpdir`` (which ignores ``TMPDIR``) and keep it when the
+    query fails.
 
     A streaming query locks its state-partition count to the shuffle
     partition number in effect at ``start()`` and keeps one state-store
@@ -199,8 +207,10 @@ def replay_query(
     passes more; the probe that decides each replay's count is
     ``plans/r18/probe_replay_partitions.txt``."""
     shuffle = {"spark.sql.shuffle.partitions": str(state_partitions)}
-    with scoped_conf(spark, shuffle):
-        query = writer.start()
+    with tempfile.TemporaryDirectory(
+        prefix="ckpt_", ignore_cleanup_errors=True
+    ) as checkpoint, scoped_conf(spark, shuffle):
+        query = writer.option("checkpointLocation", checkpoint).start()
         try:
             yield query
         finally:
@@ -355,48 +365,6 @@ def foreach_batch_jdbc_writer(
             batch_df.unpersist()
 
     return write_batch
-
-
-def running_totals_stateful(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-key running
-    count and sum that survive across micro-batches (the stateful surface
-    the reference never uses; state is per-key and watermark-free here, so
-    callers must bound key cardinality — at scale, prefer windowed aggs
-    unless true cross-batch state is required).
-
-    Emits one row per key per micro-batch it appears in:
-    (key, events_so_far, sum_so_far).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: "GroupState"):
-        # Self-contained closure: executor workers can't import this repo.
-        import pandas as pd
-
-        # GroupState.get is a property (raises if no state), not a method
-        total_n, total_v = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            total_n += len(pdf)
-            total_v += float(pdf["value"].sum())
-        state.update((total_n, total_v))
-        yield pd.DataFrame(
-            {"key": [key[0]], "events_so_far": [total_n], "sum_so_far": [total_v]}
-        )
-
-    renamed = events.select(
-        F.col(key_col).alias("key"), F.col(value_col).alias("value")
-    )
-    return renamed.groupBy("key").applyInPandasWithState(
-        update,
-        outputStructType="key long, events_so_far long, sum_so_far double",
-        stateStructType="n long, v double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def sessionize_stateful(

@@ -12,6 +12,7 @@ def test_plans_executed_inside_the_block_are_caught(spark):
     with _executed_plans(spark) as executed:
         rows = probe.collect()
     spark.range(10).count()  # executed after the block: not caught
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     assert rows[0].s == sum(i for i in range(1000) if i % 7 == 3)
     assert [action for action, _ in executed] == ["collectToPython"]
     plan = executed[0][1]

@@ -12,7 +12,6 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.operators.transforms import (
     clean_trips,
     filter_iqr_outliers,
 )
-from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import compact_parquet
 
 
 @pytest.fixture(scope="module")
@@ -59,19 +58,6 @@ def test_iqr_filter_constant_column(spark):
     df = spark.createDataFrame([(5.0,)] * 10, "x double")
     # IQR = 0 -> fences collapse to the constant; all rows survive
     assert filter_iqr_outliers(df, "x").count() == 10
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    spark.range(0, 1000).repartition(16).write.parquet(path)
-    import glob
-
-    before = len(glob.glob(f"{path}/part-*"))
-    n = compact_parquet(spark, path, target_files=2, sort_within_by=["id"])
-    after = len(glob.glob(f"{path}/part-*"))
-    assert n == 1000
-    assert before >= 16 and after <= 2
-    assert spark.read.parquet(path).count() == 1000
 
 
 def test_unicode_text_md5_and_bytes_portable(spark):

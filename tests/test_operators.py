@@ -258,29 +258,10 @@ def test_connected_components_empty(spark):
     assert dd.connected_components(pairs).count() == 0
 
 
-def test_star_cc_path_graph_beyond_minprop_budget(spark):
-    """The shape the star variant exists for: a PATH graph whose
-    diameter exceeds min-propagation's hop budget. Min-propagation must
-    refuse loudly (its documented contract); star contraction converges
-    in O(log^2 n) rounds and labels the whole chain with node 0."""
-    n = 64
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(pairs, max_iters=3).collect()
-    got = {
-        r.node: r.cluster
-        for r in dd.connected_components_star(pairs).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
-
-
 def test_star_cc_matches_minprop_on_mixed_graph(spark):
-    """Both algorithms implement the same contract: identical
-    (node -> min-of-component) labels on a graph mixing a chain, a
-    clique, an isolated pair, reversed/duplicate edges and a
-    self-loop."""
+    """Min-propagation labels every node with the minimum id of its
+    component on a graph mixing a chain, a clique, an isolated pair,
+    reversed/duplicate edges, a self-loop and a cycle."""
     raw = (
         [(1, 2), (2, 3), (3, 4), (4, 3)]          # chain + reversed dup
         + [(10, 11), (11, 12), (10, 12)]           # clique
@@ -288,54 +269,15 @@ def test_star_cc_matches_minprop_on_mixed_graph(spark):
         + [(30, 31), (31, 32), (32, 33), (30, 33)] # cycle
     )
     pairs = spark.createDataFrame(raw, "doc_a long, doc_b long")
-    minprop = {
+    got = {
         r.node: r.cluster for r in dd.connected_components(pairs).collect()
     }
-    star = {
-        r.node: r.cluster
-        for r in dd.connected_components_star(pairs).collect()
+    assert got == {
+        1: 1, 2: 1, 3: 1, 4: 1,
+        10: 10, 11: 10, 12: 10,
+        20: 20, 21: 20,
+        30: 30, 31: 30, 32: 30, 33: 30,
     }
-    assert star == minprop
-    assert star[33] == 30 and star[4] == 1 and star[21] == 20
-
-
-def test_star_cc_random_graphs_property(spark):
-    """Property check against a driver-side union-find oracle on seeded
-    pseudo-random graphs (md5-derived edges — no RNG state, CLAUDE
-    portability discipline)."""
-    import hashlib
-
-    def h(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    for seed in ("g1", "g2", "g3"):
-        n = 40
-        edges = [
-            (h(f"{seed}:a{i}") % n, h(f"{seed}:b{i}") % n)
-            for i in range(60)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        # Driver-side union-find oracle.
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = {a for e in edges for a in e}
-        want = {x: find(x) for x in sorted(touched)}
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {
-            r.node: r.cluster
-            for r in dd.connected_components_star(pairs).collect()
-        }
-        assert got == want, f"seed {seed}"
 
 
 def test_binned_lookback_join_boundaries(spark):

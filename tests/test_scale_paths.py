@@ -91,59 +91,6 @@ def test_salted_agg_equals_direct(spark):
     assert salted == direct
 
 
-def test_ann_bucketed_index_prunes_to_one_bucket(spark):
-    """write_ann_index + ann_query_bucketed: the literal bucket filter must
-    bucket-prune the scan (SelectedBucketsCount: 1 out of N), and the
-    pruned result must equal the inline (full-scan) ANN path."""
-    import numpy as np
-
-    from nyc_yellow_taxi_trip_data_pipeline_spark.operators import similarity as sim
-
-    rng = np.random.default_rng(7)
-    rows = [
-        (i, "blk", [float(x) for x in rng.normal(size=8)]) for i in range(200)
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, label string, embedding array<double>"
-    )
-    table = "ann_index_test"
-    try:
-        sim.write_ann_index(emb, table, n_planes=4, num_file_buckets=8)
-
-        query = rows[0][2]
-        got = sim.ann_query_bucketed(
-            spark, table, query, k=5, n_planes=4
-        )
-        # Pruning requires the scoped conf at physical-planning time; the
-        # context manager restores the session value afterwards.
-        with sim.bucket_pruned_scan(spark):
-            plan = got._jdf.queryExecution().executedPlan().toString()
-            assert "SelectedBucketsCount: 1 out of 8" in plan, plan
-            got_rows = [
-                (r.vec_id, r.cosine_sim) for r in got.collect() if r.vec_id != 0
-            ]
-        assert (
-            spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-            == "true"
-        ), "bucket_pruned_scan must restore the session conf"
-
-        # driver-side bucket math is bit-identical to the Spark expression
-        spark_buckets = {
-            r.vec_id: r.bucket
-            for r in sim.srp_buckets(emb, n_planes=4).collect()
-        }
-        py_buckets = {i: sim.srp_bucket_of(v, n_planes=4) for i, _, v in rows}
-        assert spark_buckets == py_buckets
-
-        # pruned result == inline ANN path restricted to the same bucket
-        inline = sim.ann_candidates(emb, query_vec_id=0, n_planes=4).limit(5)
-        inline_rows = [(r.vec_id, r.cosine_sim) for r in inline.collect()]
-        # got includes vec_id 0 itself (cosine 1.0 with its own vector)
-        assert got_rows == inline_rows[: len(got_rows)]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_no_nested_loop_joins_in_scale_paths(spark):
     """The queries that join at data scale must plan hash/sort-merge or
     broadcast-hash joins — a BroadcastNestedLoopJoin or CartesianProduct

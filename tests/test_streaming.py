@@ -172,57 +172,6 @@ def test_foreach_batch_collects_batches(spark, trip_json_dir):
     assert sum(n for _, n in seen) == 2
 
 
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    """applyInPandasWithState keeps per-key state across micro-batches."""
-    import json as _json
-
-    from nyc_yellow_taxi_trip_data_pipeline_spark.streaming.pipeline import (
-        running_totals_stateful,
-    )
-
-    events_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    d = tmp_path / "state_in"
-    d.mkdir()
-    (d / "b0.json").write_text(
-        "\n".join(
-            _json.dumps(r)
-            for r in [
-                {"user_id": 1, "value": 10.0},
-                {"user_id": 1, "value": 5.0},
-                {"user_id": 2, "value": 1.0},
-            ]
-        )
-    )
-    stream = read_stream(spark, "json", schema=events_schema, path=str(d))
-    totals = running_totals_stateful(stream, key_col="user_id")
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("state_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second micro-batch: user 1 adds more -> state must accumulate
-        (d / "b1.json").write_text(_json.dumps({"user_id": 1, "value": 7.0}))
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT * FROM state_out ORDER BY events_so_far"
-        ).collect()
-    finally:
-        q.stop()
-    by_key = {}
-    for r in rows:  # last emission per key wins
-        by_key[r.key] = (r.events_so_far, r.sum_so_far)
-    assert by_key[1] == (3, 22.0)  # 2 events + 1 event across batches
-    assert by_key[2] == (1, 1.0)
-
-
 def test_stateful_sessionize_across_batches(spark, tmp_path):
     """sessionize_stateful: gap logic inside a batch AND across batches —
     an event within 30 min of the previous batch's last event must extend
@@ -765,6 +714,47 @@ def test_replay_query_failing_query_still_stops_unloads_and_restores(
         assert spark.conf.get(key) == "7"
 
 
+def test_replay_query_checkpoint_lives_under_tempdir_and_is_removed(
+    spark, trip_json_dir, tmp_path, monkeypatch
+):
+    """Each replay checkpoints into its own ``tempfile`` directory, not
+    Spark's ``java.io.tmpdir`` default; it holds the query's offsets and
+    state while the block runs and is removed after a normal exit and
+    after a failure inside the block."""
+    import os
+    import tempfile
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    stream = read_stream(spark, "json", schema=TRIP_SCHEMA, path=trip_json_dir)
+    agg = stream.groupBy("passenger_count").count()
+
+    def writer(name):
+        return (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+        )
+
+    with replay_query(spark, writer("ckpt_ok")) as q:
+        q.processAllAvailable()
+        (checkpoint,) = os.listdir(scratch)
+        assert checkpoint.startswith("ckpt_")
+        assert {"offsets", "state"} <= set(
+            os.listdir(scratch / checkpoint)
+        )
+    assert os.listdir(scratch) == []
+    assert spark.table("ckpt_ok").count() == 2
+
+    with pytest.raises(RuntimeError, match="drain failed"):
+        with replay_query(spark, writer("ckpt_fail")) as q:
+            q.processAllAvailable()
+            assert len(os.listdir(scratch)) == 1
+            raise RuntimeError("drain failed")
+    assert os.listdir(scratch) == []
+
+
 def _replay_dirs(root) -> list[str]:
     import glob
 
@@ -880,7 +870,8 @@ def test_only_pipeline_module_spells_the_replay_protocol():
     and never start a query, unload state stores or set a file-stream
     trigger size themselves. Their transient directories come from
     ``tempfile`` context managers, never ``mkdtemp`` + ``rmtree`` or a
-    literal ``/tmp`` path (which ignores ``TMPDIR``)."""
+    literal ``/tmp`` path (which ignores ``TMPDIR``), and ``replay_query``
+    owns every replay's checkpoint directory."""
     import pathlib
 
     plans = pathlib.Path(__file__).resolve().parent.parent / (
@@ -893,6 +884,7 @@ def test_only_pipeline_module_spells_the_replay_protocol():
         "mkdtemp",
         "rmtree(",
         '"/tmp/',
+        "checkpointLocation",
     )
     for module in ("datapipe.py", "analytics.py"):
         src = (plans / module).read_text()

@@ -56,7 +56,12 @@ def _executed_plans(spark):
     """Yield the list the plans executed inside the block are appended to.
     Listener events arrive on Spark's listener bus, so the bus is drained
     before registering (nothing earlier is caught) and before
-    unregistering (nothing from the block is missed)."""
+    unregistering (nothing from the block is missed).
+
+    py4j wraps a Python object in a new JVM proxy each time it crosses
+    the gateway, and ``unregister`` does not match a second proxy to the
+    first, so the listener is wrapped once and that one proxy is
+    registered and unregistered."""
     from pyspark.java_gateway import ensure_callback_server_started
 
     ensure_callback_server_started(spark.sparkContext._gateway)
@@ -64,14 +69,17 @@ def _executed_plans(spark):
     listener = _ExecutedPlans(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+    wrapped = spark._jvm.java.util.ArrayList()
+    wrapped.add(listener)
+    proxy = wrapped.get(0)
     manager = spark._jsparkSession.listenerManager()
     bus.waitUntilEmpty()
-    manager.register(listener)
+    manager.register(proxy)
     try:
         yield listener.plans
     finally:
         bus.waitUntilEmpty()
-        manager.unregister(listener)
+        manager.unregister(proxy)
 
 
 def main() -> None:
