@@ -56,10 +56,10 @@ def is_weekend(day_of_week: Column) -> Column:
     return day_of_week.isin(1, 7)
 
 
-def guarded_div(numer: Column, denom: Column, default: float = 0.0) -> Column:
-    """Division with a zero-denominator guard, e.g. fare_per_mile
+def guarded_div(numer: Column, denom: Column) -> Column:
+    """Division with a zero-denominator guard (0.0), e.g. fare_per_mile
     (reference sparkConsumer.py:96, deployment/main.py:44-45)."""
-    return F.when(denom == 0, F.lit(default)).otherwise(numer / denom)
+    return F.when(denom == 0, F.lit(0.0)).otherwise(numer / denom)
 
 
 def duration_minutes(start_ts: Column, end_ts: Column) -> Column:
@@ -75,16 +75,16 @@ def day_name(ts: Column) -> Column:
     return F.date_format(ts, "EEEE")
 
 
-def label_map(code: Column, mapping: Mapping[str, str], default: str = "Other") -> Column:
-    """Code→label CASE mapping with a fallback label (reference
+def label_map(code: Column, mapping: Mapping[str, str]) -> Column:
+    """Code→label CASE mapping with the fallback label 'Other' (reference
     1_EDA_Dashboard.py:107-117, payment-type names + fillna('Other'))."""
     expr: Column | None = None
     for key, label in mapping.items():
         cond = code == F.lit(key)
         expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
     if expr is None:
-        return F.lit(default)
-    return expr.otherwise(F.lit(default))
+        return F.lit("Other")
+    return expr.otherwise(F.lit("Other"))
 
 
 PAYMENT_TYPE_LABELS: dict[str, str] = {

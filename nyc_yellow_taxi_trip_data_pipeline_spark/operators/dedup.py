@@ -18,6 +18,10 @@ Designed for the 100 TB training-data path:
 Determinism/portability: hash functions are md5-based (string-min MinHash,
 hex-digit SimHash) so any engine reproduces identical signatures — no
 engine-specific murmur seeds.
+
+Column contract: documents are (doc_id, text[, source]) rows, the
+``documents`` table's schema; every pair output is (doc_a, doc_b) with
+doc_a < doc_b for the symmetric forms.
 """
 
 from __future__ import annotations
@@ -25,27 +29,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Candidate-pair count up to which the verification helpers broadcast the
+#: candidate keys and pairs; above it they run spill-safe sort-merge joins.
+_BROADCAST_CAP = 2_000_000
 
-def tokenize_distinct(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, word) pairs, distinct — the set representation of each doc."""
+
+def tokenize_distinct(df: DataFrame) -> DataFrame:
+    """(doc_id, w) pairs, distinct — the set representation of each doc."""
     return (
-        df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("w"))
+        df.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
         .distinct()
     )
 
 
-def shingle_distinct(
-    df: DataFrame, n: int = 2, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, n-gram shingle) pairs, distinct. Word n-grams via a native
+def shingle_distinct(df: DataFrame, n: int = 2) -> DataFrame:
+    """(doc_id, n-gram shingle) pairs, distinct. Word n-grams via a native
     higher-order transform over the split array (1-indexed element_at, so
     the same expression is portable SQL)."""
     parts = " || ' ' || ".join(f"element_at(w, i + {j})" for j in range(n))
     return (
-        df.select(id_col, F.split(F.col(text_col), " ").alias("w"))
+        df.select("doc_id", F.split(F.col("text"), " ").alias("w"))
         .filter(F.size("w") >= n)
         .select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.expr(f"transform(sequence(1, size(w) - {n - 1}), i -> {parts})")
             ).alias("shingle"),
@@ -54,12 +60,10 @@ def shingle_distinct(
     )
 
 
-def exact_dedup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate groups: canonical (min) id + copy count per text."""
-    return df.groupBy(text_col).agg(
-        F.min(id_col).alias("canonical_id"), F.count("*").alias("n_copies")
+    return df.groupBy("text").agg(
+        F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies")
     )
 
 
@@ -77,9 +81,7 @@ def dedup_keep_first(
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_hashes: int = 12, id_col: str = "doc_id"
-) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, n_hashes: int = 12) -> DataFrame:
     """Per-doc MinHash signature: for each hash i, the minimum of
     md5(i || ':' || shingle) over the doc's shingle set. String-min of a
     cryptographic hex digest is a valid uniform min-hash and is exactly
@@ -88,13 +90,11 @@ def minhash_signatures(
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh{i}")
         for i in range(n_hashes)
     ]
-    return shingles.groupBy(id_col).agg(*aggs)
+    return shingles.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_bands(
-    sigs: DataFrame, n_hashes: int = 12, band_size: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
-    """Long-format (id, band_id, band_key): signature rows sliced into
+def lsh_bands(sigs: DataFrame, n_hashes: int = 12, band_size: int = 2) -> DataFrame:
+    """Long-format (doc_id, band_id, band_key): signature rows sliced into
     bands of ``band_size`` concatenated hashes. ``n_hashes`` must divide
     evenly into bands — a silent remainder would quietly weaken recall."""
     if n_hashes % band_size != 0:
@@ -114,14 +114,12 @@ def lsh_bands(
             for b in range(n_bands)
         ]
     )
-    return sigs.select(id_col, F.explode(bands).alias("b")).select(
-        id_col, F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key")
+    return sigs.select("doc_id", F.explode(bands).alias("b")).select(
+        "doc_id", F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key")
     )
 
 
-def lsh_candidate_pairs(
-    bands: DataFrame, id_col: str = "doc_id", max_bucket: int | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(bands: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one band — the
     equi-join that replaces the quadratic all-pairs comparison.
 
@@ -149,12 +147,8 @@ def lsh_candidate_pairs(
             .filter(F.col("__bn") <= max_bucket)
             .drop("__bn")
         )
-    a = bands.select(
-        F.col(id_col).alias("doc_a"), "band_id", "band_key"
-    )
-    b = bands.select(
-        F.col(id_col).alias("doc_b"), "band_id", "band_key"
-    )
+    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
+    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
     return (
         a.join(b, ["band_id", "band_key"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -163,22 +157,18 @@ def lsh_candidate_pairs(
     )
 
 
-def _candidate_docs(pairs: DataFrame, id_col: str) -> DataFrame:
+def _candidate_docs(pairs: DataFrame) -> DataFrame:
     """Distinct doc ids appearing on either side of the candidate pairs —
     the key set every verification join is restricted to."""
     return (
-        pairs.select(F.col("doc_a").alias(id_col))
-        .union(pairs.select(F.col("doc_b").alias(id_col)))
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
 
 
 def jaccard_on_pairs(
-    pairs: DataFrame,
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    pairs_count: int | None = None,
-    broadcast_cap: int = 2_000_000,
+    pairs: DataFrame, shingles: DataFrame, pairs_count: int | None = None
 ) -> DataFrame:
     """EAGER when ``pairs_count`` is None: plan CONSTRUCTION then runs
     Spark jobs (localCheckpoint + count on ``pairs``) — pass
@@ -202,7 +192,7 @@ def jaccard_on_pairs(
     shuffling the whole corpus.
 
     ``pairs_count`` (cheap on a localCheckpointed candidate set) selects
-    the strategy: at or under ``broadcast_cap`` the candidate keys and
+    the strategy: at or under ``_BROADCAST_CAP`` the candidate keys and
     pair list are broadcast (the semi-join and first verify join run
     map-side over the corpus scan — zero corpus shuffle); above it
     everything runs as sort-merge joins (SMJ spills; a shuffled-hash
@@ -217,8 +207,8 @@ def jaccard_on_pairs(
     if pairs_count is None:
         pairs = pairs.localCheckpoint(eager=True)
         pairs_count = pairs.count()
-    small = pairs_count <= broadcast_cap
-    docs_in = _candidate_docs(pairs, id_col)
+    small = pairs_count <= _BROADCAST_CAP
+    docs_in = _candidate_docs(pairs)
     if small:
         docs_in = F.broadcast(docs_in)
     # The restricted shingle table feeds THREE subtrees (sizes + both
@@ -228,12 +218,12 @@ def jaccard_on_pairs(
     # shingles/doc) and the checkpoint is executor-local disk-backed,
     # so the pin stays safe on the SMJ path too — it trades one bounded
     # write for two corpus-wide recomputes.
-    r = shingles.join(docs_in, id_col, "left_semi").localCheckpoint(
+    r = shingles.join(docs_in, "doc_id", "left_semi").localCheckpoint(
         eager=True
     )
-    sizes = r.groupBy(id_col).agg(F.count("*").alias("n"))
-    sa = r.select(F.col(id_col).alias("doc_a"), "shingle")
-    sb = r.select(F.col(id_col).alias("doc_b"), "shingle")
+    sizes = r.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sa = r.select(F.col("doc_id").alias("doc_a"), "shingle")
+    sb = r.select(F.col("doc_id").alias("doc_b"), "shingle")
     p = F.broadcast(pairs) if small else pairs.hint("merge")
     inter = (
         p.join(sa, "doc_a")
@@ -241,8 +231,8 @@ def jaccard_on_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_common"))
     )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     if small:
         na, nb = F.broadcast(na), F.broadcast(nb)
     else:
@@ -267,9 +257,7 @@ def sig_agreement_filter(
     sigs: DataFrame,
     min_agree: int,
     n_hashes: int = 12,
-    id_col: str = "doc_id",
     pairs_count: int | None = None,
-    broadcast_cap: int = 2_000_000,
 ) -> DataFrame:
     """EAGER when ``pairs_count`` is None: plan CONSTRUCTION then runs
     Spark jobs (localCheckpoint + count on ``pairs``) — pass
@@ -296,7 +284,7 @@ def sig_agreement_filter(
     signature table is semi-joined down to candidate docs first (the
     un-restricted join picked the full signature table as a plan-time
     broadcast build from localCheckpoint's misleading stats — fatal at
-    100x corpus). ``pairs_count`` <= ``broadcast_cap`` broadcasts the
+    100x corpus). ``pairs_count`` <= ``_BROADCAST_CAP`` broadcasts the
     candidate keys/pairs (map-side over the signature scan); above,
     spill-safe sort-merge joins. A None ``pairs_count`` is measured
     here (eager localCheckpoint + count) — ``pairs`` feeds both the
@@ -306,20 +294,20 @@ def sig_agreement_filter(
     if pairs_count is None:
         pairs = pairs.localCheckpoint(eager=True)
         pairs_count = pairs.count()
-    small = pairs_count <= broadcast_cap
-    docs_in = _candidate_docs(pairs, id_col)
+    small = pairs_count <= _BROADCAST_CAP
+    docs_in = _candidate_docs(pairs)
     if small:
         docs_in = F.broadcast(docs_in)
     # sr feeds BOTH agreement-join sides; pin it so the corpus-wide
     # semi-join over the signature table runs once, not twice (same
     # rationale as jaccard_on_pairs' restricted-shingle pin).
-    sr = sigs.join(docs_in, id_col, "left_semi").localCheckpoint(eager=True)
+    sr = sigs.join(docs_in, "doc_id", "left_semi").localCheckpoint(eager=True)
     a = sr.select(
-        F.col(id_col).alias("doc_a"),
+        F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{i}").alias(f"__a{i}") for i in range(n_hashes)],
     )
     b = sr.select(
-        F.col(id_col).alias("doc_b"),
+        F.col("doc_id").alias("doc_b"),
         *[F.col(f"mh{i}").alias(f"__b{i}") for i in range(n_hashes)],
     )
     agree = None
@@ -331,7 +319,7 @@ def sig_agreement_filter(
     # The b side is ~25x wider than a pair row (n_hashes signature
     # strings), so its broadcast gets a 10x tighter bound; between the
     # two caps the join falls back to spill-safe sort-merge.
-    if small and pairs_count <= broadcast_cap // 10:
+    if small and pairs_count <= _BROADCAST_CAP // 10:
         b = F.broadcast(b)
     else:
         joined = joined.hint("merge")
@@ -348,8 +336,6 @@ def minhash_near_duplicates(
     n_hashes: int = 12,
     band_size: int = 2,
     shingle_n: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_bucket: int | None = None,
     sig_agree_min: int | None = None,
     sh: DataFrame | None = None,
@@ -361,7 +347,7 @@ def minhash_near_duplicates(
 
     ``sh`` / ``sigs`` optionally inject ALREADY-MATERIALIZED shingle /
     signature tables (they must have been built with the same
-    ``shingle_n`` / ``n_hashes`` / ``id_col`` — the caller owns that
+    ``shingle_n`` / ``n_hashes`` — the caller owns that
     consistency): a session that runs several pipelines over one corpus
     (symmetric near-dup + the delta-vs-index form) computes the two
     expensive base tables once and feeds every consumer, exactly as a
@@ -382,16 +368,11 @@ def minhash_near_duplicates(
     work). At cluster scale the same role is played by writing the
     shingle/signature tables to parquet once per corpus snapshot."""
     if sh is None:
-        sh = shingle_distinct(
-            df, n=shingle_n, id_col=id_col, text_col=text_col
-        ).localCheckpoint(eager=True)
+        sh = shingle_distinct(df, n=shingle_n).localCheckpoint(eager=True)
     if sigs is None:
-        sigs = minhash_signatures(
-            sh, n_hashes=n_hashes, id_col=id_col
-        ).localCheckpoint(eager=True)
+        sigs = minhash_signatures(sh, n_hashes=n_hashes).localCheckpoint(eager=True)
     cands = lsh_candidate_pairs(
-        lsh_bands(sigs, n_hashes=n_hashes, band_size=band_size, id_col=id_col),
-        id_col=id_col,
+        lsh_bands(sigs, n_hashes=n_hashes, band_size=band_size),
         max_bucket=max_bucket,
     )
     # Candidates are a small (doc_a, doc_b) set; pinning them stops the
@@ -409,23 +390,17 @@ def minhash_near_duplicates(
             sigs,
             sig_agree_min,
             n_hashes=n_hashes,
-            id_col=id_col,
             pairs_count=n_cands,
         ).localCheckpoint(eager=True)
         n_cands = cands.count()
-    return jaccard_on_pairs(
-        cands, sh, id_col=id_col, pairs_count=n_cands
-    ).filter(F.col("jaccard") >= threshold)
+    return jaccard_on_pairs(cands, sh, pairs_count=n_cands).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iters: int = 20,
-) -> DataFrame:
-    """Connected components over an undirected pair graph by iterative
-    hash-min label propagation: every node's label converges to the
+def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+    """Connected components over an undirected (doc_a, doc_b) pair graph by
+    iterative hash-min label propagation: every node's label converges to the
     MINIMUM node id in its component — the canonical-document assignment
     that turns near-dup PAIRS into dedup CLUSTERS.
 
@@ -444,8 +419,8 @@ def connected_components(
     singletons never enter the graph and keep themselves as canonical.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .union(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
         .distinct()
         .localCheckpoint(eager=True)  # materialize once; reused every round
     )
@@ -500,10 +475,9 @@ def connected_components(
     )
 
 
-def simhash16(
-    tokens: DataFrame, id_col: str = "doc_id", word_col: str = "w"
-) -> DataFrame:
-    """16-bit SimHash fingerprint per doc in ONE aggregation pass.
+def simhash16(tokens: DataFrame) -> DataFrame:
+    """16-bit SimHash fingerprint per doc in ONE aggregation pass, over
+    ``tokenize_distinct``'s (doc_id, w) rows.
 
     Each distinct token hashes to 16 bits (first 4 hex chars of md5); each
     bit contributes +1/−1 to a per-bit accumulator; fingerprint bit j is
@@ -513,7 +487,7 @@ def simhash16(
     # Hash once per token in a projection; the 16 bit-vote aggregates then
     # read the integer column (inlining the md5 into each aggregate would
     # recompute it 16x per row — Catalyst does not CSE across agg buffers).
-    hashed = tokens.withColumnRenamed(word_col, "w").withColumn(
+    hashed = tokens.withColumn(
         "__hw", F.expr("CAST(conv(substring(md5(w), 1, 4), 16, 10) AS BIGINT)")
     )
     sums = [
@@ -523,17 +497,15 @@ def simhash16(
         ).alias(f"s{j}")
         for j in range(16)
     ]
-    acc = hashed.groupBy(id_col).agg(*sums)
+    acc = hashed.groupBy("doc_id").agg(*sums)
     fp = None
     for j in range(16):
         bit = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
-    return acc.select(id_col, fp.cast("int").alias("simhash"))
+    return acc.select("doc_id", fp.cast("int").alias("simhash"))
 
 
-def simhash_fingerprints(
-    tokens: DataFrame, n_bits: int = 60, id_col: str = "doc_id", word_col: str = "w"
-) -> DataFrame:
+def simhash_fingerprints(tokens: DataFrame, n_bits: int = 60) -> DataFrame:
     """N-bit SimHash fingerprint per doc (generalized ``simhash16``).
 
     Fingerprint WIDTH is the scale dial for Hamming-LSH: band-bucket
@@ -547,7 +519,7 @@ def simhash_fingerprints(
     if n_bits % 4 != 0 or n_bits > 60:
         raise ValueError("n_bits must be a multiple of 4, at most 60")
     hex_chars = n_bits // 4
-    hashed = tokens.withColumnRenamed(word_col, "w").withColumn(
+    hashed = tokens.withColumn(
         "__hw",
         F.expr(
             f"CAST(conv(substring(md5(w), 1, {hex_chars}), 16, 10) AS BIGINT)"
@@ -560,12 +532,12 @@ def simhash_fingerprints(
         ).alias(f"s{j}")
         for j in range(n_bits)
     ]
-    acc = hashed.groupBy(id_col).agg(*sums)
+    acc = hashed.groupBy("doc_id").agg(*sums)
     fp = None
     for j in range(n_bits):
         bit = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
-    return acc.select(id_col, fp.cast("long").alias("simhash"))
+    return acc.select("doc_id", fp.cast("long").alias("simhash"))
 
 
 def simhash_near_duplicates(
@@ -573,7 +545,6 @@ def simhash_near_duplicates(
     n_bits: int = 60,
     n_bands: int = 4,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
     fp_col: str = "simhash",
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -606,7 +577,7 @@ def simhash_near_duplicates(
     bw = n_bits // n_bands
     mask = (1 << bw) - 1
     bands = fingerprints.select(
-        id_col,
+        "doc_id",
         fp_col,
         F.explode(
             F.array(
@@ -621,7 +592,7 @@ def simhash_near_duplicates(
                 ]
             )
         ).alias("b"),
-    ).select(id_col, fp_col, F.col("b.band_id"), F.col("b.band_key"))
+    ).select("doc_id", fp_col, F.col("b.band_id"), F.col("b.band_key"))
     if max_bucket is not None:
         w = Window.partitionBy("band_id", "band_key")
         bands = (
@@ -629,8 +600,8 @@ def simhash_near_duplicates(
             .filter(F.col("__bn") <= max_bucket)
             .drop("__bn")
         )
-    a = bands.select(F.col(id_col).alias("doc_a"), "band_id", "band_key")
-    b = bands.select(F.col(id_col).alias("doc_b"), "band_id", "band_key")
+    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
+    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
     cand = (
         a.join(b, ["band_id", "band_key"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -638,10 +609,10 @@ def simhash_near_duplicates(
         .distinct()
     )
     fa = fingerprints.select(
-        F.col(id_col).alias("doc_a"), F.col(fp_col).alias("__fa")
+        F.col("doc_id").alias("doc_a"), F.col(fp_col).alias("__fa")
     )
     fb = fingerprints.select(
-        F.col(id_col).alias("doc_b"), F.col(fp_col).alias("__fb")
+        F.col("doc_id").alias("doc_b"), F.col(fp_col).alias("__fb")
     )
     return (
         cand.join(fa, "doc_a")
@@ -660,7 +631,6 @@ def simhash_near_duplicates(
 def lsh_candidate_pairs_asymmetric(
     bands_query: DataFrame,
     bands_index: DataFrame,
-    id_col: str = "doc_id",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Asymmetric LSH candidate join: QUERY docs against an INDEX corpus
@@ -678,8 +648,8 @@ def lsh_candidate_pairs_asymmetric(
             .filter(F.col("__bn") <= max_bucket)
             .drop("__bn")
         )
-    a = bands_query.select(F.col(id_col).alias("doc_a"), "band_id", "band_key")
-    b = bands_index.select(F.col(id_col).alias("doc_b"), "band_id", "band_key")
+    a = bands_query.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
+    b = bands_index.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
     return (
         a.join(b, ["band_id", "band_key"])
         .select("doc_a", "doc_b")
@@ -693,9 +663,6 @@ def write_signature_index(
     n_hashes: int = 12,
     band_size: int = 3,
     num_file_buckets: int = 16,
-    shingle_n: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     *,
     path: str,
 ) -> None:
@@ -703,11 +670,12 @@ def write_signature_index(
     corpus snapshot so each ingest batch pays O(|delta|), never an
     O(corpus) signature recompute. Two tables:
 
-    - ``{table}_sigs``: (id, fp=md5(lower(text)), mh0..mhN-1), bucketed by
-      ``id_col`` — the exact-dup fingerprint set and the index side of the
-      signature-agreement verify (both join on id/fp; bucketing makes the
-      big index side shuffle-free in those joins).
-    - ``{table}_bands``: (id, band_id, band_key), bucketed by
+    - ``{table}_sigs``: (doc_id, fp=md5(lower(text)), mh0..mhN-1) over
+      word-bigram shingles, bucketed by ``doc_id`` — the exact-dup
+      fingerprint set and the index side of the signature-agreement
+      verify (both join on doc_id/fp; bucketing makes the big index side
+      shuffle-free in those joins).
+    - ``{table}_bands``: (doc_id, band_id, band_key), bucketed by
       (band_id, band_key) — the index side of the asymmetric candidate
       join. The bucket spec matches BOTH the join keys and the
       ``max_bucket`` cap window's partition keys, so the per-batch plan
@@ -722,21 +690,15 @@ def write_signature_index(
     # null band_key (concat of nulls) can never equi-join — so it is
     # exact-dup-checkable but never an LSH candidate, matching the
     # cold-path semantics where it simply has no signature row.
-    sigs = docs.select(
-        id_col, F.md5(F.lower(F.col(text_col))).alias("fp")
-    ).join(
-        minhash_signatures(
-            shingle_distinct(docs, n=shingle_n, id_col=id_col, text_col=text_col),
-            n_hashes=n_hashes,
-            id_col=id_col,
-        ),
-        id_col,
+    sigs = docs.select("doc_id", F.md5(F.lower(F.col("text"))).alias("fp")).join(
+        minhash_signatures(shingle_distinct(docs, n=2), n_hashes=n_hashes),
+        "doc_id",
         "left",
     )
     (
         sigs.write.mode("overwrite")
         .format("parquet")
-        .bucketBy(num_file_buckets, id_col)
+        .bucketBy(num_file_buckets, "doc_id")
         .option("path", f"{path}/sigs")
         .saveAsTable(f"{table}_sigs")
     )
@@ -747,7 +709,6 @@ def write_signature_index(
         docs.sparkSession.table(f"{table}_sigs"),
         n_hashes=n_hashes,
         band_size=band_size,
-        id_col=id_col,
     )
     (
         bands.write.mode("overwrite")
@@ -761,16 +722,14 @@ def write_signature_index(
 def ngram_fingerprints(
     df: DataFrame,
     n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, ng) rows: md5 fingerprints of every SLIDING lowercase word
+    """(doc_id, ng) rows: md5 fingerprints of every SLIDING lowercase word
     n-gram (stride 1 — unlike ``shingle_distinct``'s set semantics, kept
     per-position then deduplicated downstream where needed). The n-gram
     array is built by a map-only higher-order transform; only the 32-char
     md5 travels, never the n-gram text."""
-    w = F.split(F.lower(F.col(text_col)), " ")
+    w = F.split(F.lower(F.col("text")), " ")
     ngs = F.when(
         F.size(w) >= n,
         F.transform(
@@ -778,21 +737,18 @@ def ngram_fingerprints(
             lambda i: F.md5(F.array_join(F.slice(w, i, F.lit(n)), " ")),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return df.select(id_col, *extra_cols, F.explode(ngs).alias("ng"))
+    return df.select("doc_id", *extra_cols, F.explode(ngs).alias("ng"))
 
 
 def ngram_contamination(
     train: DataFrame,
     bench: DataFrame,
     n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
 ) -> DataFrame:
     """Benchmark decontamination at n-gram granularity (the GPT-3/Llama
     training-hygiene check): a train doc is contaminated if ANY of its
     sliding word n-grams appears verbatim in the benchmark set. Returns
-    one row per contaminated train doc: (id, group, n_hit = distinct
+    one row per contaminated train doc: (doc_id, source, n_hit = distinct
     benchmark n-grams it shares).
 
     Scale shape: benchmark suites are tiny next to a training corpus
@@ -803,15 +759,11 @@ def ngram_contamination(
     matching n-grams. Nothing in the plan scales with corpus x benchmark.
     """
     bench_ngs = (
-        ngram_fingerprints(bench, n=n, id_col=id_col, text_col=text_col)
-        .select("ng")
-        .distinct()
+        ngram_fingerprints(bench, n=n).select("ng").distinct()
     )
-    train_ngs = ngram_fingerprints(
-        train, n=n, id_col=id_col, text_col=text_col, extra_cols=(group_col,)
-    )
+    train_ngs = ngram_fingerprints(train, n=n, extra_cols=("source",))
     return (
         train_ngs.join(F.broadcast(bench_ngs), "ng")
-        .groupBy(id_col, group_col)
+        .groupBy("doc_id", "source")
         .agg(F.countDistinct("ng").alias("n_hit"))
     )

@@ -25,16 +25,17 @@ DECODED_SCHEMA = (
 )
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Demo payload: utf-8 bytes of the text column standing in for media
-    bytes; real pipelines read the bytes from parquet/object storage."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Demo payload: utf-8 bytes of the ``text`` column standing in for
+    media bytes; real pipelines read the bytes from parquet/object storage."""
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
-def payload_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Typed metadata derived JVM-side (no Python): size + a deterministic
-    pseudo-format tag — the cheap columns you filter on BEFORE decoding."""
-    size = F.octet_length(F.col(payload_col))
+def payload_metadata(df: DataFrame) -> DataFrame:
+    """Typed metadata derived JVM-side (no Python) from ``payload``: size +
+    a deterministic pseudo-format tag — the cheap columns you filter on
+    BEFORE decoding."""
+    size = F.octet_length(F.col("payload"))
     return df.withColumns(
         {
             "n_bytes": size.cast("long"),
@@ -45,7 +46,7 @@ def payload_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-def decode_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def decode_images(df: DataFrame) -> DataFrame:
     """Batch 'decode' via mapInPandas: Arrow-batched, partition-parallel.
 
     The iterator-of-batches shape is the real contract a codec UDF needs;
@@ -71,7 +72,7 @@ def decode_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             dims = [fake_decode(bytes(p)) for p in payloads]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": [len(bytes(p)) for p in payloads],
                     "format": pdf["media_format"],
                     "width": [d[0] for d in dims],
@@ -89,9 +90,7 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_images(
-    df: DataFrame, max_side: int = 256, id_col: str = "doc_id"
-) -> DataFrame:
+def resize_images(df: DataFrame, max_side: int = 256) -> DataFrame:
     """Aspect-preserving thumbnail 'resize' via mapInPandas.
 
     Input is the decoded frame table (doc_id, width, height, ...); output
@@ -114,7 +113,7 @@ def resize_images(
             scale = (100 * max_side // longer).clip(upper=100)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "width": w,
                     "height": h,
                     "out_width": w * scale // 100,
@@ -129,9 +128,7 @@ def resize_images(
 FRAMES_SCHEMA = "doc_id long, frame_idx int, n_frames int, frame_tag string"
 
 
-def sample_frames(
-    df: DataFrame, every_n: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int = 4) -> DataFrame:
     """Video frame sampling via mapInPandas — the ROW-EXPANDING batch shape
     (one input row -> one row per sampled frame), which is the contract a
     real video pipeline needs and the one shape decode/resize don't cover.
@@ -153,7 +150,7 @@ def sample_frames(
 
         for pdf in batches:
             ids, idxs, counts, tags = [], [], [], []
-            for doc_id, n_bytes in zip(pdf[id_col], pdf["n_bytes"]):
+            for doc_id, n_bytes in zip(pdf["doc_id"], pdf["n_bytes"]):
                 n = fake_frame_count(int(n_bytes))
                 for i in range(0, n, every_n):
                     ids.append(doc_id)
@@ -177,7 +174,7 @@ def sample_frames(
 AHASH_SCHEMA = "doc_id long, n_bytes long, ahash long, mean_px int"
 
 
-def phash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def phash_images(df: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) 'feature extraction' via mapInPandas
     — the media-dedup feature: near-identical images collide on (or sit a
     small Hamming distance from) the same hash.
@@ -212,7 +209,7 @@ def phash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ahash = (bits << np.arange(56, dtype="int64")[None, :]).sum(axis=1)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": n,
                     "ahash": ahash,
                     "mean_px": mean.astype("int32"),

@@ -15,6 +15,9 @@ Performance notes (measured at sf0.1):
 - SRP projections are a join-free projection: the ±1 hyperplanes are baked
   as literal arrays and folded with zip_with/aggregate, so bucketing is a
   map-only stage (no explode, no shuffle).
+
+Column contract: vectors are (vec_id, label, embedding) rows, the
+``embeddings`` table's schema.
 """
 
 from __future__ import annotations
@@ -28,6 +31,10 @@ from pyspark.sql import functions as F
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.functions.vector import dot_product, l2_norm
 
+#: Quantization scale of the IVF assignment: dim * (2 * scale * |v|max)^2
+#: must stay < 2^63, so every quantized distance is an exact int64 sum.
+_IVF_SCALE = 1000
+
 
 def as_double(col: str = "embedding") -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
@@ -38,21 +45,19 @@ def _cosine_from_norms(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.when(denom == 0, F.lit(None).cast("double")).otherwise(dot / denom)
 
 
-def brute_force_topk(
-    emb: DataFrame, query_vec_id: int = 0, k: int = 10, id_col: str = "vec_id"
-) -> DataFrame:
+def brute_force_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """Exact cosine top-k against one stored vector. Cosine is rounded to
     6 dp before ranking so the ordering itself is reproducible."""
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
+    q = emb.filter(F.col("vec_id") == query_vec_id).select(
         as_double().alias("qv")
     ).select("qv", l2_norm(F.col("qv")).alias("qn"))
-    e = emb.filter(F.col(id_col) != query_vec_id).select(
-        id_col, "label", as_double().alias("ev")
+    e = emb.filter(F.col("vec_id") != query_vec_id).select(
+        "vec_id", "label", as_double().alias("ev")
     )
     return (
         e.crossJoin(F.broadcast(q))
         .select(
-            id_col,
+            "vec_id",
             "label",
             F.round(
                 _cosine_from_norms(
@@ -63,16 +68,13 @@ def brute_force_topk(
                 6,
             ).alias("cosine_sim"),
         )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
 def blocked_neardup_topk(
-    emb: DataFrame,
-    k: int = 20,
-    block_col: str | list[str] = "label",
-    id_col: str = "vec_id",
+    emb: DataFrame, k: int = 20, block_col: str | list[str] = "label"
 ) -> DataFrame:
     """Most-similar within-block pairs (embedding near-dup detection).
 
@@ -117,7 +119,7 @@ def blocked_neardup_topk(
         import numpy as np
         import pandas as pd
 
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         e = np.stack([np.asarray(v, dtype="float64") for v in pdf["embedding"]])
         norms = np.sqrt((e * e).sum(axis=1))
         sims = (e @ e.T) / np.outer(norms, norms)
@@ -153,7 +155,7 @@ def blocked_neardup_topk(
         + ", vec_a long, vec_b long, cosine_raw double"
     )
     candidates = (
-        emb.select(id_col, *block_cols, "embedding")
+        emb.select("vec_id", *block_cols, "embedding")
         .groupBy(*block_cols)
         .applyInPandas(block_pairs, schema=schema)
     )
@@ -185,7 +187,6 @@ def _plane_signs(n_planes: int, dim: int) -> list[list[int]]:
 def srp_buckets(
     emb: DataFrame,
     n_planes: int = 8,
-    id_col: str = "vec_id",
     scale: int = 1000000,
     dim: int | None = None,
     extra_cols: tuple[str, ...] = (),
@@ -209,7 +210,7 @@ def srp_buckets(
         dim = emb.agg(F.max(F.size("embedding"))).first()[0]
     if dim is None:
         return emb.select(
-            id_col, *extra_cols, F.lit(0).cast("int").alias("bucket")
+            "vec_id", *extra_cols, F.lit(0).cast("int").alias("bucket")
         ).limit(0)
     signs = _plane_signs(n_planes, dim)
     vq = F.transform(
@@ -226,11 +227,11 @@ def srp_buckets(
         )
         bit = F.when(acc >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
-    return emb.select(id_col, *extra_cols, bucket.cast("int").alias("bucket"))
+    return emb.select("vec_id", *extra_cols, bucket.cast("int").alias("bucket"))
 
 
 def ivf_centroids(
-    emb: DataFrame, n_centroids: int = 8, id_col: str = "vec_id"
+    emb: DataFrame, n_centroids: int = 8
 ) -> list[tuple[int, list[float]]]:
     """Deterministic seeded centroids: the ``n_centroids`` vectors with the
     lowest ids. A production IVF runs k-means (Lloyd) refinement over a
@@ -239,9 +240,9 @@ def ivf_centroids(
     pipeline engine-exact (k-means float accumulation order would not be).
     One tiny driver collect: n_centroids × dim doubles."""
     rows = (
-        emb.orderBy(id_col)
+        emb.orderBy("vec_id")
         .limit(n_centroids)
-        .select(id_col, as_double().alias("cv"))
+        .select("vec_id", as_double().alias("cv"))
         .collect()
     )
     return [(r[0], list(r.cv)) for r in rows]
@@ -253,35 +254,21 @@ def _quantize(col: Column, scale: int) -> Column:
     )
 
 
-def ivf_assign(
-    emb: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    scale: int = 1000,
-    emb_col: str = "embedding",
-    carry_cols: tuple[str, ...] = ("label",),
-) -> DataFrame:
+def ivf_assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     """Cluster id per vector — a MAP-ONLY projection, like ``srp_buckets``.
 
     Assignment is argmin of QUANTIZED squared L2 distance: components
-    quantize to integers (floor(v*scale+0.5)), so distances are exact
+    quantize to integers (floor(v*_IVF_SCALE+0.5)), so distances are exact
     int64 sums any engine reproduces — no float-comparison ties. Ties
     break to the lowest centroid id via lexicographic struct min. The
     centroids enter the plan as literal arrays (no join, no shuffle); at
     corpus scale the assigned table is written bucketed/partitioned by
-    ``cluster`` so a probe scans one cluster's files only.
-
-    scale=1000 keeps the worst case safely inside int64: dim * (2 *
-    scale * |v|max)^2 must stay < 2^63.
-
-    ``emb_col``/``carry_cols`` parameterize the projection alongside
-    ``id_col`` so any embeddings table works, not just one with a
-    ``label`` column."""
-    vq = _quantize(F.col(emb_col), scale)
+    ``cluster`` so a probe scans one cluster's files only."""
+    vq = _quantize(F.col("embedding"), _IVF_SCALE)
     choices = []
     for cid, cvec in centroids:
         cq_arr = F.array(
-            *[F.lit(int(math.floor(c * scale + 0.5))) for c in cvec]
+            *[F.lit(int(math.floor(c * _IVF_SCALE + 0.5))) for c in cvec]
         )
         dist = F.aggregate(
             F.zip_with(vq, cq_arr, lambda v, c: (v - c) * (v - c)),
@@ -290,22 +277,18 @@ def ivf_assign(
         )
         choices.append(F.struct(dist.alias("d"), F.lit(cid).alias("cid")))
     best = F.array_min(F.array(*choices))
-    return emb.select(
-        id_col, *carry_cols, emb_col, best["cid"].alias("cluster")
-    )
+    return emb.select("vec_id", "label", "embedding", best["cid"].alias("cluster"))
 
 
-def ivf_cluster_of(
-    vec, centroids: list[tuple[int, list[float]]], scale: int = 1000
-) -> int:
+def ivf_cluster_of(vec, centroids: list[tuple[int, list[float]]]) -> int:
     """Driver-side twin of ``ivf_assign`` for one query vector — same
     quantized integer math, so the probe's cluster filter is a literal."""
     import math
 
-    vq = [math.floor(float(v) * scale + 0.5) for v in vec]
+    vq = [math.floor(float(v) * _IVF_SCALE + 0.5) for v in vec]
     best = None
     for cid, cvec in centroids:
-        cq = [math.floor(c * scale + 0.5) for c in cvec]
+        cq = [math.floor(c * _IVF_SCALE + 0.5) for c in cvec]
         d = sum((a - b) * (a - b) for a, b in zip(vq, cq))
         if best is None or (d, cid) < best:
             best = (d, cid)
@@ -317,23 +300,22 @@ def ivf_topk(
     query_vec_id: int = 0,
     n_centroids: int = 8,
     k: int = 10,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-flat ANN (nprobe=1): assign every vector to its nearest seeded
     centroid, then score exact cosine ONLY inside the query's cluster —
     the coarse-quantizer counterpart to the SRP bucket path. The probe is
     a map-only filter + scan of one cluster + a tiny top-k reduce; recall
     is the standard IVF trade-off (raise nprobe to scan more clusters)."""
-    cents = ivf_centroids(emb, n_centroids=n_centroids, id_col=id_col)
-    assigned = ivf_assign(emb, cents, id_col=id_col)
+    cents = ivf_centroids(emb, n_centroids=n_centroids)
+    assigned = ivf_assign(emb, cents)
     qrow = (
-        emb.filter(F.col(id_col) == query_vec_id)
+        emb.filter(F.col("vec_id") == query_vec_id)
         .select(as_double().alias("qv"))
         .collect()
     )
     if not qrow:
         return assigned.select(
-            id_col, "label", "cluster",
+            "vec_id", "label", "cluster",
             F.lit(None).cast("double").alias("cosine_sim"),
         ).limit(0)
     qvec = list(qrow[0].qv)
@@ -342,10 +324,10 @@ def ivf_topk(
     qn = sum(v * v for v in qvec) ** 0.5
     return (
         assigned.filter(
-            (F.col("cluster") == qcluster) & (F.col(id_col) != query_vec_id)
+            (F.col("cluster") == qcluster) & (F.col("vec_id") != query_vec_id)
         )
         .select(
-            id_col,
+            "vec_id",
             "label",
             "cluster",
             F.round(
@@ -355,28 +337,28 @@ def ivf_topk(
                 6,
             ).alias("cosine_sim"),
         )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
 def ann_candidates(
-    emb: DataFrame, query_vec_id: int = 0, n_planes: int = 8, id_col: str = "vec_id"
+    emb: DataFrame, query_vec_id: int = 0, n_planes: int = 8
 ) -> DataFrame:
     """ANN search: restrict exact cosine scoring to the query's SRP bucket.
     Buckets come from ``srp_buckets`` over the whole input; the query
     row's bucket and vector join back as a broadcast, so only vectors
     sharing the query's bucket are scored."""
-    buckets = srp_buckets(emb, n_planes=n_planes, id_col=id_col)
-    with_bucket = emb.join(buckets, id_col)
-    qb = with_bucket.filter(F.col(id_col) == query_vec_id).select(
+    buckets = srp_buckets(emb, n_planes=n_planes)
+    with_bucket = emb.join(buckets, "vec_id")
+    qb = with_bucket.filter(F.col("vec_id") == query_vec_id).select(
         F.col("bucket").alias("qbucket"), as_double().alias("qv")
     ).select("qbucket", "qv", l2_norm(F.col("qv")).alias("qn"))
-    cands = with_bucket.filter(F.col(id_col) != query_vec_id)
+    cands = with_bucket.filter(F.col("vec_id") != query_vec_id)
     return (
         cands.join(F.broadcast(qb), cands.bucket == F.col("qbucket"))
         .select(
-            id_col,
+            "vec_id",
             "label",
             "bucket",
             F.round(
@@ -388,19 +370,11 @@ def ann_candidates(
                 6,
             ).alias("cosine_sim"),
         )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
     )
 
 
-def semantic_dedup_clusters(
-    emb: DataFrame,
-    n_planes: int | None = None,
-    tau2_num: int = 49,
-    tau2_den: int = 400,
-    scale: int = 100,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
+def semantic_dedup_clusters(emb: DataFrame, n_planes: int | None = None) -> DataFrame:
     """SemDeDup-style semantic deduplication audit (Abbas et al. 2023 —
     public method): partition embeddings into semantically-coherent
     clusters, find near-identical pairs ONLY within clusters, and mark
@@ -419,11 +393,11 @@ def semantic_dedup_clusters(
     integer math (srp_buckets), zero shuffle.
 
     Determinism: the cosine gate never compares floats. Components are
-    quantized to integers (floor(v*scale+0.5)); dot products and squared
-    norms are exact int64 sums; ``cos >= tau`` (with dot >= 0) becomes
-    the integer cross-multiplication tau2_den*dot² >= tau2_num*|a|²|b|²
-    (defaults: 49/400 = 0.35²). Bounds: with |v|<=1, dim<=64, scale=100,
-    tau2_den*dot² <= 400*(64*100²)² ≈ 1.6e17 < 2^63.
+    quantized to integers (floor(v*100+0.5)); dot products and squared
+    norms are exact int64 sums; ``cos >= 0.35`` (with dot >= 0) becomes
+    the integer cross-multiplication 400*dot² >= 49*|a|²|b|² (49/400 =
+    0.35²). Bounds: with |v|<=1, dim<=64,
+    400*dot² <= 400*(64*100²)² ≈ 1.6e17 < 2^63.
 
     The derived-p path costs one documented count() action (like the
     ``srp_buckets`` dim lookup). SRP buckets are hash-balanced, not
@@ -434,17 +408,15 @@ def semantic_dedup_clusters(
         n_planes = 3
         while (64 << n_planes) < n:
             n_planes += 1
-    base = srp_buckets(
-        emb, n_planes=n_planes, id_col=id_col, extra_cols=(emb_col,)
-    )
-    vq = _quantize(F.col(emb_col), scale)
+    base = srp_buckets(emb, n_planes=n_planes, extra_cols=("embedding",))
+    vq = _quantize(F.col("embedding"), 100)
     nq = F.aggregate(
         F.transform(vq, lambda x: x * x),
         F.lit(0).cast("long"),
         lambda a, x: a + x,
     )
     base = base.select(
-        F.col(id_col).alias("vid"),
+        F.col("vec_id").alias("vid"),
         F.col("bucket").cast("long").alias("cluster"),
         vq.alias("q"),
         nq.alias("nq"),
@@ -470,8 +442,8 @@ def semantic_dedup_clusters(
     ).filter(
         (F.col("dq") >= 0)
         & (
-            F.lit(tau2_den) * F.col("dq") * F.col("dq")
-            >= F.lit(tau2_num) * F.col("na") * F.col("nb")
+            F.lit(400) * F.col("dq") * F.col("dq")
+            >= F.lit(49) * F.col("na") * F.col("nb")
         )
     )
     cl = base.groupBy("cluster").agg(F.count("*").alias("n_vectors"))

@@ -20,22 +20,21 @@ def salted_quantized_agg(
     key: str,
     value: Column,
     salt_expr: Column,
-    n_salts: int = 16,
-    scale: int = 100,
 ) -> DataFrame:
-    """Two-stage sum/mean/count per ``key``, salted on ``salt_expr``.
+    """Two-stage sum/mean/count per ``key``, salted 16 ways on
+    ``salt_expr``; the sum is quantized to cents.
 
     Returns columns: key, sum_value, avg_value, n — exactly what a direct
     ``groupBy(key)`` with the quantized aggs would return.
     """
-    salted = df.withColumn("__salt", F.pmod(salt_expr, F.lit(n_salts)))
+    salted = df.withColumn("__salt", F.pmod(salt_expr, F.lit(16)))
     partials = salted.groupBy(key, "__salt").agg(
-        F.sum(F.floor(value * scale + F.lit(0.5)).cast("long")).alias("__psum"),
+        F.sum(F.floor(value * 100 + F.lit(0.5)).cast("long")).alias("__psum"),
         F.count(value).alias("__pcnt"),
     )
     return partials.groupBy(key).agg(
-        (F.sum("__psum") / float(scale)).alias("sum_value"),
-        ((F.sum("__psum") / float(scale)) / F.sum("__pcnt")).alias("avg_value"),
+        (F.sum("__psum") / 100.0).alias("sum_value"),
+        ((F.sum("__psum") / 100.0) / F.sum("__pcnt")).alias("avg_value"),
         F.sum("__pcnt").alias("n"),
     )
 

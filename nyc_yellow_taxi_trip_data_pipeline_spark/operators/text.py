@@ -38,8 +38,8 @@ def n_distinct_words(text: Column) -> Column:
     return F.size(F.array_distinct(words(text))).cast("long")
 
 
-def stopword_count(text: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(words(text), lambda w: w.isin(*stopwords))).cast("long")
+def stopword_count(text: Column) -> Column:
+    return F.size(F.filter(words(text), lambda w: w.isin(*STOPWORDS))).cast("long")
 
 
 def avg_word_len(text: Column) -> Column:
@@ -58,9 +58,10 @@ def token_estimate(text: Column) -> Column:
     return alpha_runs + F.floor(F.length(text) / 4.0).cast("long")
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc quality features + composite score in one projection."""
-    t = F.col(text_col)
+def quality_features(df: DataFrame) -> DataFrame:
+    """Per-doc quality features of ``text`` + composite score in one
+    projection."""
+    t = F.col("text")
     nw = n_words(t)
     nd = n_distinct_words(t)
     sw = stopword_count(t)
@@ -111,10 +112,10 @@ def predict_lang(text: Column) -> Column:
     return expr.otherwise(F.lit(langs[0]))
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Content fingerprints: full md5 of the normalized text plus a short
-    64-bit prefix key (the join/shuffle-friendly form)."""
-    norm = F.lower(F.col(text_col))
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Content fingerprints: full md5 of the normalized ``text`` plus a
+    short 64-bit prefix key (the join/shuffle-friendly form)."""
+    norm = F.lower(F.col("text"))
     return df.withColumns(
         {
             "content_md5": F.md5(norm),

@@ -37,6 +37,9 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.functions.scalar import (
 
 ISO_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss"
 
+#: The reference's two trip timestamps (sparkConsumer.py:85-86).
+TIMESTAMP_COLUMNS = ("tpep_pickup_datetime", "tpep_dropoff_datetime")
+
 #: Columns the ML stage drops before feature assembly — ADAPTED from
 #: reference sparkML.py:51-53, not a copy of its colsToDrop. The reference
 #: drops its raw fee columns (congestion_surcharge, airport_fee, mta_tax,
@@ -68,30 +71,24 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.lower() for c in df.columns])
 
 
-def parse_timestamps_columns(
-    present: Iterable[str],
-    columns: tuple[str, ...] = ("tpep_pickup_datetime", "tpep_dropoff_datetime"),
-    fmt: str = ISO_TS_FORMAT,
-) -> dict[str, Column]:
-    """``parse_timestamps``'s Columns for the ``columns`` in ``present``."""
-    return {c: F.to_timestamp(F.col(c), fmt) for c in columns if c in present}
+def parse_timestamps_columns(present: Iterable[str]) -> dict[str, Column]:
+    """``parse_timestamps``'s Columns for the ``TIMESTAMP_COLUMNS`` in
+    ``present``."""
+    return {
+        c: F.to_timestamp(F.col(c), ISO_TS_FORMAT)
+        for c in TIMESTAMP_COLUMNS
+        if c in present
+    }
 
 
-def parse_timestamps(
-    df: DataFrame,
-    columns: tuple[str, ...] = ("tpep_pickup_datetime", "tpep_dropoff_datetime"),
-    fmt: str = ISO_TS_FORMAT,
-) -> DataFrame:
+def parse_timestamps(df: DataFrame) -> DataFrame:
     """ISO-8601 string -> timestamp (reference sparkConsumer.py:85-86)."""
-    return df.withColumns(parse_timestamps_columns(df.columns, columns, fmt))
+    return df.withColumns(parse_timestamps_columns(df.columns))
 
 
-def add_trip_features_columns(
-    pickup_col: str = "tpep_pickup_datetime",
-    dropoff_col: str = "tpep_dropoff_datetime",
-) -> dict[str, Column]:
+def add_trip_features_columns() -> dict[str, Column]:
     """``add_trip_features``'s 9 feature Columns."""
-    pickup, dropoff = F.col(pickup_col), F.col(dropoff_col)
+    pickup, dropoff = (F.col(c) for c in TIMESTAMP_COLUMNS)
     pickup_hour = F.hour(pickup)
     dropoff_hour = F.hour(dropoff)
     pickup_day = F.dayofweek(pickup)
@@ -109,17 +106,13 @@ def add_trip_features_columns(
     }
 
 
-def add_trip_features(
-    df: DataFrame,
-    pickup_col: str = "tpep_pickup_datetime",
-    dropoff_col: str = "tpep_dropoff_datetime",
-) -> DataFrame:
+def add_trip_features(df: DataFrame) -> DataFrame:
     """Derive the 9 feature columns of the cleaned table in ONE projection
     (reference sparkConsumer.py:84-96 chains 11 withColumns).
 
     Single ``withColumns`` call => single Project node => one codegen stage.
     """
-    return df.withColumns(add_trip_features_columns(pickup_col, dropoff_col))
+    return df.withColumns(add_trip_features_columns())
 
 
 def filter_valid_passengers(df: DataFrame) -> DataFrame:

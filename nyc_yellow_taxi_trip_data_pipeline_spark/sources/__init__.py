@@ -1,19 +1,15 @@
 """Sources & sinks: Parquet / CSV / JSON / JDBC / Kafka-shaped streams."""
 
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
-    read_csv,
     read_jdbc,
     read_table,
     schema_to_ddl,
     write_jdbc_append,
-    write_parquet,
 )
 
 __all__ = [
-    "read_csv",
     "read_jdbc",
     "read_table",
     "schema_to_ddl",
     "write_jdbc_append",
-    "write_parquet",
 ]

@@ -7,7 +7,8 @@ Covers the reference's I/O surface (SURVEY.md §2.1) re-expressed natively:
 - S3  JDBC scan           -> spark.read.format("jdbc") with *partitioned*
                              reads (the reference reads single-partition,
                              sparkML.py:40-46 — a scan bottleneck at scale)
-- S5  CSV scan            -> spark.read.csv with explicit schema preferred
+- S5  CSV scan            -> operators/serving.predict_csv (uploads read
+                             under a declared schema, UPLOAD_CONTRACT)
 - S7  Kafka sink          -> to_kafka_json (columnar JSON envelope; oracle-
                              checked via q29) + write_kafka (broker + jars)
 - S8  JDBC append sink    -> df.write.format("jdbc").mode("append")
@@ -44,27 +45,18 @@ TESTDATA_TABLES = (
 )
 
 
-def _nanos_ts_to_micros(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize the event-time column to plain ``timestamp`` regardless of
-    how the parquet writer encoded it. Two historical encodings of the
-    testdata are handled:
-
-    - TIMESTAMP(NANOS) (which Spark cannot represent) arrives as nanosecond
-      longs under ``spark.sql.legacy.parquet.nanosAsLong``; convert to
-      microsecond timestamps — the same truncation DuckDB applies.
-    - timestamp[us] with no timezone is inferred as ``TIMESTAMP_NTZ`` under
-      Spark 4's inferTimestampNTZType; ``withWatermark`` rejects NTZ event
-      time, so cast to ``timestamp``. The callers pin
-      ``spark.sql.session.timeZone=UTC`` so the NTZ→LTZ cast is
-      value-preserving and deterministic under any caller's session.
+def _nanos_ts_to_micros(df: DataFrame) -> DataFrame:
+    """Convert the events ``ts`` column from TIMESTAMP(NANOS), which Spark
+    cannot represent and reads as nanosecond longs under
+    ``spark.sql.legacy.parquet.nanosAsLong``, to microsecond timestamps —
+    the same truncation DuckDB applies. The other historical encoding,
+    timestamp[us] with no timezone, reads as ``TIMESTAMP_NTZ`` and is left
+    to ``_normalize_ntz``, which both callers apply next.
 
     Single definition shared by the batch and streaming readers so the
     conversion cannot drift between paths."""
-    dtype = dict(df.dtypes).get(ts_col)
-    if dtype == "bigint":
-        df = df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
 
@@ -74,7 +66,7 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     orders.o_orderdate) infer as NTZ under Spark 4; the engine's contract
     is uniform TIMESTAMP with session timeZone pinned to UTC, so the cast
     is value-preserving and watermarks/date-math behave identically on
-    every column."""
+    every column (``withWatermark`` rejects NTZ event time)."""
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
@@ -182,22 +174,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
             read_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    header: bool = True,
-) -> DataFrame:
-    """CSV scan (reference 1_EDA_Dashboard.py:25-26, main.py:65 use pandas).
-    Explicit schema avoids the inference pass; inferSchema only as fallback."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,
@@ -285,17 +261,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", "true").csv(path)
 
 
-def write_parquet(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite"
-) -> None:
-    """Parquet sink; partition_by enables partition pruning for readers
-    (e.g. year/month of the pickup timestamp — SURVEY.md §4)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 _SQL_TYPES: dict[type, str] = {
     T.TimestampType: "TIMESTAMP",
     T.IntegerType: "INTEGER",
@@ -375,10 +340,9 @@ def write_training_shards(
     df: DataFrame,
     path: str,
     n_shards: int = 16,
-    id_col: str = "doc_id",
 ) -> None:
     """The pre-training 'global shuffle': write the corpus as n_shards
-    deterministic shards, each internally ordered by md5(id) — a
+    deterministic shards, each internally ordered by md5(doc_id) — a
     reproducible uniform permutation of the corpus (hash order == uniform
     order), so any prefix of any shard is an unbiased sample and training
     can stream shards independently.
@@ -389,8 +353,10 @@ def write_training_shards(
     is sortWithinPartitions (no global sort — a total order across
     shards is never needed, the shard id IS the outer sort key)."""
     (
-        df.withColumn("shard", shard_column(id_col, n_shards))
-        .withColumn("__ord", F.md5(F.concat(F.lit("ord:"), F.col(id_col).cast("string"))))
+        df.withColumn("shard", shard_column(n_shards=n_shards))
+        .withColumn(
+            "__ord", F.md5(F.concat(F.lit("ord:"), F.col("doc_id").cast("string")))
+        )
         .repartition(n_shards, "shard")
         .sortWithinPartitions("shard", "__ord")
         .drop("__ord")

@@ -367,24 +367,18 @@ def foreach_batch_jdbc_writer(
     return write_batch
 
 
-def sessionize_stateful(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    gap_seconds: int = 1800,
-) -> DataFrame:
+def sessionize_stateful(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Custom stateful sessionization via applyInPandasWithState — the
     operator Spark's built-in ``session_window`` cannot express when the
     session logic needs imperative per-key state (here: cumulative session
     and event counts surviving across micro-batches).
 
-    Emits one CUMULATIVE row per key per micro-batch (update mode):
+    Emits one CUMULATIVE row per ``user_id`` per micro-batch (update mode):
     (key, n_sessions, n_events) counted with a ``gap_seconds`` inactivity
     gap. Cumulative emission means bounded replays always surface final
     values (take max per key) — unlike watermark-finalized session windows,
     which hold back sessions newer than the final watermark. Events are
-    gap-compared in (ts, order_col) order; cross-batch correctness assumes
+    gap-compared in (ts, event_id) order; cross-batch correctness assumes
     batches arrive in event-time order per key (true for replayed files;
     live out-of-order input needs interval-merging state instead).
     """
@@ -422,9 +416,9 @@ def sessionize_stateful(
         )
 
     renamed = events.select(
-        F.col(key_col).alias("key"),
-        F.col(ts_col).alias("__ts"),
-        F.col(order_col).alias("__ord"),
+        F.col("user_id").alias("key"),
+        F.col("ts").alias("__ts"),
+        F.col("event_id").alias("__ord"),
     )
     return renamed.groupBy("key").applyInPandasWithState(
         update,

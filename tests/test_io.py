@@ -12,11 +12,9 @@ from pyspark.sql import types as T
 from nyc_yellow_taxi_trip_data_pipeline_spark import memo
 from nyc_yellow_taxi_trip_data_pipeline_spark.session import scoped_conf
 from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
-    read_csv,
     read_table,
     schema_to_ddl,
     write_csv,
-    write_parquet,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -44,16 +42,8 @@ def test_csv_round_trip(spark, tmp_path):
             T.StructField("v", T.DoubleType()),
         ]
     )
-    back = read_csv(spark, path, schema=schema)
+    back = spark.read.schema(schema).option("header", "true").csv(path)
     assert sorted(back.collect()) == sorted(df.collect())
-
-
-def test_csv_infer_schema_fallback(spark, tmp_path):
-    df = spark.createDataFrame([(1, "x")], "id int, name string")
-    path = str(tmp_path / "csv_infer")
-    write_csv(df, path)
-    back = read_csv(spark, path)  # no schema -> inference
-    assert back.collect()[0]["id"] == 1
 
 
 def test_schema_to_ddl_type_mapping_and_case_folding():
@@ -85,7 +75,7 @@ def test_partitioned_parquet_enables_pruning(spark, tmp_path):
         "year int, month int, v double",
     )
     path = str(tmp_path / "part_out")
-    write_parquet(df, path, partition_by=["year", "month"])
+    df.write.partitionBy("year", "month").parquet(path)
     back = spark.read.parquet(path).filter("year = 2024 AND month = 5")
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert back.count() == 1
@@ -133,17 +123,14 @@ def test_json_and_orc_round_trip(spark, tmp_path):
 
 
 def test_expire_partitions_drops_only_old(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
-        expire_partitions,
-        write_parquet,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import expire_partitions
 
     df = spark.createDataFrame(
         [("2024-01", 1.0), ("2024-02", 2.0), ("2024-03", 3.0)],
         "month string, v double",
     )
     path = str(tmp_path / "retained")
-    write_parquet(df, path, partition_by=["month"])
+    df.write.partitionBy("month").parquet(path)
     dropped = expire_partitions(spark, path, "month", keep_from="2024-02")
     assert dropped == ["2024-01"]
     back = spark.read.parquet(path)

@@ -148,7 +148,7 @@ def test_verification_helpers_pick_plan_from_measured_pair_count(spark):
     candidate set, MEASURE it, and pick the broadcast-restricted plan
     for small counts (the q98/q167 call sites previously always fell to
     the SMJ path and recomputed the un-checkpointed band-join chain per
-    consumer); an explicit count above ``broadcast_cap`` must keep the
+    consumer); an explicit count above ``dd._BROADCAST_CAP`` must keep the
     corpus side out of any broadcast (100x safety: the full shingle
     table must never hash-build)."""
     from nyc_yellow_taxi_trip_data_pipeline_spark.operators import dedup as dd

@@ -258,7 +258,7 @@ def test_connected_components_empty(spark):
     assert dd.connected_components(pairs).count() == 0
 
 
-def test_star_cc_matches_minprop_on_mixed_graph(spark):
+def test_connected_components_mixed_graph_literal_labels(spark):
     """Min-propagation labels every node with the minimum id of its
     component on a graph mixing a chain, a clique, an isolated pair,
     reversed/duplicate edges, a self-loop and a cycle."""
@@ -479,3 +479,39 @@ def test_semantic_dedup_clusters_marks_higher_id(spark):
     assert total_vectors == 4
     assert total_pairs == 1          # only (0,2) passes cos>=0.35 with dot>=0
     assert total_removed == 1        # vec 2 (higher id of the pair)
+
+
+def test_operator_layer_has_no_column_name_options():
+    """The operator layer runs over one fixed schema (the testdata tables'
+    column names), so no function there takes a column name as an option.
+    ``sources.io.shard_column`` keeps ``id_col``: a plan body passes it."""
+    import ast
+    import pathlib
+
+    banned = {
+        "id_col", "text_col", "word_col", "emb_col", "payload_col",
+        "group_col", "a_col", "b_col", "carry_cols", "pickup_col",
+        "dropoff_col", "broadcast_cap", "tau2_num", "tau2_den",
+    }
+    exempt = {("io.py", "shard_column")}
+    pkg = pathlib.Path(dd.__file__).resolve().parents[1]
+    paths = [
+        *sorted((pkg / "operators").glob("*.py")),
+        *sorted((pkg / "functions").glob("*.py")),
+        pkg / "sources" / "io.py",
+        pkg / "streaming" / "pipeline.py",
+    ]
+    found = []
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if (path.name, node.name) in exempt:
+                continue
+            a = node.args
+            found += [
+                f"{path.name}:{node.name}({p.arg})"
+                for p in (*a.posonlyargs, *a.args, *a.kwonlyargs)
+                if p.arg in banned
+            ]
+    assert not found, found

@@ -106,15 +106,6 @@ def test_modified_queries_are_in_driver_window():
     )
 
 
-def test_priority_window_fits_driver_budget():
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import _PRIORITY
-
-    assert len(_PRIORITY) <= 50
-    assert len(set(_PRIORITY)) == len(_PRIORITY)
-    unknown = [q for q in _PRIORITY if q not in QUERIES]
-    assert not unknown, unknown
-
-
 def test_window_planner_agrees_with_ratchet():
     """tools/window_planner.py replicates this file's staleness ratchet
     from the same inputs; its mandatory tier must (a) all sit inside the

@@ -135,10 +135,7 @@ def test_partition_pruning_end_to_end_on_events(spark, tmp_path):
     numPartitions/numFiles metrics, not just the static plan string)."""
     import glob
 
-    from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import (
-        read_table,
-        write_parquet,
-    )
+    from nyc_yellow_taxi_trip_data_pipeline_spark.sources.io import read_table
 
     ev = (
         read_table(spark, "/root/testdata/sf0.001", "events")
@@ -147,7 +144,7 @@ def test_partition_pruning_end_to_end_on_events(spark, tmp_path):
         .withColumn("day", F.dayofmonth("ts"))
     )
     path = str(tmp_path / "events_partitioned")
-    write_parquet(ev, path, partition_by=["year", "month", "day"])
+    ev.write.partitionBy("year", "month", "day").parquet(path)
     n_partitions = len(glob.glob(path + "/year=*/month=*/day=*"))
     assert n_partitions > 1, "need multiple partitions to prove pruning"
 
