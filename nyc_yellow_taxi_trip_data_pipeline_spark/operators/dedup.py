@@ -119,17 +119,17 @@ def lsh_bands(sigs: DataFrame, n_hashes: int = 12, band_size: int = 2) -> DataFr
     )
 
 
-def lsh_candidate_pairs(bands: DataFrame, max_bucket: int | None = None) -> DataFrame:
-    """Distinct (doc_a < doc_b) pairs sharing at least one band — the
-    equi-join that replaces the quadratic all-pairs comparison.
+def _cap_buckets(bands: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Drop every (band_id, band_key) bucket holding more than
+    ``max_bucket`` docs; ``None`` keeps all.
 
-    ``max_bucket`` caps the bucket size: a band key shared by f docs emits
-    O(f^2) join rows, so one giant bucket (a massively-duplicated boilerplate
-    text) becomes a straggler partition at corpus scale. Buckets larger than
-    the cap are dropped entirely before the self-join. Recall trade-off:
-    members of an over-cap bucket are near-identical en masse and belong to
-    exact/boilerplate dedup (a group-by), not pairwise LSH — pairs are the
-    wrong output shape for them anyway.
+    A band key shared by f docs emits O(f^2) join rows, so one giant
+    bucket (a massively-duplicated boilerplate text) becomes a straggler
+    partition at corpus scale (SimHash, measured: top bucket 1839 docs at
+    sf0.1 -> 15551 at a 10x corpus = 121M pairs from ONE bucket). Recall
+    trade-off: members of an over-cap bucket are near-identical en masse
+    and belong to exact/boilerplate dedup (a group-by), not pairwise
+    LSH — pairs are the wrong output shape for them anyway.
 
     The count is a window over the join key — measured (sf0.1, warm, 3
     reps) the cheapest of three shapes: the window adds ~0.4s over
@@ -140,13 +140,22 @@ def lsh_candidate_pairs(bands: DataFrame, max_bucket: int | None = None) -> Data
     per-hot-key partition holds O(f) rows — linear, exactly what the cap
     exists to guarantee the join never exceeds.
     """
-    if max_bucket is not None:
-        w = Window.partitionBy("band_id", "band_key")
-        bands = (
-            bands.withColumn("__bn", F.count("*").over(w))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
+    if max_bucket is None:
+        return bands
+    w = Window.partitionBy("band_id", "band_key")
+    return (
+        bands.withColumn("__bn", F.count("*").over(w))
+        .filter(F.col("__bn") <= max_bucket)
+        .drop("__bn")
+    )
+
+
+def lsh_candidate_pairs(bands: DataFrame, max_bucket: int | None = None) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing at least one band — the
+    equi-join that replaces the quadratic all-pairs comparison. Buckets
+    over ``max_bucket`` docs are dropped before the self-join
+    (``_cap_buckets``)."""
+    bands = _cap_buckets(bands, max_bucket)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
     return (
@@ -157,14 +166,29 @@ def lsh_candidate_pairs(bands: DataFrame, max_bucket: int | None = None) -> Data
     )
 
 
-def _candidate_docs(pairs: DataFrame) -> DataFrame:
-    """Distinct doc ids appearing on either side of the candidate pairs —
-    the key set every verification join is restricted to."""
-    return (
+def _candidate_docs(
+    pairs: DataFrame, pairs_count: int | None
+) -> tuple[DataFrame, int, DataFrame]:
+    """The verification prologue: returns (pairs, pairs_count, docs).
+
+    A None ``pairs_count`` is measured here (eager localCheckpoint +
+    count): ``pairs`` feeds both the candidate-doc semi-join and the
+    verify join, so materializing stops the band-join chain recomputing
+    per consumer, and the count picks the broadcast plan whenever it is
+    safe. ``docs`` is the distinct doc ids on either side of the pairs —
+    the key set every verification join is restricted to — broadcast at
+    or under ``_BROADCAST_CAP`` pairs."""
+    if pairs_count is None:
+        pairs = pairs.localCheckpoint(eager=True)
+        pairs_count = pairs.count()
+    docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .union(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
+    if pairs_count <= _BROADCAST_CAP:
+        docs = F.broadcast(docs)
+    return pairs, pairs_count, docs
 
 
 def jaccard_on_pairs(
@@ -199,18 +223,9 @@ def jaccard_on_pairs(
     build does not, and AQE's partition coalescing can concentrate a
     build side past per-task memory — measured at 100x: 'Can't acquire
     ... bytes to build hash relation'), still linear at any corpus
-    size. When ``pairs_count`` is None the helper materializes the pair
-    set itself (eager localCheckpoint + count): ``pairs`` is consumed
-    TWICE below (the candidate-doc semi-join and the verify join), so
-    an unmaterialized band-join chain would recompute per consumer, and
-    the measured count picks the broadcast plan whenever it is safe."""
-    if pairs_count is None:
-        pairs = pairs.localCheckpoint(eager=True)
-        pairs_count = pairs.count()
+    size. A None ``pairs_count`` is measured in ``_candidate_docs``."""
+    pairs, pairs_count, docs_in = _candidate_docs(pairs, pairs_count)
     small = pairs_count <= _BROADCAST_CAP
-    docs_in = _candidate_docs(pairs)
-    if small:
-        docs_in = F.broadcast(docs_in)
     # The restricted shingle table feeds THREE subtrees (sizes + both
     # intersection-join sides); without pinning it, each subtree re-runs
     # the corpus-wide semi-join — the bulk of the r10 verification
@@ -286,18 +301,10 @@ def sig_agreement_filter(
     broadcast build from localCheckpoint's misleading stats — fatal at
     100x corpus). ``pairs_count`` <= ``_BROADCAST_CAP`` broadcasts the
     candidate keys/pairs (map-side over the signature scan); above,
-    spill-safe sort-merge joins. A None ``pairs_count`` is measured
-    here (eager localCheckpoint + count) — ``pairs`` feeds both the
-    candidate-doc semi-join and the agreement join, so materializing
-    stops the band-join chain recomputing per consumer and the count
-    picks the broadcast plan whenever it is safe."""
-    if pairs_count is None:
-        pairs = pairs.localCheckpoint(eager=True)
-        pairs_count = pairs.count()
+    spill-safe sort-merge joins. A None ``pairs_count`` is measured in
+    ``_candidate_docs``."""
+    pairs, pairs_count, docs_in = _candidate_docs(pairs, pairs_count)
     small = pairs_count <= _BROADCAST_CAP
-    docs_in = _candidate_docs(pairs)
-    if small:
-        docs_in = F.broadcast(docs_in)
     # sr feeds BOTH agreement-join sides; pin it so the corpus-wide
     # semi-join over the signature table runs once, not twice (same
     # rationale as jaccard_on_pairs' restricted-shingle pin).
@@ -475,54 +482,21 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     )
 
 
-def simhash16(tokens: DataFrame) -> DataFrame:
-    """16-bit SimHash fingerprint per doc in ONE aggregation pass, over
-    ``tokenize_distinct``'s (doc_id, w) rows.
-
-    Each distinct token hashes to 16 bits (first 4 hex chars of md5); each
-    bit contributes +1/−1 to a per-bit accumulator; fingerprint bit j is
-    the sign of accumulator j. All-integer arithmetic — bit-exact in any
-    engine, no merge-order sensitivity.
-    """
-    # Hash once per token in a projection; the 16 bit-vote aggregates then
+def _simhash(tokens: DataFrame, n_bits: int, dtype: str) -> DataFrame:
+    """(doc_id, simhash) in ONE aggregation pass over ``tokenize_distinct``
+    rows: each distinct token hashes to ``n_bits`` bits (the first
+    n_bits/4 hex chars of md5); each bit contributes +1/−1 to a per-bit
+    accumulator; fingerprint bit j is the sign of accumulator j.
+    All-integer arithmetic — bit-exact in any engine, no merge-order
+    sensitivity."""
+    # Hash once per token in a projection; the bit-vote aggregates then
     # read the integer column (inlining the md5 into each aggregate would
-    # recompute it 16x per row — Catalyst does not CSE across agg buffers).
-    hashed = tokens.withColumn(
-        "__hw", F.expr("CAST(conv(substring(md5(w), 1, 4), 16, 10) AS BIGINT)")
-    )
-    sums = [
-        F.expr(
-            f"sum(CASE WHEN CAST(FLOOR(__hw / {1 << j}) AS BIGINT) % 2 = 1 "
-            f"THEN 1 ELSE -1 END)"
-        ).alias(f"s{j}")
-        for j in range(16)
-    ]
-    acc = hashed.groupBy("doc_id").agg(*sums)
-    fp = None
-    for j in range(16):
-        bit = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        fp = bit if fp is None else fp + bit
-    return acc.select("doc_id", fp.cast("int").alias("simhash"))
-
-
-def simhash_fingerprints(tokens: DataFrame, n_bits: int = 60) -> DataFrame:
-    """N-bit SimHash fingerprint per doc (generalized ``simhash16``).
-
-    Fingerprint WIDTH is the scale dial for Hamming-LSH: band-bucket
-    count is 2^(n_bits / n_bands), so bits must grow ~2*log2(corpus)
-    or the band join saturates and turns quadratic (measured: the
-    16-bit form hit a 15x wall ratio at a 10x corpus; 60 bits keeps
-    buckets bounded to ~millions of docs). 60 = 15 hex digits of md5,
-    so the fingerprint and every intermediate stays inside signed int64
-    in any engine. All-integer arithmetic, order-independent.
-    """
-    if n_bits % 4 != 0 or n_bits > 60:
-        raise ValueError("n_bits must be a multiple of 4, at most 60")
-    hex_chars = n_bits // 4
+    # recompute it n_bits times per row — Catalyst does not CSE across
+    # agg buffers).
     hashed = tokens.withColumn(
         "__hw",
         F.expr(
-            f"CAST(conv(substring(md5(w), 1, {hex_chars}), 16, 10) AS BIGINT)"
+            f"CAST(conv(substring(md5(w), 1, {n_bits // 4}), 16, 10) AS BIGINT)"
         ),
     )
     sums = [
@@ -537,7 +511,29 @@ def simhash_fingerprints(tokens: DataFrame, n_bits: int = 60) -> DataFrame:
     for j in range(n_bits):
         bit = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
-    return acc.select("doc_id", fp.cast("long").alias("simhash"))
+    return acc.select("doc_id", fp.cast(dtype).alias("simhash"))
+
+
+def simhash16(tokens: DataFrame) -> DataFrame:
+    """16-bit SimHash fingerprint per doc (int), over
+    ``tokenize_distinct``'s (doc_id, w) rows."""
+    return _simhash(tokens, 16, "int")
+
+
+def simhash_fingerprints(tokens: DataFrame, n_bits: int = 60) -> DataFrame:
+    """N-bit SimHash fingerprint per doc (long; generalized ``simhash16``).
+
+    Fingerprint WIDTH is the scale dial for Hamming-LSH: band-bucket
+    count is 2^(n_bits / n_bands), so bits must grow ~2*log2(corpus)
+    or the band join saturates and turns quadratic (measured: the
+    16-bit form hit a 15x wall ratio at a 10x corpus; 60 bits keeps
+    buckets bounded to ~millions of docs). 60 = 15 hex digits of md5,
+    so the fingerprint and every intermediate stays inside signed int64
+    in any engine.
+    """
+    if n_bits % 4 != 0 or n_bits > 60:
+        raise ValueError("n_bits must be a multiple of 4, at most 60")
+    return _simhash(tokens, n_bits, "long")
 
 
 def simhash_near_duplicates(
@@ -560,12 +556,8 @@ def simhash_near_duplicates(
     ``simhash_fingerprints``).
 
     ``max_bucket`` is the same hot-bucket cap ``lsh_candidate_pairs``
-    applies: a band value shared by f docs emits O(f^2) candidates, and
-    a mass of near-identical documents (boilerplate) concentrates into
-    single buckets (measured: top bucket 1839 docs at sf0.1 -> 15551 at
-    a 10x corpus = 121M pairs from ONE bucket). Over-cap buckets are
-    dropped — their members belong to exact/boilerplate dedup, not
-    pairwise Hamming search.
+    applies (``_cap_buckets``): a mass of near-identical documents
+    (boilerplate) concentrates into single band buckets.
     """
     if n_bits % n_bands != 0:
         raise ValueError(f"n_bits={n_bits} not divisible by n_bands={n_bands}")
@@ -578,7 +570,6 @@ def simhash_near_duplicates(
     mask = (1 << bw) - 1
     bands = fingerprints.select(
         "doc_id",
-        fp_col,
         F.explode(
             F.array(
                 *[
@@ -592,22 +583,8 @@ def simhash_near_duplicates(
                 ]
             )
         ).alias("b"),
-    ).select("doc_id", fp_col, F.col("b.band_id"), F.col("b.band_key"))
-    if max_bucket is not None:
-        w = Window.partitionBy("band_id", "band_key")
-        bands = (
-            bands.withColumn("__bn", F.count("*").over(w))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    ).select("doc_id", F.col("b.band_id"), F.col("b.band_key"))
+    cand = lsh_candidate_pairs(bands, max_bucket=max_bucket)
     fa = fingerprints.select(
         F.col("doc_id").alias("doc_a"), F.col(fp_col).alias("__fa")
     )
@@ -641,13 +618,7 @@ def lsh_candidate_pairs_asymmetric(
     O(bucket) rows per query doc; over-cap index buckets are dropped (a
     query doc matching mass boilerplate is caught by exact dedup).
     """
-    if max_bucket is not None:
-        w = Window.partitionBy("band_id", "band_key")
-        bands_index = (
-            bands_index.withColumn("__bn", F.count("*").over(w))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
+    bands_index = _cap_buckets(bands_index, max_bucket)
     a = bands_query.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
     b = bands_index.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
     return (

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,9 +39,25 @@ def as_double(col: str = "embedding") -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
 
 
-def _cosine_from_norms(dot: Column, norm_a: Column, norm_b: Column) -> Column:
-    denom = norm_a * norm_b
-    return F.when(denom == 0, F.lit(None).cast("double")).otherwise(dot / denom)
+def _cosine_sim(v: Column, q: Column, qn: Column) -> Column:
+    """cos(v, q) rounded to 6 dp so rankings on it are reproducible; NULL
+    when either norm is zero. ``qn`` is the query vector's norm."""
+    denom = l2_norm(v) * qn
+    cos = F.when(denom == 0, F.lit(None).cast("double")).otherwise(
+        dot_product(v, q) / denom
+    )
+    return F.round(cos, 6)
+
+
+def _long_sum(arr: Column) -> Column:
+    """Exact int64 sum of an integer array column."""
+    return F.aggregate(arr, F.lit(0).cast("long"), lambda a, x: a + x)
+
+
+def _quantize(col: Column, scale: int) -> Column:
+    return F.transform(
+        col, lambda x: F.floor(x.cast("double") * scale + 0.5).cast("long")
+    )
 
 
 def brute_force_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
@@ -59,23 +74,14 @@ def brute_force_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 10) -> Data
         .select(
             "vec_id",
             "label",
-            F.round(
-                _cosine_from_norms(
-                    dot_product(F.col("ev"), F.col("qv")),
-                    l2_norm(F.col("ev")),
-                    F.col("qn"),
-                ),
-                6,
-            ).alias("cosine_sim"),
+            _cosine_sim(F.col("ev"), F.col("qv"), F.col("qn")).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def blocked_neardup_topk(
-    emb: DataFrame, k: int = 20, block_col: str | list[str] = "label"
-) -> DataFrame:
+def blocked_neardup_topk(emb: DataFrame, *, k: int, block_col: list[str]) -> DataFrame:
     """Most-similar within-block pairs (embedding near-dup detection).
 
     Blocking on ``block_col`` bounds the pairwise problem to within-block
@@ -87,32 +93,15 @@ def blocked_neardup_topk(
     top candidates; the tiny survivor set is rounded and globally ranked
     JVM-side. Per-block emit keeps the shuffle O(blocks·k), not O(pairs).
 
-    ``block_col`` may be a LIST of columns: at scale a natural key alone
-    grows with the corpus and the per-block matmul turns quadratic
-    (measured 8.2x wall for 10x rows); compounding it with an SRP bucket
-    (``srp_buckets``) re-bounds block size at a recall trade-off — a
-    near-dup pair split across sign buckets is missed, the standard LSH
-    recall/cost dial. A single string keeps the legacy one-column output
-    (``block``) but is DEPRECATED (FutureWarning): a lone natural key's
-    block size grows with the corpus, and the per-block O(block²) matmul
-    measured 8-12x wall for 10x rows before q35 switched to compound
-    ``[natural_key, srp_bucket]`` keys. Pass a list.
+    ``block_col`` lists the block key columns, emitted as they are. At
+    scale a natural key alone grows with the corpus and the per-block
+    O(block²) matmul turns quadratic (measured 8-12x wall for 10x rows);
+    compounding it with an SRP bucket (``srp_buckets``) re-bounds block
+    size at a recall trade-off — a near-dup pair split across sign
+    buckets is missed, the standard LSH recall/cost dial.
     """
-    legacy = isinstance(block_col, str)
-    if legacy:
-        warnings.warn(
-            "blocked_neardup_topk(block_col=<single column>) is deprecated: "
-            "a lone natural block key grows with the corpus and the "
-            "per-block O(block²) matmul turns quadratic (measured 8-12x "
-            "wall at 10x rows). Pass a LIST compounding the natural key "
-            "with an srp_buckets() sign bucket, e.g. ['label', 'bucket'].",
-            FutureWarning,
-            stacklevel=2,
-        )
-    block_cols = [block_col] if legacy else list(block_col)
     margin = 3 * k  # per-block overfetch so global rounding ties can't
     #                 cut a pair that belongs in the global top-k
-    out_block_cols = ["block"] if legacy else block_cols
 
     def block_pairs(pdf):
         # Self-contained closure: executor workers can't import the repo.
@@ -128,10 +117,7 @@ def blocked_neardup_topk(
         a_ids, b_ids = ids[ia], ids[ib]
         lo = np.minimum(a_ids, b_ids)
         hi = np.maximum(a_ids, b_ids)
-        cols = {
-            out_name: pdf[src].iloc[0]
-            for out_name, src in zip(out_block_cols, block_cols)
-        }
+        cols = {c: pdf[c].iloc[0] for c in block_col}
         cols.update({"vec_a": lo, "vec_b": hi, "cosine_raw": sims[ia, ib]})
         out = pd.DataFrame(cols)
         # Truncate by the SAME comparator the global ranking uses
@@ -148,20 +134,17 @@ def blocked_neardup_topk(
 
     dtypes = dict(emb.dtypes)
     schema = (
-        ", ".join(
-            f"{out_name} {dtypes[src]}"
-            for out_name, src in zip(out_block_cols, block_cols)
-        )
+        ", ".join(f"{c} {dtypes[c]}" for c in block_col)
         + ", vec_a long, vec_b long, cosine_raw double"
     )
     candidates = (
-        emb.select("vec_id", *block_cols, "embedding")
-        .groupBy(*block_cols)
+        emb.select("vec_id", *block_col, "embedding")
+        .groupBy(*block_col)
         .applyInPandas(block_pairs, schema=schema)
     )
     return (
         candidates.select(
-            *out_block_cols,
+            *block_col,
             "vec_a",
             "vec_b",
             F.round(F.col("cosine_raw"), 6).alias("cosine_sim"),
@@ -213,18 +196,11 @@ def srp_buckets(
             "vec_id", *extra_cols, F.lit(0).cast("int").alias("bucket")
         ).limit(0)
     signs = _plane_signs(n_planes, dim)
-    vq = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * scale + 0.5).cast("long"),
-    )
+    vq = _quantize(F.col("embedding"), scale)
     bucket = None
     for p in range(n_planes):
         sign_arr = F.array(*[F.lit(s) for s in signs[p]])
-        acc = F.aggregate(
-            F.zip_with(vq, sign_arr, lambda v, s: v * s.cast("long")),
-            F.lit(0).cast("long"),
-            lambda a, v: a + v,
-        )
+        acc = _long_sum(F.zip_with(vq, sign_arr, lambda v, s: v * s.cast("long")))
         bit = F.when(acc >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
     return emb.select("vec_id", *extra_cols, bucket.cast("int").alias("bucket"))
@@ -248,12 +224,6 @@ def ivf_centroids(
     return [(r[0], list(r.cv)) for r in rows]
 
 
-def _quantize(col: Column, scale: int) -> Column:
-    return F.transform(
-        col, lambda x: F.floor(x.cast("double") * scale + 0.5).cast("long")
-    )
-
-
 def ivf_assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     """Cluster id per vector — a MAP-ONLY projection, like ``srp_buckets``.
 
@@ -270,11 +240,7 @@ def ivf_assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> Data
         cq_arr = F.array(
             *[F.lit(int(math.floor(c * _IVF_SCALE + 0.5))) for c in cvec]
         )
-        dist = F.aggregate(
-            F.zip_with(vq, cq_arr, lambda v, c: (v - c) * (v - c)),
-            F.lit(0).cast("long"),
-            lambda a, d: a + d,
-        )
+        dist = _long_sum(F.zip_with(vq, cq_arr, lambda v, c: (v - c) * (v - c)))
         choices.append(F.struct(dist.alias("d"), F.lit(cid).alias("cid")))
     best = F.array_min(F.array(*choices))
     return emb.select("vec_id", "label", "embedding", best["cid"].alias("cluster"))
@@ -330,12 +296,7 @@ def ivf_topk(
             "vec_id",
             "label",
             "cluster",
-            F.round(
-                _cosine_from_norms(
-                    dot_product(as_double(), qv), l2_norm(as_double()), F.lit(qn)
-                ),
-                6,
-            ).alias("cosine_sim"),
+            _cosine_sim(as_double(), qv, F.lit(qn)).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(k)
@@ -361,14 +322,7 @@ def ann_candidates(
             "vec_id",
             "label",
             "bucket",
-            F.round(
-                _cosine_from_norms(
-                    dot_product(as_double(), F.col("qv")),
-                    l2_norm(as_double()),
-                    F.col("qn"),
-                ),
-                6,
-            ).alias("cosine_sim"),
+            _cosine_sim(as_double(), F.col("qv"), F.col("qn")).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
     )
@@ -410,11 +364,7 @@ def semantic_dedup_clusters(emb: DataFrame, n_planes: int | None = None) -> Data
             n_planes += 1
     base = srp_buckets(emb, n_planes=n_planes, extra_cols=("embedding",))
     vq = _quantize(F.col("embedding"), 100)
-    nq = F.aggregate(
-        F.transform(vq, lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
+    nq = _long_sum(F.transform(vq, lambda x: x * x))
     base = base.select(
         F.col("vec_id").alias("vid"),
         F.col("bucket").cast("long").alias("cluster"),
@@ -427,11 +377,7 @@ def semantic_dedup_clusters(emb: DataFrame, n_planes: int | None = None) -> Data
         (F.col("a.cluster") == F.col("b.cluster"))
         & (F.col("a.vid") < F.col("b.vid")),
     )
-    dq = F.aggregate(
-        F.zip_with(F.col("a.q"), F.col("b.q"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dq = _long_sum(F.zip_with(F.col("a.q"), F.col("b.q"), lambda x, y: x * y))
     gated = pairs.select(
         F.col("a.cluster").alias("cluster"),
         F.col("a.vid").alias("va"),

@@ -1,4 +1,5 @@
-"""Shared fixtures: one local SparkSession + the FIXTURES.md edge-case trips."""
+"""Shared fixtures: one local SparkSession, the oracle-parity harness and
+the FIXTURES.md edge-case trips."""
 
 from __future__ import annotations
 
@@ -16,6 +17,26 @@ from nyc_yellow_taxi_trip_data_pipeline_spark.session import get_spark  # noqa: 
 def spark():
     spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield spark
+
+
+@pytest.fixture(scope="session")
+def oracle_parity(spark):
+    """``oracle_parity(name, sf)`` runs registered query ``name`` and its
+    DuckDB oracle twin over the same ``sf`` directory, asserts that
+    ``tools.parity.compare`` finds nothing, and returns the Spark result
+    as a pandas frame for the caller's hand-derived assertions."""
+    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
+    from tools.parity import compare, duck_connection
+
+    def run(name: str, sf: str):
+        q = QUERIES[name]
+        got = q.spark(spark, sf).toPandas()
+        duck = duck_connection(sf).execute(q.oracle).fetch_df()
+        problems = compare(name, got, duck)
+        assert not problems, problems
+        return got
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -85,21 +85,14 @@ def test_memo_rebuilds_on_inplace_regeneration(spark, tmp_path):
     assert (3, 4) in after  # untouched chain still pairs
 
 
-def test_memo_dial_isolation_q32_vs_q101(spark, tmp_path):
+def test_memo_dial_isolation_q32_vs_q101(oracle_parity, tmp_path):
     """q32 (12 hashes, agree>=5) and q101 (24 hashes, agree>=10) share
     the memo machinery on the SAME corpus in one session — each must
     still match its own oracle (the recipe tuple in the key is what
     prevents one dial's pairs being served to the other)."""
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
     sf = _write_sf(tmp_path)
     for name in ("q32_minhash_lsh_neardup", "q101_minhash_neardup_sharp"):
-        q = QUERIES[name]
-        got = q.spark(spark, sf).toPandas()
-        duck = duck_connection(sf).execute(q.oracle).fetch_df()
-        problems = compare(f"{name}_memo_dial", got, duck)
-        assert not problems, problems
+        oracle_parity(name, sf)
 
 
 def test_sigs_memo_shared_below_pair_memo(spark, tmp_path):
@@ -174,19 +167,12 @@ def test_simhash_memo_hit_and_regeneration(spark, tmp_path):
     }
 
 
-def test_simhash_memo_q92_q123_oracle_parity(spark, tmp_path):
+def test_simhash_memo_q92_q123_oracle_parity(oracle_parity, tmp_path):
     """q92 and q123 read the shared SimHash build in one session — each
     must still match its own oracle on the engineered corpus."""
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
     sf = _write_sf(tmp_path)
     for name in ("q92_simhash_neardup", "q123_lsh_verify_editdist"):
-        q = QUERIES[name]
-        got = q.spark(spark, sf).toPandas()
-        duck = duck_connection(sf).execute(q.oracle).fetch_df()
-        problems = compare(f"{name}_memo", got, duck)
-        assert not problems, problems
+        oracle_parity(name, sf)
 
 
 def test_ann_ranking_memo_hit_and_regeneration(spark, tmp_path):

@@ -83,17 +83,6 @@ def test_brute_force_topk_ordering(vectors):
     assert got[2].cosine_sim == -1.0
 
 
-def test_blocked_neardup_respects_blocks(vectors):
-    # Legacy single-column block key: still works, but must warn loudly —
-    # a lone natural key goes quadratic at scale (measured 8-12x at 10x
-    # rows before q35 switched to compound keys).
-    with pytest.warns(FutureWarning, match="quadratic"):
-        pairs = sim.blocked_neardup_topk(vectors, k=10, block_col="label").collect()
-    assert all(r.block == 0 for r in pairs)  # label 1 has a single vector
-    best = pairs[0]
-    assert (best.vec_a, best.vec_b) == (0, 1)
-
-
 def test_blocked_neardup_compound_key_no_warning(vectors):
     import warnings as _warnings
 
@@ -103,6 +92,7 @@ def test_blocked_neardup_compound_key_no_warning(vectors):
             vectors, k=10, block_col=["label"]
         ).collect()
     assert {("label" in r.asDict()) for r in pairs} == {True}
+    assert all(r.label == 0 for r in pairs)  # label 1 has a single vector
     assert (pairs[0].vec_a, pairs[0].vec_b) == (0, 1)
 
 
@@ -515,3 +505,16 @@ def test_operator_layer_has_no_column_name_options():
                 if p.arg in banned
             ]
     assert not found, found
+
+
+def test_near_duplicate_mechanisms_written_once():
+    """The hot-bucket cap and the int64 array fold each have one
+    implementation (``dedup._cap_buckets``, ``similarity._long_sum``);
+    a second copy of either fails here."""
+    import pathlib
+
+    ops = pathlib.Path(dd.__file__).resolve().parent
+    cap = 'partitionBy("band_id", "band_key")'
+    assert sum(p.read_text().count(cap) for p in ops.glob("*.py")) == 1
+    fold = 'lit(0).cast("long")'
+    assert (ops / "similarity.py").read_text().count(fold) == 1

@@ -32,10 +32,7 @@ DOCS = [
 ]
 
 
-def test_q103_engineered_corpus_gate_boundaries(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q103_engineered_corpus_gate_boundaries(oracle_parity, tmp_path):
     pdf = pd.DataFrame(
         {
             "doc_id": pd.array(range(len(DOCS)), dtype="int64"),
@@ -50,11 +47,7 @@ def test_q103_engineered_corpus_gate_boundaries(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "documents.parquet"), index=False)
 
-    q = QUERIES["q103_repetition_filters"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q103_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q103_repetition_filters", sf)
 
     expected = {
         (i, nw, top, db, tb, pt, pb)

@@ -23,10 +23,7 @@ import os
 import pandas as pd
 
 
-def test_q105_engineered_corpus_decontamination_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q105_engineered_corpus_decontamination_classes(oracle_parity, tmp_path):
     rows = [
         # (doc_id, source, text)
         (0, "bench", "b1 b2 b3 b4 b5 b6"),      # 3 benchmark 4-grams
@@ -51,11 +48,7 @@ def test_q105_engineered_corpus_decontamination_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "documents.parquet"), index=False)
 
-    q = QUERIES["q105_ngram_decontamination"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q105_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q105_ngram_decontamination", sf)
 
     expected = {
         # (source, n_train_docs, n_contaminated, n_hit_ngrams)

@@ -24,10 +24,7 @@ import pandas as pd
 H = "2024-03-06 "
 
 
-def test_q110_engineered_staging_sliding_window_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q110_engineered_staging_sliding_window_classes(oracle_parity, tmp_path):
     rows = [
         # (ts, value)
         ("12:00:00", 1.23),          # exact hour boundary
@@ -50,11 +47,7 @@ def test_q110_engineered_staging_sliding_window_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q110_streaming_sliding_rate"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q110_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q110_streaming_sliding_rate", sf)
 
     expected = {
         # (window_start hour, n_events, sum_value)

@@ -20,10 +20,7 @@ import pandas as pd
 H = "2024-03-09 "
 
 
-def test_q122_engineered_corpus_interval_boundaries(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q122_engineered_corpus_interval_boundaries(oracle_parity, tmp_path):
     rows = [
         # (event_id, event_type, user_id, ts)
         (1, "view", 1, "09:00:00"),          # closed by e2, dwell 0
@@ -51,11 +48,7 @@ def test_q122_engineered_corpus_interval_boundaries(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q122_scd2_intervals"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q122_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q122_scd2_intervals", sf)
 
     expected = {
         # (event_type, n_current_users, n_closed, total_dwell_s)

@@ -42,10 +42,7 @@ ROWS = [
 RATES = {"src0": 1000, "src1": 500, "src2": 250, "src3": 125}
 
 
-def test_q124_engineered_corpus_threshold_boundaries(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q124_engineered_corpus_threshold_boundaries(oracle_parity, tmp_path):
     # boundary sanity, independent of both engines
     assert _fold(991) % 1000 == 499 and _fold(68) % 1000 == 500
     assert _fold(238) % 1000 == 249 and _fold(1147) % 1000 == 250
@@ -63,11 +60,7 @@ def test_q124_engineered_corpus_threshold_boundaries(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "documents.parquet"), index=False)
 
-    q = QUERIES["q124_hash_threshold_sample"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q124_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q124_hash_threshold_sample", sf)
 
     expected = set()
     for source in RATES:

@@ -28,10 +28,7 @@ import pandas as pd
 H = "2024-03-05 "
 
 
-def test_q133_engineered_staging_outer_join_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q133_engineered_staging_outer_join_classes(oracle_parity, tmp_path):
     rows = [
         # (event_id, event_type, user_id, ts)
         (100, "error", 1, "08:30:00"),  # matched x2, below fwm
@@ -62,11 +59,7 @@ def test_q133_engineered_staging_outer_join_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q133_stream_outer_join"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q133_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q133_stream_outer_join", sf)
 
     expected = {
         (100, 1, 2),  # two preceding views

@@ -28,12 +28,7 @@ import pandas as pd
 H = "2024-03-03 "
 
 
-def test_q134_engineered_staging_join_and_watermark_classes(
-    spark, tmp_path
-):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q134_engineered_staging_join_and_watermark_classes(oracle_parity, tmp_path):
     rows = [
         # (event_type, user_id, ts)
         # w09 pair: error 09:20 with a view 5 min before
@@ -74,11 +69,7 @@ def test_q134_engineered_staging_join_and_watermark_classes(
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q134_chained_stateful"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q134_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q134_chained_stateful", sf)
 
     def ms(t: str) -> int:
         return int(pd.Timestamp(H + t).value // 1_000_000)

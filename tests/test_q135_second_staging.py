@@ -31,10 +31,7 @@ import pandas as pd
 H = "2024-03-04 "
 
 
-def test_q135_engineered_staging_dedup_state_machine(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q135_engineered_staging_dedup_state_machine(oracle_parity, tmp_path):
     # (batch, user_id, event_type, ts)
     rows = [
         # batch 0
@@ -77,11 +74,7 @@ def test_q135_engineered_staging_dedup_state_machine(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q135_streaming_dedup_within_watermark"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q135_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q135_streaming_dedup_within_watermark", sf)
 
     expected = {
         # (event_type, n_keys, n_emissions, n_reemitted): u4 never

@@ -21,10 +21,7 @@ import pandas as pd
 H = "2024-03-10 "
 
 
-def test_q142_engineered_corpus_forward_fill_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q142_engineered_corpus_forward_fill_classes(oracle_parity, tmp_path):
     rows = [
         # (event_id, event_type, user_id, ts, value)
         # u1: nulls before the first purchase
@@ -72,11 +69,7 @@ def test_q142_engineered_corpus_forward_fill_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q142_forward_fill"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q142_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q142_forward_fill", sf)
 
     expected = {
         # (user_id, n_rows, n_filled, filled_sum_q)

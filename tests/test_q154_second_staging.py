@@ -33,10 +33,7 @@ import pandas as pd
 H = "2024-03-01 "  # all timestamps on one day
 
 
-def test_q154_engineered_staging_min_policy_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q154_engineered_staging_min_policy_classes(oracle_parity, tmp_path):
     # (event_id, ts): id % 4 = arrival batch, (id div 4) % 2 = branch.
     rows = [
         # batch 0
@@ -78,11 +75,7 @@ def test_q154_engineered_staging_min_policy_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q154_streaming_union_watermarks"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q154_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q154_streaming_union_watermarks", sf)
 
     def wms(hour: int) -> int:
         return int(

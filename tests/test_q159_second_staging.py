@@ -35,10 +35,7 @@ import pandas as pd
 H = "2024-03-01 "
 
 
-def test_q159_engineered_staging_max_policy_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q159_engineered_staging_max_policy_classes(oracle_parity, tmp_path):
     # (event_id, ts): id % 4 = arrival batch, (id div 4) % 2 = branch
     # (even id div 4 = fast / 30 min, odd = slow / 120 min).
     rows = [
@@ -83,11 +80,7 @@ def test_q159_engineered_staging_max_policy_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q159_streaming_union_watermark_max"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q159_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q159_streaming_union_watermark_max", sf)
 
     def wms(hour: int) -> int:
         return int(

@@ -33,10 +33,7 @@ import pandas as pd
 H = "2024-03-02 "
 
 
-def test_q172_engineered_staging_session_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q172_engineered_staging_session_classes(oracle_parity, tmp_path):
     # (event_id, user_id, ts): event_id % 4 = arrival batch.
     rows = [
         # batch 0
@@ -78,11 +75,7 @@ def test_q172_engineered_staging_session_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q172_streaming_session_window"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q172_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q172_streaming_session_window", sf)
 
     def ms(t: str) -> int:
         return int(pd.Timestamp(H + t).value // 1_000_000)

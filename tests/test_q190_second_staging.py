@@ -19,10 +19,7 @@ import os
 import pandas as pd
 
 
-def test_q190_engineered_staging_all_parity_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q190_engineered_staging_all_parity_classes(oracle_parity, tmp_path):
     # (user_id, event_id) — parity of event_id decides the phase.
     rows = [
         # u1: even-only x3 => one eviction carrying 3
@@ -59,11 +56,7 @@ def test_q190_engineered_staging_all_parity_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q190_processing_time_timer_eviction"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q190_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q190_processing_time_timer_eviction", sf)
 
     expected = {
         1: (1, 3),

@@ -28,10 +28,7 @@ import pandas as pd
 SPLIT = "2024-01-16 00:00:00"  # q193's hard-coded phase boundary
 
 
-def test_q193_engineered_staging_all_eviction_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q193_engineered_staging_all_eviction_classes(oracle_parity, tmp_path):
     # Phase A max = Jan 15 12:00 (u17) => W1 = Jan 15 11:00.
     # Phase B max = Jan 16 02:00 (u7)  => W3 = Jan 16 01:00.
     rows = [
@@ -90,11 +87,7 @@ def test_q193_engineered_staging_all_eviction_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q193_event_time_timer_eviction"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q193_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q193_event_time_timer_eviction", sf)
 
     expected = {
         1: (1, 3),

@@ -19,10 +19,7 @@ import pandas as pd
 H = "2024-03-08 "
 
 
-def test_q21_engineered_corpus_asof_boundaries(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q21_engineered_corpus_asof_boundaries(oracle_parity, tmp_path):
     rows = [
         # (event_id, event_type, user_id, ts)
         (1, "click", 1, "09:00:00"),
@@ -58,11 +55,7 @@ def test_q21_engineered_corpus_asof_boundaries(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q21_asof_join"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q21_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q21_asof_join", sf)
 
     def ts(t: str):
         return pd.Timestamp(H + t)

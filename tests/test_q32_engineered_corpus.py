@@ -74,16 +74,9 @@ def _write_sf(tmp_path) -> str:
     return sf
 
 
-def test_q32_engineered_corpus_known_jaccards(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q32_engineered_corpus_known_jaccards(oracle_parity, tmp_path):
     sf = _write_sf(tmp_path)
-    q = QUERIES["q32_minhash_lsh_neardup"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q32_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q32_minhash_lsh_neardup", sf)
 
     expected = {
         (1, 2): 1.0,
@@ -101,16 +94,9 @@ def test_q32_engineered_corpus_known_jaccards(spark, tmp_path):
     )
 
 
-def test_q68_engineered_corpus_transitive_cluster(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q68_engineered_corpus_transitive_cluster(oracle_parity, tmp_path):
     sf = _write_sf(tmp_path)
-    q = QUERIES["q68_dedup_clusters"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q68_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q68_dedup_clusters", sf)
 
     expected = {
         (1, 1, 2),
@@ -131,16 +117,9 @@ def test_q68_engineered_corpus_transitive_cluster(spark, tmp_path):
     )
 
 
-def test_q112_engineered_corpus_cluster_histogram(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q112_engineered_corpus_cluster_histogram(oracle_parity, tmp_path):
     sf = _write_sf(tmp_path)
-    q = QUERIES["q112_dup_cluster_histogram"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q112_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q112_dup_cluster_histogram", sf)
 
     expected = {
         # (cluster_size, n_clusters, n_docs): docs 6/7/8/9 are
@@ -160,20 +139,13 @@ def test_q112_engineered_corpus_cluster_histogram(spark, tmp_path):
     )
 
 
-def test_q144_engineered_corpus_keep_best(spark, tmp_path):
+def test_q144_engineered_corpus_keep_best(oracle_parity, tmp_path):
     """Keep-best survivor policy on the hand-derived clusters: the
     n_chars argmax per cluster (computed here in plain Python over the
     corpus dict — independent of both engines), with the identical pair
     {1,2} exercising the doc_id tiebreak (equal n_chars)."""
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
     sf = _write_sf(tmp_path)
-    q = QUERIES["q144_keep_best_dedup"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q144_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q144_keep_best_dedup", sf)
 
     docs = _corpus()
     clusters = [[1, 2], [3, 4, 5], [10, 11]]

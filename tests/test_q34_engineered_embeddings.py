@@ -35,10 +35,7 @@ VECS = {
 }
 
 
-def test_q34_engineered_embeddings_exact_topk(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q34_engineered_embeddings_exact_topk(oracle_parity, tmp_path):
     pdf = pd.DataFrame(
         {
             "vec_id": pd.array(list(VECS.keys()), dtype="int64"),
@@ -51,11 +48,7 @@ def test_q34_engineered_embeddings_exact_topk(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "embeddings.parquet"), index=False)
 
-    q = QUERIES["q34_embedding_topk"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q34_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q34_embedding_topk", sf)
 
     # Rank order: rounded cosine desc, vec_id asc — both 1.0s first,
     # then 0.707107, the two 0.600000s (6 before 10), 0.5, 0.333333,

@@ -26,10 +26,7 @@ import pandas as pd
 H = "2024-03-07 "
 
 
-def test_q67_engineered_staging_sessionizer_classes(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q67_engineered_staging_sessionizer_classes(oracle_parity, tmp_path):
     rows = [
         # (user_id, ts) — file order preserved (coalesced single file)
         # u1: gap exactly 1800 s -> ONE session
@@ -69,11 +66,7 @@ def test_q67_engineered_staging_sessionizer_classes(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
 
-    q = QUERIES["q67_streaming_sessionize"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q67_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q67_streaming_sessionize", sf)
 
     expected = {
         1: (1, 2),

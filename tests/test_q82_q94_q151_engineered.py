@@ -58,42 +58,24 @@ def _triangle_corpus() -> dict[int, str]:
     }
 
 
-def _oracle_df(sf: str, oracle: str):
-    from tools.parity import duck_connection
-
-    return duck_connection(sf).execute(oracle).fetch_df()
-
-
-def test_q82_planted_triangle(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare
-
+def test_q82_planted_triangle(oracle_parity, tmp_path):
     sf = str(tmp_path)
     _write_docs(sf, _triangle_corpus())
-    q = QUERIES["q82_triangle_count"]
-    got = q.spark(spark, sf).toPandas()
+    got = oracle_parity("q82_triangle_count", sf)
     assert int(got["n_triangles"].iloc[0]) == 1
     assert int(got["n_edges"].iloc[0]) == 4
-    problems = compare("q82_engineered", got, _oracle_df(sf, q.oracle))
-    assert not problems, problems
 
 
-def test_q151_leak_accounting_on_planted_graph(spark, tmp_path):
+def test_q151_leak_accounting_on_planted_graph(oracle_parity, tmp_path):
     """The 4 planted edges must be fully accounted for across the
     split-pair groups, leak flags must equal the split inequality, and
     the whole result must match the DuckDB oracle on the same corpus."""
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare
-
     sf = str(tmp_path)
     _write_docs(sf, _triangle_corpus())
-    q = QUERIES["q151_split_leakage_audit"]
-    got = q.spark(spark, sf).toPandas()
+    got = oracle_parity("q151_split_leakage_audit", sf)
     assert int(got["n_pairs"].sum()) == 4
     for _, row in got.iterrows():
         assert int(row["is_leak"]) == int(row["split_a"] != row["split_b"])
-    problems = compare("q151_engineered", got, _oracle_df(sf, q.oracle))
-    assert not problems, problems
 
 
 def _delta_corpus() -> dict[int, str]:
@@ -116,17 +98,11 @@ def _delta_corpus() -> dict[int, str]:
     }
 
 
-def test_q94_planted_delta(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare
-
+def test_q94_planted_delta(oracle_parity, tmp_path):
     sf = str(tmp_path)
     _write_docs(sf, _delta_corpus())
-    q = QUERIES["q94_incremental_dedup"]
-    got = q.spark(spark, sf).toPandas()
+    got = oracle_parity("q94_incremental_dedup", sf)
     assert sorted(got["doc_id"].astype(int)) == [30], (
         "exact-dup 10 and near-dup 20 must be rejected, unique 30 kept: "
         f"{sorted(got['doc_id'].astype(int))}"
     )
-    problems = compare("q94_engineered", got, _oracle_df(sf, q.oracle))
-    assert not problems, problems

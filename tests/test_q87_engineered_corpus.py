@@ -35,10 +35,7 @@ CASES = [
 ]
 
 
-def test_q87_engineered_corpus_packing_boundaries(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q87_engineered_corpus_packing_boundaries(oracle_parity, tmp_path):
     pdf = pd.DataFrame(
         {
             "doc_id": pd.array([d for d, _, _ in CASES], dtype="int64"),
@@ -54,11 +51,7 @@ def test_q87_engineered_corpus_packing_boundaries(spark, tmp_path):
     sf = str(tmp_path)
     pdf.to_parquet(os.path.join(sf, "documents.parquet"), index=False)
 
-    q = QUERIES["q87_sequence_packing"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q87_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q87_sequence_packing", sf)
 
     expected = {
         (d, d % 8, b, n) for d, n, b in CASES

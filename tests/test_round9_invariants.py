@@ -7,7 +7,6 @@ window)."""
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 
 import pytest
@@ -73,11 +72,6 @@ def test_q161_oracle_rule_matches_pin():
     assert "1800000 " not in sql.split("flagged")[1].split("sess")[0]
 
 
-MANIFEST = os.path.join(
-    os.path.dirname(__file__), "..", "tools", "verified_hashes.json"
-)
-
-
 def test_modified_queries_are_in_driver_window():
     """r8 verdict 'What's wrong' #2: a query whose plan function or
     oracle changed since its newest external CORRECTNESS row must not
@@ -86,31 +80,10 @@ def test_modified_queries_are_in_driver_window():
 
     tools/verified_hashes.json records the source hash of every query as
     of its last externally-verified state; tools/verified_manifest.py
-    refreshes it at round start from the newest CORRECTNESS file. Any
-    current hash mismatch (or a brand-new query) must appear in
-    _PRIORITY."""
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import _PRIORITY
-    from tools.verified_manifest import query_hash
-
-    with open(MANIFEST) as fh:
-        manifest = json.load(fh)
-    window = set(_PRIORITY)
-    stale = []
-    for name, entry in QUERIES.items():
-        recorded = manifest.get(name, {}).get("hash")
-        if recorded != query_hash(entry) and name not in window:
-            stale.append(name)
-    assert not stale, (
-        "queries modified (or added) since their last external "
-        f"verification but missing from _PRIORITY: {stale}"
-    )
-
-
-def test_window_planner_agrees_with_ratchet():
-    """tools/window_planner.py replicates this file's staleness ratchet
-    from the same inputs; its mandatory tier must (a) all sit inside the
-    current window and (b) fit the 50-slot budget — if either fails here,
-    the hand-written _PRIORITY and the planner have diverged."""
+    refreshes it at round start from the newest CORRECTNESS file.
+    tools/window_planner.py's mandatory tier is every current hash
+    mismatch (or brand-new query): it must (a) all sit inside _PRIORITY
+    and (b) fit the 50-slot budget."""
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -120,7 +93,11 @@ def test_window_planner_agrees_with_ratchet():
     p = plan()
     assert p["overflow"] == 0
     window = set(_PRIORITY)
-    assert [n for n in p["mandatory"] if n not in window] == []
+    stale = [n for n in p["mandatory"] if n not in window]
+    assert not stale, (
+        "queries modified (or added) since their last external "
+        f"verification but missing from _PRIORITY: {stale}"
+    )
     assert len(p["proposed_window"]) <= WINDOW_SIZE
     # Every proposed fill row is a real registered query.
     assert set(p["proposed_window"]) <= set(QUERIES)

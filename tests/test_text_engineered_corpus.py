@@ -38,10 +38,7 @@ def _write_docs(tmp_path, texts: list[str]) -> str:
     return sf
 
 
-def test_q158_engineered_corpus_heavy_hitter_boundaries(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q158_engineered_corpus_heavy_hitter_boundaries(oracle_parity, tmp_path):
     # 2560 tokens total: hot1 x40 (5 uppercase), hot2 x11, edge x10
     # (exactly 10*256 == 2560 -> excluded), cold x9, fill0..fill309 x8
     # each (2480), lastfill x10. Distinct words: 315 > the 255 counters.
@@ -61,11 +58,7 @@ def test_q158_engineered_corpus_heavy_hitter_boundaries(spark, tmp_path):
     ]
     sf = _write_docs(tmp_path, docs)
 
-    q = QUERIES["q158_heavy_hitters"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q158_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q158_heavy_hitters", sf)
 
     expected = {
         # floor(1000*40/2560 + 0.5) = 16; floor(1000*11/2560 + 0.5) = 4
@@ -82,20 +75,13 @@ def test_q158_engineered_corpus_heavy_hitter_boundaries(spark, tmp_path):
     )
 
 
-def test_q109_engineered_corpus_bpe_pair_arithmetic(spark, tmp_path):
-    from nyc_yellow_taxi_trip_data_pipeline_spark.plans import QUERIES
-    from tools.parity import compare, duck_connection
-
+def test_q109_engineered_corpus_bpe_pair_arithmetic(oracle_parity, tmp_path):
     # freqs: abab x3, abc x2, xy x2, xz x2, q x1 (length 1 -> no pairs)
     sf = _write_docs(
         tmp_path, ["abab abab abc xy xz q", "abab abc xy xz"]
     )
 
-    q = QUERIES["q109_bpe_merge_step"]
-    got = q.spark(spark, sf).toPandas()
-    duck = duck_connection(sf).execute(q.oracle).fetch_df()
-    problems = compare("q109_engineered", got, duck)
-    assert not problems, problems
+    got = oracle_parity("q109_bpe_merge_step", sf)
 
     # ab: 2*3 (abab) + 1*2 (abc) = 8; ba: 1*3; bc/xy/xz: 2 each — the
     # three-way tie orders pair-ascending.

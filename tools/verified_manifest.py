@@ -41,6 +41,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 MANIFEST_PATH = os.path.join(os.path.dirname(__file__), "verified_hashes.json")
 
 
+def _green(row) -> bool:
+    """A fully-green driver row: rows, schema and value hash all match."""
+    return (
+        isinstance(row, dict)
+        and bool(row.get("rows_match"))
+        and bool(row.get("schema_match"))
+        and bool(row.get("hash_match"))
+    )
+
+
 def query_hash(entry) -> str:
     src = inspect.getsource(entry.spark)
     oracle = entry.oracle or ""
@@ -79,13 +89,7 @@ def main(argv: list[str]) -> int:
         manifest = _load()
         n = 0
         for name, row in rows.items():
-            green = (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            if green and name in QUERIES:
+            if _green(row) and name in QUERIES:
                 manifest[name] = {
                     "hash": query_hash(QUERIES[name]),
                     "round": rnd,

@@ -37,19 +37,12 @@ import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MANIFEST_PATH = os.path.join(REPO, "tools", "verified_hashes.json")
+# Runnable as `python tools/window_planner.py` from the repo root.
+sys.path.insert(0, REPO)
+
+from tools.verified_manifest import _green, _load, query_hash  # noqa: E402
+
 WINDOW_SIZE = 50
-
-
-def _green(row) -> bool:
-    return (
-        isinstance(row, dict)
-        and bool(row.get("rows_match"))
-        and bool(row.get("schema_match"))
-        # rows-only checks (oracle-less streaming ops) have no hash key;
-        # treat an absent hash_match as green-as-checkable, False as red.
-        and row.get("hash_match") is not False
-    )
 
 
 def newest_driver_rows() -> dict[str, int]:
@@ -78,10 +71,8 @@ def plan() -> dict:
         _PRIORITY,
         QUERIES,
     )
-    from tools.verified_manifest import query_hash  # noqa: PLC0415
 
-    with open(MANIFEST_PATH) as fh:
-        manifest = json.load(fh)
+    manifest = _load()
     driver_rows = newest_driver_rows()
 
     # Registration order AFTER the _PRIORITY reorder is itself
@@ -165,5 +156,4 @@ def main(argv: list[str]) -> int:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, REPO)
     sys.exit(main(sys.argv[1:]))
