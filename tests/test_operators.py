@@ -83,6 +83,13 @@ def test_brute_force_topk_ordering(vectors):
     assert got[2].cosine_sim == -1.0
 
 
+def test_blocked_neardup_respects_blocks(vectors):
+    pairs = sim.blocked_neardup_topk(vectors, k=10, block_col=["label"]).collect()
+    assert all(r.label == 0 for r in pairs)  # label 1 has a single vector
+    best = pairs[0]
+    assert (best.vec_a, best.vec_b) == (0, 1)
+
+
 def test_blocked_neardup_compound_key_no_warning(vectors):
     import warnings as _warnings
 
@@ -92,7 +99,6 @@ def test_blocked_neardup_compound_key_no_warning(vectors):
             vectors, k=10, block_col=["label"]
         ).collect()
     assert {("label" in r.asDict()) for r in pairs} == {True}
-    assert all(r.label == 0 for r in pairs)  # label 1 has a single vector
     assert (pairs[0].vec_a, pairs[0].vec_b) == (0, 1)
 
 
