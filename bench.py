@@ -8,8 +8,8 @@ Env:
 
 The full JSON (also written to BENCH_FULL_PATH, default BENCH_FULL.json)
 carries a `provenance` block: commit, source digest, cpu count, Spark
-version, sf, start time, load average and the share of the host's CPU
-time stolen by its hypervisor over the run.
+and Python versions, sf, start time, load average and the share of the
+host's CPU time stolen by its hypervisor over the run.
 
 Each query is materialized through the `noop` sink — full execution of the
 physical plan (scan, shuffles, Python stages) without collect-to-driver or
@@ -21,6 +21,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import platform
 import sys
 import time
 from pathlib import Path
@@ -163,6 +164,7 @@ def main() -> None:
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
         "master": spark.sparkContext.master,
         "spark": spark.version,
+        "python": platform.python_version(),
         "sf": result["sf"],
         "started_at": started_at,
         "loadavg_before": loadavg_before,

@@ -130,7 +130,7 @@ def parse_forest(text: str) -> Forest:
 def _forest_udf(spark: SparkSession, forest: Forest, scale: np.ndarray):
     """One ``pandas_udf`` evaluating the scaled forest over the feature
     slot columns. The arrays ship once, in a broadcast; the function is
-    self-contained (executor Python workers cannot import this package)."""
+    self-contained (cluster workers cannot import this package)."""
     arrays = spark.sparkContext.broadcast((scale, *forest))
 
     def predict(*slots):

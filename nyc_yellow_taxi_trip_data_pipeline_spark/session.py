@@ -13,6 +13,9 @@ the session so every entry point gets the same tuned configuration:
   AQE coalesces from a deliberately-high initial number instead.
 - Local-master sessions write streaming checkpoints through the
   FileSystem checkpoint manager (see ``LOCAL_CHECKPOINT_FILE_MANAGER``).
+- Local-master sessions start Python workers from the engine's daemon
+  module (see ``PYTHON_DAEMON_MODULE``), which stops each worker task from
+  re-reading the pyspark and Spark zip archives on Python < 3.13.
 
 A query that needs a different value for a while (a watermark policy, a
 disabled broadcast, AQE off for a scan probe) does not touch the session
@@ -75,6 +78,16 @@ LOCAL_CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+# Python worker daemon for local masters (see pydaemon.py): Spark's stock
+# daemon with the per-task zip-archive re-read gated on the archive's
+# stamp. The worker-module hook cannot carry it (the stock daemon only
+# accepts worker modules under ``pyspark``), so the daemon module does.
+# The daemon is a fresh interpreter started in the driver's cwd, so the
+# package's parent goes on the workers' PYTHONPATH (Spark merges it with
+# its own) for the module to import from any cwd.
+PYTHON_DAEMON_MODULE = "nyc_yellow_taxi_trip_data_pipeline_spark.pydaemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def driver_memory(physical_bytes: int | None = None) -> str:
@@ -141,9 +154,13 @@ def get_spark(
         .config("spark.driver.memory", driver_memory())
     )
     if master.startswith("local"):
-        builder = builder.config(
-            "spark.sql.streaming.checkpointFileManagerClass",
-            LOCAL_CHECKPOINT_FILE_MANAGER,
+        builder = (
+            builder.config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                LOCAL_CHECKPOINT_FILE_MANAGER,
+            )
+            .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         )
     # Builder-time classpath additions (e.g. a JDBC driver jar for the
     # live-Postgres integration tests): comma-separated jar paths.

@@ -102,8 +102,6 @@ def parse_json_envelope(stream: DataFrame, schema: T.StructType) -> DataFrame:
 
 def hourly_windowed_agg(
     events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
     watermark: str = "2 hours",
     window: str = "1 hour",
 ) -> DataFrame:
@@ -111,11 +109,11 @@ def hourly_windowed_agg(
     (SURVEY.md §2.9: absent in the reference). Late rows beyond the
     watermark are dropped deterministically; state is bounded."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), window).alias("w"))
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(value_col).alias("sum_value"),
+            F.sum("value").alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -128,19 +126,17 @@ def hourly_windowed_agg(
 
 def session_windowed_agg(
     events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
     gap: str = "30 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Session windows with an inactivity gap — the streaming twin of the
     batch sessionization query (plans/analytics.py q20)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(key_col))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.session_window(F.col("ts"), gap).alias("w"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
-            F.col(key_col),
+            F.col("user_id"),
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",

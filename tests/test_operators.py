@@ -488,6 +488,7 @@ def test_operator_layer_has_no_column_name_options():
         "id_col", "text_col", "word_col", "emb_col", "payload_col",
         "group_col", "a_col", "b_col", "carry_cols", "pickup_col",
         "dropoff_col", "broadcast_cap", "tau2_num", "tau2_den",
+        "ts_col", "value_col", "key_col",
     }
     exempt = {("io.py", "shard_column")}
     pkg = pathlib.Path(dd.__file__).resolve().parents[1]
