@@ -58,7 +58,7 @@ def install() -> None:
     if sys.version_info >= (3, 13):
         return
     zipimport.zipimporter.invalidate_caches = invalidate_caches
-    for finder in list(sys.path_importer_cache.values()):
+    for finder in sys.path_importer_cache.values():
         if isinstance(finder, zipimport.zipimporter):
             finder._read_stamp = _archive_stamp(finder.archive)
 

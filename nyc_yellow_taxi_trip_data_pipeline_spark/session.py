@@ -79,13 +79,12 @@ LOCAL_CHECKPOINT_FILE_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
-# Python worker daemon for local masters (see pydaemon.py): Spark's stock
-# daemon with the per-task zip-archive re-read gated on the archive's
-# stamp. The worker-module hook cannot carry it (the stock daemon only
-# accepts worker modules under ``pyspark``), so the daemon module does.
-# The daemon is a fresh interpreter started in the driver's cwd, so the
-# package's parent goes on the workers' PYTHONPATH (Spark merges it with
-# its own) for the module to import from any cwd.
+# Python worker daemon for local masters (see pydaemon.py). It goes in
+# through the daemon-module hook because the stock daemon only accepts
+# worker modules under ``pyspark``. The daemon is a fresh interpreter
+# started in the driver's cwd, so the package's parent goes on the
+# workers' PYTHONPATH (Spark merges it with its own) for the module to
+# import from any cwd.
 PYTHON_DAEMON_MODULE = "nyc_yellow_taxi_trip_data_pipeline_spark.pydaemon"
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
